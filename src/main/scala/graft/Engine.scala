@@ -2,7 +2,7 @@ package graft
 
 import graft.core.GridSpec
 import graft.lang.{AggrFuncExpr, BinaryOpExpr, Eval, Expr, FuncExpr, MetricExpr, NumberExpr, ParensExpr, Parser, RollupExpr, StringExpr}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Engine facade: MetricsQL text → grid DataFrame (name, tags, t, value).
   *
@@ -87,39 +87,84 @@ object Engine {
   /** O6 result memoization with TIME-SUFFIX FETCH
     * (rollup_result_cache.go:283 — a dashboard refresh repeats the same
     * expr with the end timestamp advanced; only the new suffix must be
-    * evaluated):
+    * evaluated). Like the reference's in-memory cache blocks
+    * (rollup_result_cache.go:202,364), an entry holds the COLLECTED result
+    * rows on the driver, served as a local relation:
     *
-    *  - exact (query, grid) repeats return the same PERSISTED frame
+    *  - exact (query, grid) repeats return the same local frame — serving
+    *    it starts no Spark job
     *  - a repeat whose grid extends FORWARD by whole steps evaluates only
-    *    (cachedEnd, newEnd] and unions it onto the cached prefix —
-    *    provided the query is pointwise in time (each grid point depends
-    *    only on samples in its own lookback window, like the reference's
-    *    rollup-level cache entries). Queries with whole-range semantics
-    *    (the running_, range_, sort, limit families) always re-evaluate.
+    *    (cachedEnd, newEnd] and appends those rows to the cached prefix
+    *    rows — provided the query is pointwise in time (each grid point
+    *    depends only on samples in its own lookback window, like the
+    *    reference's rollup-level cache entries). Queries with whole-range
+    *    semantics (the running_, range_, sort, limit families) always
+    *    re-evaluate.
     *
-    * Bounded LRU-ish eviction (oldest insertion order).
+    * Bounded by entry count and total rows ([[ResultCache]]).
     */
-  /** cached result: grid end, the frame to serve, and every PERSISTED
-    * constituent (the original full evaluation plus each suffix) — the
-    * served union itself is not persisted, so eviction must unpersist the
-    * pieces, not the union.
-    */
-  private final case class Entry(endMs: Long, df: DataFrame, persisted: Seq[DataFrame])
+  private final case class Entry(endMs: Long, df: DataFrame, rows: Long)
 
-  private val cache = new java.util.LinkedHashMap[
-    (String, String, Long, Long, Long), Entry](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String, Long, Long, Long), Entry]): Boolean =
-      if (size() > 64) { e.getValue.persisted.foreach(_.unpersist()); true } else false
+  /** Row budget of each result cache (O6 and O7 alike). The serving
+    * driver runs with a 2 GB heap at the least; a result row — name, a
+    * 10-label tag map, t, value — measures ~1.8 KB (SizeEstimator) in the
+    * local relation, which holds it as converted Catalyst objects, so
+    * 128k rows ≈ 240 MB: an eighth of that heap per cache.
+    */
+  private val MaxCachedRows = 128L * 1024
+  /** a single result above this share of the budget is served but not
+    * cached, so one huge result cannot flush every other entry
+    */
+  private[graft] val MaxEntryRows = MaxCachedRows / 4
+  private val MaxEntries = 64
+
+  /** access-ordered map of driver-held results, at most [[MaxEntries]]
+    * entries and [[MaxCachedRows]] rows, least recently used evicted
+    * first. Callers evaluate and collect OUTSIDE its lock; only lookups
+    * and inserts take it, so a long miss never blocks another caller's hit.
+    */
+  private final class ResultCache[K, V](rowsOf: V => Long) {
+    private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+    private var rows = 0L
+    def get(k: K): Option[V] = synchronized(Option(map.get(k)))
+    def put(k: K, v: V): Unit = synchronized {
+      if (rowsOf(v) <= MaxEntryRows) {
+        Option(map.put(k, v)).foreach(old => rows -= rowsOf(old))
+        rows += rowsOf(v)
+        // the new entry iterates last, and fits the budget on its own
+        val it = map.values().iterator()
+        while (map.size() > MaxEntries || rows > MaxCachedRows) {
+          rows -= rowsOf(it.next())
+          it.remove()
+        }
+      }
+    }
+    def size: Int = synchronized(map.size())
+    def clear(): Unit = synchronized { map.clear(); rows = 0L }
   }
+
+  /** collected rows as a local relation: collecting it again, or a
+    * projection or filter Spark folds into it, starts no job
+    */
+  private def localFrame(like: DataFrame, rows: Array[Row]): DataFrame =
+    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
+
+  /** run `df` once, keeping its rows on the driver */
+  private def collectRows(df: DataFrame): Array[Row] =
+    graft.lang.Trace.child("execute plan and collect result rows")(df.collect())
+
+  private val cache =
+    new ResultCache[(String, String, Long, Long, Long), Entry](_.rows)
 
   /** cache observability for tests/ops: (exactHits, suffixHits, misses) */
   @volatile private var stats = (0L, 0L, 0L)
   def cacheStats: (Long, Long, Long) = stats
   def resetCacheStats(): Unit = stats = (0L, 0L, 0L)
+  private def countO6(f: ((Long, Long, Long)) => (Long, Long, Long)): Unit =
+    cache.synchronized { stats = f(stats) }
 
   /** live entry count, for the /metrics vm_cache_entries gauge */
-  def cacheEntryCount: Int = cache.synchronized(cache.size())
+  def cacheEntryCount: Int = cache.size
 
   /** ALLOWLIST of transforms known to be pointwise in time: the value at a
     * grid point depends only on that point's inputs, so a suffix evaluation
@@ -187,55 +232,56 @@ object Engine {
       // tag→names index for nameless lookups — a pure narrowing (results
       // identical with or without it), so cache entries stay valid across
       // indexed and unindexed evaluations of the same key
-      tagIndex: Option[DataFrame] = None): DataFrame = cache.synchronized {
+      tagIndex: Option[DataFrame] = None): DataFrame = {
     val planKey =
       samples.queryExecution.logical.canonicalized.toString + "|" + cacheTag
     val key = (planKey, q, grid.stepMs, lookbackMs, grid.startMs)
-    Option(cache.get(key)) match {
+    def pointwise = try pointwiseInTime(Parser.parse(q)) catch { case _: Exception => false }
+    cache.get(key) match {
       case Some(Entry(end, df, _)) if end == grid.endMs =>
-        stats = (stats._1 + 1, stats._2, stats._3)
+        countO6 { case (e, s, m) => (e + 1, s, m) }
         graft.lang.Trace.printf("rollup result cache: full hit")
         df
       case Some(Entry(end, df, _)) if end > grid.endMs &&
-          (end - grid.endMs) % grid.stepMs == 0 &&
-          (try pointwiseInTime(Parser.parse(q)) catch { case _: Exception => false }) =>
+          (end - grid.endMs) % grid.stepMs == 0 && pointwise =>
         // cached frame is a SUPERSET of the request: a pointwise query's
         // value at t doesn't depend on the grid extent, so the prefix IS
         // the answer — serve it clipped, evaluate nothing, and keep the
         // longer frame cached (rollup_result_cache_test.go
         // "bigger-than-start-end": newStart lands past the requested end,
         // i.e. zero re-evaluation)
-        stats = (stats._1 + 1, stats._2, stats._3)
+        countO6 { case (e, s, m) => (e + 1, s, m) }
         graft.lang.Trace.printf("rollup result cache: superset hit, clipped")
         df.filter(org.apache.spark.sql.functions.col("t") <= grid.endMs)
-      case Some(Entry(end, df, persisted)) if end < grid.endMs &&
-          (grid.endMs - end) % grid.stepMs == 0 &&
-          (try pointwiseInTime(Parser.parse(q)) catch { case _: Exception => false }) =>
+      case Some(Entry(end, df, _)) if end < grid.endMs &&
+          (grid.endMs - end) % grid.stepMs == 0 && pointwise =>
         val suffixGrid = GridSpec(end + grid.stepMs, grid.endMs, grid.stepMs)
-        val suffix = query(samples, q, suffixGrid, lookbackMs, tagIndex).persist()
-        val merged = df.unionByName(suffix)
-        stats = (stats._1, stats._2 + 1, stats._3)
         graft.lang.Trace.printf(
           s"rollup result cache: suffix hit, evaluated [${suffixGrid.startMs}..${suffixGrid.endMs}]")
-        cache.put(key, Entry(grid.endMs, merged, persisted :+ suffix))
+        val suffix = query(samples, q, suffixGrid, lookbackMs, tagIndex)
+          .select(df.columns.map(org.apache.spark.sql.functions.col): _*)
+        val rows = df.collect() ++ collectRows(suffix)
+        val merged = localFrame(df, rows)
+        countO6 { case (e, s, m) => (e, s + 1, m) }
+        cache.put(key, Entry(grid.endMs, merged, rows.length))
         merged
       case _ =>
         graft.lang.Trace.printf("rollup result cache: miss")
-        val df = query(samples, q, grid, lookbackMs, tagIndex).persist()
-        stats = (stats._1, stats._2, stats._3 + 1)
-        cache.put(key, Entry(grid.endMs, df, Seq(df)))
+        val res = query(samples, q, grid, lookbackMs, tagIndex)
+        val rows = collectRows(res)
+        val df = localFrame(res, rows)
+        countO6 { case (e, s, m) => (e, s, m + 1) }
+        cache.put(key, Entry(grid.endMs, df, rows.length))
         df
     }
   }
 
-  def clearCache(): Unit = cache.synchronized {
-    cache.values().forEach(_.persisted.foreach(_.unpersist()))
+  def clearCache(): Unit = {
     cache.clear()
     instantCache.synchronized {
-      instantCache.values().forEach(_.persisted.foreach(_.unpersist()))
       instantCache.clear()
+      instantStats = InstantStats(0, 0, 0, 0)
     }
-    instantStats = InstantStats(0, 0, 0, 0)
   }
 
   // ------------------------------------------------------------------
@@ -262,19 +308,18 @@ object Engine {
   // refreshes.
   // ------------------------------------------------------------------
 
-  private final case class InstantEntry(tsMs: Long, windowMs: Long, df: DataFrame,
-      persisted: Seq[DataFrame])
+  /** cached per-series instant result at (tsMs, windowMs), held as
+    * driver rows in a local frame like [[Entry]]
+    */
+  private final case class InstantEntry(tsMs: Long, windowMs: Long, df: DataFrame, rows: Long)
 
-  private val instantCache = new java.util.LinkedHashMap[(String, String, Long), InstantEntry](
-    16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String, Long), InstantEntry]): Boolean =
-      if (size() > 64) { e.getValue.persisted.foreach(_.unpersist()); true } else false
-  }
+  private val instantCache = new ResultCache[(String, String, Long), InstantEntry](_.rows)
 
   final case class InstantStats(exactHits: Long, deltaHits: Long, misses: Long, aborts: Long)
   @volatile private var instantStats = InstantStats(0, 0, 0, 0)
   def instantCacheStats: InstantStats = instantStats
+  private def countO7(f: InstantStats => InstantStats): Unit =
+    instantCache.synchronized { instantStats = f(instantStats) }
 
   /** additive instant rollups: rf(a+b windows) = rf(a) + rf(b)
     * (eval.go:1466). Known reference-parity artifact: a series whose last
@@ -425,7 +470,7 @@ object Engine {
       minWindowMs: Long,
       cacheTag: String,
       tagIndex: Option[DataFrame],
-      feOpt: Option[FuncExpr]): DataFrame = instantCache.synchronized {
+      feOpt: Option[FuncExpr]): DataFrame = {
     import org.apache.spark.sql.functions._
     val fe = feOpt.get
     val fn = fe.name
@@ -437,30 +482,31 @@ object Engine {
       Eval.eval(samples, ast2,
         Eval.EvalConfig(GridSpec(ts, ts, grid.stepMs), lookbackMs, tagIndex = tagIndex))
     }
-    def fullAndCache(key: (String, String, Long)): DataFrame = {
-      val df = evalAt(tMs, windowMs).persist()
-      instantStats = instantStats.copy(misses = instantStats.misses + 1)
-      Option(instantCache.put(key, InstantEntry(tMs, windowMs, df, Seq(df))))
-        .foreach(_.persisted.foreach(_.unpersist()))
-      df
-    }
     if (windowMs < minWindowMs) return evalAt(tMs, windowMs)
     // cacheTag folded in for mutable stores whose canonicalized plan text
     // doesn't change when their data does (see the public entry's doc)
     val planKey =
       samples.queryExecution.logical.canonicalized.toString + "|" + cacheTag
     val key = (planKey, cacheQ, lookbackMs)
-    Option(instantCache.get(key)) match {
-      case None => fullAndCache(key)
-      case Some(e) if e.windowMs != windowMs => fullAndCache(key)
+    def fullAndCache(): DataFrame = {
+      val res = evalAt(tMs, windowMs)
+      val rows = collectRows(res)
+      val df = localFrame(res, rows)
+      countO7(st => st.copy(misses = st.misses + 1))
+      instantCache.put(key, InstantEntry(tMs, windowMs, df, rows.length))
+      df
+    }
+    instantCache.get(key) match {
+      case None => fullAndCache()
+      case Some(e) if e.windowMs != windowMs => fullAndCache()
       case Some(e) =>
         val offset = tMs - e.tsMs
         val tooBig = offset >= math.min(windowMs / 2, 1800000L)
         if (offset == 0) {
-          instantStats = instantStats.copy(exactHits = instantStats.exactHits + 1)
+          countO7(st => st.copy(exactHits = st.exactHits + 1))
           e.df
         } else if (offset < 0 || tooBig) {
-          fullAndCache(key)
+          fullAndCache()
         } else {
           // tail delta at t, head delta at t-window, both over [offset] ms
           val tail = evalAt(tMs, offset)
@@ -471,18 +517,16 @@ object Engine {
             col("name").as("_ns"), col("tags").as("_ts"), col("value").as("_vs"))
           val hd = head.select(instantKeyCol(head).as("_k"), col("value").as("_ve"))
           val cs = c.join(s, Seq("_k"), "full_outer").join(hd, Seq("_k"), "left_outer")
-          val merged =
+          // (value, head-validity failure) per series
+          val (v, bad) =
             if (additiveInstantFns(fn)) {
               // cached + tail − head; a key absent from cached starts from
               // the tail value; head-only keys contribute nothing
               // (getSumInstantValues, eval.go:1630-1680)
               val base = when(col("_vc").isNotNull, col("_vc") + coalesce(col("_vs"), lit(0.0)))
                 .otherwise(col("_vs"))
-              val v = when(base.isNotNull && col("_ve").isNotNull, base - col("_ve"))
-                .otherwise(base)
-              cs.select(coalesce(col("name"), col("_ns")).as("name"),
-                coalesce(col("tags"), col("_ts")).as("tags"),
-                lit(tMs).as("t"), v.as("value")).filter(col("value").isNotNull)
+              (when(base.isNotNull && col("_ve").isNotNull, base - col("_ve")).otherwise(base),
+                lit(false))
             } else {
               val isMax = fn == "max_over_time"
               def better(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -498,22 +542,23 @@ object Engine {
                 (if (isMax) col("_ve") >= v0 else col("_ve") <= v0)
               val tailCovers = col("_vs").isNotNull &&
                 (if (isMax) col("_vs") >= col("_ve") else col("_vs") <= col("_ve"))
-              val flagged = cs.select(coalesce(col("name"), col("_ns")).as("name"),
-                coalesce(col("tags"), col("_ts")).as("tags"),
-                lit(tMs).as("t"), v0.as("value"),
-                (headWins && !tailCovers).as("_bad"))
-              // the validity probe re-reads only the two delta windows plus
-              // the persisted cached frame — still bounded by the offset
-              val aborted = flagged.filter(col("_bad")).limit(1).count() > 0
-              if (aborted) {
-                instantStats = instantStats.copy(aborts = instantStats.aborts + 1)
-                instantCache.remove(key).persisted.foreach(_.unpersist())
-                return fullAndCache(key)
-              }
-              flagged.filter(col("value").isNotNull).drop("_bad")
+              (v0, headWins && !tailCovers)
             }
-          instantStats = instantStats.copy(deltaHits = instantStats.deltaHits + 1)
-          merged
+          val flagged = cs.select(coalesce(col("name"), col("_ns")).as("name"),
+            coalesce(col("tags"), col("_ts")).as("tags"),
+            lit(tMs).as("t"), v.as("value"), coalesce(bad, lit(false)).as("_bad"))
+          // one job reads the two delta windows (bounded by the offset)
+          // against the cached rows; the validity check runs on the driver
+          val rows = collectRows(flagged)
+          if (rows.exists(_.getBoolean(4))) {
+            countO7(st => st.copy(aborts = st.aborts + 1))
+            fullAndCache()
+          } else {
+            countO7(st => st.copy(deltaHits = st.deltaHits + 1))
+            localFrame(flagged.drop("_bad"), rows.collect {
+              case r if !r.isNullAt(3) => Row(r.get(0), r.get(1), r.get(2), r.get(3))
+            })
+          }
         }
     }
   }

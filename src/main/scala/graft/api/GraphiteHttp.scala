@@ -2,7 +2,7 @@ package graft.api
 
 import java.io.Writer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graphite._
@@ -25,21 +25,16 @@ object GraphiteHttp {
   // /render?format=json
   // ------------------------------------------------------------------
 
-  /** Evaluate every target and stream the render JSON: series sorted by
-    * name (render_response.qtpl RenderJSONResponse), tags sorted by key,
-    * datapoints as [value|null, unix-seconds]. Rows stream through
-    * `toLocalIterator` over a Spark-side sort, so driver memory stays
-    * bounded by a partition (the reference's qtpl streaming, same idea).
+  /** Phase 1: evaluate every target — GraphiteEval.exec plus the
+    * maxDataPoints summarize — and collect the rows (name, sid, tags, t,
+    * value) ONCE, sorted on the driver as Spark's `orderBy(name, sid, t)`
+    * would: series by name (render_response.qtpl RenderJSONResponse).
+    * Evaluation and execution errors (unknown function, wrong arg
+    * count/type, sub-query failure) throw HERE, before the caller commits
+    * a 200 header, so clients get the proper error envelope instead of a
+    * truncated body. No targets: no rows.
     */
-  /** Phase 1: build the full render plan — GraphiteEval.exec per target
-    * plus the maxDataPoints summarize — WITHOUT touching the writer.
-    * Evaluation-time errors (unknown function, wrong arg count/type,
-    * sub-query failure) throw HERE, before the caller commits a 200
-    * chunked header, so clients get the proper error envelope instead of
-    * a truncated body (ADVICE r5 #1). Returns None when no targets.
-    */
-  def renderPlan(
-      spark: SparkSession,
+  def renderRows(
       store: DataFrame,
       targets: Seq[String],
       fromMs: Long,
@@ -48,8 +43,8 @@ object GraphiteHttp {
       xff: Double,
       maxDataPoints: Int,
       nowMs: Long,
-      tz: java.time.ZoneId = java.time.ZoneOffset.UTC): Option[DataFrame] = {
-    val ctx = GraphiteCtx(spark, store, fromMs, untilMs, storageStepMs,
+      tz: java.time.ZoneId = java.time.ZoneOffset.UTC): Array[Row] = {
+    val ctx = GraphiteCtx(store.sparkSession, store, fromMs, untilMs, storageStepMs,
       xff = xff, nowMs = nowMs, tz = tz)
     val sets = targets.zipWithIndex.map { case (t, i) =>
       var ss = GraphiteEval.exec(ctx, t)
@@ -61,22 +56,28 @@ object GraphiteHttp {
       ss.copy(df =
         ss.df.withColumn("sid", concat(lit(s"$i|"), col("sid"))))
     }
-    if (sets.isEmpty) None
-    else Some(sets.map(_.df).reduce(_ unionByName _)
+    if (sets.isEmpty) Array.empty
+    else sets.map(_.df).reduce(_ unionByName _)
       .select(col("name"), col("sid"), col("tags"), col("t"), col("value"))
-      .orderBy(col("name"), col("sid"), col("t")))
+      .collect()
+      .map(r => (Utf8Order.bytes(r.getString(0)), Utf8Order.bytes(r.getString(1)), r))
+      .sortWith { case ((na, sa, a), (nb, sb, b)) =>
+        val c = Utf8Order.compare(na, nb)
+        val d = if (c != 0) c else Utf8Order.compare(sa, sb)
+        d < 0 || d == 0 && a.getLong(3) < b.getLong(3)
+      }
+      .map(_._3)
   }
 
-  /** Phase 2: stream a prepared render plan as the render JSON. */
-  def renderWrite(plan: Option[DataFrame], w: Writer): Unit = {
-    val all = plan.getOrElse { w.write("[]"); return }
-    val it = all.toLocalIterator()
+  /** Phase 2: write the sorted render rows as the render JSON: tags
+    * sorted by key, datapoints as [value|null, unix-seconds].
+    */
+  def renderWrite(rows: Array[Row], w: Writer): Unit = {
     w.write("[")
     var curSid: String = null
     var first = true
     var firstPt = true
-    while (it.hasNext) {
-      val r = it.next()
+    for (r <- rows) {
       val sid = r.getString(1)
       if (sid != curSid) {
         if (curSid != null) w.write("]}")
@@ -99,22 +100,6 @@ object GraphiteHttp {
     if (curSid != null) w.write("]}")
     w.write("]")
   }
-
-  /** one-shot render (plan + write) — spec/back-compat convenience */
-  def render(
-      spark: SparkSession,
-      store: DataFrame,
-      targets: Seq[String],
-      fromMs: Long,
-      untilMs: Long,
-      storageStepMs: Long,
-      xff: Double,
-      maxDataPoints: Int,
-      nowMs: Long,
-      w: Writer,
-      tz: java.time.ZoneId = java.time.ZoneOffset.UTC): Unit =
-    renderWrite(renderPlan(spark, store, targets, fromMs, untilMs,
-      storageStepMs, xff, maxDataPoints, nowMs, tz), w)
 
   // ------------------------------------------------------------------
   // /metrics/find + /metrics/expand

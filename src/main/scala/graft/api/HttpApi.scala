@@ -839,33 +839,34 @@ final class HttpApi(
   private def fmt(v: Double): String =
     if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
 
-  /** canonical per-series sort key, computed IN SPARK so the driver never
-    * has to hold the result set to order it: name then sorted `k=v` tag
-    * pairs, with unprintable separators that sort before real content
+  /** the response rows (name, tags, t, value), each with its series key,
+    * collected ONCE — one Spark job, none for a cached local frame — and
+    * sorted on the driver as Spark's `orderBy(seriesKey, t)` would, before
+    * any byte of the response is sent, so an execution failure still gets
+    * the 422 envelope. The reference likewise sorts the finished result in
+    * memory before writing it (exec.go:78-101, sortSeriesByMetricName).
     */
-  private def seriesKey(name: org.apache.spark.sql.Column,
-      tags: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat_ws("\u0001", coalesce(name, lit("")),
-      concat_ws("\u0001",
-        transform(array_sort(map_entries(coalesce(tags, map()))),
-          e => concat(e.getField("key"), lit("\u0002"), e.getField("value")))))
+  private def responseRows(df: DataFrame): Array[(String, Row)] = {
+    val keys = new java.util.HashMap[(String, scala.collection.Map[String, String]),
+      (String, Array[Byte])]()
+    val keyed = df.select(col("name"), col("tags"), col("t"), col("value")).collect()
+      .map { r =>
+        val k = keys.computeIfAbsent((r.getString(0), r.getMap[String, String](1)),
+          { case (n, t) => val sk = HttpApi.seriesKeyOf(n, t); (sk, Utf8Order.bytes(sk)) })
+        (k, r)
+      }
+    keyed.sortWith { case ((ka, a), (kb, b)) =>
+      val c = Utf8Order.compare(ka._2, kb._2)
+      c < 0 || c == 0 && a.getLong(2) < b.getLong(2)
+    }.map { case (k, r) => (k._1, r) }
+  }
 
-  /** rows (name, tags, t, value) → matrix/vector result entries, streamed
-    * series-by-series. The frame is range-sorted by (seriesKey, t) in
-    * Spark; `toLocalIterator` then pulls one sorted partition at a time, so
-    * driver memory is bounded by a partition, not the result (the
-    * reference streams its JSON with qtpl writers for the same reason —
-    * app/vmselect/prometheus/query_range_response.qtpl).
+  /** sorted response rows → the matrix/vector result array, written
+    * series by series; returns the series count (the `stats` block and
+    * trace messages report it, query_response.qtpl:46)
     */
-  /** streams the result array; returns the series count (the `stats`
-    * block and trace messages report it, query_response.qtpl:46)
-    */
-  private def writeResult(df: DataFrame, instant: Boolean, w: java.io.Writer): Int = {
-    val it = df
-      .select(seriesKey(col("name"), col("tags")).as("_sk"),
-        col("name"), col("tags"), col("t"), col("value"))
-      .orderBy(col("_sk"), col("t"))
-      .toLocalIterator()
+  private def writeResult(rows: Array[(String, Row)], instant: Boolean,
+      w: java.io.Writer): Int = {
     w.write("[")
     var curKey: String = null
     var curMetric: String = null
@@ -877,18 +878,16 @@ final class HttpApi(
       if (instant) w.write(s"""{"metric":$curMetric,"value":$lastPt}""")
       else w.write("]}")
     }
-    while (it.hasNext) {
-      val r = it.next()
-      val k = r.getString(0)
-      val pt = s"""[${r.getLong(3) / 1000.0},"${fmt(r.getDouble(4))}"]"""
+    for ((k, r) <- rows) {
+      val pt = s"""[${r.getLong(2) / 1000.0},"${fmt(r.getDouble(3))}"]"""
       if (k != curKey) {
         closeSeries()
         if (!firstSeries) w.write(",")
         firstSeries = false
         curKey = k
         seriesCount += 1
-        curMetric = metricJson(Option(r.getString(1)).getOrElse(""),
-          Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty))
+        curMetric = metricJson(Option(r.getString(0)).getOrElse(""),
+          Option(r.getMap[String, String](1)).map(_.toMap).getOrElse(Map.empty))
         firstPt = true
         if (!instant) w.write(s"""{"metric":$curMetric,"values":[""")
       }
@@ -1249,9 +1248,10 @@ final class HttpApi(
     ex.close()
   }
 
-  /** chunked response streamed through `write`; the caller must force any
-    * query-plan analysis BEFORE this point so parse errors still produce a
-    * clean 422 envelope (headers can't change once streaming starts)
+  /** chunked response streamed through `write`; the caller must run any
+    * query (analysis and execution) BEFORE this point so its errors still
+    * produce a clean 422 envelope (headers can't change once streaming
+    * starts)
     */
   private def replyStream(ex: HttpExchange, contentType: String = "application/json")(
       write: java.io.Writer => Unit): Unit = {
@@ -1418,23 +1418,26 @@ final class HttpApi(
     s"""{"status":"success","data":$dataJson}"""
 
   /** -search.maxResponseSeries (exec.go:80): cap the series count a
-    * query response may carry. The reference counts the materialized
-    * result; our responses stream, so when the flag is on the series
-    * count runs as its own (cheap, aggregated) job BEFORE streaming —
-    * the error must arrive as a clean 422, not a truncated body.
+    * query response may carry, counted like the reference over the
+    * materialized result — the rows already collected for the response,
+    * before its header is sent, so the error arrives as a clean 422.
     */
-  private def enforceMaxResponseSeries(df: DataFrame, dropNaN: Boolean = true): Unit = {
+  private def enforceMaxResponseSeries(rows: Array[(String, Row)],
+      dropNaN: Boolean = true): Unit = {
     val limit = SearchFlags.maxResponseSeries
     if (limit <= 0) return
-    // count SERIES on every path (the reference counts the materialized
-    // series list): a row count overcounts matrix-valued instant results
-    // (`m[5m]` via /api/v1/query) and NaN rows the renderer drops — a
+    // count SERIES on every path: a row count overcounts matrix-valued
+    // instant results (`m[5m]` via /api/v1/query) and NaN rows — a
     // response actually under the cap must not draw a spurious 422. The
     // raw-export branch keeps staleness-marker NaNs in its output, so it
-    // counts them too (dropNaN = false).
-    val filtered = if (dropNaN) df.filter(!isnan(col("value"))) else df
-    val n = filtered
-      .agg(countDistinct(seriesKey(col("name"), col("tags")))).head().getLong(0)
+    // counts them too (dropNaN = false). Rows are sorted by key, so
+    // distinct keys are key changes.
+    var n = 0L
+    var prev: String = null
+    for ((k, r) <- rows if !(dropNaN && r.getDouble(3).isNaN) && k != prev) {
+      n += 1
+      prev = k
+    }
     if (n > limit)
       throw new IllegalArgumentException(
         s"the response contains more than -search.maxResponseSeries=$limit time series: " +
@@ -1475,12 +1478,13 @@ final class HttpApi(
               .filter(Api.selectorPredicate(graft.lang.Render.render(m)))
               .filter(col("ts") >= start && col("ts") <= end)
               .select(col("name"), col("tags"), col("ts").as("t"), col("value"))
-            enforceMaxResponseSeries(df, dropNaN = false)
             QueryStats.track(p("query"), at, at, step,
               String.valueOf(ex.getRemoteAddress)) {
+              val rows = responseRows(df)
+              enforceMaxResponseSeries(rows, dropNaN = false)
               replyStream(ex) { w =>
                 w.write("""{"status":"success","data":{"resultType":"matrix","result":""")
-                val n = writeResult(df, instant = false, w)
+                val n = writeResult(rows, instant = false, w)
                 w.write("}")
                 writeStatsAndTrace(w, n, t0, root)
                 w.write("}")
@@ -1496,14 +1500,15 @@ final class HttpApi(
               Api.query(samples, p("query"), at, step,
                 cacheTag = s"httpStore:$storeVersion",
                 tagIndex = activeTagIndex))
-            enforceMaxResponseSeries(df)
             MetricNamesStats.registerQuery(graft.lang.Parser.parse(p("query")), at)
             QueryStats.track(p("query"), at, at, step,
               String.valueOf(ex.getRemoteAddress)) {
+              val rows = graft.lang.Trace.child("execute plan and stream response")(
+                responseRows(df))
+              enforceMaxResponseSeries(rows)
               replyStream(ex) { w =>
                 w.write("""{"status":"success","data":{"resultType":"vector","result":""")
-                val n = graft.lang.Trace.child("execute plan and stream response")(
-                  writeResult(df, instant = true, w))
+                val n = writeResult(rows, instant = true, w)
                 graft.lang.Trace.printf(s"generate /api/v1/query response for series=$n")
                 w.write("}")
                 writeStatsAndTrace(w, n, t0, root)
@@ -1572,14 +1577,15 @@ final class HttpApi(
             mayCache = !nocache,
             cacheTag = s"httpStore:$storeVersion",
             tagIndex = idx))
-        enforceMaxResponseSeries(df)
         MetricNamesStats.registerQuery(graft.lang.Parser.parse(p("query")), end)
         QueryStats.track(p("query"), start, end, step,
           String.valueOf(ex.getRemoteAddress)) {
+          val rows = graft.lang.Trace.child("execute plan and stream response")(
+            responseRows(df))
+          enforceMaxResponseSeries(rows)
           replyStream(ex) { w =>
             w.write("""{"status":"success","data":{"resultType":"matrix","result":""")
-            val n = graft.lang.Trace.child("execute plan and stream response")(
-              writeResult(df, instant = false, w))
+            val n = writeResult(rows, instant = false, w)
             graft.lang.Trace.printf(s"generate /api/v1/query_range response for series=$n")
             w.write("}")
             writeStatsAndTrace(w, n, t0, root)
@@ -1595,7 +1601,7 @@ final class HttpApi(
       val df = Api.series(matchFiltered(ex, p, from, to), "", from, to)
       // `limit` truncates AFTER the sort (prometheus.go:650-677), so the
       // kept prefix is deterministic
-      val sorted = df.orderBy(seriesKey(col("name"), col("tags")))
+      val sorted = df.orderBy(HttpApi.seriesKey(col("name"), col("tags")))
       val it = p.get("limit").map(_.toInt).filter(_ > 0)
         .fold(sorted)(sorted.limit).toLocalIterator()
       replyStream(ex) { w =>
@@ -2114,17 +2120,16 @@ final class HttpApi(
       val tz = p.get("tz").map(java.time.ZoneId.of)
         .getOrElse(java.time.ZoneOffset.UTC: java.time.ZoneId)
       val targets = multiParams(ex, "target")
-      // Build the full plans (parse + eval + summarize) BEFORE streaming:
-      // evaluation errors must surface as the error envelope, not a
-      // truncated 200 body. Tracking encloses plan construction too —
-      // aggregations materialize eagerly (localCheckpoint) during it, so
-      // excluding it would hide in-flight renders from active_queries
-      // and under-report their duration in top_queries.
+      // Evaluate and collect every target (parse + eval + summarize +
+      // execute) BEFORE the 200 header: evaluation and execution errors
+      // must surface as the error envelope, not a truncated 200 body.
+      // Tracking encloses all of it, so in-flight renders show in
+      // active_queries and top_queries reports their full duration.
       QueryStats.track(targets.mkString("; "), from, until, storageStep,
         String.valueOf(ex.getRemoteAddress)) {
-        val plan = GraphiteHttp.renderPlan(spark, samples, targets, from,
+        val rows = GraphiteHttp.renderRows(samples, targets, from,
           until, storageStep, xff, maxDataPoints, now, tz)
-        replyStream(ex) { w => GraphiteHttp.renderWrite(plan, w) }
+        replyStream(ex) { w => GraphiteHttp.renderWrite(rows, w) }
       }
     },
     "/metrics/find" -> handler { ex =>
@@ -2278,5 +2283,28 @@ object HttpApi {
       } else { sb += s(i); i += 1 }
     }
     sb.result()
+  }
+
+  /** canonical per-series sort key: name then sorted `k=v` tag pairs,
+    * with unprintable separators that sort before real content. This
+    * Spark form orders /api/v1/series in Spark; the query responses
+    * compute the same string on the driver ([[seriesKeyOf]]).
+    */
+  private[api] def seriesKey(name: org.apache.spark.sql.Column,
+      tags: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    concat_ws("\u0001", coalesce(name, lit("")),
+      concat_ws("\u0001",
+        transform(array_sort(map_entries(coalesce(tags, map()))),
+          e => concat(e.getField("key"), lit("\u0002"), e.getField("value")))))
+
+  /** [[seriesKey]] computed on the driver for an already-collected row:
+    * the same string (concat_ws keeps the empty tag list and skips a pair
+    * whose value is null; array_sort orders pairs by key bytes)
+    */
+  private def seriesKeyOf(name: String, tags: scala.collection.Map[String, String]): String = {
+    val pairs = Option(tags).toSeq.flatMap(_.toSeq)
+      .collect { case (k, v) if v != null => (Utf8Order.bytes(k), s"$k\u0002$v") }
+      .sortBy(_._1)(Utf8Order)
+    Option(name).getOrElse("") + "\u0001" + pairs.map(_._2).mkString("\u0001")
   }
 }

@@ -3,6 +3,8 @@ package graft.api
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** End-to-end HTTP round trip: ingest over POST, query over GET, matching
@@ -1692,5 +1694,61 @@ class HttpApiSpec extends SparkSpec {
       SearchFlags.treatDotsAsIsInRegexps = false
       api.stop()
     }
+  }
+
+  test("query_range and /render order series like Spark's orderBy, in UTF-8 byte order") {
+    import org.apache.spark.sql.functions.col
+    val s = spark
+    import s.implicits._
+    // values on both sides of the UTF-16 vs UTF-8 disagreement: a
+    // supplementary-plane character (UTF-16 0xD83D.., UTF-8 0xF0..) and
+    // U+E000–U+FFFF ones (UTF-16 0xE000.., UTF-8 0xEE..–0xEF..)
+    val values = Seq("a", "\uE000", "\uFF21", "\uD83D\uDE00", "z\uD83D\uDE00", "z\uFFFD")
+    val base = values.zipWithIndex.flatMap { case (v, i) =>
+      Seq(60000L, 120000L).flatMap(ts => Seq(
+        ("ord", Map("k" -> v), ts, i.toDouble),
+        (s"gr.$v.cpu", Map.empty[String, String], ts, i.toDouble)))
+    }.toDF("name", "tags", "ts", "value")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+    // Scala's String ordering is Java's UTF-16 compareTo: the fixture must
+    // sort differently under it, or the spec could not tell the two apart
+    def assertNotUtf16Sorted(keys: Seq[String]): Unit =
+      assert(keys != keys.sorted, s"fixture does not exercise UTF-8 order: $keys")
+    val api = new HttpApi(spark, base = Some(base))
+    val port = api.start()
+    try {
+      // abs() drops the metric name: one null-name series among named ones
+      val q = """union(ord, abs(ord{k="z\uFFFD"}))"""
+      val grid = graft.core.GridSpec(60000L, 120000L, 60000L)
+      val want = graft.Engine.query(api.samples, q, grid)
+        .select(HttpApi.seriesKey(col("name"), col("tags")).as("_sk"),
+          col("name"), col("tags"), col("t"))
+        .orderBy(col("_sk"), col("t")).collect()
+        .map(r => (r.getString(0), Option(r.getString(1)).map("__name__" -> _).toMap ++
+          r.getMap[String, String](2)))
+        .distinct.toSeq
+      assert(want.exists(!_._2.contains("__name__")), "no null-name series in the fixture")
+      assertNotUtf16Sorted(want.map(_._1))
+      val body = get(port,
+        s"/api/v1/query_range?query=${enc(q)}&start=60&end=120&step=60")
+      val result = mapper.readTree(body).path("data").path("result")
+      val got = (0 until result.size()).map { i =>
+        val m = result.get(i).path("metric")
+        m.fieldNames().asScala.map(f => f -> m.get(f).asText()).toMap
+      }
+      assert(got == want.map(_._2), body)
+      assert(result.get(0).path("values").size() == 2, body)
+
+      // /render: series sorted by name, as orderBy(name, sid, t) sorts them
+      val names = api.samples.filter(col("name").startsWith("gr."))
+        .select("name").distinct().orderBy("name").collect().map(_.getString(0)).toSeq
+      assertNotUtf16Sorted(names)
+      val rbody = get(port,
+        s"/render?format=json&target=${enc("gr.*.cpu")}&from=60&until=120&storage_step=60")
+      val targets = mapper.readTree(rbody)
+      assert((0 until targets.size()).map(i => targets.get(i).path("target").asText()) == names,
+        rbody)
+    } finally api.stop()
   }
 }

@@ -337,5 +337,52 @@ class PlanSpec extends SparkSpec {
       "avg_over_time(click[1h]) / on(user_id) avg_over_time(click[1h])", grid).count()
     assert(spark.sharedState.cacheManager.isEmpty,
       "eval must not leave persisted frames in the session cache manager")
+    // the O6/O7 result caches hold driver rows, never persisted frames:
+    // nothing is pinned after any miss, suffix, exact or delta hit
+    def unpinned(step: String): Unit =
+      assert(spark.sharedState.cacheManager.isEmpty, s"$step pinned a persisted frame")
+    graft.Engine.clearCache()
+    graft.Engine.resetCacheStats()
+    val q = "avg_over_time(click[1h])"
+    val half = GridSpec(grid.startMs, grid.startMs + 12 * 3600000L, grid.stepMs)
+    graft.Engine.queryCached(samples, q, half).collect()
+    unpinned("an O6 miss")
+    graft.Engine.queryCached(samples, q, grid).collect()
+    unpinned("an O6 suffix hit")
+    graft.Engine.queryCached(samples, q, grid).collect()
+    unpinned("an O6 exact hit")
+    assert(graft.Engine.cacheStats == ((1L, 1L, 1L)), graft.Engine.cacheStats.toString)
+    val t0 = grid.startMs + 12 * 3600000L
+    val iq = "sum_over_time(click[6h])"
+    graft.Engine.queryInstantCached(samples, iq, GridSpec(t0, t0, 60000L)).collect()
+    unpinned("an O7 miss")
+    val delta = GridSpec(t0 + 600000L, t0 + 600000L, 60000L)
+    val viaDelta = graft.Engine.queryInstantCached(samples, iq, delta).collect()
+    unpinned("an O7 delta hit")
+    val st = graft.Engine.instantCacheStats
+    assert(st.misses == 1 && st.deltaHits == 1, st.toString)
+    assert(viaDelta.map(_.getDouble(3)).sorted.toSeq ==
+      graft.Engine.query(samples, iq, delta).collect().map(_.getDouble(3)).sorted.toSeq)
+    graft.Engine.clearCache()
+  }
+
+  test("an O6 result over the per-entry row share is served but not cached") {
+    graft.Engine.clearCache()
+    graft.Engine.resetCacheStats()
+    val samples = Samples.fromEvents(spark, sfDir)
+    // time() yields one row per grid point, no sample scan needed
+    val m = 60000L
+    val points = graft.Engine.MaxEntryRows + 1
+    val big = GridSpec(m, points * m, m)
+    val before = graft.Engine.cacheEntryCount
+    val rows = graft.Engine.queryCached(samples, "time()", big).collect()
+    assert(rows.length == points)
+    assert(rows.forall(r => r.getDouble(3) == r.getLong(2) / 1000.0))
+    assert(graft.Engine.cacheEntryCount == before, "an oversized result must not be inserted")
+    graft.Engine.queryCached(samples, "time()", big)
+    assert(graft.Engine.cacheStats == ((0L, 0L, 2L)),
+      s"a repeat must miss: ${graft.Engine.cacheStats}")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    graft.Engine.clearCache()
   }
 }
