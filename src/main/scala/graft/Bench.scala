@@ -44,7 +44,6 @@ object Bench {
       // 6.0 s probe pass vs 1.7 s for the identical query minutes
       // earlier). Server-sized cache = compile once per shape.
       .config("spark.sql.codegen.cache.maxEntries", "3000")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "16g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Headline set only: the emitted JSON line must stay small enough to
@@ -82,7 +81,7 @@ object Bench {
     } catch { case _: Exception => () } // warmup only — shapes may lack data
     try {
       val gctx = graft.graphite.GraphiteCtx(spark,
-        SparkEntry.grStoreForProf(spark, sfDir),
+        SparkEntry.grStore(spark, sfDir),
         1704067200000L, 1704153600000L, 3600000L, nowMs = 1704153600000L)
       graft.graphite.GraphiteEval.exec(gctx, "groupByNode({click,view}.*, 1, 'sum')").df.count()
     } catch { case _: Exception => () }

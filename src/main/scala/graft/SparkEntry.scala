@@ -2600,12 +2600,8 @@ object SparkEntry {
   // GraphiteSpec instead; gates drop NaN rows on both sides).
   // =====================================================================
 
-  /** profiling access to [[grStore]] (tools.GrProf only) */
-  private[graft] def grStoreForProf(s: SparkSession, dir: String): DataFrame =
-    grStore(s, dir)
-
-  /** graphite store: path = name.user_id, hour-snapped timestamps */
-  private def grStore(s: SparkSession, dir: String): DataFrame = {
+  /** graphite store: path = name.user_id, hour-snapped timestamps; Bench warms on it */
+  private[graft] def grStore(s: SparkSession, dir: String): DataFrame = {
     val e = ev(s, dir)
     e.select(
       concat_ws(".", col("name"), col("user_id")).as("name"),

@@ -1,9 +1,11 @@
 package graft.core
 
+import java.time.ZoneOffset
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types.{DoubleType, LongType, TimestampNTZType, TimestampType}
 
 /** Push time-range predicates into the parquet scan for the nanos-backed
@@ -53,8 +55,8 @@ object TsPushdown extends Rule[LogicalPlan] with PredicateHelper {
     * the exact trunc division near boundaries; [[implied]] widens every
     * bound by one extra unit of K to absorb it. A TIMESTAMP attribute's
     * micros are timezone-free (identity under unix_micros); the NTZ→TZ
-    * cast is only micros-preserving when the session zone is UTC, so
-    * [[apply]] gates on that.
+    * cast reads wall time in its zone: it keeps micros, and is matched,
+    * only in a zone that is UTC under any name (`UTC`, `Etc/UTC`, `Z`).
     */
   private object MsOfTimestamp {
     def unapply(e: Expression): Option[Attribute] = e match {
@@ -62,8 +64,9 @@ object TsPushdown extends Rule[LogicalPlan] with PredicateHelper {
           Literal(1000.0, DoubleType), _), LongType, _, _) =>
         um.child match {
           case a: Attribute if a.dataType == TimestampType => Some(a)
-          case Cast(a: Attribute, TimestampType, _, _)
-              if a.dataType == TimestampNTZType => Some(a)
+          case Cast(a: Attribute, TimestampType, zone, _) if a.dataType == TimestampNTZType &&
+              DateTimeUtils.getZoneId(zone.getOrElse(conf.sessionLocalTimeZone))
+                .normalized() == ZoneOffset.UTC => Some(a)
           case _ => None
         }
       case _ => None
@@ -111,11 +114,7 @@ object TsPushdown extends Rule[LogicalPlan] with PredicateHelper {
     case _ => Nil
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // NTZ bound derivation is only micros-preserving under a UTC session
-    // (the cast interprets wall time in the session zone); the engine pins
-    // UTC everywhere, but stay sound if someone doesn't
-    if (conf.sessionLocalTimeZone != "UTC") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case f @ Filter(cond, child) =>
         val conjuncts = splitConjunctivePredicates(cond)
@@ -125,7 +124,6 @@ object TsPushdown extends Rule[LogicalPlan] with PredicateHelper {
         if (extra.isEmpty) f
         else Filter((conjuncts ++ extra).reduce(And), child)
     }
-  }
 
   /** session-idempotent install into the user optimizer batch */
   def install(spark: SparkSession): Unit = synchronized {

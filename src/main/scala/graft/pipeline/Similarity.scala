@@ -72,12 +72,17 @@ object Similarity {
     * the whole normalize+dot+partial-top-k stage inherited the scan's
     * single task (measured: 0.77 s single-task stage = 65% of emb_topk).
     * One cheap round-robin exchange of the raw vectors fixes the width;
-    * scans that are already at least core-parallel are left untouched
+    * inputs that are already at least core-parallel are left untouched
     * (re-shuffling a 100 TB corpus's payload would be the §8 anti-pattern).
+    * The width comes from the plan's size estimate, not an RDD: a scan
+    * splits into at least `par` tasks once its bytes fill `par` max-size
+    * splits (the planned partitioning is unknown under AQE).
     */
   private def spread(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    val wide = df.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      BigInt(par) * df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    if (wide) df else df.repartition(par)
   }
 
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus

@@ -28,7 +28,6 @@ object DedupScale {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "16g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Runs the headline rollup/aggregation queries (the per-series window
   * and groupBy paths where a hot key would serialize work) on both and
-  * prints per-query seconds + hot/uniform ratio. Everything is
+  * prints per-query seconds + hot/uniform ratio, then the top stages of
+  * each variant's last pass ([[StageProfile]]). Everything is
   * deterministic (xxhash64-based pseudo-randomness, no Random), data
   * lands under target/scalebench/ — never /root/testdata.
   */
@@ -31,7 +32,6 @@ object ScaleBench {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "16g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -91,7 +91,7 @@ object ScaleBench {
       "increase(click[8h])",
       graft.core.GridSpec(T0, T0 + 86400000L, 3600000L), 7200000L).count()
 
-    def timeOne(name: String, dir: String): Double = {
+    def timeOne(name: String, dir: String) = StageProfile(spark) {
       val t0 = System.nanoTime()
       all(name)(spark, dir).count()
       math.round((System.nanoTime() - t0) / 1e6) / 1e3
@@ -102,10 +102,12 @@ object ScaleBench {
       // interleave variants so progressive JVM state (GC pressure from
       // prior passes' localCheckpoints, JIT recompiles) hits both equally
       val ts = (1 to passes).map(_ => (timeOne(n, uniDir), timeOne(n, hotDir)))
-      val u = ts.map(_._1).min
-      val h = ts.map(_._2).min
+      val u = ts.map(_._1._1).min
+      val h = ts.map(_._2._1).min
       val ratio = if (u > 0) math.round(h / u * 100) / 100.0 else -1.0
       println(f"$n%-20s $u%10.3f $h%10.3f $ratio%7.2f")
+      for ((variant, stages) <- Seq("uniform" -> ts.last._1._2, "hot" -> ts.last._2._2);
+           s <- stages.take(4)) println(f"  $variant%-7s $s")
       s"| $n | $u | $h | $ratio |"
     }
     println("\n| query | uniform s | hot s | hot/uniform |\n|---|---|---|---|")

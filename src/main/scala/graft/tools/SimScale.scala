@@ -26,7 +26,6 @@ object SimScale {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "16g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.pipeline.Similarity

@@ -32,7 +32,6 @@ object StoreScale {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "16g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -7,7 +7,7 @@ import graft.tools.GoldenTriage
   * (tools/GoldenTriage.entries — app/vmselect/promql/exec_test.go
   * TestExecSuccess, expected vectors verbatim) must all pass, minus a
   * pinned exclusion list of known gaps. Run
-  * `runMain graft.tools.GoldenTriage` to see per-subtest PASS/FAIL when
+  * `Test/runMain graft.tools.GoldenTriage` to see per-subtest PASS/FAIL when
   * curating the exclusions; shrink the list as gaps close — tests may
   * move OUT of it, never silently in (the floor assertion below).
   */

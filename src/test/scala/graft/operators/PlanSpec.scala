@@ -302,7 +302,8 @@ class PlanSpec extends SparkSpec {
     // comparison. Assert (a) the scan carries pushed ts bounds and (b) the
     // row set is EXACTLY the derived-ms semantics at ±2ms boundaries
     // (the raw bounds are deliberately 1-2ms slack-widened, the original
-    // predicate must still trim them).
+    // predicate must still trim them). The NTZ→timestamp cast keeps micros
+    // only in UTC, under any of its names; `ns div K` is zone-free.
     val dir = java.nio.file.Files.createTempDirectory("tspush").toString
     val micros = Seq( // around the exclusive lower bound 1704067200000 ms
       1704067199999000L, 1704067199999999L, 1704067200000000L,
@@ -312,19 +313,39 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     micros.toDF("us")
       .select(timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"),
-        lit(1.0).as("value"))
+        (col("us") * 1000L).as("ns"), lit(1.0).as("value"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val e = Samples.table(spark, dir, "events")
-    val df = e.select(Samples.tsMs(e, "ts").as("ts"))
-      .filter(col("ts") > 1704067200000L && col("ts") <= 1704067202000L)
-    df.count()
-    val p = plan(df)
-    assert(p.contains("GreaterThan(ts,") && p.contains("LessThan(ts,"),
-      s"expected pushed raw ts bounds in:\n$p")
-    val got = df.collect().map(_.getLong(0)).sorted
-    val want = micros.map(_ / 1000L).filter(ms =>
-      ms > 1704067200000L && ms <= 1704067202000L).sorted
-    assert(got.toSeq == want, s"rule changed filter semantics: $got vs $want")
+    // built per zone: a frame resolves its casts' zone when it is built
+    def ntz() = {
+      val e = Samples.table(spark, dir, "events")
+      e.select(Samples.tsMs(e, "ts").as("ts"))
+        .filter(col("ts") > 1704067200000L && col("ts") <= 1704067202000L)
+    }
+    def under(zone: String)(f: => Unit): Unit = {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      try f finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    }
+    for (zone <- Seq("UTC", "Etc/UTC")) under(zone) {
+      val df = ntz()
+      df.count()
+      val p = plan(df)
+      assert(p.contains("GreaterThan(ts,") && p.contains("LessThan(ts,"),
+        s"expected pushed raw ts bounds under $zone in:\n$p")
+      val got = df.collect().map(_.getLong(0)).sorted
+      val want = micros.map(_ / 1000L).filter(ms =>
+        ms > 1704067200000L && ms <= 1704067202000L).sorted
+      assert(got.toSeq == want, s"rule changed filter semantics: $got vs $want")
+    }
+    under("America/New_York") {
+      assert(!plan(ntz()).contains("GreaterThan(ts,"), "an NTZ bound is unsound outside UTC")
+      val div = Samples.table(spark, dir, "events").filter(expr("ns div 1000000") > 1704067200000L)
+      assert(plan(div).contains("GreaterThan(ns,"), s"expected the zone-free div bound in:\n${plan(div)}")
+      assert(div.count() == micros.count(_ / 1000L > 1704067200000L))
+    }
+  }
+
+  test("SparkEntry.entry, the flagship frame, has rows") {
+    assert(graft.SparkEntry.entry(spark).count() > 0)
   }
 
   test("no persisted frames pinned in the cache manager after eval") {
