@@ -143,6 +143,36 @@ object Engine {
     def clear(): Unit = synchronized { map.clear(); rows = 0L }
   }
 
+  /** Single-flight for cache fills: concurrent callers that miss the same
+    * key evaluate it once. N wall screens refreshing the same new range
+    * get one evaluation and N−1 hits, as they would one after another.
+    */
+  private final class Flights[K] {
+    private val inFlight =
+      new java.util.concurrent.ConcurrentHashMap[K, java.util.concurrent.CountDownLatch]()
+
+    /** `lookup`'s answer, else `fill` run by the one caller that claims
+      * `k` (after one more lookup: a fill may have landed in between).
+      * The other callers wait for it and look again; if the filler
+      * failed — its deadline cancelled its job group, say — the cache
+      * still misses and one of them fills instead of taking on the error.
+      */
+    def apply[T](k: K)(lookup: => Option[T])(fill: => T): T = {
+      var out = lookup
+      while (out.isEmpty) {
+        val mine = new java.util.concurrent.CountDownLatch(1)
+        val prev = inFlight.putIfAbsent(k, mine)
+        if (prev != null) {
+          graft.lang.Trace.child("wait for a concurrent evaluation of the same entry")(prev.await())
+          out = lookup
+        } else
+          try out = Some(lookup.getOrElse(fill))
+          finally { inFlight.remove(k, mine); mine.countDown() }
+      }
+      out.get
+    }
+  }
+
   /** collected rows as a local relation: collecting it again, or a
     * projection or filter Spark folds into it, starts no job
     */
@@ -155,6 +185,7 @@ object Engine {
 
   private val cache =
     new ResultCache[(String, String, Long, Long, Long), Entry](_.rows)
+  private val fills = new Flights[(String, String, Long, Long, Long)]
 
   /** cache observability for tests/ops: (exactHits, suffixHits, misses) */
   @volatile private var stats = (0L, 0L, 0L)
@@ -237,11 +268,11 @@ object Engine {
       samples.queryExecution.logical.canonicalized.toString + "|" + cacheTag
     val key = (planKey, q, grid.stepMs, lookbackMs, grid.startMs)
     def pointwise = try pointwiseInTime(Parser.parse(q)) catch { case _: Exception => false }
-    cache.get(key) match {
+    def hit: Option[DataFrame] = cache.get(key) match {
       case Some(Entry(end, df, _)) if end == grid.endMs =>
         countO6 { case (e, s, m) => (e + 1, s, m) }
         graft.lang.Trace.printf("rollup result cache: full hit")
-        df
+        Some(df)
       case Some(Entry(end, df, _)) if end > grid.endMs &&
           (end - grid.endMs) % grid.stepMs == 0 && pointwise =>
         // cached frame is a SUPERSET of the request: a pointwise query's
@@ -252,7 +283,10 @@ object Engine {
         // i.e. zero re-evaluation)
         countO6 { case (e, s, m) => (e + 1, s, m) }
         graft.lang.Trace.printf("rollup result cache: superset hit, clipped")
-        df.filter(org.apache.spark.sql.functions.col("t") <= grid.endMs)
+        Some(df.filter(org.apache.spark.sql.functions.col("t") <= grid.endMs))
+      case _ => None
+    }
+    fills(key)(hit)(cache.get(key) match {
       case Some(Entry(end, df, _)) if end < grid.endMs &&
           (grid.endMs - end) % grid.stepMs == 0 && pointwise =>
         val suffixGrid = GridSpec(end + grid.stepMs, grid.endMs, grid.stepMs)
@@ -273,7 +307,7 @@ object Engine {
         countO6 { case (e, s, m) => (e, s, m + 1) }
         cache.put(key, Entry(grid.endMs, df, rows.length))
         df
-    }
+    })
   }
 
   def clearCache(): Unit = {
@@ -314,6 +348,7 @@ object Engine {
   private final case class InstantEntry(tsMs: Long, windowMs: Long, df: DataFrame, rows: Long)
 
   private val instantCache = new ResultCache[(String, String, Long), InstantEntry](_.rows)
+  private val instantFills = new Flights[(String, String, Long)]
 
   final case class InstantStats(exactHits: Long, deltaHits: Long, misses: Long, aborts: Long)
   @volatile private var instantStats = InstantStats(0, 0, 0, 0)
@@ -488,7 +523,14 @@ object Engine {
     val planKey =
       samples.queryExecution.logical.canonicalized.toString + "|" + cacheTag
     val key = (planKey, cacheQ, lookbackMs)
-    def fullAndCache(): DataFrame = {
+    def exactHit: Option[DataFrame] = instantCache.get(key).collect {
+      case e if e.windowMs == windowMs && e.tsMs == tMs =>
+        countO7(st => st.copy(exactHits = st.exactHits + 1))
+        e.df
+    }
+    // a miss is single-flight (concurrent callers at the same instant
+    // get one evaluation); delta hits run side by side
+    def fullAndCache(): DataFrame = instantFills(key)(exactHit) {
       val res = evalAt(tMs, windowMs)
       val rows = collectRows(res)
       val df = localFrame(res, rows)

@@ -22,6 +22,11 @@ import org.apache.spark.sql.types._
   * DataFrame surfaces (a production deployment lands writes in object
   * storage and reads via the same [[Api]] programs); the query semantics
   * are identical.
+  *
+  * Requests run concurrently on a CPU-sized pool of handler threads, and
+  * the server's sockets set TCP_NODELAY. The JDK reads that switch once
+  * per JVM, so a JDK HttpServer created in the same JVM before this
+  * facade's first start() turns it off.
   */
 final class HttpApi(
     spark: SparkSession,
@@ -128,6 +133,10 @@ final class HttpApi(
     "maintenancePeriodMs needs a baseStorePath to maintain (the rounds " +
       "drop retention partitions from it and trail its downsample tiers)")
 
+  /** completed by the first maintenance round, after its frame refreshes */
+  private[api] val firstMaintenanceRound =
+    scala.concurrent.Promise[graft.core.Maintenance.Report]()
+
   /** facade-owned background maintenance; public so deployment glue (and
     * tests) can run a round synchronously via `maintenance.get.step()`
     */
@@ -155,6 +164,7 @@ final class HttpApi(
             new org.apache.hadoop.fs.Path(p + "_manifest", "dates.tsv"))
           if (gen != maintIndexGen) { maintIndexGen = gen; refreshTagIndex() }
         }
+        firstMaintenanceRound.trySuccess(r)
       }))
 
   // last index-manifest generation the maintenance hook refreshed on
@@ -185,9 +195,24 @@ final class HttpApi(
   private val startedAtMs = System.currentTimeMillis()
   private val requestCounts = mutable.Map.empty[String, Long]
   private var rowsInserted = 0L
-  // bumped on every store mutation; folded into the O6 cache key because
-  // a rebuilt LocalRelation canonicalizes identically whatever its data
-  @volatile private var storeVersion = 0L
+  // bumped on every store mutation, after the mutation is visible; folded
+  // into the O6/O7 cache keys because a rebuilt LocalRelation canonicalizes
+  // identically whatever its data. Atomic: mutations on different handler
+  // threads must each move it.
+  private val storeVersion = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** a frame snapshot with the store version it holds: retried until no
+    * mutation bumped the version while it was taken, so a concurrent
+    * ingest can never have its rows missing from a result cached under a
+    * version that counts them (nor a lazy base-store refresh in `snapshot`
+    * itself serve the previous listing's entry)
+    */
+  private def versioned[T](snapshot: => T): (T, Long) = {
+    var v = storeVersion.get()
+    var out = snapshot
+    while (storeVersion.get() != v) { v = storeVersion.get(); out = snapshot }
+    (out, v)
+  }
 
   // the spilled store's read frame, rebuilt after each spill (a Parquet
   // read pins its file listing at creation time); a crashed compaction's
@@ -204,9 +229,9 @@ final class HttpApi(
   private val spillExec = java.util.concurrent.Executors.newSingleThreadExecutor(
     (r: Runnable) => { val t = new Thread(r, "graft-spill"); t.setDaemon(true); t })
   private val spillQueued = new java.util.concurrent.atomic.AtomicBoolean(false)
-  // test hook: stretch the background spill so specs can assert the
-  // triggering ingest acked without waiting on it
-  private[api] var spillTestDelayMs: Long = 0L
+  // test hook: a closed gate holds the background spill, so specs can
+  // assert the triggering ingest acked before the spill drained its rows
+  @volatile private[api] var spillGate: java.util.concurrent.CountDownLatch = null
   /** block until the background spill thread has drained its queue */
   def awaitSpillIdle(): Unit = { spillExec.submit(new Runnable { def run(): Unit = () }).get(); () }
 
@@ -219,7 +244,7 @@ final class HttpApi(
           // next one instead of waiting for another threshold crossing
           spillQueued.set(false)
           try {
-            if (spillTestDelayMs > 0) Thread.sleep(spillTestDelayMs)
+            Option(spillGate).foreach(_.await())
             maybeSpill()
             maybeCompactSpill()
           } catch {
@@ -353,7 +378,7 @@ final class HttpApi(
             }
           }
         spilled = readSpilled()
-        storeVersion += 1
+        storeVersion.incrementAndGet()
       } finally storeSwapLock.writeLock().unlock()
       fs.delete(tmp, true)
       ()
@@ -480,7 +505,7 @@ final class HttpApi(
           spilled = fresh
           ingested.synchronized {
             ingested.remove(0, snapshot.length)
-            storeVersion += 1
+            storeVersion.incrementAndGet()
           }
         }
       }
@@ -527,7 +552,7 @@ final class HttpApi(
               if (gen == "absent" || gen.isEmpty) None
               else Some(graft.core.SampleStore.read(spark, p))
             baseState = (gen, f, now)
-            ingested.synchronized { storeVersion += 1 }
+            storeVersion.incrementAndGet()
             f
           }
         }
@@ -615,7 +640,7 @@ final class HttpApi(
           try {
             val f = graft.core.SampleStore.read(spark, path)
             tierState.put(iv, (gen, f))
-            ingested.synchronized { storeVersion += 1 }
+            storeVersion.incrementAndGet()
             Some(f)
           } catch {
             // missing/empty tier root: serve full resolution (do NOT
@@ -651,8 +676,16 @@ final class HttpApi(
       graft.pipeline.Dedup.dedupNamedSamples(res, dedupMinScrapeIntervalMs)
   }
 
+  // the handler pool (created by start) and the exchanges running on it:
+  // /metrics reports both, and stop() grants its grace only while any runs
+  private var pool: java.util.concurrent.ExecutorService = _
+  private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** start on the given port (0 = ephemeral); returns the bound port */
   def start(port: Int = 0): Int = {
+    // reading the pool size initializes object HttpApi, which turns on
+    // TCP_NODELAY before this JVM's first HttpServer.create
+    val workers = HttpApi.WorkerThreads
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     val rs = routes
     rs.foreach { case (path, h) => server.createContext(path, h) }
@@ -661,7 +694,24 @@ final class HttpApi(
     // re-dispatch with JDK-context semantics (longest prefix wins). Only
     // requests no registered context matched land here.
     server.createContext("/", rewriteHandler(rs))
-    server.setExecutor(null) // serial — queries hold the SparkSession anyway
+    // Handlers run concurrently on a bounded pool, like vmselect's
+    // goroutine per request under -search.maxConcurrentRequests
+    // (app/vmselect/main.go), so a dashboard's cache hits do not queue
+    // behind its /render job, and a client stalling its request body holds
+    // one worker, not the server. Spark runs the handlers' jobs side by
+    // side; the per-request state is thread-confined (Trace, job group) or
+    // locked (the store view, caches, buffers).
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    pool = java.util.concurrent.Executors.newFixedThreadPool(workers, (r: Runnable) => {
+      val t = new Thread(r, s"graft-http-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    server.setExecutor((exchange: Runnable) => pool.execute(() => {
+      inFlight.incrementAndGet()
+      try exchange.run()
+      finally if (inFlight.decrementAndGet() == 0) inFlight.synchronized(inFlight.notifyAll())
+    }))
     server.start()
     maintenance.foreach(_.start())
     server.getAddress.getPort
@@ -714,26 +764,31 @@ final class HttpApi(
 
   def stop(): Unit = {
     maintenance.foreach(_.stop())
-    // stop(2): waits (up to 2 s, returns immediately when idle) for
-    // in-flight exchange handlers — an ingest mid-append could otherwise
-    // ack AFTER the final flush below and lose its rows on restart,
-    // breaking the spillDir durability contract
-    if (server != null) server.stop(2)
+    if (server != null) {
+      // Up to 2 s of grace for the exchanges in flight, counted here. The
+      // JDK's own stop(2) ends its grace early only when no exchange runs
+      // AND no connection is mid-request; with a pool it missed that on an
+      // idle server (a client closing its keep-alive connection runs a
+      // short exchange that reads the EOF) and sat out the whole 2 s.
+      val graceEnd = System.nanoTime() + 2000000000L
+      inFlight.synchronized {
+        while (inFlight.get() > 0 && graceEnd - System.nanoTime() > 0)
+          inFlight.wait(math.max(1L, (graceEnd - System.nanoTime()) / 1000000L))
+      }
+      // Then close the listener and every connection at once. After this
+      // no handler can ack, and a handler acks only after its rows are in
+      // the buffer, so the flush below covers every acked row.
+      server.stop(0)
+      // let the handlers still running finish (bounded: reads are under
+      // their query deadline, and a closed connection fails a blocked
+      // body read) so none is mid-append when the store is flushed
+      pool.shutdown()
+      if (!pool.awaitTermination(QueryDeadline.MaxQueryDurationMs,
+          java.util.concurrent.TimeUnit.MILLISECONDS)) pool.shutdownNow()
+    }
     // clean shutdown drains the hot tail into the spill store, so a
     // restarted facade over the same spillDir serves every acked row
     flushIngested()
-    // the 2 s bound alone re-opens the race it exists to close: a
-    // straggler handler past the bound can still append-and-ack AFTER
-    // that flush — keep draining until the buffer stays empty (bounded;
-    // a handler stuck past it would not have acked, so nothing acked is
-    // lost). Without a spill store the buffer cannot drain — skip.
-    if (spillDir.nonEmpty) {
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (bufferedRows > 0 && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        flushIngested()
-      }
-    }
     spillExec.shutdown()
   }
 
@@ -917,8 +972,7 @@ final class HttpApi(
     // snapshot the frame BEFORE consulting the index — the inverse order
     // would let a concurrent ingest land between the index union and the
     // snapshot and have its rows pruned by a stale candidate set
-    // (handlers are serial today, but the invariant must not depend on it;
-    // registerIndexTriples runs before the buffer append for the same
+    // (registerIndexTriples runs before the buffer append for the same
     // reason)
     val frame = samples
     if (sels.isEmpty) frame
@@ -1404,7 +1458,7 @@ final class HttpApi(
     ingested.synchronized {
       ingested ++= collected
       rowsInserted += collected.length
-      storeVersion += 1
+      storeVersion.incrementAndGet()
     }
     collected.iterator.map(_.getString(0)).distinct
       .foreach(MetricNamesStats.registerIngest)
@@ -1491,14 +1545,15 @@ final class HttpApi(
               }
             }
           case None =>
+            val (frame, version) = versioned(samples)
             val df = graft.lang.Trace.child("build query plan")(
               // parse/analyze errors throw here → 422; the store version
               // rides the O7 cache key so an ingest between two identical
               // instant queries invalidates the delta/exact hit (the
               // buffer's rebuilt LocalRelation canonicalizes identically
               // whatever its rows)
-              Api.query(samples, p("query"), at, step,
-                cacheTag = s"httpStore:$storeVersion",
+              Api.query(frame, p("query"), at, step,
+                cacheTag = s"httpStore:$version",
                 tagIndex = activeTagIndex))
             MetricNamesStats.registerQuery(graft.lang.Parser.parse(p("query")), at)
             QueryStats.track(p("query"), at, at, step,
@@ -1558,8 +1613,10 @@ final class HttpApi(
       // facade-ingested rows), so the union introduces no duplicates.
       // a path-configured tier that doesn't exist yet (maintenance job
       // never ran) falls back to full resolution rather than erroring
-      val routedFrame = routedIv.flatMap(tierFrame)
-      val frame = routedFrame.map(f => samplesOver(Some(f))).getOrElse(samples)
+      val ((routedFrame, frame), version) = versioned {
+        val routed = routedIv.flatMap(tierFrame)
+        (routed, routed.map(f => samplesOver(Some(f))).getOrElse(samples))
+      }
       val t0 = System.nanoTime()
       val root =
         if (boolParam(p, "trace"))
@@ -1575,7 +1632,7 @@ final class HttpApi(
         val df = graft.lang.Trace.child("build query plan")(
           Api.queryRange(frame, p("query"), start, end, step,
             mayCache = !nocache,
-            cacheTag = s"httpStore:$storeVersion",
+            cacheTag = s"httpStore:$version",
             tagIndex = idx))
         MetricNamesStats.registerQuery(graft.lang.Parser.parse(p("query")), end)
         QueryStats.track(p("query"), start, end, step,
@@ -1944,6 +2001,10 @@ final class HttpApi(
       b.append(s"vm_rollup_result_cache_partial_hits_total $partialHits\n")
       b.append(s"vm_rollup_result_cache_miss_total $misses\n")
       b.append(s"""vm_cache_entries{type="promql/rollup_result"} ${graft.Engine.cacheEntryCount}""").append('\n')
+      // the handler pool (app/vmselect/main.go concurrencyLimitCh gauges);
+      // current counts this request too
+      b.append(s"vm_concurrent_select_capacity ${HttpApi.WorkerThreads}\n")
+      b.append(s"vm_concurrent_select_current ${inFlight.get()}\n")
       maintenance.foreach { m =>
         b.append(s"vm_maintenance_rounds_total ${m.roundsRun}\n")
         b.append(s"vm_maintenance_job_errors_total ${m.errorCount}\n")
@@ -2040,7 +2101,7 @@ final class HttpApi(
       }
       if (sels.isEmpty) throw new IllegalArgumentException("missing `match[]` arg")
       sels.foreach(Api.selectorPredicate) // validate before recording any
-      deletedSelectors.synchronized { deletedSelectors ++= sels; storeVersion += 1 }
+      deletedSelectors.synchronized { deletedSelectors ++= sels; storeVersion.incrementAndGet() }
       persistDeletes() // acked deletes must survive a spillDir restart
       reply(ex, 204, "", "text/plain")
     },
@@ -2084,7 +2145,7 @@ final class HttpApi(
     registerIndexTriples(rows)
     ingested.synchronized {
       ingested ++= rows
-      storeVersion += 1
+      storeVersion.incrementAndGet()
     }
     parsed.map(_._2)
   }
@@ -2207,7 +2268,7 @@ final class HttpApi(
         deletedPredicates.synchronized {
           deletedPredicates += pred
           deletedGraphitePaths += p
-          storeVersion += 1
+          storeVersion.incrementAndGet()
         }
       }
       persistDeletes() // acked deletes must survive a spillDir restart
@@ -2258,6 +2319,21 @@ final class HttpApi(
 }
 
 object HttpApi {
+  // The JDK server flushes the response headers on their own; with Nagle's
+  // algorithm on, the body segment then waits for the client's delayed ACK
+  // of them, ~40 ms per response on loopback. The server's only switch is
+  // this property, read ONCE when sun.net.httpserver.ServerConfig loads:
+  // a JDK HttpServer created in this JVM before object HttpApi initialized
+  // leaves TCP_NODELAY off for every server after it.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** handler threads per facade, CPU-sized like vmselect's
+    * -search.maxConcurrentRequests cap: 2 × cores, at least 4 so a small
+    * box still overlaps a slow request with cache hits
+    */
+  private[api] val WorkerThreads: Int =
+    math.max(4, 2 * Runtime.getRuntime.availableProcessors)
+
   /** Decode a Prometheus `U__`-escaped label name
     * (prometheus/common model.EscapeName with ValueEncodingEscaping, used
     * by clients to address UTF-8 label names through path segments:

@@ -1,5 +1,7 @@
 package graft.api
 
+import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
+
 import org.apache.spark.sql.SparkSession
 
 /** Per-request query deadline (app/vmselect/searchutil/searchutil.go:21-43):
@@ -23,22 +25,30 @@ object QueryDeadline {
     case _ => MaxQueryDurationMs
   }
 
+  // one daemon timer thread for every request's deadline; a cancelled
+  // deadline leaves the queue at once instead of waiting out its delay
+  private val timer = {
+    val t = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
+      val th = new Thread(r, "graft-query-deadline"); th.setDaemon(true); th
+    })
+    t.setRemoveOnCancelPolicy(true)
+    t
+  }
+
   def run[T](spark: SparkSession, timeoutMs: Long)(body: => T): T = {
     val sc = spark.sparkContext
     val group = "graft-deadline-" + java.util.UUID.randomUUID()
     sc.setJobGroup(group, s"query deadline ${timeoutMs}ms", interruptOnCancel = true)
-    val timer = new java.util.Timer("graft-query-deadline", true)
     // Re-fire the cancel until the request finishes: a single cancel can
     // race job submission on a loaded driver (observed: the cancel event
     // processed between two AQE stage jobs left the next stage running to
     // completion), and cancelJobGroupAndFutureJobs is idempotent, so the
     // next tick reaps anything that slipped through.
-    timer.scheduleAtFixedRate(new java.util.TimerTask {
-      def run(): Unit = sc.cancelJobGroupAndFutureJobs(group)
-    }, timeoutMs, 250L)
+    val fire = timer.scheduleAtFixedRate(
+      () => sc.cancelJobGroupAndFutureJobs(group), timeoutMs, 250L, TimeUnit.MILLISECONDS)
     try body
     finally {
-      timer.cancel()
+      fire.cancel(false)
       sc.clearJobGroup()
     }
   }

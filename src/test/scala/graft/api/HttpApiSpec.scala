@@ -266,13 +266,13 @@ class HttpApiSpec extends SparkSpec {
   test("size-triggered spills run off the request thread; file count stays bounded") {
     val dir = java.nio.file.Files.createTempDirectory("httpspill_bg").toString
     val api = new HttpApi(spark, spillDir = Some(dir), spillMaxBufferedRows = 2)
-    api.spillTestDelayMs = 2000
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    api.spillGate = gate
     api.spillCompactFileThreshold = 6
     val port = api.start()
     try {
-      // the POST crosses the threshold and acks while the (artificially
-      // slowed) spill still runs — a synchronous spill would have drained
-      // the buffer before the ack
+      // the POST crosses the threshold and acks while the spill waits on
+      // its closed gate — a synchronous spill would never ack
       assert(post(port, "/api/v1/import/prometheus",
         """bg{job="a"} 1 60
           |bg{job="a"} 2 120
@@ -280,7 +280,7 @@ class HttpApiSpec extends SparkSpec {
           |""".stripMargin) == 204)
       assert(api.bufferedRows == 3,
         "ingest must ack before the background spill drains the buffer")
-      api.spillTestDelayMs = 0
+      gate.countDown()
       api.awaitSpillIdle()
       assert(api.bufferedRows == 0, "background spill must eventually drain")
       // many spills on one long-running facade: the background compactor
@@ -512,9 +512,10 @@ class HttpApiSpec extends SparkSpec {
       maintenancePeriodMs = 3600000L)
     val port = api.start()
     try {
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (api.maintenance.get.lastReport.isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(20)
+      // the first round completes this promise after its frame refreshes
+      // (the bound only turns a hung round into a failure)
+      scala.concurrent.Await.ready(api.firstMaintenanceRound.future,
+        scala.concurrent.duration.Duration(60, "s"))
       val rep = api.maintenance.get.lastReport
       assert(rep.nonEmpty && rep.get.errors.isEmpty, rep.toString)
       assert(rep.get.downsampled(300000L) == Seq("1970-01-01"))
@@ -768,6 +769,11 @@ class HttpApiSpec extends SparkSpec {
       assert(m.contains("vm_rows_inserted_total 1"))
       assert(m.contains("vm_rollup_result_cache_"))
       assert(m.contains("vm_app_uptime_seconds"))
+      // the handler pool's gauges; the /metrics request itself is in flight
+      assert(m.contains(s"vm_concurrent_select_capacity ${HttpApi.WorkerThreads}\n"), m)
+      val current = "vm_concurrent_select_current (\\d+)".r.findFirstMatchIn(m)
+        .map(_.group(1).toInt)
+      assert(current.exists(c => c >= 1 && c <= HttpApi.WorkerThreads), m)
       // root-dispatched paths are counted under their concrete path
       get(port, "/prometheus/api/v1/labels")
       assert(get(port, "/metrics")
@@ -1750,6 +1756,49 @@ class HttpApiSpec extends SparkSpec {
       val targets = mapper.readTree(rbody)
       assert((0 until targets.size()).map(i => targets.get(i).path("target").asText()) == names,
         rbody)
+    } finally api.stop()
+  }
+
+  test("a stalled request body holds one handler thread, not the server") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val api = new HttpApi(spark)
+    val port = api.start()
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(60000) // failure bound only: the reads below wait on data
+      val body = "stalled{job=\"s\"} 7 60\n".getBytes(UTF_8)
+      val out = sock.getOutputStream
+      out.write((s"POST /api/v1/import/prometheus HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n").getBytes(UTF_8))
+      out.write(body, 0, 5)
+      out.flush()
+      // the import's handler now blocks on the rest of its body; a query
+      // on another connection must still be served
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/api/v1/query?query=vector(1)&time=60"))
+        .timeout(java.time.Duration.ofSeconds(60)).GET().build()
+      val r = HttpClient.newHttpClient().send(req, HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      assert(sock.getInputStream.available() == 0, "the import answered before its body ended")
+      out.write(body, 5, body.length - 5)
+      out.flush()
+      val status = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, UTF_8)).readLine()
+      assert(status != null && status.startsWith("HTTP/1.1 204"), status)
+      assert(get(port, "/api/v1/query?query=stalled&time=60")
+        .contains(""""value":[60.0,"7"]"""))
+    } finally { sock.close(); api.stop() }
+  }
+
+  test("the facade's sockets set TCP_NODELAY") {
+    val api = new HttpApi(spark)
+    api.start()
+    try {
+      // the JDK server's only switch, read once per JVM
+      val noDelay = Class.forName("sun.net.httpserver.ServerConfig")
+        .getDeclaredMethod("noDelay")
+      noDelay.setAccessible(true)
+      assert(noDelay.invoke(null) == java.lang.Boolean.TRUE)
     } finally api.stop()
   }
 }

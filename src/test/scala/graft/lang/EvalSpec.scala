@@ -440,6 +440,52 @@ class EvalSpec extends SparkSpec {
     Engine.clearCache()
   }
 
+  test("O6 single-flight: concurrent identical misses evaluate once") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    Engine.clearCache()
+    Engine.resetCacheStats()
+    val q = "max_over_time(m[2m])"
+    val want = Engine.query(samples, q, grid).collect().map(_.toString).sorted.toSeq
+    val n = 6
+    val pool = Executors.newFixedThreadPool(n)
+    try {
+      // N wall screens refreshing the same new range at once: one
+      // evaluation, N−1 exact hits, the same rows everywhere
+      val go = new CountDownLatch(1)
+      val calls = (1 to n).map(_ => pool.submit(() => {
+        go.await()
+        Engine.queryCached(samples, q, grid).collect().map(_.toString).sorted.toSeq
+      }))
+      go.countDown()
+      val got = calls.map(_.get(120, TimeUnit.SECONDS)) // bound = failure only
+      assert(Engine.cacheStats == ((n - 1).toLong, 0L, 1L), Engine.cacheStats.toString)
+      assert(want.nonEmpty && got.forall(_ == want))
+
+      // a filler whose job group is cancelled fails alone: a caller
+      // waiting on it fills the entry itself instead of taking on the error
+      Engine.clearCache()
+      val sc = spark.sparkContext
+      val go2 = new CountDownLatch(1)
+      val doomed = pool.submit(() => {
+        val g = "cancelled-filler-" + java.util.UUID.randomUUID()
+        sc.setJobGroup(g, "cancelled filler", interruptOnCancel = true)
+        sc.cancelJobGroupAndFutureJobs(g)
+        go2.await()
+        try Engine.queryCached(samples, q, grid).collect().length
+        catch { case _: Exception => -1 }
+        finally sc.clearJobGroup()
+      })
+      val healthy = pool.submit(() => {
+        go2.await()
+        Engine.queryCached(samples, q, grid).collect().map(_.toString).sorted.toSeq
+      })
+      go2.countDown()
+      assert(healthy.get(120, TimeUnit.SECONDS) == want)
+      doomed.get(120, TimeUnit.SECONDS) // fails or hits, either is fine
+    } finally pool.shutdown()
+    Engine.clearCache()
+  }
+
   test("O6 cache: ingest invalidates, misalignment/backward re-evaluate, chained suffixes merge") {
     // rollup_result_cache_test.go semantics against the suffix cache:
     // overlap handling, merge-of-merges, and the invalidate-on-ingest
