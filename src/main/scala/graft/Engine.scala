@@ -2,7 +2,8 @@ package graft
 
 import graft.core.GridSpec
 import graft.lang.{AggrFuncExpr, BinaryOpExpr, Eval, Expr, FuncExpr, MetricExpr, NumberExpr, ParensExpr, Parser, RollupExpr, StringExpr}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Engine facade: MetricsQL text → grid DataFrame (name, tags, t, value).
   *
@@ -84,32 +85,49 @@ object Engine {
     (aStart, aStart + (points - 1) * stepMs)
   }
 
+  /** A result held on the driver: its collected rows and their schema.
+    * The HTTP writer serves the rows as they are, with no Catalyst pass;
+    * [[frame]] builds a local relation over them for callers that need a
+    * DataFrame. The frame is built on each call and never kept beside the
+    * rows, so a cache entry holds one copy of its result.
+    */
+  final case class Collected(rows: Array[Row], schema: StructType) {
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** a served result as a DataFrame: uncached plans pass through */
+  private def frameOf(spark: SparkSession, res: Either[DataFrame, Collected]): DataFrame =
+    res.fold(identity, _.frame(spark))
+
   /** O6 result memoization with TIME-SUFFIX FETCH
     * (rollup_result_cache.go:283 — a dashboard refresh repeats the same
     * expr with the end timestamp advanced; only the new suffix must be
     * evaluated). Like the reference's in-memory cache blocks
     * (rollup_result_cache.go:202,364), an entry holds the COLLECTED result
-    * rows on the driver, served as a local relation:
+    * rows on the driver, and a hit hands those rows to the caller:
     *
-    *  - exact (query, grid) repeats return the same local frame — serving
-    *    it starts no Spark job
+    *  - exact (query, grid) repeats return the entry's rows themselves —
+    *    serving them runs no Spark job and no Catalyst pass
+    *  - a repeat whose grid is a clipped SUPERSET of the entry gets the
+    *    entry's rows up to its end, filtered on the driver
     *  - a repeat whose grid extends FORWARD by whole steps evaluates only
-    *    (cachedEnd, newEnd] and appends those rows to the cached prefix
-    *    rows — provided the query is pointwise in time (each grid point
-    *    depends only on samples in its own lookback window, like the
-    *    reference's rollup-level cache entries). Queries with whole-range
-    *    semantics (the running_, range_, sort, limit families) always
-    *    re-evaluate.
+    *    (cachedEnd, newEnd] and appends those rows to the entry's rows —
+    *    provided the query is pointwise in time (each grid point depends
+    *    only on samples in its own lookback window, like the reference's
+    *    rollup-level cache entries). Queries with whole-range semantics
+    *    (the running_, range_, sort, limit families) always re-evaluate.
     *
     * Bounded by entry count and total rows ([[ResultCache]]).
     */
-  private final case class Entry(endMs: Long, df: DataFrame, rows: Long)
+  private final case class Entry(endMs: Long, res: Collected)
 
   /** Row budget of each result cache (O6 and O7 alike). The serving
     * driver runs with a 2 GB heap at the least; a result row — name, a
-    * 10-label tag map, t, value — measures ~1.8 KB (SizeEstimator) in the
-    * local relation, which holds it as converted Catalyst objects, so
-    * 128k rows ≈ 240 MB: an eighth of that heap per cache.
+    * 10-label tag map, t, value — measures ~1.4 KB (SizeEstimator, 20k
+    * collected rows) as the external `Row` an entry holds, against ~1.9 KB
+    * as a local relation's converted Catalyst row, so 128k rows ≈ 180 MB:
+    * under an eighth of that heap per cache.
     */
   private val MaxCachedRows = 128L * 1024
   /** a single result above this share of the budget is served but not
@@ -173,18 +191,19 @@ object Engine {
     }
   }
 
-  /** collected rows as a local relation: collecting it again, or a
-    * projection or filter Spark folds into it, starts no job
-    */
-  private def localFrame(like: DataFrame, rows: Array[Row]): DataFrame =
-    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
-
   /** run `df` once, keeping its rows on the driver */
-  private def collectRows(df: DataFrame): Array[Row] =
-    graft.lang.Trace.child("execute plan and collect result rows")(df.collect())
+  private def collectRows(df: DataFrame): Collected =
+    Collected(graft.lang.Trace.child("execute plan and collect result rows")(df.collect()),
+      df.schema)
+
+  /** cache key material for the store: its canonicalized plan plus the
+    * caller's tag (see [[queryCached]]'s `cacheTag`)
+    */
+  private def planKey(samples: DataFrame, cacheTag: String): String =
+    samples.queryExecution.logical.canonicalized.toString + "|" + cacheTag
 
   private val cache =
-    new ResultCache[(String, String, Long, Long, Long), Entry](_.rows)
+    new ResultCache[(String, String, Long, Long, Long), Entry](_.res.rows.length)
   private val fills = new Flights[(String, String, Long, Long, Long)]
 
   /** cache observability for tests/ops: (exactHits, suffixHits, misses) */
@@ -260,53 +279,62 @@ object Engine {
       grid: GridSpec,
       lookbackMs: Long = 300000L,
       cacheTag: String = "",
+      tagIndex: Option[DataFrame] = None): DataFrame =
+    queryCachedRows(samples, q, grid, lookbackMs, cacheTag, tagIndex)
+      .frame(samples.sparkSession)
+
+  /** [[queryCached]]'s rows: a hit returns the entry's rows (clipped on a
+    * superset hit), a miss or suffix hit the rows it just collected.
+    */
+  def queryCachedRows(
+      samples: DataFrame,
+      q: String,
+      grid: GridSpec,
+      lookbackMs: Long = 300000L,
+      cacheTag: String = "",
       // tag→names index for nameless lookups — a pure narrowing (results
       // identical with or without it), so cache entries stay valid across
       // indexed and unindexed evaluations of the same key
-      tagIndex: Option[DataFrame] = None): DataFrame = {
-    val planKey =
-      samples.queryExecution.logical.canonicalized.toString + "|" + cacheTag
-    val key = (planKey, q, grid.stepMs, lookbackMs, grid.startMs)
+      tagIndex: Option[DataFrame] = None): Collected = {
+    val key = (planKey(samples, cacheTag), q, grid.stepMs, lookbackMs, grid.startMs)
     def pointwise = try pointwiseInTime(Parser.parse(q)) catch { case _: Exception => false }
-    def hit: Option[DataFrame] = cache.get(key) match {
-      case Some(Entry(end, df, _)) if end == grid.endMs =>
+    def hit: Option[Collected] = cache.get(key) match {
+      case Some(Entry(end, res)) if end == grid.endMs =>
         countO6 { case (e, s, m) => (e + 1, s, m) }
         graft.lang.Trace.printf("rollup result cache: full hit")
-        Some(df)
-      case Some(Entry(end, df, _)) if end > grid.endMs &&
+        Some(res)
+      case Some(Entry(end, res)) if end > grid.endMs &&
           (end - grid.endMs) % grid.stepMs == 0 && pointwise =>
-        // cached frame is a SUPERSET of the request: a pointwise query's
+        // cached rows are a SUPERSET of the request: a pointwise query's
         // value at t doesn't depend on the grid extent, so the prefix IS
         // the answer — serve it clipped, evaluate nothing, and keep the
-        // longer frame cached (rollup_result_cache_test.go
+        // longer entry cached (rollup_result_cache_test.go
         // "bigger-than-start-end": newStart lands past the requested end,
         // i.e. zero re-evaluation)
         countO6 { case (e, s, m) => (e + 1, s, m) }
         graft.lang.Trace.printf("rollup result cache: superset hit, clipped")
-        Some(df.filter(org.apache.spark.sql.functions.col("t") <= grid.endMs))
+        val t = res.schema.fieldIndex("t")
+        Some(res.copy(rows = res.rows.filter(_.getLong(t) <= grid.endMs)))
       case _ => None
     }
     fills(key)(hit)(cache.get(key) match {
-      case Some(Entry(end, df, _)) if end < grid.endMs &&
+      case Some(Entry(end, res)) if end < grid.endMs &&
           (grid.endMs - end) % grid.stepMs == 0 && pointwise =>
         val suffixGrid = GridSpec(end + grid.stepMs, grid.endMs, grid.stepMs)
         graft.lang.Trace.printf(
           s"rollup result cache: suffix hit, evaluated [${suffixGrid.startMs}..${suffixGrid.endMs}]")
         val suffix = query(samples, q, suffixGrid, lookbackMs, tagIndex)
-          .select(df.columns.map(org.apache.spark.sql.functions.col): _*)
-        val rows = df.collect() ++ collectRows(suffix)
-        val merged = localFrame(df, rows)
+          .select(res.schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
+        val merged = res.copy(rows = res.rows ++ collectRows(suffix).rows)
         countO6 { case (e, s, m) => (e, s + 1, m) }
-        cache.put(key, Entry(grid.endMs, merged, rows.length))
+        cache.put(key, Entry(grid.endMs, merged))
         merged
       case _ =>
         graft.lang.Trace.printf("rollup result cache: miss")
-        val res = query(samples, q, grid, lookbackMs, tagIndex)
-        val rows = collectRows(res)
-        val df = localFrame(res, rows)
+        val res = collectRows(query(samples, q, grid, lookbackMs, tagIndex))
         countO6 { case (e, s, m) => (e, s, m + 1) }
-        cache.put(key, Entry(grid.endMs, df, rows.length))
-        df
+        cache.put(key, Entry(grid.endMs, res))
+        res
     })
   }
 
@@ -342,12 +370,14 @@ object Engine {
   // refreshes.
   // ------------------------------------------------------------------
 
-  /** cached per-series instant result at (tsMs, windowMs), held as
-    * driver rows in a local frame like [[Entry]]
+  /** cached instant result at (tsMs, windowMs), held as driver rows like
+    * [[Entry]]: per series for a rollup leaf, per group for an aggregated
+    * shape
     */
-  private final case class InstantEntry(tsMs: Long, windowMs: Long, df: DataFrame, rows: Long)
+  private final case class InstantEntry(tsMs: Long, windowMs: Long, res: Collected)
 
-  private val instantCache = new ResultCache[(String, String, Long), InstantEntry](_.rows)
+  private val instantCache =
+    new ResultCache[(String, String, Long), InstantEntry](_.res.rows.length)
   private val instantFills = new Flights[(String, String, Long)]
 
   final case class InstantStats(exactHits: Long, deltaHits: Long, misses: Long, aborts: Long)
@@ -399,10 +429,37 @@ object Engine {
       lookbackMs: Long = 300000L,
       minWindowMs: Long = DefaultInstantMinWindowMs,
       cacheTag: String = "",
-      tagIndex: Option[DataFrame] = None): DataFrame = {
+      tagIndex: Option[DataFrame] = None): DataFrame =
+    frameOf(samples.sparkSession,
+      queryInstantServed(samples, q, grid, lookbackMs, minWindowMs, cacheTag, tagIndex))
+
+  /** [[queryInstantCached]]'s result as the cache serves it: driver rows
+    * for the O7 shapes — an exact hit returns the entry's rows — or the
+    * plan of a shape that evaluates uncached (a non-O7 shape, a window
+    * below `minWindowMs`, avg_over_time's sum/count join).
+    *
+    * An aggregated shape over a cached leaf keeps its aggregated rows as
+    * an entry of its own, keyed by the full query text, so an exact hit
+    * re-runs no aggregation. That entry is filled only from the leaf's
+    * own entry (a miss or an exact hit), never from a delta result, and
+    * served only while the leaf's entry is exact at the same instant: the
+    * hit counts once, as the leaf's exact hit would.
+    */
+  def queryInstantServed(
+      samples: DataFrame,
+      q: String,
+      grid: GridSpec,
+      lookbackMs: Long = 300000L,
+      minWindowMs: Long = DefaultInstantMinWindowMs,
+      cacheTag: String = "",
+      tagIndex: Option[DataFrame] = None): Either[DataFrame, Collected] = {
     import org.apache.spark.sql.functions._
-    if (grid.startMs != grid.endMs) return query(samples, q, grid, lookbackMs, tagIndex)
-    val ast = try Parser.parse(q) catch { case _: Exception => return query(samples, q, grid, lookbackMs, tagIndex) }
+    def uncached = Left(query(samples, q, grid, lookbackMs, tagIndex))
+    if (grid.startMs != grid.endMs) return uncached
+    val ast = try Parser.parse(q) catch { case _: Exception => return uncached }
+    lazy val pk = planKey(samples, cacheTag)
+    def leaf(cacheQ: String, fe: FuncExpr) =
+      instantLeaf(samples, pk, cacheQ, grid, lookbackMs, minWindowMs, tagIndex, fe)
     ast match {
       case AggrFuncExpr(agg, Seq(inner: FuncExpr), modifier, 0)
           if instantAggFns(agg) && instantShape(inner) =>
@@ -412,23 +469,49 @@ object Engine {
         // per series (with its own min/max head-validity aborts), so the
         // merged frame IS fn(m[w]) @ t for every series — any
         // aggregation of it equals the full recompute's.
-        val per = queryInstantCached(samples, graft.lang.Render.render(inner),
-          grid, lookbackMs, minWindowMs, cacheTag, tagIndex)
-        aggregateInstant(per, agg, modifier)
+        def aggregate(per: Either[DataFrame, Collected]) =
+          aggregateInstant(frameOf(samples.sparkSession, per), agg, modifier)
+        val innerQ = graft.lang.Render.render(inner)
+        val leafWindowMs = inner match {
+          case FuncExpr(fn, Seq(re: RollupExpr), _) if fn != "avg_over_time" =>
+            Some(re.window.get.ms(grid.stepMs)).filter(_ >= minWindowMs)
+          case _ => None
+        }
+        leafWindowMs match {
+          case Some(windowMs) =>
+            val key = (pk, innerQ, lookbackMs)
+            val aggKey = (pk, s"agg|$q", lookbackMs)
+            def exact(k: (String, String, Long)) = instantCache.get(k)
+              .filter(e => e.tsMs == grid.startMs && e.windowMs == windowMs)
+            exact(key).flatMap(_ => exact(aggKey)) match {
+              case Some(e) =>
+                countO7(st => st.copy(exactHits = st.exactHits + 1))
+                Right(e.res)
+              case None =>
+                val per = leaf(innerQ, inner)
+                val out = collectRows(aggregate(per))
+                if (exact(key).exists(e => per.exists(_ eq e.res)))
+                  instantCache.put(aggKey, InstantEntry(grid.startMs, windowMs, out))
+                Right(out)
+            }
+          case None =>
+            Left(aggregate(queryInstantServed(samples, innerQ, grid, lookbackMs,
+              minWindowMs, cacheTag, tagIndex)))
+        }
       case FuncExpr("avg_over_time", Seq(re @ RollupExpr(_: MetricExpr, Some(_), None, None, None, _, _)), keep) =>
         // avg = sum/count, each side delta-cached (eval.go:1270)
-        val sumDf = queryInstantCached(samples, s"sum|$q", grid, lookbackMs, minWindowMs,
-          cacheTag, tagIndex, Some(FuncExpr("sum_over_time", Seq(re), keep)))
-        val cntDf = queryInstantCached(samples, s"count|$q", grid, lookbackMs, minWindowMs,
-          cacheTag, tagIndex, Some(FuncExpr("count_over_time", Seq(re), keep)))
+        val sumDf = frameOf(samples.sparkSession,
+          leaf(s"sum|$q", FuncExpr("sum_over_time", Seq(re), keep)))
+        val cntDf = frameOf(samples.sparkSession,
+          leaf(s"count|$q", FuncExpr("count_over_time", Seq(re), keep)))
         val k = instantKeyCol _
-        sumDf.select(k(sumDf).as("_k"), col("name"), col("tags"), col("t"), col("value").as("_s"))
+        Left(sumDf.select(k(sumDf).as("_k"), col("name"), col("tags"), col("t"), col("value").as("_s"))
           .join(cntDf.select(k(cntDf).as("_k"), col("value").as("_c")), Seq("_k"), "inner")
-          .select(col("name"), col("tags"), col("t"), (col("_s") / col("_c")).as("value"))
+          .select(col("name"), col("tags"), col("t"), (col("_s") / col("_c")).as("value")))
       case fe @ FuncExpr(fn, Seq(RollupExpr(_: MetricExpr, Some(_), None, None, None, _, _)), _)
           if additiveInstantFns(fn) || fn == "max_over_time" || fn == "min_over_time" =>
-        queryInstantCached(samples, q, grid, lookbackMs, minWindowMs, cacheTag, tagIndex, Some(fe))
-      case _ => query(samples, q, grid, lookbackMs, tagIndex)
+        leaf(q, fe)
+      case _ => uncached
     }
   }
 
@@ -497,17 +580,21 @@ object Engine {
       sort_array(map_entries(coalesce(df("tags"), map()))))
   }
 
-  private def queryInstantCached(
+  /** one rollup leaf `fn(m[w])` at an instant through the O7 cache: rows
+    * from the entry (exact hit), a full evaluation (miss, entry replaced)
+    * or the delta over the entry; a plan when the window is below
+    * `minWindowMs`
+    */
+  private def instantLeaf(
       samples: DataFrame,
+      planKey: => String,
       cacheQ: String,
       grid: GridSpec,
       lookbackMs: Long,
       minWindowMs: Long,
-      cacheTag: String,
       tagIndex: Option[DataFrame],
-      feOpt: Option[FuncExpr]): DataFrame = {
+      fe: FuncExpr): Either[DataFrame, Collected] = {
     import org.apache.spark.sql.functions._
-    val fe = feOpt.get
     val fn = fe.name
     val re = fe.args.head.asInstanceOf[RollupExpr]
     val tMs = grid.startMs
@@ -517,28 +604,22 @@ object Engine {
       Eval.eval(samples, ast2,
         Eval.EvalConfig(GridSpec(ts, ts, grid.stepMs), lookbackMs, tagIndex = tagIndex))
     }
-    if (windowMs < minWindowMs) return evalAt(tMs, windowMs)
-    // cacheTag folded in for mutable stores whose canonicalized plan text
-    // doesn't change when their data does (see the public entry's doc)
-    val planKey =
-      samples.queryExecution.logical.canonicalized.toString + "|" + cacheTag
+    if (windowMs < minWindowMs) return Left(evalAt(tMs, windowMs))
     val key = (planKey, cacheQ, lookbackMs)
-    def exactHit: Option[DataFrame] = instantCache.get(key).collect {
+    def exactHit: Option[Collected] = instantCache.get(key).collect {
       case e if e.windowMs == windowMs && e.tsMs == tMs =>
         countO7(st => st.copy(exactHits = st.exactHits + 1))
-        e.df
+        e.res
     }
     // a miss is single-flight (concurrent callers at the same instant
     // get one evaluation); delta hits run side by side
-    def fullAndCache(): DataFrame = instantFills(key)(exactHit) {
-      val res = evalAt(tMs, windowMs)
-      val rows = collectRows(res)
-      val df = localFrame(res, rows)
+    def fullAndCache(): Collected = instantFills(key)(exactHit) {
+      val res = collectRows(evalAt(tMs, windowMs))
       countO7(st => st.copy(misses = st.misses + 1))
-      instantCache.put(key, InstantEntry(tMs, windowMs, df, rows.length))
-      df
+      instantCache.put(key, InstantEntry(tMs, windowMs, res))
+      res
     }
-    instantCache.get(key) match {
+    Right(instantCache.get(key) match {
       case None => fullAndCache()
       case Some(e) if e.windowMs != windowMs => fullAndCache()
       case Some(e) =>
@@ -546,14 +627,16 @@ object Engine {
         val tooBig = offset >= math.min(windowMs / 2, 1800000L)
         if (offset == 0) {
           countO7(st => st.copy(exactHits = st.exactHits + 1))
-          e.df
+          e.res
         } else if (offset < 0 || tooBig) {
           fullAndCache()
         } else {
           // tail delta at t, head delta at t-window, both over [offset] ms
           val tail = evalAt(tMs, offset)
           val head = evalAt(tMs - windowMs, offset)
-          val c = e.df.select(instantKeyCol(e.df).as("_k"),
+          // the entry's rows as a local relation, for the join alone
+          val cached = e.res.frame(samples.sparkSession)
+          val c = cached.select(instantKeyCol(cached).as("_k"),
             col("name"), col("tags"), col("value").as("_vc"))
           val s = tail.select(instantKeyCol(tail).as("_k"),
             col("name").as("_ns"), col("tags").as("_ts"), col("value").as("_vs"))
@@ -591,17 +674,17 @@ object Engine {
             lit(tMs).as("t"), v.as("value"), coalesce(bad, lit(false)).as("_bad"))
           // one job reads the two delta windows (bounded by the offset)
           // against the cached rows; the validity check runs on the driver
-          val rows = collectRows(flagged)
+          val rows = collectRows(flagged).rows
           if (rows.exists(_.getBoolean(4))) {
             countO7(st => st.copy(aborts = st.aborts + 1))
             fullAndCache()
           } else {
             countO7(st => st.copy(deltaHits = st.deltaHits + 1))
-            localFrame(flagged.drop("_bad"), rows.collect {
+            Collected(rows.collect {
               case r if !r.isNullAt(3) => Row(r.get(0), r.get(1), r.get(2), r.get(3))
-            })
+            }, flagged.drop("_bad").schema)
           }
         }
-    }
+    })
   }
 }

@@ -72,21 +72,24 @@ object Api {
           s"step=$stepMs: $points; the maximum number of points is $maxPoints")
   }
 
+  /** the result as the O6 cache serves it — driver rows — or, without
+    * `mayCache`, the plan of a raw evaluation
+    */
   def queryRange(samples: DataFrame, q: String,
       startMs: Long, endMs: Long, stepMs: Long,
       lookbackMs: Long = 300000L,
       mayCache: Boolean = false,
       cacheTag: String = "",
-      tagIndex: Option[DataFrame] = None): DataFrame = {
+      tagIndex: Option[DataFrame] = None): Either[DataFrame, Engine.Collected] = {
     validateMaxPoints(startMs, endMs, stepMs)
     val q2 = applySearchFlags(q)
     // the HTTP path caches by default like the reference (prometheus.go
     // `nocache` + EvalConfig.MayCache); programmatic callers (gates,
     // bench) default to a raw evaluation so they measure the engine
     if (mayCache)
-      Engine.queryCached(samples, q2, GridSpec(startMs, endMs, stepMs), lookbackMs,
-        cacheTag, tagIndex)
-    else Engine.query(samples, q2, GridSpec(startMs, endMs, stepMs), lookbackMs, tagIndex)
+      Right(Engine.queryCachedRows(samples, q2, GridSpec(startMs, endMs, stepMs), lookbackMs,
+        cacheTag, tagIndex))
+    else Left(Engine.query(samples, q2, GridSpec(startMs, endMs, stepMs), lookbackMs, tagIndex))
   }
 
   /** /api/v1/query — instant evaluation at one timestamp
@@ -99,6 +102,16 @@ object Api {
       lookbackMs: Long = 300000L, cacheTag: String = "",
       tagIndex: Option[DataFrame] = None): DataFrame =
     Engine.queryInstantCached(samples, applySearchFlags(q),
+      GridSpec(atMs, atMs, stepMs), lookbackMs, cacheTag = cacheTag,
+      tagIndex = tagIndex)
+
+  /** [[query]] as the O7 cache serves it: driver rows, or the plan of a
+    * shape that evaluates uncached
+    */
+  def queryServed(samples: DataFrame, q: String, atMs: Long, stepMs: Long = 60000L,
+      lookbackMs: Long = 300000L, cacheTag: String = "",
+      tagIndex: Option[DataFrame] = None): Either[DataFrame, Engine.Collected] =
+    Engine.queryInstantServed(samples, applySearchFlags(q),
       GridSpec(atMs, atMs, stepMs), lookbackMs, cacheTag = cacheTag,
       tagIndex = tagIndex)
 

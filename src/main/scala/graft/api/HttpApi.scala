@@ -895,16 +895,26 @@ final class HttpApi(
     if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
 
   /** the response rows (name, tags, t, value), each with its series key,
-    * collected ONCE — one Spark job, none for a cached local frame — and
-    * sorted on the driver as Spark's `orderBy(seriesKey, t)` would, before
-    * any byte of the response is sent, so an execution failure still gets
-    * the 422 envelope. The reference likewise sorts the finished result in
-    * memory before writing it (exec.go:78-101, sortSeriesByMetricName).
+    * sorted on the driver as Spark's `orderBy(seriesKey, t)` would. Rows a
+    * cache served (or a cache miss just collected) are sorted as they are,
+    * with no Spark job and no Catalyst pass; a plan (raw export, `nocache`,
+    * a shape the caches don't serve) is collected ONCE — one Spark job.
+    * Either way it happens before any byte of the response is sent, so an
+    * execution failure still gets the 422 envelope. The reference likewise
+    * sorts the finished result in memory before writing it
+    * (exec.go:78-101, sortSeriesByMetricName). Sorting per response, not
+    * at cache insert, keeps the HTTP series key out of the engine.
     */
-  private def responseRows(df: DataFrame): Array[(String, Row)] = {
+  private def responseRows(res: Either[DataFrame, graft.Engine.Collected]): Array[(String, Row)] = {
     val keys = new java.util.HashMap[(String, scala.collection.Map[String, String]),
       (String, Array[Byte])]()
-    val keyed = df.select(col("name"), col("tags"), col("t"), col("value")).collect()
+    val rows = res match {
+      case Left(df) => df.select(col("name"), col("tags"), col("t"), col("value")).collect()
+      case Right(c) =>
+        val at = Seq("name", "tags", "t", "value").map(c.schema.fieldIndex)
+        if (at == Seq(0, 1, 2, 3)) c.rows else c.rows.map(r => Row.fromSeq(at.map(r.get)))
+    }
+    val keyed = rows
       .map { r =>
         val k = keys.computeIfAbsent((r.getString(0), r.getMap[String, String](1)),
           { case (n, t) => val sk = HttpApi.seriesKeyOf(n, t); (sk, Utf8Order.bytes(sk)) })
@@ -1286,14 +1296,10 @@ final class HttpApi(
   }
 
   private def reply(ex: HttpExchange, code: Int, body: String,
-      contentType: String = "application/json"): Unit = {
-    val b = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", contentType)
-    ex.sendResponseHeaders(code, b.length)
-    ex.getResponseBody.write(b)
-    ex.close()
-  }
+      contentType: String = "application/json"): Unit =
+    replyBytes(ex, code, body.getBytes(StandardCharsets.UTF_8), contentType)
 
+  /** an empty body is announced as -1 (no body), which a 204 requires */
   private def replyBytes(ex: HttpExchange, code: Int, body: Array[Byte],
       contentType: String): Unit = {
     ex.getResponseHeaders.set("Content-Type", contentType)
@@ -1534,7 +1540,7 @@ final class HttpApi(
               .select(col("name"), col("tags"), col("ts").as("t"), col("value"))
             QueryStats.track(p("query"), at, at, step,
               String.valueOf(ex.getRemoteAddress)) {
-              val rows = responseRows(df)
+              val rows = responseRows(Left(df))
               enforceMaxResponseSeries(rows, dropNaN = false)
               replyStream(ex) { w =>
                 w.write("""{"status":"success","data":{"resultType":"matrix","result":""")
@@ -1546,20 +1552,20 @@ final class HttpApi(
             }
           case None =>
             val (frame, version) = versioned(samples)
-            val df = graft.lang.Trace.child("build query plan")(
+            val res = graft.lang.Trace.child("build query plan")(
               // parse/analyze errors throw here → 422; the store version
               // rides the O7 cache key so an ingest between two identical
               // instant queries invalidates the delta/exact hit (the
               // buffer's rebuilt LocalRelation canonicalizes identically
               // whatever its rows)
-              Api.query(frame, p("query"), at, step,
+              Api.queryServed(frame, p("query"), at, step,
                 cacheTag = s"httpStore:$version",
                 tagIndex = activeTagIndex))
             MetricNamesStats.registerQuery(graft.lang.Parser.parse(p("query")), at)
             QueryStats.track(p("query"), at, at, step,
               String.valueOf(ex.getRemoteAddress)) {
               val rows = graft.lang.Trace.child("execute plan and stream response")(
-                responseRows(df))
+                responseRows(res))
               enforceMaxResponseSeries(rows)
               replyStream(ex) { w =>
                 w.write("""{"status":"success","data":{"resultType":"vector","result":""")
@@ -1629,7 +1635,7 @@ final class HttpApi(
       // fallback serves the base and keeps it)
       val idx = if (routedFrame.isDefined) None else activeTagIndex
       try QueryDeadline.run(spark, deadlineMs(p)) {
-        val df = graft.lang.Trace.child("build query plan")(
+        val res = graft.lang.Trace.child("build query plan")(
           Api.queryRange(frame, p("query"), start, end, step,
             mayCache = !nocache,
             cacheTag = s"httpStore:$version",
@@ -1638,7 +1644,7 @@ final class HttpApi(
         QueryStats.track(p("query"), start, end, step,
           String.valueOf(ex.getRemoteAddress)) {
           val rows = graft.lang.Trace.child("execute plan and stream response")(
-            responseRows(df))
+            responseRows(res))
           enforceMaxResponseSeries(rows)
           replyStream(ex) { w =>
             w.write("""{"status":"success","data":{"resultType":"matrix","result":""")
@@ -2186,11 +2192,15 @@ final class HttpApi(
       // must surface as the error envelope, not a truncated 200 body.
       // Tracking encloses all of it, so in-flight renders show in
       // active_queries and top_queries reports their full duration.
-      QueryStats.track(targets.mkString("; "), from, until, storageStep,
-        String.valueOf(ex.getRemoteAddress)) {
-        val rows = GraphiteHttp.renderRows(samples, targets, from,
-          until, storageStep, xff, maxDataPoints, now, tz)
-        replyStream(ex) { w => GraphiteHttp.renderWrite(rows, w) }
+      // the request's Spark jobs run in its deadline's job group, like
+      // query_range's: a runaway render is cancelled at its `timeout`
+      QueryDeadline.run(spark, deadlineMs(p)) {
+        QueryStats.track(targets.mkString("; "), from, until, storageStep,
+          String.valueOf(ex.getRemoteAddress)) {
+          val rows = GraphiteHttp.renderRows(samples, targets, from,
+            until, storageStep, xff, maxDataPoints, now, tz)
+          replyStream(ex) { w => GraphiteHttp.renderWrite(rows, w) }
+        }
       }
     },
     "/metrics/find" -> handler { ex =>

@@ -213,6 +213,102 @@ class InstantRollupSpec extends SparkSpec {
         .collect().head.getDouble(3))
   }
 
+  /** one sample a minute in (fromMs, toMs] for each series, value 1 */
+  private def store(series: Seq[Map[String, String]], fromMs: Long, toMs: Long): DataFrame = {
+    val rows = new java.util.ArrayList[Row]()
+    for (tags <- series) {
+      var ts = fromMs + step
+      while (ts <= toMs) { rows.add(Row("m", tags, ts, 1.0)); ts += step }
+    }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("name", StringType),
+      StructField("tags", MapType(StringType, StringType)),
+      StructField("ts", LongType),
+      StructField("value", DoubleType))))
+  }
+
+  private def asSet(rows: Array[Row]): Set[(String, Map[String, String], Long, Double)] =
+    rows.map(r => (r.getString(0), r.getMap[String, String](1).toMap, r.getLong(2),
+      r.getDouble(3))).toSet
+
+  private def served(res: Either[DataFrame, Engine.Collected]): Engine.Collected =
+    res.getOrElse(fail("expected the cache to serve driver rows"))
+
+  private val pods = Seq(
+    Map("pod" -> "a", "job" -> "x"), Map("pod" -> "b", "job" -> "x"),
+    Map("pod" -> "c", "job" -> "y"))
+
+  test("O7 exact hits, bare and aggregated, run no SQL execution and no Spark job") {
+    Engine.clearCache()
+    val df = store(pods, t0 - 4 * hour, t0)
+    val g = GridSpec(t0, t0, step)
+    val bare = "count_over_time(m[3h])"
+    val agg = "sum by (job) (count_over_time(m[3h]))"
+    served(Engine.queryInstantServed(df, bare, g))
+    served(Engine.queryInstantServed(df, agg, g))
+    val before = Engine.instantCacheStats
+    val ((b, a), started) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+      (served(Engine.queryInstantServed(df, bare, g)), served(Engine.queryInstantServed(df, agg, g)))
+    }
+    assert(started.jobs == 0 && started.sqlExecutions == 0, started.toString)
+    // one exact hit per served hit
+    assert(Engine.instantCacheStats == before.copy(exactHits = before.exactHits + 2),
+      Engine.instantCacheStats.toString)
+    assert(asSet(b.rows) == asSet(Engine.query(df, bare, g).collect()))
+    assert(asSet(a.rows) == asSet(Engine.query(df, agg, g).collect()))
+    assert(asSet(a.rows).map(r => (r._2, r._4)) == Set(Map("job" -> "x") -> 360.0,
+      Map("job" -> "y") -> 180.0))
+  }
+
+  test("the aggregated O7 entry is not served across a store change or a delta refresh") {
+    Engine.clearCache()
+    val g = GridSpec(t0, t0, step)
+    val agg = "sum by (job) (count_over_time(m[3h]))"
+    // same schema → same canonicalized plan; the tag is the store version
+    val v1 = store(pods.take(2), t0 - 4 * hour, t1)
+    val v2 = store(pods, t0 - 4 * hour, t1)
+    def want(df: DataFrame, at: Long) = asSet(Engine.query(df, agg, GridSpec(at, at, step)).collect())
+    served(Engine.queryInstantServed(v1, agg, g, cacheTag = "v1"))
+    assert(asSet(served(Engine.queryInstantServed(v1, agg, g, cacheTag = "v1")).rows) == want(v1, t0))
+    assert(Engine.instantCacheStats == Engine.InstantStats(1, 0, 1, 0), Engine.instantCacheStats.toString)
+    // a new store version misses: it must see job y
+    val afterIngest = served(Engine.queryInstantServed(v2, agg, g, cacheTag = "v2")).rows
+    assert(asSet(afterIngest) == want(v2, t0))
+    assert(Engine.instantCacheStats == Engine.InstantStats(1, 0, 2, 0), Engine.instantCacheStats.toString)
+    // a delta refresh is served, but never becomes the aggregated entry:
+    // repeating the refreshed instant takes the delta path again
+    val gt1 = GridSpec(t1, t1, step)
+    for (i <- 1 to 2) {
+      val refreshed = served(Engine.queryInstantServed(v2, agg, gt1, cacheTag = "v2")).rows
+      assert(asSet(refreshed) == want(v2, t1))
+      assert(Engine.instantCacheStats == Engine.InstantStats(1, i.toLong, 2, 0),
+        Engine.instantCacheStats.toString)
+    }
+    // the instant the entries were filled at is still an exact hit
+    assert(asSet(served(Engine.queryInstantServed(v2, agg, g, cacheTag = "v2")).rows) == want(v2, t0))
+    assert(Engine.instantCacheStats == Engine.InstantStats(2, 2, 2, 0), Engine.instantCacheStats.toString)
+
+    // nor is a delta result kept until the leaf's entry is exact at
+    // its instant again: over the delta, `count` still sees a series that
+    // aged out (at value 0, reference parity); a full evaluation drops it
+    Engine.clearCache()
+    val t2 = t0 + 40 * step // past tooBigOffset: a full evaluation
+    val dying = store(pods.take(1), t0 - 3 * hour, t2)
+      .union(store(pods.slice(1, 2), t0 - 3 * hour, t0 - 3 * hour + 2 * step))
+    val cnt = "count(sum_over_time(m[3h]))"
+    val leaf = "sum_over_time(m[3h])"
+    def at(ts: Long, q: String = cnt) = served(Engine.queryInstantServed(dying, q, GridSpec(ts, ts, step))).rows
+    assert(at(t0).head.getDouble(3) == 2.0)
+    assert(at(t1).head.getDouble(3) == 2.0) // the delta keeps the dead series
+    // the leaf alone moves its entry to t2, then back to t1, both in full
+    at(t2, leaf)
+    at(t1, leaf)
+    val before = Engine.instantCacheStats
+    assert(asSet(at(t1)) == asSet(Engine.query(dying, cnt, GridSpec(t1, t1, step)).collect()))
+    assert(at(t1).head.getDouble(3) == 1.0)
+    assert(Engine.instantCacheStats.exactHits == before.exactHits + 2, Engine.instantCacheStats.toString)
+  }
+
   test("cacheTag invalidates instant entries for mutable same-plan stores") {
     Engine.clearCache()
     val g = GridSpec(t0, t0, step)

@@ -1759,6 +1759,57 @@ class HttpApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("cached query_range and query answers run no SQL execution and no Spark job") {
+    graft.Engine.clearCache()
+    val api = new HttpApi(spark)
+    val port = api.start()
+    try {
+      val t0 = 4 * 3600
+      val body = (1 to 240).flatMap(i => Seq(
+        s"""c{job="x",pod="a"} $i ${t0 - 4 * 3600 + i * 60}""",
+        s"""c{job="x",pod="b"} 1 ${t0 - 4 * 3600 + i * 60}""",
+        s"""c{job="y",pod="c"} 2 ${t0 - 4 * 3600 + i * 60}""")).mkString("\n")
+      assert(post(port, "/api/v1/import/prometheus", body + "\n") == 204)
+      def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+      val urls = Seq(
+        s"/api/v1/query_range?query=${enc("max_over_time(c[5m])")}&start=${t0 - 600}&end=$t0&step=60",
+        s"/api/v1/query_range?query=${enc("max_over_time(c[5m])")}&start=${t0 - 600}&end=${t0 - 120}&step=60",
+        s"/api/v1/query?query=${enc("count_over_time(c[3h])")}&time=$t0",
+        s"/api/v1/query?query=${enc("sum by (job) (count_over_time(c[3h]))")}&time=$t0")
+      def data(r: String) = r.split("\"stats\"")(0)
+      val first = urls.map(u => data(get(port, u)))
+      val (again, started) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+        urls.map(u => data(get(port, u)))
+      }
+      assert(started.jobs == 0 && started.sqlExecutions == 0, started.toString)
+      assert(again == first)
+      // the same answers evaluated uncached
+      assert(data(get(port, urls(0) + "&nocache=1")) == first(0))
+      assert(first(3).contains(""""metric":{"job":"x"},"value":[14400.0,"360"]"""), first(3))
+    } finally {
+      api.stop()
+      graft.Engine.clearCache()
+    }
+  }
+
+  test("/render runs its Spark jobs in a query-deadline job group") {
+    val s = spark
+    import s.implicits._
+    val base = Seq(60000L, 120000L).flatMap(ts => Seq(
+      ("gr.a.cpu", Map.empty[String, String], ts, 1.0),
+      ("gr.b.cpu", Map.empty[String, String], ts, 2.0))).toDF("name", "tags", "ts", "value")
+    val api = new HttpApi(spark, base = Some(base))
+    val port = api.start()
+    try {
+      val (body, started) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+        get(port, "/render?format=json&target=gr.*.cpu&from=60&until=120&storage_step=60")
+      }
+      assert(body.contains("gr.a.cpu") && body.contains("gr.b.cpu"), body)
+      assert(started.jobs > 0)
+      assert(started.jobGroups.forall(_.startsWith("graft-deadline-")), started.jobGroups)
+    } finally api.stop()
+  }
+
   test("a stalled request body holds one handler thread, not the server") {
     import java.nio.charset.StandardCharsets.UTF_8
     val api = new HttpApi(spark)

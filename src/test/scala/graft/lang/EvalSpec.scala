@@ -379,19 +379,19 @@ class EvalSpec extends SparkSpec {
   test("query-result memoization serves the cached entry on repeat with no Spark job") {
     Engine.clearCache()
     val q = "avg_over_time(m[1m])"
-    val a = Engine.queryCached(samples, q, grid)
-    // an exact hit, served the way the HTTP writer serves it (project the
-    // response columns, collect), must not start a single Spark job
+    val a = Engine.queryCachedRows(samples, q, grid)
+    // an exact hit, served the way the HTTP writer serves it (the entry's
+    // rows) or as a frame over them, must not start a single Spark job
     val ((b, served), jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
-      val b = Engine.queryCached(samples, q, grid)
-      (b, b.select(col("name"), col("tags"), col("t"), col("value")).collect())
+      (Engine.queryCachedRows(samples, q, grid), Engine.queryCached(samples, q, grid).collect())
     }
-    assert(b eq a) // the cached entry
+    assert(b.rows eq a.rows) // the cached entry's rows
     assert(jobs == 0, s"an exact hit started $jobs Spark jobs")
-    assert(served.map(_.toString).sorted.toSeq ==
-      Engine.query(samples, q, grid).collect().map(_.toString).sorted.toSeq)
-    val c = Engine.queryCached(samples, "avg_over_time(m[2m])", grid)
-    assert(!(a eq c)) // different query → different entry
+    val want = Engine.query(samples, q, grid).collect().map(_.toString).sorted.toSeq
+    assert(b.rows.map(_.toString).sorted.toSeq == want)
+    assert(served.map(_.toString).sorted.toSeq == want)
+    val c = Engine.queryCachedRows(samples, "avg_over_time(m[2m])", grid)
+    assert(!(a.rows eq c.rows)) // different query → different entry
     assert(Engine.cacheEntryCount == 2)
     Engine.clearCache()
     assert(Engine.cacheEntryCount == 0)

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *                              full re-evaluation, never a wrong merge
   *  full-cover / bigger-than-start-end
   *                            → superset hit: served clipped, ZERO evals
-  *  start-end-match           → full hit, same frame object
+  *  start-end-match           → full hit, the entry's own rows
   *  multi-timeseries          → merge equality across several series
   *  TestMergeSeries           → merged frame == fresh evaluation, exactly
   */
@@ -84,10 +84,29 @@ class RollupCacheSpec extends SparkSpec {
     Engine.clearCache()
     Engine.resetCacheStats()
     val g = GridSpec(M, 10 * M, M)
-    val a = Engine.queryCached(samples, q, g)
-    val b = Engine.queryCached(samples, q, g)
-    assert(a eq b)
+    val a = Engine.queryCachedRows(samples, q, g)
+    val b = Engine.queryCachedRows(samples, q, g)
+    assert(a.rows eq b.rows) // the frame is built per call; the rows are the entry's
     assert(Engine.cacheStats == ((1L, 0L, 1L)))
+    Engine.clearCache()
+  }
+
+  test("exact and superset hits run no SQL execution and no Spark job") {
+    Engine.clearCache()
+    Engine.resetCacheStats()
+    val big = GridSpec(M, 10 * M, M)
+    val small = GridSpec(M, 6 * M, M)
+    Engine.queryCachedRows(samples, q, big)
+    val ((exact, superset), started) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+      (Engine.queryCachedRows(samples, q, big), Engine.queryCachedRows(samples, q, small))
+    }
+    assert(started.jobs == 0 && started.sqlExecutions == 0, started.toString)
+    assert(Engine.cacheStats == ((2L, 0L, 1L)), Engine.cacheStats.toString)
+    for ((got, g) <- Seq(exact -> big, superset -> small)) {
+      val want = Engine.query(samples, q, g)
+      assert(keyed(got.frame(spark)) == keyed(want))
+      assert(got.rows.length == want.count())
+    }
     Engine.clearCache()
   }
 
