@@ -269,18 +269,14 @@ object SampleStore {
     * the dim unhinted and let the planner/AQE pick the join — the forced
     * hint bypasses autoBroadcastJoinThreshold and can OOM the driver or
     * hit Spark's 8 GB broadcast cap at CardScale series cardinalities.
-    * Used by the retention dim resolve here and by Eval's tags-restore
-    * dim (the same structural join in every rollup leaf).
+    * Used by the retention dim resolve.
     */
-  /** the guard alone — exposed so Eval can cache it per evaluation
-    * instead of re-optimizing a derived plan per rollup leaf
-    */
-  private[graft] def dimBroadcastOk(input: DataFrame): Boolean =
-    try estimatedInputBytes(input) <= DimBroadcastMaxInputBytes
-    catch { case _: Exception => true }
-
-  private[graft] def maybeBroadcastDim(input: DataFrame, dim: DataFrame): DataFrame =
-    if (dimBroadcastOk(input)) broadcast(dim) else dim
+  private[graft] def maybeBroadcastDim(input: DataFrame, dim: DataFrame): DataFrame = {
+    val ok =
+      try estimatedInputBytes(input) <= DimBroadcastMaxInputBytes
+      catch { case _: Exception => true }
+    if (ok) broadcast(dim) else dim
+  }
 
   /** Apply retention filters choosing the cheaper strategy: the inline
     * per-row predicate for a handful of filters, or — for a large stack,

@@ -884,7 +884,6 @@ object Eval {
       }).getOrElse(throw new IllegalArgumentException(s"${f.name} needs a series arg"))
       val re = findRollup(f.args)
       val (keyed, rollGrid, atMs, windowMs) = rollupInput(f.name, re)
-      val keys = Seq("name", "_h1", "_h2")
 
       // optional rollup tag ("min"/"max"/"avg"/…): restrict to ONE output
       // series and add NO label (rollup.go:415-433 getRollupTag → the ""
@@ -912,9 +911,9 @@ object Eval {
               throw new IllegalArgumentException(
                 s"unsupported rollup_candlestick() suffix '$s'")
           }
-          (Rollup.candlestick(keyed, keys, rollGrid, windowMs), "rollup")
+          (Rollup.candlestick(keyed, leafKeys, rollGrid, windowMs), "rollup")
         case "rollup" =>
-          (Rollup.aggrOverTime(keyed, keys, rollGrid, windowMs, mmaKernels), "rollup")
+          (Rollup.aggrOverTime(keyed, leafKeys, rollGrid, windowMs, mmaKernels), "rollup")
         case "rollup_delta" | "rollup_increase" | "rollup_rate" | "rollup_deriv" |
             "rollup_scrape_interval" =>
           // the reference PRE-TRANSFORMS the whole fetched series
@@ -922,7 +921,7 @@ object Eval {
           // pair delta/deriv/ts-gap written at the LEFT index, last point
           // repeating the final pair), THEN windows min/max/avg over the
           // transformed values
-          val w = Window.partitionBy(keys.map(col): _*).orderBy(col("ts"))
+          val w = Window.partitionBy(col("name"), col("_h1"), col("_h2")).orderBy(col("ts"))
           val needResets = f.name == "rollup_rate" || f.name == "rollup_increase"
           val cval: Column =
             if (!needResets) col("value")
@@ -955,8 +954,8 @@ object Eval {
                 coalesce(col("_pair"), lag(col("_pair"), 1).over(w))
             })
             .filter(col("value").isNotNull)
-            .select(keys.map(col) :+ col("ts") :+ col("value"): _*)
-          (Rollup.aggrOverTime(transformed, keys, rollGrid, windowMs, mmaKernels), "rollup")
+            .select(leafKeys.map(col) :+ col("ts") :+ col("value"): _*)
+          (Rollup.aggrOverTime(transformed, leafKeys, rollGrid, windowMs, mmaKernels), "rollup")
         case "aggr_over_time" =>
           // aggr_over_time(("f1","f2",…), m[d]) — fn-name list arg
           val fns = f.args.head match {
@@ -967,19 +966,19 @@ object Eval {
           }
           val kernels = fns.map(n => n -> rollupKernel(n, windowMs, Nil).getOrElse(
             throw new IllegalArgumentException(s"unknown rollup fn '$n'")))
-          (Rollup.aggrOverTime(keyed, keys, rollGrid, windowMs, kernels), "rollup")
+          (Rollup.aggrOverTime(keyed, leafKeys, rollGrid, windowMs, kernels), "rollup")
         case "quantiles_over_time" =>
           // quantiles_over_time("phiLabel", phi1, …, m[d])
           val phis = f.args.drop(1).dropRight(1).map(scalarArg)
           val lbl = strArg(f.args.head)
-          (Rollup.quantilesOverTime(keyed, keys, rollGrid, windowMs, phis)
+          (Rollup.quantilesOverTime(keyed, leafKeys, rollGrid, windowMs, phis)
             .withColumnRenamed("phi", "rollup"), lbl)
         case "histogram_over_time" =>
-          (Rollup.histogramOverTime(keyed, keys, rollGrid, windowMs)
+          (Rollup.histogramOverTime(keyed, leafKeys, rollGrid, windowMs)
             .withColumn("rollup", col("vmrange").cast(StringType)).drop("vmrange"), "vmrange")
         case "count_values_over_time" =>
           val lbl = strArg(f.args.head)
-          (Rollup.countValuesOverTime(keyed, keys, rollGrid, windowMs)
+          (Rollup.countValuesOverTime(keyed, leafKeys, rollGrid, windowMs)
             .withColumn("rollup", col("value").cast(StringType))
             .withColumn("value", col("cnt")).drop("cnt"), lbl)
         case other => throw new IllegalArgumentException(s"not a multi-rollup: '$other'")
@@ -988,10 +987,9 @@ object Eval {
       val named = if (keep) col("name") else lit(null).cast(StringType)
       // a rollup tag arg selects one series and adds NO label
       val outTags =
-        if (rollupTag.isDefined) col("tags")
-        else map_concat(col("tags"), map(lit(label), col("rollup")))
-      Series(replicateAt(
-        out.join(tagsDimSide(keyed, rollGrid, windowMs), Seq("_h1", "_h2")), atMs)
+        if (rollupTag.isDefined) leafTags
+        else map_concat(leafTags, map(lit(label), col("rollup")))
+      Series(replicateAt(out, atMs)
         .filter(col("value").isNotNull) // no-pair windows = missing points
         .select(
           named.as("name"),
@@ -1184,9 +1182,12 @@ object Eval {
       }
       // Series identity for the PER-SAMPLE hot path is a 128-bit hash of
       // the sorted tag entries — no per-row string building, and the
-      // shuffle key is two longs. The tags map itself is restored after
-      // aggregation from a small broadcast dimension (distinct series ≪
-      // samples). Canonical strings remain the identity for grid-level
+      // shuffle key is two longs. The sorted entries array itself
+      // (Rollup.TagEntries) rides the rollup as a payload key and is
+      // rebuilt into the tags map at output scale, so a leaf reads its
+      // input once (the reference likewise carries each series'
+      // MetricName with its samples, netstorage.go RunParallel).
+      // Canonical strings remain the identity for grid-level
       // (post-rollup) operators where cardinality is series-scale.
       // A bucketed store (SampleStore.writeBucketed) persists the pair;
       // REUSING those attributes (instead of recomputing the same
@@ -1194,69 +1195,23 @@ object Eval {
       // satisfy the per-series window/aggregate distribution downstream —
       // a recomputed alias severs that linkage and re-inserts the
       // data-scale exchange.
+      val withEntries =
+        shifted.withColumn(Rollup.TagEntries, array_sort(map_entries(col("tags"))))
       val keyed =
-        if (shifted.columns.contains("_h1") && shifted.columns.contains("_h2"))
-          shifted
-        else {
-          val entries = array_sort(map_entries(col("tags")))
-          shifted
-            .withColumn("_h1", xxhash64(entries))
-            .withColumn("_h2", xxhash64(entries, lit(1)))
-        }
+        if (shifted.columns.contains("_h1") && shifted.columns.contains("_h2")) withEntries
+        else withEntries
+          .withColumn("_h1", xxhash64(col(Rollup.TagEntries)))
+          .withColumn("_h2", xxhash64(col(Rollup.TagEntries), lit(1)))
       (keyed, rollGrid, atMs, windowMs)
     }
 
-    /** Distinct (hash → tags) dimension for restoring maps post-rollup,
-      * SCOPED to the leaf's processing span: every series that can appear
-      * in the rollup output has a sample in (start − window − lookback,
-      * end] — the prev-sample reach is capped at the staleness lookback
-      * (prevPass bounds _mpi by lookbackMs, and an auto-adjusted window
-      * is ≤ max(step, lookback)) — so the dim never needs the store's
-      * full history. Without the bound a ONE-MINUTE instant query
-      * against a 30-day store paid a full-store tags scan just to
-      * restore the maps (InstantScale r11: the O7 delta refresh read
-      * store-scale, not offset-scale). lookbackMs == 0 (no staleness
-      * cap, so prev reach is unbounded) keeps the unfiltered frame. The
-      * filter preserves the bucketed scan's partitioning, so the
-      * zero-exchange plans are unchanged (BucketedStoreSpec).
+    /** a rollup leaf's series key: the metric name, the tags hash pair,
+      * and the carried sorted tag entries (see `keyed` in [[rollupInput]])
       */
-    private def tagsDim(keyed: DataFrame, rollGrid: GridSpec, windowMs: Long): DataFrame = {
-      val src =
-        if (cfg.lookbackMs > 0)
-          keyed.filter(
-            col("ts") > lit(rollGrid.startMs - windowMs - cfg.lookbackMs) &&
-              col("ts") <= lit(rollGrid.endMs))
-        else keyed
-      // Exemplar.distinctWith, not dropDuplicates: a map payload in the
-      // dedup's aggregation buffer forces SortAggregate — a data-scale
-      // sort per leaf where a hash-distinct was meant (opt r13)
-      graft.core.Exemplar.distinctWith(src, Seq("_h1", "_h2"), Seq("tags"))
-    }
+    private val leafKeys = Seq("name", "_h1", "_h2", Rollup.TagEntries)
 
-    /** the tags dim as a JOIN SIDE: force-broadcast only while the
-      * store-size bound holds (the same guard the retention dim resolve
-      * uses, SampleStore.maybeBroadcastDim). The dim carries one row per
-      * distinct in-window series; at CardScale cardinalities (10M+ series
-      * in a wide window) an unconditional broadcast builds a 10M-row
-      * map-typed frame on the driver, bypassing
-      * autoBroadcastJoinThreshold — the OOM/8 GB-cap hazard class the r11
-      * retention-dim bound closed. Past the bound the planner/AQE picks
-      * the join; on a bucketed store the fallback costs one DIM-side
-      * exchange only (the data side keeps its bucket partitioning by the
-      * subset rule — BucketedStoreSpec pins the plans unchanged).
-      *
-      * The size estimate is computed ONCE PER EVALUATION (lazy val): the
-      * estimate optimizes a derived plan, a multi-ms cost a multi-leaf
-      * query must not pay per rollup leaf — and every leaf shares this
-      * evaluator's `samples` leaves anyway.
-      */
-    private lazy val dimBroadcastOk: Boolean =
-      graft.core.SampleStore.dimBroadcastOk(samples)
-
-    private def tagsDimSide(keyed: DataFrame, rollGrid: GridSpec, windowMs: Long): DataFrame = {
-      val dim = tagsDim(keyed, rollGrid, windowMs)
-      if (dimBroadcastOk) broadcast(dim) else dim
-    }
+    /** the tags map of a rollup output row, rebuilt from its entries */
+    private val leafTags: Column = map_from_entries(col(Rollup.TagEntries))
 
     /** replicate @-pinned single-point results across the query grid */
     private def replicateAt(out: DataFrame, atMs: Option[Long]): DataFrame =
@@ -1288,15 +1243,14 @@ object Eval {
       val autoAdjust = re.window.isEmpty && canAdjustWindowFns(fn)
       val out = replicateAt(
         Rollup
-          .rollup(keyed, Seq("name", "_h1", "_h2"), rollGrid, windowMs, kernel,
+          .rollup(keyed, leafKeys, rollGrid, windowMs, kernel,
             lookbackMs = cfg.lookbackMs, autoAdjustWindow = autoAdjust)
-          .filter(col("value").isNotNull)
-          .join(tagsDimSide(keyed, rollGrid, windowMs), Seq("_h1", "_h2")),
+          .filter(col("value").isNotNull),
         atMs)
       val keep = keepNames || re.keepMetricNames || rollupKeepsName(fn)
       val named = if (keep) col("name") else lit(null).cast(StringType)
       Series(out.select(
-        (Seq(named.as("name"), col("tags"), col("t"), col("value")) ++
+        (Seq(named.as("name"), leafTags.as("tags"), col("t"), col("value")) ++
           (if (keepKeys) Seq(col("_h1"), col("_h2")) else Nil)): _*))
     }
 
@@ -1699,7 +1653,10 @@ object Eval {
         case Some(On(ls)) => ls
         case _ => Nil
       }
-      if (cfg.pushdownCap <= 0 || !rightRestrictable(b.op)) return (leftDf, eval(b.right))
+      // a number literal can be neither restricted (O3) nor skipped for
+      // less work (O4): materializing the left would only add two jobs
+      if (cfg.pushdownCap <= 0 || !rightRestrictable(b.op) || b.right.isInstanceOf[NumberExpr])
+        return (leftDf, eval(b.right))
       // Materialize the left ONCE via eager localCheckpoint instead of
       // persist(): the O4 empty-check, the O3 label-value collection and
       // the caller's final vector-match join all reuse the same blocks,

@@ -20,8 +20,32 @@ import org.apache.spark.sql.types.DoubleType
   */
 object Rollup {
 
+  /** Payload key: a query leaf's sorted tag entries
+    * (`array_sort(map_entries(tags))`), always beside the `_h1`/`_h2` pair
+    * that hashes it. Aggregates group on it, so it never enters an
+    * aggregation buffer ([[graft.core.Exemplar]]); per-series windows and
+    * re-keys carry it and partition on the other keys ([[seriesKeys]]).
+    */
+  val TagEntries = "_te"
+
+  /** `keys` without [[TagEntries]] */
+  private def seriesKeys(keys: Seq[String]): Seq[String] = keys.filterNot(_ == TagEntries)
+
+  /** Put [[TagEntries]] back on a two-level merge grouped without it: the
+    * merge fans each bucket partial out to up to ratio windows, and
+    * joining the entries from the checkpointed level-1 frame (series
+    * scale, no second read of the input) costs less than carrying them
+    * through those rows (batch A/B in CHANGES.md).
+    */
+  private def withTagEntries(merged: DataFrame, level1: DataFrame, keys: Seq[String]): DataFrame =
+    if (!keys.contains(TagEntries)) merged
+    else merged.join(level1.select("_h1", "_h2", TagEntries).distinct(), Seq("_h1", "_h2"))
+      .select((keys.map(col) :+ col("t")) ++
+        merged.columns.filterNot(c => keys.contains(c) || c == "t").map(col): _*)
+
   /** Compute one or more named kernels in a single pass.
-    * Input: samples with `ts` (epoch ms) + `value` + key columns.
+    * Input: samples with `ts` (epoch ms) + `value` + key columns; a query
+    * leaf's keys are (name, _h1, _h2, [[TagEntries]]).
     * Output: keys ++ (t, <one column per kernel>).
     *
     * Routing: when window is a step multiple > step and every kernel is
@@ -198,8 +222,9 @@ object Rollup {
       windowMs: Long,
       lookbackMs: Long,
       autoAdjust: Boolean): DataFrame = {
-    val sw = Window.partitionBy(keys.map(col): _*).orderBy(col("ts"), col("value"))
-    val sp = Window.partitionBy(keys.map(col): _*)
+    val series = seriesKeys(keys).map(col)
+    val sw = Window.partitionBy(series: _*).orderBy(col("ts"), col("value"))
+    val sp = Window.partitionBy(series: _*)
     val cum = sw.rowsBetween(Window.unboundedPreceding, 0)
     // Counter-reset correction (rollup.go:921 removeCounterResets):
     //  - partial resets (drop < value/8) contribute only the drop
@@ -227,7 +252,7 @@ object Rollup {
       .withColumn("_rn", row_number().over(sw))
       .withColumn("_brk", brk)
       .withColumn("_seg", sum(col("_brk")).over(cum))
-    val segCum = Window.partitionBy((keys.map(col) :+ col("_seg")): _*)
+    val segCum = Window.partitionBy((series :+ col("_seg")): _*)
       .orderBy(col("ts"), col("value"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val pre = pre0
@@ -243,7 +268,7 @@ object Rollup {
     // scrape interval: 0.6-quantile of the LAST 20 inter-sample gaps (not
     // all in-range gaps), truncated to whole ms, non-positive → step —
     // rollup.go:871-897 getScrapeInterval exactly (r3/r4 deviation closed)
-    val swd = Window.partitionBy(keys.map(col): _*)
+    val swd = Window.partitionBy(series: _*)
       .orderBy(col("ts").desc, col("value").desc)
     val withC = pre
       .withColumn("_cpv", lag(col("_cv"), 1).over(sw))
@@ -370,35 +395,37 @@ object Rollup {
           pn -> merged(s"_p${i}_$pn")
         }.toMap).as(kn)
       }
+    // merge rows leave the tag entries behind ([[withTagEntries]])
+    val mk = seriesKeys(keys)
     if (buckets * ratio <= ExplodeMergeLimit)
-      return mergeByExplode(level1, keys, grid, windowMs, partialCols, finishCols)
+      return withTagEntries(
+        mergeByExplode(level1, mk, grid, windowMs, partialCols, finishCols), level1, keys)
     // dense-window fallback. NULL-SAFE key join: derived series
     // legitimately carry name=null, and a plain equi-join would silently
     // drop every in-grid partial of such series (caught by the
     // exec_test.go golden slice via sum_over_time(time()[1h]))
-    val seriesDim = level1.select(keys.map(col): _*).distinct()
+    val seriesDim = level1.select(mk.map(col): _*).distinct()
     val dense = seriesDim.crossJoin(Grid.gridDf(samples, grid)).alias("d")
     val inGrid = level1.filter(col("t") >= start).alias("g")
-    val joinCond = keys.map(k => col(s"d.$k") <=> col(s"g.$k"))
+    val joinCond = mk.map(k => col(s"d.$k") <=> col(s"g.$k"))
       .reduce(_ && _) && col("d.t") === col("g.t")
     val joined = dense
       .join(inGrid, joinCond, "left")
-      .select((keys.map(k => col(s"d.$k").as(k)) :+ col("d.t").as("t")) ++
+      .select((mk.map(k => col(s"d.$k").as(k)) :+ col("d.t").as("t")) ++
         partialCols.map(p => col(s"g.${p._1}").as(p._1)): _*)
-      .unionByName(level1.filter(col("t") < start))
+      .unionByName(level1.filter(col("t") < start).drop(TagEntries))
       // each row's t IS its bucket timestamp here (the join is on d.t ===
       // g.t; pre-start buckets carry their own t) — expose it under the
       // name the remerge aggregates order by
       .withColumn("_bt", col("t"))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("t"))
+    val w = Window.partitionBy(mk.map(col): _*).orderBy(col("t"))
       .rangeBetween(-(windowMs - s), 0)
     val merged = partialCols.map { case (pn, _, mrg) => pn -> mrg(col(pn)).over(w) }.toMap
-    joined
-      .select((keys.map(col) :+ col("t") :+ merged("_prows").as("_rows")) ++
+    withTagEntries(joined
+      .select((mk.map(col) :+ col("t") :+ merged("_prows").as("_rows")) ++
         finishCols(merged): _*)
       .filter(col("t") >= start && col("_rows") > 0)
-      .drop("_rows")
-      .select((keys.map(col) :+ col("t")) ++ kernels.map(k => col(k._1)): _*)
+      .select((mk.map(col) :+ col("t")) ++ kernels.map(k => col(k._1)): _*), level1, keys)
   }
 
   /** Should a ts-level pre-aggregation (tsSplit / the 3-level window plan)
@@ -609,7 +636,7 @@ object Rollup {
           .transform(df => Seq("_h1", "_h2").filter(keys.contains)
             .foldLeft(df)((d, k) => d.withColumn(k, coalesce(col(k), lit(0L)))))
           .repartition(prepped.sparkSession.sparkContext.defaultParallelism,
-            keys.map(col): _*)
+            seriesKeys(keys).map(col): _*)
       else level1Lazy
     // bucket t contributes to grid windows [max(t, start), min(t+window-step,
     // lastGridPoint)] — bounding the sequence itself (instead of
@@ -664,10 +691,12 @@ object Rollup {
       when(size(col("_edges")) > 0,
         post(col("_edges"), lit(windowMs), col("_xmpi"))).as(kn)
     }
+    // a checkpointed level 1 lets merge rows leave the tag entries behind
+    val mk = if (fillFromLevel1) seriesKeys(keys) else keys
     val merged = exploded
-      .groupBy((keys.map(col) :+ col("t")): _*)
+      .groupBy((mk.map(col) :+ col("t")): _*)
       .agg(mergeAggs.head, mergeAggs.tail: _*)
-      .select((keys.map(col) :+ col("t")) ++ kernelCols: _*)
+      .select((mk.map(col) :+ col("t")) ++ kernelCols: _*)
     if (!fillable) merged
     else if (fillFromLevel1) {
       // mpi is per-series constant (a percentile over the whole series
@@ -677,7 +706,7 @@ object Rollup {
           col("_pl_ts").as("ts") :+ col("_pl_v").as("value") :+
           col("_pl_nts").as("_nts") :+ lit(windowMs).as("_win") :+
           col("_pmpi").as("_mpi")): _*)
-      zeroFillEmptyWindows(merged, fillSrc, keys, grid, kernels)
+      zeroFillEmptyWindows(withTagEntries(merged, level1, keys), fillSrc, keys, grid, kernels)
     } else zeroFillEmptyWindows(merged, prepped, keys, grid, kernels)
   }
 

@@ -98,7 +98,7 @@ class BucketedStoreSpec extends SparkSpec {
     // the on(user_id) join keys on a LABEL (_mk), so its grid-scale
     // exchange pair is inherent to the operator; what the layout must
     // remove is every exchange keyed on the series hash — the DATA-scale
-    // shuffles under the two rollup aggregates and the tags dim
+    // shuffles under the two rollup aggregates
     def h1Shuffles(df: org.apache.spark.sql.DataFrame): Int =
       "Exchange hashpartitioning\\([^)]*_h1".r
         .findAllIn(df.queryExecution.executedPlan.toString).length

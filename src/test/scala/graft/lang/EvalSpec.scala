@@ -42,28 +42,23 @@ class EvalSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
 
-  test("tags-restore dim broadcast is bounded: fallback yields identical results") {
-    // the per-leaf tags dim is series-scale; at CardScale cardinalities a
-    // forced broadcast is the driver-OOM hazard the size guard exists for
-    // (same pattern as the retention dim, RetentionFilterSpec). Under the
-    // bound the hint must be present; past it, dropped — with the rollup
-    // results identical either way.
-    val hinted = Engine.query(samples, "sum_over_time(m[2m])", grid)
-    assert(hinted.queryExecution.optimizedPlan.toString.contains("broadcast"),
-      "under the bound the tags-dim join must be hint-broadcast")
-    val expect = run("sum_over_time(m[2m])")
-    val saved = graft.core.SampleStore.DimBroadcastMaxInputBytes
-    graft.core.SampleStore.DimBroadcastMaxInputBytes = BigInt(-1)
-    try {
-      val out = Engine.query(samples, "sum_over_time(m[2m])", grid)
-      assert(!out.queryExecution.optimizedPlan.toString.contains("broadcast"),
-        "past the bound the forced broadcast hint must be dropped")
-      assert(run("sum_over_time(m[2m])") === expect)
-      // the multi-output rollup path shares the same guarded dim join
-      val multi = Engine.query(samples, """rollup(m{inst="a"}[2m])""", grid)
-      assert(!multi.queryExecution.optimizedPlan.toString.contains("broadcast"))
-      assert(multi.count() > 0)
-    } finally graft.core.SampleStore.DimBroadcastMaxInputBytes = saved
+  test("rollup leaves carry their labels: no restore join on either leaf path") {
+    // a leaf's sorted tag entries ride its rollup keys and the tags map is
+    // rebuilt at output scale, so neither the single-output nor the
+    // multi-output leaf joins anything back
+    for (q <- Seq("sum_over_time(m[2m])", """rollup(m{inst="a"}[2m])""")) {
+      val plan = Engine.query(samples, q, grid).queryExecution.optimizedPlan.toString
+      assert(!plan.contains("Join"), s"$q must not join its labels back:\n$plan")
+    }
+    val s = run("sum_over_time(m[2m])")
+    assert(s.keySet.map(_._1) == Set("|a", "|b"))
+    assert(s(("|a", 3 * M)) == 5.0) // samples 2, 3 in (1m, 3m]
+    val multi = Engine.query(samples, """rollup(m{inst="a"}[2m])""", grid)
+      .select(col("tags")("inst"), col("tags")("rollup"), col("t"), col("value"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)) -> r.getDouble(3)).toMap
+    assert(multi.keySet.map(k => (k._1, k._2)) ==
+      Set(("a", "min"), ("a", "max"), ("a", "avg")))
+    assert(multi(("a", "max", 3 * M)) == 3.0 && multi(("a", "min", 3 * M)) == 2.0)
   }
 
   test("bare selector = default_rollup (last value in lookback)") {

@@ -134,6 +134,53 @@ class PlanSpec extends SparkSpec {
       s"dedup read path must scan the store exactly once:\n$p")
   }
 
+  // the sf0.001 events hold ~one click per user every two days: a daily
+  // grid over the whole month gives every rollup path rows to return
+  private val Day = 86400000L
+  private val sparseGrid = GridSpec(1704067200000L, 1704067200000L + 30 * Day, Day)
+
+  test("a rollup leaf reads the store once: no second scan restores the tags") {
+    // the sorted tag entries ride the rollup as a payload key, so no leaf
+    // re-reads its input for a distinct (hash pair -> tags) dimension.
+    // Scans are counted over every SQL execution the query starts: the
+    // two-level path materializes its level-1 frame eagerly, before the
+    // final plan exists.
+    val samples = Samples.fromEvents(spark, sfDir)
+    Seq(
+      "click", // bare selector (default_rollup)
+      "max_over_time(click[1d])", // explode path
+      "max_over_time(click[8d])", // ratio 8: two-level path
+      "rate(click[2d])", // prevPass
+      "rollup_candlestick(click[1d])" // multi-output path
+    ).foreach { q =>
+      val (rows, started) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+        graft.Engine.query(samples, q, sparseGrid, lookbackMs = Day).collect()
+      }
+      assert(rows.nonEmpty, s"$q returned no rows")
+      assert(rows.forall(r => r.getMap[String, String](1).contains("user_id")),
+        s"$q lost its series labels")
+      assert(started.fileScans == 1,
+        s"$q scanned the store ${started.fileScans} times, want once")
+    }
+  }
+
+  test("a comparison against a number literal plans without running a job") {
+    // O3 pushdown and the O4 empty-left check gain nothing against a
+    // literal, so the left side is not materialized while the plan builds
+    val samples = Samples.fromEvents(spark, sfDir)
+    val (df, started) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+      graft.Engine.query(samples, "max_over_time(click[1d]) > 95", sparseGrid)
+    }
+    assert(started.jobs == 0, s"building the plan started ${started.jobs} jobs")
+    def rows(d: DataFrame): Set[(String, Long, Double)] = d
+      .select(col("tags")("user_id"), col("t"), col("value")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    val want = rows(graft.Engine.query(samples, "max_over_time(click[1d])", sparseGrid)
+      .filter(col("value") > 95))
+    assert(want.nonEmpty, "fixture has no point above the threshold")
+    assert(rows(df) == want)
+  }
+
   test("limit_offset / ungrouped limitk plan no unbounded single-partition rank") {
     import graft.{Engine}
     val grid = GridSpec(1704067200000L, 1704153600000L, 3600000L)
