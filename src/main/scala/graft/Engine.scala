@@ -359,7 +359,9 @@ object Engine {
   //   max/min (eval.go:1352,1409): candidate = f(cached, tail); valid only
   //     when the head window's extremum cannot have been the winner —
   //     otherwise fall back to a full evaluation (per-series check).
-  //   avg_over_time (eval.go:1270): rewritten sum/count, each delta-cached.
+  //   avg_over_time (eval.go:1270): a sum entry and a count entry, filled
+  //     together by one rollup pass on a miss and delta-refreshed leaf by
+  //     leaf; avg = sum / count is formed on the driver over their rows.
   //
   // Both delta windows span `off` ≪ `w` milliseconds, so the storage scan
   // is bounded by the refresh interval, not the window — at 100 TB this is
@@ -434,9 +436,10 @@ object Engine {
       queryInstantServed(samples, q, grid, lookbackMs, minWindowMs, cacheTag, tagIndex))
 
   /** [[queryInstantCached]]'s result as the cache serves it: driver rows
-    * for the O7 shapes — an exact hit returns the entry's rows — or the
-    * plan of a shape that evaluates uncached (a non-O7 shape, a window
-    * below `minWindowMs`, avg_over_time's sum/count join).
+    * for the O7 shapes — an exact hit returns the entry's rows, or for
+    * avg_over_time its sum and count entries' rows divided on the driver
+    * — or the plan of a shape that evaluates uncached (a non-O7 shape, a
+    * window below `minWindowMs`).
     *
     * An aggregated shape over a cached leaf keeps its aggregated rows as
     * an entry of its own, keyed by the full query text, so an exact hit
@@ -453,7 +456,6 @@ object Engine {
       minWindowMs: Long = DefaultInstantMinWindowMs,
       cacheTag: String = "",
       tagIndex: Option[DataFrame] = None): Either[DataFrame, Collected] = {
-    import org.apache.spark.sql.functions._
     def uncached = Left(query(samples, q, grid, lookbackMs, tagIndex))
     if (grid.startMs != grid.endMs) return uncached
     val ast = try Parser.parse(q) catch { case _: Exception => return uncached }
@@ -498,16 +500,9 @@ object Engine {
             Left(aggregate(queryInstantServed(samples, innerQ, grid, lookbackMs,
               minWindowMs, cacheTag, tagIndex)))
         }
-      case FuncExpr("avg_over_time", Seq(re @ RollupExpr(_: MetricExpr, Some(_), None, None, None, _, _)), keep) =>
-        // avg = sum/count, each side delta-cached (eval.go:1270)
-        val sumDf = frameOf(samples.sparkSession,
-          leaf(s"sum|$q", FuncExpr("sum_over_time", Seq(re), keep)))
-        val cntDf = frameOf(samples.sparkSession,
-          leaf(s"count|$q", FuncExpr("count_over_time", Seq(re), keep)))
-        val k = instantKeyCol _
-        Left(sumDf.select(k(sumDf).as("_k"), col("name"), col("tags"), col("t"), col("value").as("_s"))
-          .join(cntDf.select(k(cntDf).as("_k"), col("value").as("_c")), Seq("_k"), "inner")
-          .select(col("name"), col("tags"), col("t"), (col("_s") / col("_c")).as("value")))
+      case FuncExpr("avg_over_time", Seq(re @ RollupExpr(_: MetricExpr, Some(_), None, None, None, _, _)), _) =>
+        if (re.window.get.ms(grid.stepMs) < minWindowMs) uncached
+        else Right(instantAvg(samples, pk, q, grid, lookbackMs, tagIndex, re))
       case fe @ FuncExpr(fn, Seq(RollupExpr(_: MetricExpr, Some(_), None, None, None, _, _)), _)
           if additiveInstantFns(fn) || fn == "max_over_time" || fn == "min_over_time" =>
         leaf(q, fe)
@@ -580,6 +575,28 @@ object Engine {
       sort_array(map_entries(coalesce(df("tags"), map()))))
   }
 
+  /** `fe` = `fn(m[w])` evaluated at the instant `ts` over a `winMs` window */
+  private def instantEval(
+      samples: DataFrame,
+      fe: FuncExpr,
+      ts: Long,
+      winMs: Long,
+      stepMs: Long,
+      lookbackMs: Long,
+      tagIndex: Option[DataFrame]): DataFrame = {
+    val re = fe.args.head.asInstanceOf[RollupExpr]
+    val ast = fe.copy(args = Seq(re.copy(window = Some(graft.lang.Dur(winMs + "ms")))))
+    Eval.eval(samples, ast, Eval.EvalConfig(GridSpec(ts, ts, stepMs), lookbackMs, tagIndex = tagIndex))
+  }
+
+  /** is `e` served at `tMs` by a delta over its rows: a later instant,
+    * before tooBigOffset (eval.go:1197)
+    */
+  private def deltaServes(e: InstantEntry, tMs: Long, windowMs: Long): Boolean = {
+    val offset = tMs - e.tsMs
+    e.windowMs == windowMs && offset > 0 && offset < math.min(windowMs / 2, 1800000L)
+  }
+
   /** one rollup leaf `fn(m[w])` at an instant through the O7 cache: rows
     * from the entry (exact hit), a full evaluation (miss, entry replaced)
     * or the delta over the entry; a plan when the window is below
@@ -594,16 +611,10 @@ object Engine {
       minWindowMs: Long,
       tagIndex: Option[DataFrame],
       fe: FuncExpr): Either[DataFrame, Collected] = {
-    import org.apache.spark.sql.functions._
-    val fn = fe.name
-    val re = fe.args.head.asInstanceOf[RollupExpr]
     val tMs = grid.startMs
-    val windowMs = re.window.get.ms(grid.stepMs)
-    def evalAt(ts: Long, winMs: Long): DataFrame = {
-      val ast2 = fe.copy(args = Seq(re.copy(window = Some(graft.lang.Dur(winMs + "ms")))))
-      Eval.eval(samples, ast2,
-        Eval.EvalConfig(GridSpec(ts, ts, grid.stepMs), lookbackMs, tagIndex = tagIndex))
-    }
+    val windowMs = fe.args.head.asInstanceOf[RollupExpr].window.get.ms(grid.stepMs)
+    def evalAt(ts: Long, winMs: Long) =
+      instantEval(samples, fe, ts, winMs, grid.stepMs, lookbackMs, tagIndex)
     if (windowMs < minWindowMs) return Left(evalAt(tMs, windowMs))
     val key = (planKey, cacheQ, lookbackMs)
     def exactHit: Option[Collected] = instantCache.get(key).collect {
@@ -619,72 +630,155 @@ object Engine {
       instantCache.put(key, InstantEntry(tMs, windowMs, res))
       res
     }
-    Right(instantCache.get(key) match {
-      case None => fullAndCache()
-      case Some(e) if e.windowMs != windowMs => fullAndCache()
-      case Some(e) =>
-        val offset = tMs - e.tsMs
-        val tooBig = offset >= math.min(windowMs / 2, 1800000L)
-        if (offset == 0) {
-          countO7(st => st.copy(exactHits = st.exactHits + 1))
-          e.res
-        } else if (offset < 0 || tooBig) {
-          fullAndCache()
-        } else {
-          // tail delta at t, head delta at t-window, both over [offset] ms
-          val tail = evalAt(tMs, offset)
-          val head = evalAt(tMs - windowMs, offset)
-          // the entry's rows as a local relation, for the join alone
-          val cached = e.res.frame(samples.sparkSession)
-          val c = cached.select(instantKeyCol(cached).as("_k"),
-            col("name"), col("tags"), col("value").as("_vc"))
-          val s = tail.select(instantKeyCol(tail).as("_k"),
-            col("name").as("_ns"), col("tags").as("_ts"), col("value").as("_vs"))
-          val hd = head.select(instantKeyCol(head).as("_k"), col("value").as("_ve"))
-          val cs = c.join(s, Seq("_k"), "full_outer").join(hd, Seq("_k"), "left_outer")
-          // (value, head-validity failure) per series
-          val (v, bad) =
-            if (additiveInstantFns(fn)) {
-              // cached + tail − head; a key absent from cached starts from
-              // the tail value; head-only keys contribute nothing
-              // (getSumInstantValues, eval.go:1630-1680)
-              val base = when(col("_vc").isNotNull, col("_vc") + coalesce(col("_vs"), lit(0.0)))
-                .otherwise(col("_vs"))
-              (when(base.isNotNull && col("_ve").isNotNull, base - col("_ve")).otherwise(base),
-                lit(false))
-            } else {
-              val isMax = fn == "max_over_time"
-              def better(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-                if (isMax) greatest(a, b) else least(a, b)
-              val v0 = when(col("_vc").isNull, col("_vs"))
-                .when(col("_vs").isNull, col("_vc"))
-                .otherwise(better(col("_vc"), col("_vs")))
-              // the head extremum may only have been the winner if the tail
-              // re-attains it (getMinMaxInstantValues, eval.go:1596-1612).
-              // Equality counts: a head value EQUAL to the cached extremum
-              // may be the sample that produced it, about to leave.
-              val headWins = col("_ve").isNotNull && v0.isNotNull &&
-                (if (isMax) col("_ve") >= v0 else col("_ve") <= v0)
-              val tailCovers = col("_vs").isNotNull &&
-                (if (isMax) col("_vs") >= col("_ve") else col("_vs") <= col("_ve"))
-              (v0, headWins && !tailCovers)
-            }
-          val flagged = cs.select(coalesce(col("name"), col("_ns")).as("name"),
-            coalesce(col("tags"), col("_ts")).as("tags"),
-            lit(tMs).as("t"), v.as("value"), coalesce(bad, lit(false)).as("_bad"))
-          // one job reads the two delta windows (bounded by the offset)
-          // against the cached rows; the validity check runs on the driver
-          val rows = collectRows(flagged).rows
-          if (rows.exists(_.getBoolean(4))) {
+    Right(exactHit.getOrElse(instantCache.get(key) match {
+      case Some(e) if deltaServes(e, tMs, windowMs) =>
+        instantDelta(samples, fe, e, grid, lookbackMs, tagIndex) match {
+          case Some(rows) =>
+            countO7(st => st.copy(deltaHits = st.deltaHits + 1))
+            rows
+          case None =>
             countO7(st => st.copy(aborts = st.aborts + 1))
             fullAndCache()
-          } else {
-            countO7(st => st.copy(deltaHits = st.deltaHits + 1))
-            Collected(rows.collect {
-              case r if !r.isNullAt(3) => Row(r.get(0), r.get(1), r.get(2), r.get(3))
-            }, flagged.drop("_bad").schema)
-          }
         }
+      case _ => fullAndCache()
+    }))
+  }
+
+  /** `fe` at the grid's instant as `entry` (an earlier instant,
+    * same window) moved forward: cached ± the tail and head delta
+    * windows, one job over the two offset-sized reads and the entry's
+    * rows. None when a min/max head extremum may have left the window.
+    */
+  private def instantDelta(
+      samples: DataFrame,
+      fe: FuncExpr,
+      entry: InstantEntry,
+      grid: GridSpec,
+      lookbackMs: Long,
+      tagIndex: Option[DataFrame]): Option[Collected] = {
+    import org.apache.spark.sql.functions._
+    val fn = fe.name
+    val tMs = grid.startMs
+    val offset = tMs - entry.tsMs
+    def evalAt(ts: Long, winMs: Long) =
+      instantEval(samples, fe, ts, winMs, grid.stepMs, lookbackMs, tagIndex)
+    // tail delta at t, head delta at t-window, both over [offset] ms
+    val tail = evalAt(tMs, offset)
+    val head = evalAt(tMs - entry.windowMs, offset)
+    // the entry's rows as a local relation, for the join alone
+    val cached = entry.res.frame(samples.sparkSession)
+    val c = cached.select(instantKeyCol(cached).as("_k"),
+      col("name"), col("tags"), col("value").as("_vc"))
+    val s = tail.select(instantKeyCol(tail).as("_k"),
+      col("name").as("_ns"), col("tags").as("_ts"), col("value").as("_vs"))
+    val hd = head.select(instantKeyCol(head).as("_k"), col("value").as("_ve"))
+    val cs = c.join(s, Seq("_k"), "full_outer").join(hd, Seq("_k"), "left_outer")
+    // (value, head-validity failure) per series
+    val (v, bad) =
+      if (additiveInstantFns(fn)) {
+        // cached + tail − head; a key absent from cached starts from
+        // the tail value; head-only keys contribute nothing
+        // (getSumInstantValues, eval.go:1630-1680)
+        val base = when(col("_vc").isNotNull, col("_vc") + coalesce(col("_vs"), lit(0.0)))
+          .otherwise(col("_vs"))
+        (when(base.isNotNull && col("_ve").isNotNull, base - col("_ve")).otherwise(base),
+          lit(false))
+      } else {
+        val isMax = fn == "max_over_time"
+        def better(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+          if (isMax) greatest(a, b) else least(a, b)
+        val v0 = when(col("_vc").isNull, col("_vs"))
+          .when(col("_vs").isNull, col("_vc"))
+          .otherwise(better(col("_vc"), col("_vs")))
+        // the head extremum may only have been the winner if the tail
+        // re-attains it (getMinMaxInstantValues, eval.go:1596-1612).
+        // Equality counts: a head value EQUAL to the cached extremum
+        // may be the sample that produced it, about to leave.
+        val headWins = col("_ve").isNotNull && v0.isNotNull &&
+          (if (isMax) col("_ve") >= v0 else col("_ve") <= v0)
+        val tailCovers = col("_vs").isNotNull &&
+          (if (isMax) col("_vs") >= col("_ve") else col("_vs") <= col("_ve"))
+        (v0, headWins && !tailCovers)
+      }
+    val flagged = cs.select(coalesce(col("name"), col("_ns")).as("name"),
+      coalesce(col("tags"), col("_ts")).as("tags"),
+      lit(tMs).as("t"), v.as("value"), coalesce(bad, lit(false)).as("_bad"))
+    // the validity check runs on the driver over the collected rows
+    val rows = collectRows(flagged).rows
+    if (rows.exists(_.getBoolean(4))) None
+    else Some(Collected(rows.collect {
+      case r if !r.isNullAt(3) => Row(r.get(0), r.get(1), r.get(2), r.get(3))
+    }, flagged.drop("_bad").schema))
+  }
+
+  /** avg_over_time(m[w]) at an instant (eval.go:1270) from two O7
+    * entries, `sum|q` and `count|q`:
+    *
+    *  - a miss fills both from ONE rollup pass over the window
+    *    ([[Eval.evalRollupColumns]]) and counts one miss;
+    *  - an exact hit reads both entries and runs no Spark job;
+    *  - a delta hit refreshes each entry's rows by its own delta
+    *    ([[instantDelta]]; both functions are additive, so it never
+    *    aborts) and counts one delta hit.
+    *
+    * avg = sum / count per series, on the driver: the rows are series
+    * scale. A series whose count is 0 gets no point: on a delta its
+    * samples have all left the window, 0/0 is NaN in the reference, and
+    * a NaN point is absent — as in a full evaluation at that instant.
+    * Both entries keep the metric name, which avg_over_time keeps.
+    */
+  private def instantAvg(
+      samples: DataFrame,
+      planKey: => String,
+      q: String,
+      grid: GridSpec,
+      lookbackMs: Long,
+      tagIndex: Option[DataFrame],
+      re: RollupExpr): Collected = {
+    val tMs = grid.startMs
+    val windowMs = re.window.get.ms(grid.stepMs)
+    val sumKey = (planKey, s"sum|$q", lookbackMs)
+    val countKey = (planKey, s"count|$q", lookbackMs)
+    def entries = (instantCache.get(sumKey), instantCache.get(countKey))
+    def exactHit: Option[(Collected, Collected)] = entries match {
+      case (Some(s), Some(c)) if Seq(s, c).forall(e => e.windowMs == windowMs && e.tsMs == tMs) =>
+        countO7(st => st.copy(exactHits = st.exactHits + 1))
+        Some((s.res, c.res))
+      case _ => None
+    }
+    def fullAndCache(): (Collected, Collected) = instantFills(sumKey)(exactHit) {
+      val wide = collectRows(Eval.evalRollupColumns(samples, Seq("sum_over_time", "count_over_time"),
+        re, Eval.EvalConfig(GridSpec(tMs, tMs, grid.stepMs), lookbackMs, tagIndex = tagIndex)))
+      // each entry holds its function's rows, (name, tags, t, value)
+      // with NaN points absent: what its own delta yields and joins on
+      def entry(fn: String): Collected = {
+        val i = wide.schema.fieldIndex(fn)
+        Collected(wide.rows.collect {
+          case r if !r.getDouble(i).isNaN => Row(r.get(0), r.get(1), r.get(2), r.getDouble(i))
+        }, StructType(wide.schema.fields.take(3) :+ wide.schema(i).copy(name = "value")))
+      }
+      val res = (entry("sum_over_time"), entry("count_over_time"))
+      countO7(st => st.copy(misses = st.misses + 1))
+      instantCache.put(sumKey, InstantEntry(tMs, windowMs, res._1))
+      instantCache.put(countKey, InstantEntry(tMs, windowMs, res._2))
+      res
+    }
+    val (sums, counts) = exactHit.getOrElse(entries match {
+      case (Some(s), Some(c)) if deltaServes(s, tMs, windowMs) && deltaServes(c, tMs, windowMs) =>
+        // both functions are additive: their deltas never abort
+        def delta(fn: String, e: InstantEntry) =
+          instantDelta(samples, FuncExpr(fn, Seq(re), keepMetricNames = true), e, grid,
+            lookbackMs, tagIndex).get
+        val res = (delta("sum_over_time", s), delta("count_over_time", c))
+        countO7(st => st.copy(deltaHits = st.deltaHits + 1))
+        res
+      case _ => fullAndCache()
+    })
+    def series(r: Row) = (r.get(0), r.get(1))
+    val countOf = counts.rows.iterator.map(r => series(r) -> r.getDouble(3)).toMap
+    sums.copy(rows = sums.rows.flatMap { r =>
+      countOf.get(series(r)).filter(_ != 0.0)
+        .map(c => Row(r.get(0), r.get(1), r.get(2), r.getDouble(3) / c))
     })
   }
 }

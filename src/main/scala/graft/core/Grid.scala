@@ -44,6 +44,12 @@ object Grid {
   def bucketizeCol(samples: DataFrame, grid: GridSpec, windowMs: Column): DataFrame = {
     val s = grid.stepMs
     val start = grid.startMs
+    // one grid point (an instant query): its window is the only one a
+    // sample can land in, so the window filter assigns t outright
+    if (grid.startMs == grid.endMs)
+      return samples
+        .filter(col("ts") > lit(start) - windowMs && col("ts") <= lit(start))
+        .withColumn("t", lit(start))
     // last actual grid point: endMs itself only when (end - start) is a
     // whole number of steps. A sample past it belongs to NO window, and
     // its owning bucket t0 would sit beyond lastPoint — with a misaligned

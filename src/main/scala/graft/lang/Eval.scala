@@ -579,7 +579,40 @@ object Eval {
     * (name, tags, ts, value) on the configured grid. Returns the grid
     * frame (name, tags, t, value).
     */
-  def eval(samples: DataFrame, expr: Expr, cfg: EvalConfig): DataFrame = {
+  def eval(samples: DataFrame, expr: Expr, cfg: EvalConfig): DataFrame =
+    withEv(samples, expr, cfg)(_.eval(expr)) match {
+      // a top-level string is an empty result, not an error
+      // (exec_test.go simple-string)
+      case StrVal(_) =>
+        toSeries(samples, Scalar(Double.NaN), cfg).filter(lit(false))
+      case v =>
+        // NaN result points are dropped at the top level: the engine
+        // models a NaN grid point as an absent row, and the reference
+        // strips series that end up all-NaN from every result (exec.go
+        // removeEmptySeries; exec_test.go expects `(-4)^0.5` → nothing)
+        toSeries(samples, v, cfg).filter(!isnan(col("value")))
+    }
+
+  /** Several rollup functions of ONE selector leaf `re`, evaluated in a
+    * single rollup pass ([[Rollup.rollupMulti]], one read of the leaf's
+    * samples): name, tags, t, then one column per function, named after
+    * it. The metric name is kept; a row is kept where every function has
+    * a value; NaN values are left to the caller. The functions share the
+    * first one's input rules (window default, stale-NaN handling) — as
+    * sum_over_time and count_over_time do, the pair an instant
+    * avg_over_time is served from (Engine.queryInstantServed).
+    */
+  def evalRollupColumns(
+      samples: DataFrame,
+      fns: Seq[String],
+      re: RollupExpr,
+      cfg: EvalConfig): DataFrame =
+    withEv(samples, re, cfg)(_.rollupLeaf(fns, re, Nil, keepNames = true))
+
+  /** run `f` on an evaluator for `expr`: the tag-index probe scoped to
+    * the query's reach, and the storage limits enforced around it
+    */
+  private def withEv[T](samples: DataFrame, expr: Expr, cfg: EvalConfig)(f: Ev => T): T = {
     // scope the tag-index probe to the query's time range (plus the AST's
     // conservative reach and the staleness lookback) — a free partition
     // pruning that keeps the probe flat in retention length. Callers that
@@ -609,22 +642,11 @@ object Eval {
     val prevHook =
       graft.core.StorageLimits.swapPendingFlush(() => ev.enforceStorageLimits())
     val v =
-      try ev.eval(expr)
+      try f(ev)
       finally graft.core.StorageLimits.restorePendingFlush(prevHook)
     ev.enforceStorageLimits()
     v
-  } match {
-      // a top-level string is an empty result, not an error
-      // (exec_test.go simple-string)
-      case StrVal(_) =>
-        toSeries(samples, Scalar(Double.NaN), cfg).filter(lit(false))
-      case v =>
-        // NaN result points are dropped at the top level: the engine
-        // models a NaN grid point as an absent row, and the reference
-        // strips series that end up all-NaN from every result (exec.go
-        // removeEmptySeries; exec_test.go expects `(-4)^0.5` → nothing)
-        toSeries(samples, v, cfg).filter(!isnan(col("value")))
-    }
+  }
 
   /** materialize scalars on the grid; pass series through */
   private def toSeries(samples: DataFrame, v: Value, cfg: EvalConfig): DataFrame = v match {
@@ -1235,23 +1257,37 @@ object Eval {
         // on, so the rollup's output partitioning — on a bucketed store,
         // the scan's bucket HashPartitioning — satisfies them with no
         // exchange. A recomputed key would sever that linkage.
-        keepKeys: Boolean = false): Value = {
+        keepKeys: Boolean = false): Value =
+      Series(rollupLeaf(Seq(fn), re, extraArgs, keepNames, keepKeys)
+        .withColumnRenamed(fn, "value"))
+
+    /** the rollup functions `fns` of one leaf in one rollup pass: name,
+      * tags, t, a column per function (see [[Eval.evalRollupColumns]]),
+      * and the series hash pair when `keepKeys`
+      */
+    def rollupLeaf(
+        fns: Seq[String],
+        re: RollupExpr,
+        extraArgs: Seq[Double],
+        keepNames: Boolean,
+        keepKeys: Boolean = false): DataFrame = {
       Trace.printf(s"fetch series: ${Render.render(re.expr)}, window=${re.window.getOrElse("auto")}")
+      val fn = fns.head
       val (keyed, rollGrid, atMs, windowMs) = rollupInput(fn, re)
-      val kernel = rollupKernel(fn, windowMs, extraArgs, cfg.lookbackMs).getOrElse(
-        throw new IllegalArgumentException(s"unsupported rollup function '$fn'"))
+      val kernels = fns.map(f => f -> rollupKernel(f, windowMs, extraArgs, cfg.lookbackMs).getOrElse(
+        throw new IllegalArgumentException(s"unsupported rollup function '$f'")))
       val autoAdjust = re.window.isEmpty && canAdjustWindowFns(fn)
       val out = replicateAt(
         Rollup
-          .rollup(keyed, leafKeys, rollGrid, windowMs, kernel,
+          .rollupMulti(keyed, leafKeys, rollGrid, windowMs, kernels,
             lookbackMs = cfg.lookbackMs, autoAdjustWindow = autoAdjust)
-          .filter(col("value").isNotNull),
+          .filter(fns.map(col(_).isNotNull).reduce(_ && _)),
         atMs)
       val keep = keepNames || re.keepMetricNames || rollupKeepsName(fn)
       val named = if (keep) col("name") else lit(null).cast(StringType)
-      Series(out.select(
-        (Seq(named.as("name"), leafTags.as("tags"), col("t"), col("value")) ++
-          (if (keepKeys) Seq(col("_h1"), col("_h2")) else Nil)): _*))
+      out.select(
+        (Seq(named.as("name"), leafTags.as("tags"), col("t")) ++ fns.map(col) ++
+          (if (keepKeys) Seq(col("_h1"), col("_h2")) else Nil)): _*)
     }
 
     // ------------------------------------------------------------------

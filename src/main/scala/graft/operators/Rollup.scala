@@ -48,10 +48,14 @@ object Rollup {
     * leaf's keys are (name, _h1, _h2, [[TagEntries]]).
     * Output: keys ++ (t, <one column per kernel>).
     *
-    * Routing: when window is a step multiple > step and every kernel is
-    * mergeable, the two-level path runs (zero row amplification); otherwise
-    * the map-side bucketize explode (amplification ceil(window/step), fine
-    * at window ≈ step, ruinous at TSBS 12h/10s = 4320×).
+    * Routing: on a one-point grid (an instant query) every algebraic
+    * kernel set runs as ONE filtered aggregate by (keys, t) — there is
+    * one window, so no sample is duplicated. On a wider grid, when window
+    * is a step multiple ≥ 8 steps and every kernel is mergeable, the
+    * two-level path runs (zero row amplification); otherwise the map-side
+    * bucketize explode (amplification ceil(window/step), fine at window ≈
+    * step, ruinous at TSBS 12h/10s = 4320×). The counter family keeps its
+    * two-level plan on any grid at ratio ≥ 8.
     */
   def rollupMulti(
       samples: DataFrame,
@@ -68,10 +72,15 @@ object Rollup {
     // sample count and two-level wins outright. Explosion cost ~
     // ratio×samples, dense cost ~ series×gridPoints — ratio ≥ 8 is the
     // conservative switch point.
+    //
+    // A one-point grid skips the two-level path: its bucket partials,
+    // eager level-1 pass and window merge only rebuild the single window
+    // the aggregate below reads directly (Grid.bucketizeCol assigns t
+    // without an explode there).
     val ratio = windowMs / grid.stepMs
     if (!autoAdjustWindow && ratio >= 8 && windowMs % grid.stepMs == 0) {
       val alg = kernels.collect { case (n, Algebraic(_, Some(tl), tsS)) => (n, tl, tsS) }
-      if (alg.size == kernels.size)
+      if (alg.size == kernels.size && grid.startMs != grid.endMs)
         return rollupTwoLevel(samples, keys, grid, windowMs, alg)
       val edge = kernels.collect { case (n, k @ OverArrayPrev(_, true, _)) => n -> k }
       if (edge.size == kernels.size) { // counter family: incremental plan

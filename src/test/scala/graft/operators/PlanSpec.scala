@@ -164,6 +164,65 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("an instant rollup leaf at window >= 8 steps plans no job, scans once, and equals two-level") {
+    // every kernel the two-level path merges, in one pass: on a one-point
+    // grid it is the single filtered aggregate by (keys, t) — no eager
+    // level-1 pass while the plan builds, one read of the store — and its
+    // rows equal the last point of a two-point grid, which still takes
+    // the two-level path. Checked at two scales (sparsity moves which
+    // windows are empty or hold one sample).
+    val win = 8 * Day
+    val kernels: Seq[(String, Kernel)] = Seq(
+      "sum" -> Kernels.sum, "count" -> Kernels.count, "min" -> Kernels.min,
+      "max" -> Kernels.max, "avg" -> Kernels.avg, "first" -> Kernels.first,
+      "last" -> Kernels.last, "sum2" -> Kernels.sum2, "geomean" -> Kernels.geomean,
+      "distinct" -> Kernels.distinct, "range" -> Kernels.range,
+      "tfirst" -> Kernels.tfirst, "tlast" -> Kernels.tlast,
+      "count_eq" -> Kernels.countEq(50), "count_ne" -> Kernels.countNe(50),
+      "count_le" -> Kernels.countLe(50), "count_gt" -> Kernels.countGt(50),
+      "sum_eq" -> Kernels.sumEq(50), "sum_le" -> Kernels.sumLe(50),
+      "sum_gt" -> Kernels.sumGt(50), "share_eq" -> Kernels.shareEq(50),
+      "share_le" -> Kernels.shareLe(50), "share_gt" -> Kernels.shareGt(50),
+      "lag" -> Kernels.lag, "rate_over_sum" -> Kernels.rateOverSum(win),
+      "hoeffding_lower" -> Kernels.hoeffdingLower(0.9),
+      "hoeffding_upper" -> Kernels.hoeffdingUpper(0.9), "present" -> Kernels.present)
+    assert(kernels.forall {
+      case (_, Algebraic(_, Some(_), _)) => true
+      case _ => false
+    }, "every kernel here must be one the two-level path merges")
+    val keys = Seq("name", "_h1", "_h2", Rollup.TagEntries)
+    val instant = sparseGrid.startMs + 20 * Day
+    def rows(df: DataFrame): Map[Seq[Any], Seq[Any]] = df.filter(col("t") === instant)
+      .collect().map(r => r.toSeq.take(3) -> r.toSeq.drop(keys.size + 1)).toMap
+    def close(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) =>
+        x == y || (x.isNaN && y.isNaN) || math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y))
+      case _ => a == b
+    }
+    val sf001 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    for (dir <- Seq(sfDir, sf001)) {
+      val keyed = Samples.fromEvents(spark, dir)
+        .withColumn(Rollup.TagEntries, array_sort(map_entries(col("tags"))))
+        .withColumn("_h1", xxhash64(col(Rollup.TagEntries)))
+        .withColumn("_h2", xxhash64(col(Rollup.TagEntries), lit(1)))
+      val (one, planned) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+        Rollup.rollupMulti(keyed, keys, GridSpec(instant, instant, Day), win, kernels)
+      }
+      assert(planned.jobs == 0, s"$dir: building the one-point plan started ${planned.jobs} jobs")
+      val (got, ran) = org.apache.spark.JobCounter.during(spark.sparkContext)(rows(one))
+      assert(ran.fileScans == 1, s"$dir: the one-point leaf scanned the store ${ran.fileScans} times")
+      val (two, twoPlanned) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+        Rollup.rollupMulti(keyed, keys, GridSpec(instant - Day, instant, Day), win, kernels)
+      }
+      assert(twoPlanned.jobs > 0, s"$dir: the two-point grid should take the two-level path")
+      val want = rows(two)
+      assert(got.nonEmpty, s"$dir: no series at the instant")
+      assert(got.keySet == want.keySet, s"$dir: series differ")
+      for ((k, vs) <- want; ((n, _), (a, b)) <- kernels.zip(got(k).zip(vs)))
+        assert(close(a, b), s"$dir: $n of $k: one-point $a, two-level $b")
+    }
+  }
+
   test("a comparison against a number literal plans without running a job") {
     // O3 pushdown and the O4 empty-left check gain nothing against a
     // literal, so the left side is not materialized while the plan builds
