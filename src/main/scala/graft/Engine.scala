@@ -550,11 +550,11 @@ object Engine {
     val aggExpr = Eval.simpleGroupedAgg(agg, col("value")).getOrElse(
       throw new IllegalStateException(s"not a simple grouped aggregate: $agg"))
     // no coalesce around gtags: Eval's tagKey propagates a NULL tags map
-    // into a null group key and a null output map — sort_array/
-    // map_entries/map_from_entries do the same, so null-tag series group
-    // and render identically on both paths
+    // into a null group key and a null output map — the same entries key
+    // here does too, so null-tag series group and render identically on
+    // both paths
     per.filter(!isnan(col("value")))
-      .withColumn("_gk", sort_array(map_entries(gtags)))
+      .withColumn("_gk", graft.core.SeriesId.entries(gtags))
       .withColumn("_nk", nameKey)
       .groupBy(col("_gk"), col("_nk"), col("t"))
       .agg(aggExpr.as("value"))
@@ -564,15 +564,6 @@ object Engine {
           .otherwise(lit(null).cast("string")).as("name"),
         map_from_entries(col("_gk")).as("tags"),
         col("t"), col("value"))
-  }
-
-  /** canonical joinable series key: maps aren't join keys, so use the
-    * sorted entry list (deterministic, orderable)
-    */
-  private def instantKeyCol(df: DataFrame): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    struct(coalesce(df("name"), lit("")),
-      sort_array(map_entries(coalesce(df("tags"), map()))))
   }
 
   /** `fe` = `fn(m[w])` evaluated at the instant `ts` over a `winMs` window */
@@ -667,11 +658,10 @@ object Engine {
     val head = evalAt(tMs - entry.windowMs, offset)
     // the entry's rows as a local relation, for the join alone
     val cached = entry.res.frame(samples.sparkSession)
-    val c = cached.select(instantKeyCol(cached).as("_k"),
-      col("name"), col("tags"), col("value").as("_vc"))
-    val s = tail.select(instantKeyCol(tail).as("_k"),
-      col("name").as("_ns"), col("tags").as("_ts"), col("value").as("_vs"))
-    val hd = head.select(instantKeyCol(head).as("_k"), col("value").as("_ve"))
+    val k = graft.core.SeriesId.key(col("name"), col("tags")).as("_k")
+    val c = cached.select(k, col("name"), col("tags"), col("value").as("_vc"))
+    val s = tail.select(k, col("name").as("_ns"), col("tags").as("_ts"), col("value").as("_vs"))
+    val hd = head.select(k, col("value").as("_ve"))
     val cs = c.join(s, Seq("_k"), "full_outer").join(hd, Seq("_k"), "left_outer")
     // (value, head-validity failure) per series
     val (v, bad) =

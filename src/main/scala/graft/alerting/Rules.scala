@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.GridSpec
+import graft.core.{GridSpec, SeriesId}
 
 /** vmalert rule evaluation (app/vmalert/rule/{alerting,recording}.go,
   * config/config.go), in the batch "replay" form (`execRange`): a rule
@@ -242,7 +242,7 @@ object Rules {
       }
     val out = tagged.withColumn("name", lit(rule.record))
     if (checkDuplicates) {
-      val dup = out.groupBy(col("name"), to_json(map_entries(col("tags"))).as("_k"),
+      val dup = out.groupBy(col("name"), SeriesId.entries(col("tags")).as("_k"),
         col("t")).count().filter(col("count") > 1).limit(1).count()
       if (dup > 0)
         throw new IllegalStateException(
@@ -273,19 +273,18 @@ object Rules {
       rule: Rule,
       groupName: String,
       intervalMs: Long): DataFrame = {
-    val skey = concat_ws("", col("name"),
-      to_json(array_sort(map_entries(col("tags")))))
-    val w = Window.partitionBy(col("_sk")).orderBy(col("t"))
-    val wAll = Window.partitionBy(col("_sk"))
+    val series = SeriesId.Keys.map(col)
+    val w = Window.partitionBy(series: _*).orderBy(col("t"))
     val prevT = lag(col("t"), 1).over(w)
     val gapReset =
       when(prevT.isNull || col("t") - prevT > intervalMs, 1L).otherwise(0L)
-    val staged = res
-      .withColumn("_sk", skey)
+    // a result frame's tags may have been rewritten since any pair it
+    // carries was computed: hash them afresh
+    val staged = SeriesId.withPair(res.drop("_h1", "_h2"))
       .withColumn("_seg",
         sum(gapReset).over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("_activeAt",
-        min(col("t")).over(Window.partitionBy(col("_sk"), col("_seg"))))
+        min(col("t")).over(Window.partitionBy(series :+ col("_seg"): _*)))
       .withColumn("_state",
         if (rule.forMs == 0L) lit("firing")
         else when(col("t") - col("_activeAt") >= rule.forMs, "firing")

@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.Engine
-import graft.core.GridSpec
+import graft.core.{GridSpec, SeriesId}
 import graft.lang.{Eval, MetricExpr, Parser}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -154,19 +154,16 @@ object Api {
     // match[] union predicate and pass the frame straight through
     df => if (selector.isEmpty) df else df.filter(selectorPredicate(selector))
 
-  private def skey: Column = concat(coalesce(col("name"), lit("")),
-    to_json(array_sort(map_entries(col("tags")))))
-
   /** /api/v1/series — distinct series matching filters in range
     * (prometheus.go:727).
     */
   def series(samples: DataFrame, selector: String, fromMs: Long, toMs: Long): DataFrame =
     selectorFilter(selector)(
       samples.filter(col("ts") >= fromMs && col("ts") <= toMs))
-      .withColumn("_sk", skey)
-      // HashAggregate dedup: first(name)/first(tags) buffers (string/map)
-      // would force SortAggregate over the data-scale scan (opt r13)
-      .transform(graft.core.Exemplar.distinctWith(_, Seq("_sk"), Seq("name", "tags")))
+      .transform(SeriesId.canonical)
+      // HashAggregate dedup: first(tags) buffers (map) would force
+      // SortAggregate over the data-scale scan (opt r13)
+      .transform(graft.core.Exemplar.distinctWith(_, SeriesId.Keys, Seq("tags")))
       .select("name", "tags")
 
   /** /api/v1/labels — distinct label names (prometheus.go:643); the
@@ -205,15 +202,14 @@ object Api {
 
   /** /api/v1/series/count (prometheus.go:704) */
   def seriesCount(samples: DataFrame): DataFrame =
-    samples.agg(countDistinct(skey).as("count"))
+    SeriesId.withPair(samples).agg(SeriesId.countSeries.as("count"))
 
   /** /api/v1/status/tsdb — cardinality stats (prometheus.go:582):
     * per-name series counts + top label=value pairs by series count.
     */
   def tsdbStatus(samples: DataFrame, topN: Int = 10): DataFrame = {
-    val keyed = samples.withColumn("_sk", skey)
-    keyed.groupBy(col("name"))
-      .agg(countDistinct(col("_sk")).as("series_count"))
+    SeriesId.withPair(samples).groupBy(col("name"))
+      .agg(SeriesId.countSeries.as("series_count"))
       .orderBy(col("series_count").desc, col("name"))
       .limit(topN)
   }
@@ -236,10 +232,10 @@ object Api {
     val scoped =
       if (selector.isEmpty) timed else selectorFilter(selector)(timed)
     val keyed = graft.core.Exemplar.distinctWith( // HashAggregate dedup
-        scoped.withColumn("_sk", skey), Seq("_sk"), Seq("name", "tags"))
+        SeriesId.canonical(scoped), SeriesId.Keys, Seq("tags"))
       .persist()
     try {
-      val pairs = keyed.select(col("_sk"), explode(map_concat(
+      val pairs = keyed.select(col("name"), col("_h1"), col("_h2"), explode(map_concat(
         when(col("name").isNotNull && col("name") =!= "",
           map(lit("__name__"), col("name")))
           .otherwise(map().cast("map<string,string>")),
@@ -255,16 +251,16 @@ object Api {
         .groupBy(coalesce(col("name"), lit("")).as("n"))
         .agg(count(lit(1)).as("c")).orderBy(col("c").desc, col("n")))
       val byLabelName = entries(pairs
-        .groupBy(col("label")).agg(countDistinct(col("_sk")).as("c"))
+        .groupBy(col("label")).agg(SeriesId.countSeries.as("c"))
         .orderBy(col("c").desc, col("label")))
       val byFocus =
         if (focusLabel.isEmpty) "[]"
         else entries(pairs.filter(col("label") === focusLabel)
-          .groupBy(col("value")).agg(countDistinct(col("_sk")).as("c"))
+          .groupBy(col("value")).agg(SeriesId.countSeries.as("c"))
           .orderBy(col("c").desc, col("value")))
       val byPair = entries(pairs
         .groupBy(concat(col("label"), lit("="), col("value")).as("p"))
-        .agg(countDistinct(col("_sk")).as("c"))
+        .agg(SeriesId.countSeries.as("c"))
         .orderBy(col("c").desc, col("p")))
       val valueCountByName = entries(pairs
         .groupBy(col("label")).agg(countDistinct(col("value")).as("c"))

@@ -330,8 +330,6 @@ object GraphiteHttp {
   // /tags family
   // ------------------------------------------------------------------
 
-  private def canonCol = GraphiteModel.canonicalPath(col("name"), col("tags"))
-
   /** distinct graphite tag names incl. the `name` pseudo-tag */
   def tagsJson(store: DataFrame, filter: String, limit: Int): String = {
     val keys = store.select(explode(map_keys(col("tags"))).as("k"))
@@ -360,9 +358,11 @@ object GraphiteHttp {
     * identity-only: no grid materialization
     */
   def findSeriesJson(spark: SparkSession, store: DataFrame, exprs: Seq[String]): String = {
-    val paths = store.filter(GraphiteModel.tagExprPredicate(exprs))
-      .select(canonCol.as("sid")).distinct()
-      .collect().map(_.getString(0)).sorted
+    val series = graft.core.Exemplar.distinctWith( // one row per series
+      graft.core.SeriesId.withPair(store.filter(GraphiteModel.tagExprPredicate(exprs))),
+      graft.core.SeriesId.Keys, Seq("tags"))
+    val paths = series.select(GraphiteModel.canonicalPath(col("name"), col("tags")))
+      .collect().map(_.getString(0)).distinct.sorted
     paths.map(q).mkString("[", ",", "]")
   }
 

@@ -590,10 +590,7 @@ final class HttpApi(
     // spilled store) compute the same hash pair so per-series grouping
     // stays correct.
     val withHash = (df: DataFrame) => root match {
-      case Some(b) if b.columns.contains("_h1") =>
-        val entries = array_sort(map_entries(col("tags")))
-        df.withColumn("_h1", xxhash64(entries))
-          .withColumn("_h2", xxhash64(entries, lit(1)))
+      case Some(b) if b.columns.contains("_h1") => graft.core.SeriesId.withPair(df)
       case _ => df
     }
     val extras = sp.map(withHash).toList ++

@@ -39,7 +39,7 @@ object Exemplar {
   def distinctWith(df: DataFrame, keys: Seq[String], payload: Seq[String]): DataFrame = {
     val mapCols = payload.filter(isMap(df, _))
     val lifted = mapCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, array_sort(map_entries(col(c))))
+      d.withColumn(c, SeriesId.entries(col(c)))
     }
     val out = lifted.select((keys ++ payload).map(col): _*).distinct()
     mapCols.foldLeft(out) { (d, c) => d.withColumn(c, map_from_entries(col(c))) }
@@ -57,7 +57,7 @@ object Exemplar {
       payload: Seq[String])(aggs: Seq[Column]): DataFrame = {
     val mapCols = payload.filter(isMap(df, _))
     val lifted = mapCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, array_sort(map_entries(col(c))))
+      d.withColumn(c, SeriesId.entries(col(c)))
     }
     val out = lifted
       .groupBy(keys ++ payload.map(col): _*)

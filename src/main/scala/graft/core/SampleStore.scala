@@ -295,39 +295,29 @@ object SampleStore {
     else if (filters.size <= DimResolveThreshold)
       df.filter(retentionFilterPredicate(filters, retentionPeriodMs, nowMs))
     else {
-      // a bucketed frame already carries the persisted series hash pair —
-      // reuse it (the dim aggregate then clusters on the scan's bucket
-      // partitioning: no exchange at all); otherwise compute a local
-      // pair. The persisted pair hashes TAGS ONLY (writeBucketed), so the
-      // metric name must ride the dim key explicitly — name-matching
-      // filters would otherwise resolve from an arbitrary same-tags
-      // representative. `_rnm` is the null-safe twin (equi-joins drop
-      // null keys, and a projection preserves the bucket partitioning).
-      val hasPair = df.columns.contains("_h1") && df.columns.contains("_h2")
-      val keyed0 =
-        if (hasPair) df
-        else {
-          val entries = array_sort(map_entries(col("tags")))
-          df.withColumn("_rh1", xxhash64(col("name"), entries))
-            .withColumn("_rh2", xxhash64(col("name"), entries, lit(1)))
-        }
-      val keyed = keyed0.withColumn("_rnm", coalesce(col("name"), lit("")))
-      val (k1, k2) = if (hasPair) ("_h1", "_h2") else ("_rh1", "_rh2")
+      // the dim keys on the series pair (SeriesId.withPair: a bucketed
+      // frame's persisted pair is reused, so the dim aggregate clusters
+      // on the scan's bucket partitioning — no exchange at all). The pair
+      // hashes TAGS ONLY, so the metric name must ride the dim key
+      // explicitly — name-matching filters would otherwise resolve from
+      // an arbitrary same-tags representative. `_rnm` is the null-safe
+      // twin (equi-joins drop null keys, and a projection preserves the
+      // bucket partitioning).
+      val keyed = SeriesId.withPair(df).withColumn("_rnm", coalesce(col("name"), lit("")))
       // Exemplar.distinctWith, not dropDuplicates: the carried map payload
       // would put the dedup into SortAggregate (data-scale sort, opt r13)
       val dim = Exemplar
-        .distinctWith(keyed, Seq(k1, k2, "_rnm"), Seq("name", "tags"))
-        .select(col(k1), col(k2), col("_rnm"),
+        .distinctWith(keyed, Seq("_h1", "_h2", "_rnm"), Seq("name", "tags"))
+        .select(col("_h1"), col("_h2"), col("_rnm"),
           matchedRetentionMs(filters).as("_rt"))
-        // The persisted pair hashes TAGS ONLY, so a null-name and an
-        // empty-name series with identical tags share (k1,k2,_rnm) while
-        // differing in the lifted payload — distinctWith then emits two
-        // dim rows for one join key and the sample join fans out
-        // (ADVICE r13). Re-dedup on the bare key: the frame is
-        // series-scale and payload-free here (all fixed-width columns),
-        // so this stays a HashAggregate and keeps the old
-        // one-arbitrary-row-per-key guarantee.
-        .dropDuplicates(k1, k2, "_rnm")
+        // A null-name and an empty-name series with identical tags share
+        // (_h1, _h2, _rnm) while differing in the lifted payload —
+        // distinctWith then emits two dim rows for one join key and the
+        // sample join fans out (ADVICE r13). Re-dedup on the bare key:
+        // the frame is series-scale and payload-free here (all
+        // fixed-width columns), so this stays a HashAggregate and keeps
+        // the old one-arbitrary-row-per-key guarantee.
+        .dropDuplicates("_h1", "_h2", "_rnm")
       // dim keys renamed so the self-derived join condition is
       // unambiguous; NULL-SAFE `<=>` on the hash pair — a null KEY would
       // silently drop the row from an equi-join on both sides, rows the
@@ -335,7 +325,7 @@ object SampleStore {
       // Force-broadcast only while the input-size bound holds
       // ([[maybeBroadcastDim]]); a huge store falls back to a
       // planner-chosen join rather than risking the driver.
-      val dimR = dim.select(col(k1).as("_dk1"), col(k2).as("_dk2"),
+      val dimR = dim.select(col("_h1").as("_dk1"), col("_h2").as("_dk2"),
         col("_rnm").as("_dnm"), col("_rt"))
       val dimSide = maybeBroadcastDim(df, dimR)
       // `<=>` only where the schema says the key CAN be null (the
@@ -344,12 +334,10 @@ object SampleStore {
       // still satisfy on the non-broadcast fallback
       def eq(a: String, b: String) =
         if (keyed.schema(a).nullable) col(a) <=> col(b) else col(a) === col(b)
-      val joined = keyed.join(dimSide,
-          eq(k1, "_dk1") && eq(k2, "_dk2") && col("_rnm") === col("_dnm"))
-        .drop("_dk1", "_dk2", "_dnm")
+      keyed.join(dimSide,
+          eq("_h1", "_dk1") && eq("_h2", "_dk2") && col("_rnm") === col("_dnm"))
         .filter(col("ts") > lit(nowMs) - coalesce(col("_rt"), lit(retentionPeriodMs)))
-        .drop("_rt", "_rnm")
-      if (hasPair) joined else joined.drop("_rh1", "_rh2")
+        .select(df.columns.map(col): _*)
     }
 
   /** retention rewrite honoring per-series filters (the background-merge
@@ -392,10 +380,7 @@ object SampleStore {
     */
   def writeBucketed(samples: DataFrame, table: String, path: String,
       buckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val entries = array_sort(map_entries(col("tags")))
-    samples
-      .withColumn("_h1", xxhash64(entries))
-      .withColumn("_h2", xxhash64(entries, lit(1)))
+    SeriesId.withPair(samples)
       .withColumn("date", to_date(timestamp_millis(col("ts"))))
       // co-partition on the bucket key BEFORE the write: without it every
       // write task emits a file per (date, bucket) — tasks × buckets tiny
@@ -513,10 +498,7 @@ object SampleStore {
       if (!tableExists) {
         writeBucketed(fresh, table, tablePath, buckets)
       } else {
-        val entries = array_sort(map_entries(col("tags")))
-        val keyed = fresh
-          .withColumn("_h1", xxhash64(entries))
-          .withColumn("_h2", xxhash64(entries, lit(1)))
+        val keyed = SeriesId.withPair(fresh)
           .withColumn("date", to_date(timestamp_millis(col("ts"))))
           // same one-file-per-(date,bucket) co-partitioning as
           // writeBucketed — see the comment there

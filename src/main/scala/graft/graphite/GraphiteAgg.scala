@@ -79,13 +79,15 @@ object GraphiteAgg {
     // series×grid scale, and densifies at OUTPUT scale below.
     val points = hints.map(_._2).getOrElse(
       ss.df.select(col("sid"), col("t"), col("value")))
+    // a fetch's sparse points carry the series key, the dense frame `sid`
+    val joinKeys = if (hints.isDefined) graft.core.SeriesId.Keys else Seq("sid")
     // sidKeys and its derivatives are series-meta scale (graphite render
     // responses are series-capped), but they're checkpointed LogicalRDDs
     // whose stats Spark doesn't know — without the hint it plans
     // sort-merge joins that shuffle+sort the data-scale points side.
     val df = points
       .filter(!isnan(col("value")))
-      .join(broadcast(sidKeys.select(col("sid"), col("_key"), col("ord"))), Seq("sid"))
+      .join(broadcast(sidKeys.select((joinKeys ++ Seq("_key", "ord")).map(col): _*)), joinKeys)
     val aggs = helperAggsFor(Some(fn), col("value"), col("ord"))
     // keyMeta stays LAZY over the checkpointed sidKeys: its single
     // consumer is the key dim below (opt r14 — the r13 shape checkpointed

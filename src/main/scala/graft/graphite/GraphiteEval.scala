@@ -32,7 +32,7 @@ object GraphiteEval {
     map_concat(map_filter(base, (k, _) => !map_contains_key(upd, k)), upd)
 
   private def eval0(ctx: GraphiteCtx, e: Expr): SeriesSet = e match {
-    case MetricExpr(q) => fetch(ctx, q)
+    case MetricExpr(q) => fetch(ctx, globPredicate(q), q)
     case fe: FuncExpr =>
       val f = GraphiteFuncs.registry.getOrElse(
         fe.name,

@@ -871,7 +871,7 @@ object GraphiteFuncs {
     if (fe.args.isEmpty)
       throw GraphiteError("at least one tagExpression must be passed to seriesByTag")
     val conds = fe.args.zipWithIndex.map { case (_, i) => str(fe, "tagExpressions", i) }
-    fetchByTags(ctx, conds)
+    fetch(ctx, tagExprPredicate(conds), s"seriesByTag(${conds.map(c => s"'$c'").mkString(",")})")
   }
 
   /** Go regex replacement: `\1` → `$1` (transform.go:3626) */

@@ -1,5 +1,6 @@
 package graft.graphite
 
+import graft.core.SeriesId
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,7 +100,8 @@ object GraphiteModel {
 
   /** Optimization hints keyed by the EXACT DataFrame plan object a fetch
     * returned: the series-meta frame (one row per series) and the sparse
-    * filled-bucket frame (data-scale points, no dense NaN padding).
+    * filled-bucket frame (data-scale points keyed by the series key
+    * [[SeriesId.Keys]], no dense NaN padding).
     * aggregateByKey consults these so a `groupByNode(fetch, …)` plan
     * touches the store once at data scale instead of deriving metadata
     * and points from the dense series×grid frame. Keyed on logical-plan
@@ -137,49 +139,42 @@ object GraphiteModel {
       coalesce(
         array_join(
           transform(
-            array_sort(map_entries(tags)),
+            SeriesId.entries(tags),
             e => concat(lit(";"), e.getField("key"), lit("="), e.getField("value"))),
           ""),
         lit("")))
 
-  /** Evaluate a metric path expression against the store: glob-match the
-    * canonical path (lib/storage/index_db.go:1167 getRegexpForGraphiteQuery
-    * rules), then normalize each series to the storage-step grid with
-    * average consolidation (eval.go:200 `s.summarize(aggrAvg, …)`).
+  /** the store rows a metric path glob selects: the glob matches the
+    * metric NAME (lib/storage/index_db.go:1167 getRegexpForGraphiteQuery
+    * rules). A literal prefix also pushes a name range, which the
+    * name-sorted layout's row groups prune on (the rlike alone prunes
+    * nothing).
     */
-  def fetch(ctx: GraphiteCtx, query: String): SeriesSet = {
+  def globPredicate(query: String): Column = {
     val re = globToRegex(query)
-    // a glob with a literal prefix also pushes a name range (implied by
-    // the anchored regex) — parquet row-group pruning on the name-sorted
-    // layout, where the rlike alone prunes nothing
-    val nameMatch = graft.core.SampleStore.namePrefixBounds(
+    graft.core.SampleStore.namePrefixBounds(
       graft.core.SampleStore.globLiteralPrefix(query)) match {
       case Some(b) => b && col("name").rlike(re)
       case None => col("name").rlike(re)
     }
-    // the glob matches the metric NAME (MetricGroup); tags only
-    // distinguish series identity (canonical sid)
-    val raw = ctx.store
-      .filter(nameMatch)
-      .withColumn("sid", canonicalPath(col("name"), col("tags")))
+  }
+
+  /** Fetch the series `pred` selects from the store — a path glob
+    * ([[globPredicate]]) or seriesByTag's tag expressions
+    * ([[tagExprPredicate]]) — as the set named `pathExpr`, each series
+    * normalized to the storage-step grid with average consolidation
+    * (eval.go:200 `s.summarize(aggrAvg, …)`).
+    */
+  def fetch(ctx: GraphiteCtx, pred: Column, pathExpr: String): SeriesSet = {
+    val raw = SeriesId.withPair(ctx.store.filter(pred))
       .filter(col("ts") >= ctx.startMs && col("ts") <= ctx.endMs)
-      .select(
-        col("sid"),
-        col("name"),
-        GraphiteEval.tagMerge(map(lit("name"), col("name")), col("tags")).as("tags"),
-        lit(query).as("pathExpr"),
-        col("ts"),
-        col("value"))
-    SeriesSet(rawToGrid(ctx, raw, ctx.storageStepMs), Set(ctx.storageStepMs),
+    SeriesSet(rawToGrid(ctx, raw, pathExpr, ctx.storageStepMs), Set(ctx.storageStepMs),
       gridRange = Some((ctx.startMs, ctx.endMs)))
   }
 
-  /** Select series by tag filters (`seriesByTag('key=value', …)`,
-    * transform.go transformSeriesByTag): each condition is `k=v`, `k!=v`,
-    * `k=~re`, `k!~re`; `name` matches the metric name.
-    */
-  /** tag-expression predicate over (name, tags) columns: `k=v`, `k!=v`,
-    * `k=~re`, `k!~re`; `name` matches the metric name
+  /** tag-expression predicate over (name, tags) columns
+    * (`seriesByTag('key=value', …)`, transform.go transformSeriesByTag):
+    * `k=v`, `k!=v`, `k=~re`, `k!~re`; `name` matches the metric name
     */
   def tagExprPredicate(conds: Seq[String]): Column = {
     val preds = conds.map { c =>
@@ -208,33 +203,24 @@ object GraphiteModel {
     preds.reduce(_ && _)
   }
 
-  def fetchByTags(ctx: GraphiteCtx, conds: Seq[String]): SeriesSet = {
-    val raw = ctx.store
-      .filter(tagExprPredicate(conds))
-      .withColumn("sid", canonicalPath(col("name"), col("tags")))
-      .filter(col("ts") >= ctx.startMs && col("ts") <= ctx.endMs)
-      .select(
-        col("sid"),
-        col("name"),
-        GraphiteEval.tagMerge(map(lit("name"), col("name")), col("tags")).as("tags"),
-        lit(s"seriesByTag(${conds.map(c => s"'$c'").mkString(",")})").as("pathExpr"),
-        col("ts"),
-        col("value"))
-    SeriesSet(rawToGrid(ctx, raw, ctx.storageStepMs), Set(ctx.storageStepMs),
-      gridRange = Some((ctx.startMs, ctx.endMs)))
-  }
-
-  /** Raw samples → dense per-series grid at `step` with average
-    * consolidation, including the ingestion-jitter rule: an empty bucket
-    * adopts the last earlier sample when it lies within 2 s of the
-    * bucket start (eval.go:111-143 summarize).
+  /** Raw samples (name, tags, `_h1`, `_h2`, ts, value) → dense
+    * per-series grid at `step` with average consolidation, including the
+    * ingestion-jitter rule: an empty bucket adopts the last earlier
+    * sample when it lies within 2 s of the bucket start (eval.go:111-143
+    * summarize). One data-scale exchange on (name, `_h1`, `_h2`) feeds
+    * every step; `sid`, tags and `ord` are built once per series.
     */
-  private def rawToGrid(ctx: GraphiteCtx, raw: DataFrame, step: Long): DataFrame = {
+  private def rawToGrid(ctx: GraphiteCtx, raw: DataFrame, pathExpr: String,
+      step: Long): DataFrame = {
     val n = ctx.pointsLen(step)
     if (n <= 0) return emptyFrame(ctx.spark)
+    val keys = SeriesId.Keys
+    // ts in [start, end] puts _b in [0, n]: bucket n names its series in
+    // the meta frame but yields no point (`filled` drops it)
     val bucketed = raw
+      .withColumn("_te", SeriesId.entries(col("tags")))
       .withColumn("_b", ((col("ts") - ctx.startMs) / step).cast("long"))
-      .filter(col("_b") >= 0 && col("_b") < n)
+      .repartition(keys.map(col): _*)
     // per-field last-sample aggregates, NOT max_by over a (ts, value)
     // struct: a struct aggregation buffer is not UnsafeRow-mutable, so
     // the struct form planned the whole bucket aggregate as SortAggregate
@@ -242,7 +228,7 @@ object GraphiteModel {
     // keep every buffer fixed-width (HashAggregate) and pick the same
     // (arbitrary-on-ts-tie) last sample.
     val perBucket = bucketed
-      .groupBy(col("sid"), col("_b"))
+      .groupBy((keys :+ "_te" :+ "_b").map(col): _*)
       .agg(
         avg(nn(col("value"))).as("_avg"),
         max(col("ts")).as("_lastTs"),
@@ -258,31 +244,41 @@ object GraphiteModel {
     // aggregation bench) with a lead() over the data-scale sparse
     // buckets. The real bucket and its jitter fills are emitted from ONE
     // exploded array so the aggregated subtree isn't planned twice (a
-    // union of two derivations of perBucket re-scans the store).
-    val wNext = Window.partitionBy(col("sid")).orderBy(col("_b"))
-    val filled = perBucket
+    // union of two derivations of perBucket re-scans the store). As a
+    // next bucket, bucket n caps _maxB at n - 1, as the grid end does.
+    val wNext = Window.partitionBy(keys.map(col): _*).orderBy(col("_b"))
+    val points = perBucket
       .withColumn("_nextB", lead(col("_b"), 1).over(wNext))
       .withColumn("_maxB",
         least(
           floor((col("_lastTs") + 2000L - ctx.startMs) / step).cast("long"),
           coalesce(col("_nextB") - 1, lit(n - 1)),
           lit(n - 1)))
-      .select(col("sid"),
+      .select(keys.map(col) :+ col("_te") :+
         explode(concat(
           array(struct(col("_b").as("b"), coalesce(col("_avg"), nanLit).as("v"))),
           when(col("_maxB") >= col("_b") + 1,
             transform(sequence(col("_b") + 1, col("_maxB"), lit(1L)),
               b2 => struct(b2.as("b"), col("_lastV").as("v"))))
-            .otherwise(array().cast("array<struct<b:bigint,v:double>>")))).as("_e"))
-      .select(col("sid"), col("_e.b").as("_b"), col("_e.v").as("_v"))
-    val meta = graft.core.Exemplar // HashAggregate dedup (sid ⟹ payload)
-      .distinctWith(raw, Seq("sid"), Seq("name", "tags", "pathExpr"))
+            .otherwise(array().cast("array<struct<b:bigint,v:double>>")))).as("_e"): _*)
+      .select(keys.map(col) ++ Seq(col("_te"), col("_e.b").as("_b"), col("_e.v").as("_v")): _*)
+    val filled = points.filter(col("_b") < n).drop("_te")
+    // meta dedups the rows the points come from: a branch reading fewer
+    // columns would prune below the exchange and scan the store again
+    // one row per series (keys, store tags) → its sid, graphite tags, ord
+    def describe(series: DataFrame): DataFrame = series
+      .select(keys.map(col) ++ Seq(
+        canonicalPath(col("name"), col("tags")).as("sid"),
+        GraphiteEval.tagMerge(map(lit("name"), col("name")), col("tags")).as("tags"),
+        lit(pathExpr).as("pathExpr")): _*)
       .withColumn("ord", dense_rank().over(Window.orderBy(col("sid"))).cast("long")) // series-meta scale: one row per series, bounded by maxSeries
+    val meta = describe(points.select((keys :+ "_te").map(col): _*).distinct()
+      .withColumn("tags", map_from_entries(col("_te"))))
     val dense = meta.withColumn(
       "_b",
       explode(sequence(lit(0L), lit(n - 1), lit(1L))))
     val j = dense
-      .join(filled, Seq("sid", "_b"), "left")
+      .join(filled, keys :+ "_b", "left")
       .withColumn("t", lit(ctx.startMs) + col("_b") * step)
     val out = j.select(
       col("sid"),
@@ -295,9 +291,12 @@ object GraphiteModel {
       lit(step).as("step"),
       col("t"),
       coalesce(col("_v"), nanLit).as("value"))
-    putFetchHints(out, meta,
-      filled.select(col("sid"),
-        (lit(ctx.startMs) + col("_b") * step).as("t"), col("_v").as("value")))
+    // an aggregation over the fetch reads the meta on its own (a
+    // map-side dedup of the samples) and joins the sparse points to it on
+    // the series key
+    putFetchHints(out, describe(graft.core.Exemplar.distinctWith(raw, keys, Seq("tags"))),
+      filled.select(keys.map(col) ++ Seq((lit(ctx.startMs) + col("_b") * step).as("t"),
+        col("_v").as("value")): _*))
     out
   }
 

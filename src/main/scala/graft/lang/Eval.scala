@@ -1,11 +1,11 @@
 package graft.lang
 
-import graft.core.{Grid, GridSpec}
+import graft.core.{Grid, GridSpec, SeriesId}
 import graft.operators.{Kernel, Kernels, Rollup}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 /** MetricsQL evaluator: AST → DataFrame program.
   *
@@ -21,13 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructFiel
   * (reference: NaN at grid point, removed at the end by removeEmptySeries
   * exec.go:193-214).
   *
-  * Spark cannot group or join on MapType, so series identity is a
-  * CANONICAL STRING of the sorted tag entries
-  * (to_json(array_sort(map_entries(tags)))) — the same canonicalization
-  * the reference applies by keeping MetricName tags sorted
-  * (lib/storage/metric_name.go:137-143). The string is generated
-  * map-side, rides the shuffle as a normal column, and is parsed back to a
-  * map with from_json after grouping.
+  * Spark cannot group or join on MapType, so series identity comes from
+  * [[graft.core.SeriesId]]: rollup leaves key samples on the hash pair;
+  * grid-level group keys (`_tk`) are the sorted entry array, turned back
+  * into the map with map_from_entries after grouping; whole-series keys
+  * are `SeriesId.key`; only rank tie-breaks and picks order series by a
+  * string (`SeriesId.orderKey`).
   */
 object Eval {
 
@@ -111,20 +110,6 @@ object Eval {
   final case class Scalar(v: Double) extends Value
   final case class ScalarSeries(df: DataFrame) extends Value
   final case class StrVal(s: String) extends Value
-
-  private val tagsSchema = ArrayType(StructType(Seq(
-    StructField("key", StringType), StructField("value", StringType))))
-
-  /** canonical string of a tags map (sorted entries) */
-  private def tagKey(tags: Column): Column = to_json(array_sort(map_entries(tags)))
-
-  /** canonical map back from the tagKey string */
-  private def tagsOf(tk: Column): Column =
-    map_from_entries(from_json(tk, tagsSchema))
-
-  /** full series key incl. metric name */
-  private def skey(name: Column, tags: Column): Column =
-    concat_ws("", coalesce(name, lit("")), tagKey(tags))
 
   /** anchored regex, like the reference (lib/storage/tag_filters.go:160) */
   private def anchored(re: String): String = "^(?:" + re + ")$"
@@ -740,7 +725,8 @@ object Eval {
       * attributes — the rollup's output partitioning (on a bucketed
       * store: the scan's bucket HashPartitioning, zero exchanges)
       * satisfies them via the subset-clustering rule. Otherwise fall
-      * back to the canonical string key (`_sk`), the flat-store shape.
+      * back to the whole-series key (`_sk`, SeriesId.key), the
+      * flat-store shape.
       * Returns (frame with key columns, key column NAMES).
       */
     private def seriesKeyed(e: Expr): (DataFrame, Seq[String]) = {
@@ -760,7 +746,7 @@ object Eval {
           (d.withColumn("_nm", coalesce(col("name"), lit(""))),
             Seq("_nm", "_h1", "_h2"))
         case _ =>
-          (series(e).withColumn("_sk", skey(col("name"), col("tags"))), Seq("_sk"))
+          (series(e).withColumn("_sk", SeriesId.key(col("name"), col("tags"))), Seq("_sk"))
       }
     }
 
@@ -1115,12 +1101,10 @@ object Eval {
           x
         case Series(df) =>
           val rows = df
-            .select(concat(coalesce(col("name"), lit("")),
-              to_json(array_sort(map_entries(coalesce(col("tags"),
-                map().cast("map<string,string>")))))).as("_sid"),
+            .select(SeriesId.key(col("name"), col("tags")).as("_sid"),
               col("t"), col("value"))
             .collect()
-          val nSeries = rows.map(_.getString(0)).distinct.length
+          val nSeries = rows.map(_.get(0)).distinct.length
           if (nSeries != 1) throw new IllegalArgumentException(
             s"`@` modifier must return a single series; it returns $nSeries series instead")
           rows.sortBy(_.getLong(1)).map(_.getDouble(2)).find(!_.isNaN)
@@ -1196,34 +1180,20 @@ object Eval {
         val lo = rollGrid.startMs - windowMs - math.max(cfg.lookbackMs, 0L)
         val scoped = shifted.filter(col("ts") > lit(lo) && col("ts") <= lit(rollGrid.endMs))
         val seriesCount =
-          if (graft.core.StorageLimits.maxUniqueTimeseries > 0)
-            countDistinct(concat(coalesce(col("name"), lit("")),
-              to_json(array_sort(map_entries(col("tags")))))).as("_s")
+          if (graft.core.StorageLimits.maxUniqueTimeseries > 0) SeriesId.countSeries.as("_s")
           else max(lit(-1L)).as("_s") // limit off: constant sentinel column
-        pendingLimits += scoped.agg(count(lit(1)).as("_n"), seriesCount)
+        pendingLimits += SeriesId.withPair(scoped).agg(count(lit(1)).as("_n"), seriesCount)
       }
-      // Series identity for the PER-SAMPLE hot path is a 128-bit hash of
-      // the sorted tag entries — no per-row string building, and the
-      // shuffle key is two longs. The sorted entries array itself
-      // (Rollup.TagEntries) rides the rollup as a payload key and is
-      // rebuilt into the tags map at output scale, so a leaf reads its
-      // input once (the reference likewise carries each series'
-      // MetricName with its samples, netstorage.go RunParallel).
-      // Canonical strings remain the identity for grid-level
-      // (post-rollup) operators where cardinality is series-scale.
-      // A bucketed store (SampleStore.writeBucketed) persists the pair;
-      // REUSING those attributes (instead of recomputing the same
-      // expressions) is what lets the scan's bucket HashPartitioning
-      // satisfy the per-series window/aggregate distribution downstream —
-      // a recomputed alias severs that linkage and re-inserts the
-      // data-scale exchange.
-      val withEntries =
-        shifted.withColumn(Rollup.TagEntries, array_sort(map_entries(col("tags"))))
-      val keyed =
-        if (shifted.columns.contains("_h1") && shifted.columns.contains("_h2")) withEntries
-        else withEntries
-          .withColumn("_h1", xxhash64(col(Rollup.TagEntries)))
-          .withColumn("_h2", xxhash64(col(Rollup.TagEntries), lit(1)))
+      // Series identity for the PER-SAMPLE hot path is SeriesId's hash
+      // pair — no per-row string building, and the shuffle key is two
+      // longs (a bucketed store's persisted pair is reused). The sorted
+      // entries array itself (Rollup.TagEntries) rides the rollup as a
+      // payload key and is rebuilt into the tags map at output scale, so
+      // a leaf reads its input once (the reference likewise carries each
+      // series' MetricName with its samples, netstorage.go RunParallel).
+      val keyed = SeriesId.withPair(
+        shifted.withColumn(Rollup.TagEntries, SeriesId.entries(col("tags"))),
+        col(Rollup.TagEntries))
       (keyed, rollGrid, atMs, windowMs)
     }
 
@@ -1334,21 +1304,21 @@ object Eval {
         if (byName) coalesce(col("name"), lit("")) else lit("")
 
       def grouped(aggExpr: Column): Value = {
-        val g = df.withColumn("_tk", tagKey(gtags))
+        val g = df.withColumn("_tk", SeriesId.entries(gtags))
           .withColumn("_nk", nameKey)
           .groupBy(col("_tk"), col("_nk"), col("t"))
           .agg(aggExpr.as("value"))
           .filter(col("value").isNotNull)
         Series(g.select(
           when(length(col("_nk")) > 0, col("_nk")).otherwise(lit(null).cast(StringType)).as("name"),
-          tagsOf(col("_tk")).as("tags"), col("t"), col("value")))
+          map_from_entries(col("_tk")).as("tags"), col("t"), col("value")))
       }
 
       // per-series rank ops keep input series unchanged (aggr.go:646)
       def ranked(k: Int, ord: Column): Value = {
         val withKeys = df
-          .withColumn("_tk", tagKey(gtags))
-          .withColumn("_sk", skey(col("name"), col("tags")))
+          .withColumn("_tk", SeriesId.entries(gtags))
+          .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
         val w = Window.partitionBy(col("_tk"), col("t")).orderBy(ord, col("_sk").asc)
         Series(withKeys
           .withColumn("_rn", row_number().over(w))
@@ -1369,7 +1339,7 @@ object Eval {
       if (a.limit <= 0) result
       else result match {
         case Series(out) =>
-          val groupKeyOf: Column => Column = tags => tagKey(map_filter(tags,
+          val groupKeyOf: Column => Column = tags => SeriesId.entries(map_filter(tags,
             (k, _) => a.modifier match {
               case Some(By(ls)) => k.isInCollection("" +: ls)
               case Some(Without(ls)) => !k.isInCollection(ls)
@@ -1377,12 +1347,12 @@ object Eval {
             }))
           val firstGroups = df
             .withColumn("_oid", monotonically_increasing_id())
-            .withColumn("_gk", concat_ws("\u0000", nameKey, groupKeyOf(col("tags"))))
+            .withColumn("_gk", struct(nameKey, groupKeyOf(col("tags"))))
             .groupBy("_gk").agg(min(col("_oid")).as("_oid"))
             .orderBy(col("_oid")).limit(a.limit)
             .select("_gk")
           Series(out
-            .withColumn("_gk", concat_ws("\u0000",
+            .withColumn("_gk", struct(
               if (byName) coalesce(col("name"), lit("")) else lit(""),
               groupKeyOf(col("tags"))))
             .join(broadcast(firstGroups), Seq("_gk"), "left_semi")
@@ -1416,21 +1386,21 @@ object Eval {
           // one series per group, kept with its ORIGINAL labels
           // (aggr.go aggrFuncAny returns tss[:1] unreduced)
           val withKeys = df
-            .withColumn("_tk", tagKey(gtags))
-            .withColumn("_sk", skey(col("name"), col("tags")))
+            .withColumn("_tk", SeriesId.entries(gtags))
+            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
           val pick = withKeys.select(col("_tk"), col("_sk")).distinct()
             .groupBy(col("_tk")).agg(min(col("_sk")).as("_sk"))
           Series(withKeys.join(broadcast(pick), Seq("_tk", "_sk"), "left_semi")
             .select(col("name"), col("tags"), col("t"), col("value")))
         case "mode" =>
           // smallest most-frequent value (aggr.go:446)
-          val counts = df.withColumn("_tk", tagKey(gtags))
+          val counts = df.withColumn("_tk", SeriesId.entries(gtags))
             .groupBy(col("_tk"), col("t"), v).agg(count(lit(1)).as("_c"))
           val w = Window.partitionBy(col("_tk"), col("t"))
             .orderBy(col("_c").desc, v.asc)
           Series(counts.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
             .select(lit(null).cast(StringType).as("name"),
-              tagsOf(col("_tk")).as("tags"), col("t"), col("value")))
+              map_from_entries(col("_tk")).as("tags"), col("t"), col("value")))
         case "count_values" =>
           // count_values("label", q) by/without (aggr.go:566): the dst
           // label leaves the by-list / joins the without-list (Prometheus
@@ -1444,24 +1414,24 @@ object Eval {
               map_filter(col("tags"), (k, _) => !k.isInCollection(label +: ls))
             case None => map().cast("map<string,string>")
           }
-          val g = df.filter(!isnan(v)).withColumn("_tk", tagKey(gtags2))
+          val g = df.filter(!isnan(v)).withColumn("_tk", SeriesId.entries(gtags2))
             .groupBy(col("_tk"), col("t"), v.as("_val"))
             .agg(count(lit(1)).cast(DoubleType).as("value"))
           Series(g.select(
             lit(null).cast(StringType).as("name"),
-            map_concat(tagsOf(col("_tk")),
+            map_concat(map_from_entries(col("_tk")),
               map(lit(label), goFmtUdf(col("_val")))).as("tags"),
             col("t"), col("value")))
         case "share" =>
           // negative points take no share and contribute nothing to the
           // denominator (aggr.go aggrFuncShare skips v < 0)
-          val w = Window.partitionBy(tagKey(gtags), col("t"))
+          val w = Window.partitionBy(SeriesId.entries(gtags), col("t"))
           val nonNeg = when(v >= 0, v)
           Series(df
             .withColumn("value", nonNeg / sum(nonNeg).over(w))
             .filter(col("value").isNotNull))
         case "zscore" =>
-          val w = Window.partitionBy(tagKey(gtags), col("t"))
+          val w = Window.partitionBy(SeriesId.entries(gtags), col("t"))
           val sd = stddev_pop(v).over(w)
           Series(df.withColumn("value",
             when(sd > 0, (v - avg(v).over(w)) / sd)).filter(col("value").isNotNull))
@@ -1471,8 +1441,8 @@ object Eval {
           val k = scalarArg(a.args.head).toInt
           if (k <= 0) return Series(df.filter(lit(false))) // limitk(-1) → empty
           val withKeys = df
-            .withColumn("_tk", tagKey(gtags))
-            .withColumn("_sk", skey(col("name"), col("tags")))
+            .withColumn("_tk", SeriesId.entries(gtags))
+            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
           val keys0 = withKeys.select(col("_tk"), col("_sk")).distinct()
           // no by/without → ONE global group: distributed sort+limit
           // instead of a rank window over a constant partition key (which
@@ -1488,34 +1458,34 @@ object Eval {
             .select(col("name"), col("tags"), col("t"), col("value")))
         case "mad" =>
           // cross-series MAD per point (aggr.go:942)
-          val w = Window.partitionBy(tagKey(gtags), col("t"))
+          val w = Window.partitionBy(SeriesId.entries(gtags), col("t"))
           val med = percentile(v, lit(0.5)).over(w)
           val g = df.withColumn("_dev", abs(v - med))
-            .withColumn("_tk", tagKey(gtags))
+            .withColumn("_tk", SeriesId.entries(gtags))
             .groupBy(col("_tk"), col("t"))
             .agg(percentile(col("_dev"), lit(0.5)).as("value"))
           Series(g.select(lit(null).cast(StringType).as("name"),
-            tagsOf(col("_tk")).as("tags"), col("t"), col("value")))
+            map_from_entries(col("_tk")).as("tags"), col("t"), col("value")))
         case "quantiles" =>
           // quantiles("label", phi…, q) — one series per phi (aggr.go:1162)
           val label = strArg(a.args.head)
           val phis = a.args.drop(1).dropRight(1).map(scalarArg)
           val aggs = phis.zipWithIndex.map { case (p, i) => percentile(v, lit(p)).as(s"_q$i") }
           val stackArgs = phis.zipWithIndex.map { case (p, i) => s"'$p', _q$i" }.mkString(", ")
-          val g = df.withColumn("_tk", tagKey(gtags))
+          val g = df.withColumn("_tk", SeriesId.entries(gtags))
             .groupBy(col("_tk"), col("t"))
             .agg(aggs.head, aggs.tail: _*)
             .select(col("_tk"), col("t"),
               expr(s"stack(${phis.size}, $stackArgs) as (_phi, value)"))
           Series(g.select(lit(null).cast(StringType).as("name"),
-            map_concat(tagsOf(col("_tk")), map(lit(label), col("_phi"))).as("tags"),
+            map_concat(map_from_entries(col("_tk")), map(lit(label), col("_phi"))).as("tags"),
             col("t"), col("value")))
         case "histogram" =>
           // cross-series vmrange histogram per point, returned as
           // cumulative le buckets (aggr.go:256 aggrFuncHistogram ends in
           // vmrangeBucketsToLE; bounds are the %.3e decimal strings)
           import graft.operators.HistogramQ
-          val g = df.withColumn("_tk", tagKey(gtags))
+          val g = df.withColumn("_tk", SeriesId.entries(gtags))
             .filter(!isnan(v) && v > 0.0)
             .withColumn("_hk", HistogramQ.bucketIdxClamped(v))
             .groupBy(col("_tk"), col("t"), col("_hk"))
@@ -1524,14 +1494,14 @@ object Eval {
             .drop("_hk")
           val le = HistogramQ.vmrangeToLE(g, Seq("_tk"))
           Series(le.select(lit(null).cast(StringType).as("name"),
-            map_concat(tagsOf(col("_tk")),
+            map_concat(map_from_entries(col("_tk")),
               map(lit("le"), col("le"))).as("tags"),
             col("t"), col("value")))
         case "outliers_iqr" | "outliers_mad" | "outliersk" =>
           // whole-series outlier filters (aggr.go:952,1004,1040)
           val withKeys = df
-            .withColumn("_tk", tagKey(gtags))
-            .withColumn("_sk", skey(col("name"), col("tags")))
+            .withColumn("_tk", SeriesId.entries(gtags))
+            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
           val stats = withKeys.groupBy(col("_tk"), col("_sk"))
             .agg(percentile(v, lit(0.5)).as("_med"))
           val winners: DataFrame = a.name match {
@@ -1585,8 +1555,8 @@ object Eval {
           }
           val desc = n.startsWith("topk_")
           val withKeys = df
-            .withColumn("_tk", tagKey(gtags))
-            .withColumn("_sk", skey(col("name"), col("tags")))
+            .withColumn("_tk", SeriesId.entries(gtags))
+            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
           val ranked0 = withKeys.groupBy(col("_tk"), col("_sk")).agg(stat.as("_s"))
             .withColumn("_rn", row_number().over(
               Window.partitionBy(col("_tk"))
@@ -1607,7 +1577,7 @@ object Eval {
                 .filter(col("value").isNotNull)
                 .select(lit(null).cast(StringType).as("name"),
                   map_concat(
-                    map_filter(tagsOf(col("_tk")), (key, _) => key =!= tagN),
+                    map_filter(map_from_entries(col("_tk")), (key, _) => key =!= tagN),
                     map(lit(tagN), lit(tagV))).as("tags"),
                   col("t"), col("value"))
               Series(kept.unionByName(rem))
@@ -1792,7 +1762,7 @@ object Eval {
       // null-value rows (binary_op.go:568 default; exec_test.go
       // scalar-default-scalar)
       def densify(d: DataFrame): DataFrame = {
-        val withSk = d.withColumn("_sk", skey(col("name"), col("tags")))
+        val withSk = d.withColumn("_sk", SeriesId.key(col("name"), col("tags")))
         val dim = // HashAggregate dedup (map payload would force SortAggregate)
           graft.core.Exemplar.distinctWith(withSk, Seq("_sk"), Seq("name", "tags"))
         val dense = dim.crossJoin(Grid.gridDf(samples, cfg.grid))
@@ -1955,8 +1925,8 @@ object Eval {
         case Some(Ignoring(ls)) => t => map_filter(t, (k, _) => !k.isInCollection(ls))
         case None => identity
       }
-      val l = l0.withColumn("_mk", tagKey(matchTags(col("tags"))))
-      val r = r0.withColumn("_mk", tagKey(matchTags(col("tags"))))
+      val l = l0.withColumn("_mk", SeriesId.entries(matchTags(col("tags"))))
+      val r = r0.withColumn("_mk", SeriesId.entries(matchTags(col("tags"))))
 
       def lOnly = Seq(col("name"), col("tags"), col("t"), col("value"))
       // NaN-valued rows are "absent" for set-op presence tests — a NaN
@@ -2015,7 +1985,7 @@ object Eval {
               // grid-densify real many series (their NaN points can now
               // produce values), then add synthetic key-only series for
               // match keys present only on the one side
-              val withSk = m.withColumn("_sk2", skey(col("name"), col("tags")))
+              val withSk = m.withColumn("_sk2", SeriesId.key(col("name"), col("tags")))
               val dim = graft.core.Exemplar.distinctWith( // HashAggregate dedup
                 withSk, Seq("_sk2"), Seq("_mk", "name", "tags"))
               val dense = dim.crossJoin(Grid.gridDf(samples, cfg.grid))
@@ -2028,7 +1998,7 @@ object Eval {
               val synth = missingKeys
                 .crossJoin(Grid.gridDf(samples, cfg.grid))
                 .select(col("_mk"), lit(null).cast(StringType).as("name"),
-                  tagsOf(col("_mk")).as("tags"), col("t"),
+                  map_from_entries(col("_mk")).as("tags"), col("t"),
                   lit(Double.NaN).as("value"))
               dense.unionByName(synth)
             }
@@ -2065,7 +2035,7 @@ object Eval {
             .withColumn("_ov",
               when(col("_on") > 1, raise_error(concat(
                 lit(s"duplicate time series on the $sideName side of `${b.op}`: "),
-                lit("multiple series share match key "), col("_mk"),
+                lit("multiple series share match key "), to_json(col("_mk")),
                 lit(" at the same timestamp"))))
                 .otherwise(col("_ov0")))
             .drop("_ov0", "_on")
@@ -2101,7 +2071,7 @@ object Eval {
           // extra label missing on the one side is REMOVED from the many
           // side (metric_name.go:313-344)
           val baseTags = (b.groupModifier, b.joinModifier) match {
-            case (Some(_), None) => tagsOf(col("_mk"))
+            case (Some(_), None) => map_from_entries(col("_mk"))
             case _ => col("tags")
           }
           val otags = coalesce(col("_otags"), map().cast("map<string,string>"))
@@ -2163,7 +2133,7 @@ object Eval {
         return Series(vals.map(v => toSeries(samples, v, cfg)).reduce(_ unionByName _))
       // union(q1,…,qN): first series wins per series key (transform.go:1742)
       val dfs = vals.map(v =>
-        toSeries(samples, v, cfg).withColumn("_sk", skey(col("name"), col("tags"))))
+        toSeries(samples, v, cfg).withColumn("_sk", SeriesId.key(col("name"), col("tags"))))
       val tagged = dfs.zipWithIndex.map { case (df, i) => df.withColumn("_pri", lit(i)) }
       val all = tagged.reduce(_ unionByName _)
       val firstOwner = all.groupBy("_sk").agg(min("_pri").as("_pri"))
@@ -2179,10 +2149,10 @@ object Eval {
         else out.withColumn("name", lit(null).cast(StringType))
 
       def runW = Window
-        .partitionBy(skey(col("name"), col("tags"))).orderBy(col("t"))
+        .partitionBy(SeriesId.key(col("name"), col("tags"))).orderBy(col("t"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       def allW = Window
-        .partitionBy(skey(col("name"), col("tags")))
+        .partitionBy(SeriesId.key(col("name"), col("tags")))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
       name match {
@@ -2333,7 +2303,7 @@ object Eval {
           // (transform.go:1364); output stays at the input's points
           val dfAll = f.args.map(series(_)).reduce(_ unionByName _)
             .filter(!isnan(col("value")))
-          val w = Window.partitionBy(skey(col("name"), col("tags")))
+          val w = Window.partitionBy(SeriesId.key(col("name"), col("tags")))
           val mn = min("value").over(w)
           val mx = max("value").over(w)
           // the reference keeps each series untouched apart from the values
@@ -2395,7 +2365,7 @@ object Eval {
               // more/less than exactly ONE series → NaN (transform.go:2392
               // transformScalar); the count is label-metadata scale
               val d = toSeries(samples, sv, cfg)
-              val nSeries = d.select(skey(col("name"), col("tags"))).distinct().count()
+              val nSeries = d.select(SeriesId.key(col("name"), col("tags"))).distinct().count()
               if (nSeries != 1) Scalar(Double.NaN)
               else ScalarSeries(d.select(lit(null).cast(StringType).as("name"),
                 map().cast("map<string,string>").as("tags"), col("t"), col("value")))
@@ -2429,9 +2399,9 @@ object Eval {
           // (left side of `default`) carry all-NaN series that must die
           // here. left_semi on keys with ≥1 real sample.
           val live = df.filter(!isnan(col("value")))
-            .select(skey(col("name"), col("tags")).as("_live_k")).distinct()
+            .select(SeriesId.key(col("name"), col("tags")).as("_live_k")).distinct()
           Series(df.join(live,
-            skey(col("name"), col("tags")) === col("_live_k"), "left_semi"))
+            SeriesId.key(col("name"), col("tags")) === col("_live_k"), "left_semi"))
         case "alias" =>
           // alias(q, "name") sets the metric name (transform.go:2004)
           Series(df.withColumn("name", lit(strArg(f.args(1)))))
@@ -2575,7 +2545,7 @@ object Eval {
         case "sort" | "sort_desc" =>
           // ordering of the final series set (exec.go:104-130): impose a
           // deterministic row order; series-level sort key = avg value
-          val w = Window.partitionBy(skey(col("name"), col("tags")))
+          val w = Window.partitionBy(SeriesId.key(col("name"), col("tags")))
           val s = df.withColumn("_avg", avg("value").over(w))
           val sorted = if (name == "sort") s.orderBy(col("_avg").asc, col("t").asc)
             else s.orderBy(col("_avg").desc, col("t").asc)
@@ -2595,7 +2565,7 @@ object Eval {
           val offset = scalarArg(f.args(1)).toInt
           val q = series(f.args(2))
             .filter(!isnan(col("value")))
-            .withColumn("_sk", skey(col("name"), col("tags")))
+            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
           val sortSpec: Option[(Seq[String], Boolean, Boolean)] = f.args(2) match {
             case FuncExpr(sn, sargs, _) if Set("sort_by_label", "sort_by_label_desc",
                 "sort_by_label_numeric", "sort_by_label_numeric_desc")(sn.toLowerCase) =>
@@ -2648,7 +2618,7 @@ object Eval {
           // counter-reset removal with the partial-reset 8× heuristic
           // (rollup.go:921 removeCounterResets): a small dip is a partial
           // reset (no increase), a big one restarts at the new value
-          val w = Window.partitionBy(skey(col("name"), col("tags"))).orderBy(col("t"))
+          val w = Window.partitionBy(SeriesId.key(col("name"), col("tags"))).orderBy(col("t"))
           val prev = lag(col("value"), 1).over(w)
           val d = when(prev.isNull, col("value"))
             .when(col("value") >= prev, col("value") - prev)
@@ -2680,12 +2650,12 @@ object Eval {
             .filter(validVm)
             .withColumn("vmrange", vm)
             .withColumn("_tk",
-              tagKey(map_filter(col("tags"), (k, _) => k =!= "vmrange" && k =!= "le")))
+              SeriesId.entries(map_filter(col("tags"), (k, _) => k =!= "vmrange" && k =!= "le")))
           val out = HistogramQ.vmrangeToLE(
             in.select(col("name"), col("_tk"), col("t"), col("vmrange"), col("value")),
             Seq("name", "_tk"))
           val converted = out.select(lit(null).cast(StringType).as("name"),
-            map_concat(tagsOf(col("_tk")),
+            map_concat(map_from_entries(col("_tk")),
               map(lit("le"), col("le"))).as("tags"),
             col("t"), col("value"))
           val passthrough = df
@@ -2705,7 +2675,7 @@ object Eval {
           val in0 = series(f.args(arg))
             .withColumn("le", leValue(col("tags").getItem("le")))
             .filter(col("le").isNotNull)
-            .withColumn("_tk", tagKey(map_filter(col("tags"), (k, _) => k =!= "le")))
+            .withColumn("_tk", SeriesId.entries(map_filter(col("tags"), (k, _) => k =!= "le")))
             .select(col("name"), col("_tk"), col("t"), col("le"), col("value"))
           // phi/le/bound args follow getScalar semantics: a constant OR a
           // per-point label-free series (transform.go getScalar) — joined
@@ -2751,8 +2721,8 @@ object Eval {
           def emit(vc: String, boundTag: Option[(String, String)]) = {
             val tags = boundTag match {
               case Some((l, v)) => map_concat(
-                map_filter(tagsOf(col("_tk")), (k, _) => !(k === l)), map(lit(l), lit(v)))
-              case None => tagsOf(col("_tk"))
+                map_filter(map_from_entries(col("_tk")), (k, _) => !(k === l)), map(lit(l), lit(v)))
+              case None => map_from_entries(col("_tk"))
             }
             out.select(lit(null).cast(StringType).as("name"),
               tags.as("tags"), col("t"), col(vc).as("value"))
@@ -2772,11 +2742,11 @@ object Eval {
           val in = series(f.args.last)
             .withColumn("le", leValue(col("tags").getItem("le")))
             .filter(col("le").isNotNull)
-            .withColumn("_tk", tagKey(map_filter(col("tags"), (k, _) => k =!= "le")))
+            .withColumn("_tk", SeriesId.entries(map_filter(col("tags"), (k, _) => k =!= "le")))
             .select(col("name"), col("_tk"), col("t"), col("le"), col("value"))
           val out = graft.operators.HistogramQ.histQuantiles(in, Seq("name", "_tk"), phis)
           Series(out.select(lit(null).cast(StringType).as("name"),
-            map_concat(tagsOf(col("_tk")), map(lit(lbl), col("phi"))).as("tags"),
+            map_concat(map_from_entries(col("_tk")), map(lit(lbl), col("phi"))).as("tags"),
             col("t"), col("value")))
         case "buckets_limit" =>
           // buckets_limit(limit, buckets) — transform.go:386. The le label
@@ -2786,12 +2756,12 @@ object Eval {
             .withColumn("_les", col("tags").getItem("le"))
             .withColumn("le", leValue(col("tags").getItem("le")))
             .filter(col("le").isNotNull)
-            .withColumn("_tk", tagKey(map_filter(col("tags"), (k, _) => k =!= "le")))
+            .withColumn("_tk", SeriesId.entries(map_filter(col("tags"), (k, _) => k =!= "le")))
             .select(col("name"), col("_tk"), col("t"), col("le"), col("_les"), col("value"))
           val out = graft.operators.HistogramQ.bucketsLimit(
             in, Seq("name", "_tk"), scalarArg(f.args.head).toInt)
           Series(out.select(col("name"),
-            map_concat(tagsOf(col("_tk")),
+            map_concat(map_from_entries(col("_tk")),
               map(lit("le"), col("_les"))).as("tags"),
             col("t"), col("value")))
         case "drop_common_labels" =>
@@ -2806,7 +2776,7 @@ object Eval {
           val total = " __total__"
           val dcDf = f.args.map(series(_)).reduce(_ unionByName _)
           val perSeries = graft.core.Exemplar.distinctWith( // _sk ⟹ tags
-            dcDf.withColumn("_sk", skey(col("name"), col("tags"))),
+            dcDf.withColumn("_sk", SeriesId.key(col("name"), col("tags"))),
             Seq("_sk"), Seq("tags"))
           val exploded = perSeries
             .select(col("_sk"), explode_outer(col("tags")).as(Seq("_dck", "_dcv")))
@@ -2886,19 +2856,19 @@ object Eval {
         case "range_trim_zscore" =>
           val z = scalarArg(f.args.head)
           val q = series(f.args(1))
-          val w = Window.partitionBy(skey(col("name"), col("tags")))
+          val w = Window.partitionBy(SeriesId.key(col("name"), col("tags")))
           val sd = stddev_pop(col("value")).over(w)
           val zs = when(sd > 0, abs(col("value") - avg(col("value")).over(w)) / sd).otherwise(0.0)
           Series(q.withColumn("_z", zs).filter(col("_z") <= z).drop("_z"))
         case "range_trim_outliers" =>
           val k = scalarArg(f.args.head)
           val q = series(f.args(1))
-          val w = Window.partitionBy(skey(col("name"), col("tags")))
+          val w = Window.partitionBy(SeriesId.key(col("name"), col("tags")))
           val med = percentile(col("value"), lit(0.5)).over(w)
           val withDev = q.withColumn("_dev", abs(col("value") - med))
           Series(withDev
             .withColumn("_mad", percentile(col("_dev"), lit(0.5))
-              .over(Window.partitionBy(skey(col("name"), col("tags")))))
+              .over(Window.partitionBy(SeriesId.key(col("name"), col("tags")))))
             .filter(col("_dev") <= lit(k) * col("_mad"))
             .drop("_dev", "_mad"))
         case "range_trim_spikes" =>
@@ -2907,7 +2877,7 @@ object Eval {
           // inequality drops)
           val phi = scalarArg(f.args.head) / 2.0
           val q = series(f.args(1)).filter(!isnan(col("value")))
-          val w = Window.partitionBy(skey(col("name"), col("tags")))
+          val w = Window.partitionBy(SeriesId.key(col("name"), col("tags")))
           Series(q
             .withColumn("_lo", percentile(col("value"), lit(phi)).over(w))
             .withColumn("_hi", percentile(col("value"), lit(1.0 - phi)).over(w))
@@ -2919,7 +2889,7 @@ object Eval {
           // higher-order array expression, explode back. Per-series arrays
           // are grid-bounded (numPoints), not data-bounded.
           val sf = scalarArg(f.args(1))
-          val pts = df.withColumn("_tk", tagKey(col("tags")))
+          val pts = df.withColumn("_tk", SeriesId.entries(col("tags")))
             .groupBy(col("name"), col("_tk"))
             .agg(array_sort(collect_list(struct(col("t"), col("value")))).as("_pts"))
           val smoothed = aggregate(
@@ -2933,7 +2903,7 @@ object Eval {
             })
           Series(pts
             .withColumn("_p", explode(smoothed))
-            .select(col("name"), tagsOf(col("_tk")).as("tags"),
+            .select(col("name"), map_from_entries(col("_tk")).as("tags"),
               col("_p.t").as("t"), col("_p.value").as("value")))
         case other =>
           throw new IllegalArgumentException(s"unsupported transform '$other'")

@@ -487,13 +487,10 @@ object Rollup {
   /** Merge-row budget for the explode-merge strategy: buckets × ratio rows
     * stream through one partial+final HashAggregate (~0.1 µs/row measured),
     * so 200 M rows ≈ a few seconds at local[32]; past that the dense-window
-    * merge's series × gridPoints × ~1 µs/row buffering wins. Parameterised
-    * (-Dgraft.explodeMergeLimit=N) so cluster deployments can rescale the
-    * crossover to their core count and tests can force the dense path.
+    * merge's series × gridPoints × ~1 µs/row buffering wins.
+    * `private[graft] var` so specs can force the dense-window path.
     */
-  private def ExplodeMergeLimit: Long =
-    sys.props.get("graft.explodeMergeLimit").map(_.toLong)
-      .getOrElse(200L * 1000 * 1000)
+  private[graft] var ExplodeMergeLimit: Long = 200L * 1000 * 1000
 
   /** Explode-merge: fan each bucket partial out to the grid-aligned
     * windows it contributes to — sequence(t, t+window-step, step) — and

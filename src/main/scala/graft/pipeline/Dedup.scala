@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.SeriesId
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -530,22 +531,18 @@ object Dedup {
       .select((keys.map(col) :+ col("ts") :+ col("value")): _*)
   }
 
-  /** canonical sorted-entries JSON of the tags map (null-safe: null tags
-    * dedup as the empty map instead of dropping out of a null join key)
+  /** the canonical label set of `tags` as a grouping key (null tags
+    * dedup as the empty set instead of dropping out of a null join key)
     */
-  private[graft] def tagsJson: Column =
-    to_json(array_sort(map_entries(coalesce(col("tags"), map()))))
-
-  private[graft] def tagsFromJson(c: Column): Column =
-    map_from_entries(from_json(c,
-      org.apache.spark.sql.types.DataType.fromDDL("array<struct<key:string,value:string>>")))
+  private def labelSet: Column = SeriesId.entries(coalesce(col("tags"), SeriesId.NoTags))
 
   /** Select-time dedup over the canonical (name, tags, ts, value) frame in
     * ONE pass over the store: a map cannot be a grouping key and carrying
     * it through an aggregation buffer (`any_value(tags)`) forces
-    * SortAggregate, so name and the canonical sorted-entries JSON of tags
-    * ARE the grouping keys and the map is rebuilt from the JSON after the
-    * aggregate — no second scan, no string-keyed restore join. This is the
+    * SortAggregate, so name and the canonical label set (the sorted
+    * entries, [[SeriesId.entries]]) ARE the grouping keys and the map is
+    * rebuilt from them after the aggregate — no second scan, no restore
+    * join. This is the
     * `-dedup.minScrapeInterval` read path (dedup.go:30-70) every consumer
     * (HttpApi reads, SampleStore.compact) goes through.
     */
@@ -556,9 +553,9 @@ object Dedup {
     // (subset clustering) — zero exchanges — and keeping the pair in the
     // output preserves the elision for everything downstream
     val hashed = samples.columns.contains("_h1") && samples.columns.contains("_h2")
-    val keys = (if (hashed) Seq("_h1", "_h2") else Nil) ++ Seq("name", "_tj")
-    val out = dedupSamples(samples.withColumn("_tj", tagsJson), keys, intervalMs)
-      .withColumn("tags", tagsFromJson(col("_tj")))
+    val keys = (if (hashed) Seq("_h1", "_h2") else Nil) ++ Seq("name", "_te")
+    val out = dedupSamples(samples.withColumn("_te", labelSet), keys, intervalMs)
+      .withColumn("tags", map_from_entries(col("_te")))
     if (hashed) out.select("name", "tags", "ts", "value", "_h1", "_h2")
     else out.select("name", "tags", "ts", "value")
   }
@@ -637,19 +634,19 @@ object Dedup {
       when(pred, chain).otherwise(acc)
     }
     // same two-level HashAggregate shape as dedupSamples (struct buffers
-    // would force SortAggregate); tags travel as the grouping-key JSON
+    // would force SortAggregate); tags travel as the grouping-key label set
     val keyed = samples
       .withColumn("_iv", interval)
       .withColumn("_bkt",
         when(col("_iv") > 0,
           expr("((ts + _iv - 1) div _iv) * _iv")).otherwise(col("ts")))
-      .withColumn("_tj", tagsJson)
+      .withColumn("_te", labelSet)
     keyed
-      .groupBy(col("name"), col("_tj"), col("_iv"), col("_bkt"), col("ts"))
+      .groupBy(col("name"), col("_te"), col("_iv"), col("_bkt"), col("ts"))
       .agg(max(col("value")).as("value"))
-      .groupBy(col("name"), col("_tj"), col("_iv"), col("_bkt"))
+      .groupBy(col("name"), col("_te"), col("_iv"), col("_bkt"))
       .agg(max(col("ts")).as("ts"), max_by(col("value"), col("ts")).as("value"))
-      .select(col("name"), tagsFromJson(col("_tj")).as("tags"),
+      .select(col("name"), map_from_entries(col("_te")).as("tags"),
         col("ts"), col("value"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.SeriesId
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1207,12 +1208,11 @@ object LineFormats {
   def exportSeriesFrames(samples: DataFrame): DataFrame = {
     val metric = map_concat(
       when(col("name").isNotNull, map(lit("__name__"), col("name")))
-        .otherwise(map().cast("map<string,string>")),
-      col("tags"))
-    samples
-      .withColumn("_m", to_json(map_entries(metric))) // group key: canonical entries
+        .otherwise(SeriesId.NoTags),
+      coalesce(col("tags"), SeriesId.NoTags))
+    SeriesId.withPair(samples)
       .withColumn("_metric", metric)
-      .groupBy("_m")
+      .groupBy(SeriesId.Keys.map(col): _*)
       .agg(
         first("_metric").as("metric"),
         array_sort(collect_list(struct(col("ts"), col("value")))).as("pts"))
@@ -1291,17 +1291,17 @@ object LineFormats {
     * (app/vmselect/prometheus/prometheus.go:113).
     */
   def federate(samples: DataFrame): DataFrame = {
-    val keyed = samples.withColumn("_sk",
-      concat(coalesce(col("name"), lit("")), to_json(array_sort(map_entries(col("tags"))))))
+    val keyed = SeriesId.canonical(samples)
+    val key = SeriesId.Keys
     // Two HashAggregate passes instead of one max(struct)+first(map)
     // aggregate: struct/map aggregation buffers are not UnsafeRow-mutable,
     // so the one-pass form ran as SortAggregate — a full sort of the
     // scan (opt r13). Pass 1 finds each series' max ts; pass 2 keeps the
     // max value among that ts's rows — exactly max(struct(ts, value)).
-    val maxTs = keyed.groupBy("_sk").agg(max(col("ts")).as("ts"))
+    val maxTs = keyed.groupBy(key.map(col): _*).agg(max(col("ts")).as("ts"))
     val latest = graft.core.Exemplar.groupByWith(
-        keyed.join(maxTs, Seq("_sk", "ts")),
-        Seq(col("_sk"), col("ts")), Seq("name", "tags"))(
+        keyed.join(maxTs, key :+ "ts"),
+        (key :+ "ts").map(col), Seq("tags"))(
         Seq(max(col("value")).as("value")))
       .select(col("name"), col("tags"), col("ts"), col("value"))
     exportPromText(latest)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.SeriesId
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -251,8 +252,7 @@ object StreamAggr {
       else samples.withColumn("tags",
         map_filter(col("tags"), (k, _) => !k.isInCollection(dropLabels)))
     dropped
-      .withColumn("_sk", concat(coalesce(col("name"), lit("")),
-        to_json(array_sort(map_entries(col("tags"))))))
+      .withColumn("_sk", SeriesId.key(col("name"), col("tags")))
       .withColumn("_bkt", expr(s"(ts div ${dedupIntervalMs}L) * ${dedupIntervalMs}L"))
       .groupBy(col("_sk"), col("_bkt"))
       .agg(max_by(
@@ -283,7 +283,7 @@ object StreamAggr {
         cfg.matchSelectors.map(graft.api.Api.selectorPredicate).reduce(_ || _))
     matched
       .select(groupName(cfg).as("_n"),
-        to_json(array_sort(map_entries(groupTags(cfg)))).as("_gt"),
+        SeriesId.entries(groupTags(cfg)).as("_gt"),
         expr(s"ts div ${cfg.intervalMs}L").as("_w"))
       .distinct().count()
   }
@@ -291,9 +291,8 @@ object StreamAggr {
   private def keyedSamples(samples: DataFrame, cfg: Config,
       arrivalSkip: Boolean = false): DataFrame = {
     val k = dedupBatch(samples
-      .withColumn("_sk", concat(coalesce(col("name"), lit("")),
-        to_json(array_sort(map_entries(col("tags")))))), cfg)
-      .withColumn("_gt", to_json(array_sort(map_entries(groupTags(cfg)))))
+      .withColumn("_sk", SeriesId.key(col("name"), col("tags"))), cfg)
+      .withColumn("_gt", SeriesId.entries(groupTags(cfg)))
       .withColumn("name", groupName(cfg))
     if (arrivalSkip) dropOutOfOrder(k) else k
   }
@@ -369,8 +368,7 @@ object StreamAggr {
       val xt = s.extraTag.map(v => s"'$v'").getOrElse("CAST(NULL AS STRING)")
       s"'${s.label}', $xt, _o$ix"
     }.mkString(", ")
-    val gtMap = map_from_entries(from_json(col("_gt"),
-      lit("array<struct<key:string,value:string>>")))
+    val gtMap = map_from_entries(col("_gt"))
     val stacked = wide
       .select(col("name"), col("_gt"), col("t"),
         expr(s"stack(${slots.size}, $stackArgs) as (_out, _xt, value)"))
@@ -408,9 +406,8 @@ object StreamAggr {
       cfg: Config,
       watermarkDelay: String = "10 seconds"): DataFrame = {
     val keyed0 = stream
-      .withColumn("_sk", concat(coalesce(col("name"), lit("")),
-        to_json(array_sort(map_entries(col("tags"))))))
-      .withColumn("_gt", to_json(array_sort(map_entries(groupTags(cfg)))))
+      .withColumn("_sk", SeriesId.key(col("name"), col("tags")))
+      .withColumn("_gt", SeriesId.entries(groupTags(cfg)))
       .withColumn("name", groupName(cfg))
       .withWatermark("eventTime", watermarkDelay)
     // dedup stage (lib/streamaggr/dedup.go): at most one sample per
@@ -435,8 +432,7 @@ object StreamAggr {
       val xt = s.extraTag.map(v => s"'$v'").getOrElse("CAST(NULL AS STRING)")
       s"'${s.label}', $xt, _o$ix"
     }.mkString(", ")
-    val gtMap = map_from_entries(from_json(col("_gt"),
-      lit("array<struct<key:string,value:string>>")))
+    val gtMap = map_from_entries(col("_gt"))
     wide
       .select(col("name"), col("_gt"), col("w"),
         expr(s"stack(${slots.size}, $stackArgs) as (_out, _xt, value)"))
@@ -597,8 +593,7 @@ object StreamAggr {
       .agg(sum(col("_winc")).as("value"))
       .select(
         outName(cfg, if (keepFirstSample) "increase" else "increase_prometheus").as("name"),
-        map_from_entries(from_json(col("_gt"),
-          lit("array<struct<key:string,value:string>>"))).as("tags"),
+        map_from_entries(col("_gt")).as("tags"),
         col("t"), col("value"))
 
   /** batch `rate_sum` / `rate_avg` (lib/streamaggr/rate.go): per series and
@@ -634,8 +629,7 @@ object StreamAggr {
       .filter(col("value").isNotNull)
       .select(
         outName(cfg, suffix).as("name"),
-        map_from_entries(from_json(col("_gt"),
-          lit("array<struct<key:string,value:string>>"))).as("tags"),
+        map_from_entries(col("_gt")).as("tags"),
         col("t"), col("value"))
   }
 
@@ -665,8 +659,7 @@ object StreamAggr {
         // vmrange is an output LABEL (histogram_bucket.go flush appends
         // vmrange=... to the series), not a separate column
         map_concat(
-          map_from_entries(from_json(col("_gt"),
-            lit("array<struct<key:string,value:string>>"))),
+          map_from_entries(col("_gt")),
           map(lit("vmrange"), col("vmrange"))).as("tags"),
         col("t"), col("value"))
   }
@@ -752,8 +745,7 @@ object StreamAggr {
       .agg(sum(col("_winc")).as("_winc"))
     val suffixed = outName(cfg,
       if (keepFirstSample) "total" else "total_prometheus")
-    val gtMap = map_from_entries(from_json(col("_gt"),
-      lit("array<struct<key:string,value:string>>")))
+    val gtMap = map_from_entries(col("_gt"))
     cfg.stalenessIntervalMs match {
       case None =>
         // library default: compact sample-ticks output, infinite state
@@ -807,8 +799,7 @@ object StreamAggr {
       .withColumn("value", sum(col("_ws")).over(cum))
       .select(
         outName(cfg, "sum_samples_total").as("name"),
-        map_from_entries(from_json(col("_gt"),
-          lit("array<struct<key:string,value:string>>"))).as("tags"),
+        map_from_entries(col("_gt")).as("tags"),
         col("t"), col("value"))
   }
 

@@ -121,7 +121,7 @@ class PlanSpec extends SparkSpec {
 
   test("select-time dedup reads the store ONCE, HashAggregate-only, no restore join") {
     // the -dedup.minScrapeInterval read path (dedupNamedSamples): name and
-    // the canonical tags JSON are grouping keys, so the plan must show no
+    // the sorted tag entries are grouping keys, so the plan must show no
     // SortAggregate (struct buffers), no join (tag restore), and exactly
     // one parquet scan (the r8 shape scanned the store twice)
     val df = graft.pipeline.Dedup.dedupNamedSamples(
@@ -132,6 +132,55 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), s"dedup must not pay a restore join:\n$p")
     assert("FileScan".r.findAllIn(p).size == 1,
       s"dedup read path must scan the store exactly once:\n$p")
+  }
+
+  test("a Graphite fetch hashes samples on (name, _h1, _h2), builds paths per series, scans once") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayJoin
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val start = 1704067200000L
+    val end = start + 30 * 86400000L
+    val ctx = graft.graphite.GraphiteCtx(spark, Samples.fromEvents(spark, sfDir),
+      start, end, 86400000L, nowMs = end)
+    val df = graft.graphite.GraphiteModel.fetch(ctx,
+      graft.graphite.GraphiteModel.globPredicate("click"), "click").df
+    val (rows, started) = org.apache.spark.JobCounter.during(spark.sparkContext) {
+      df.collect()
+    }
+    assert(rows.nonEmpty, "the fetch returned no rows")
+    assert(started.fileScans == 1, s"the fetch scanned the store ${started.fileScans} times")
+    val initial = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    def has(p: SparkPlan)(f: PartialFunction[SparkPlan, Unit]): Boolean =
+      p.collectFirst(f).nonEmpty
+    // data-scale: an exchange fed by the scan with no exchange between
+    val dataScale = initial.collect {
+      case e: ShuffleExchangeExec if has(e.child) { case _: FileSourceScanExec => } &&
+          !has(e.child) { case _: ShuffleExchangeExec => } => e
+    }
+    assert(dataScale.nonEmpty, s"no data-scale exchange in:\n$initial")
+    dataScale.foreach { e =>
+      val keys = e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case other => fail(s"data-scale exchange is not a hash partitioning: $other")
+      }
+      assert(keys.toSet == Set("name", "_h1", "_h2"),
+        s"data-scale exchange hashes on $keys, want (name, _h1, _h2):\n$initial")
+    }
+    // the canonical path is built above the series-meta dedup, never per sample
+    def buildsPath(p: SparkPlan) =
+      p.expressions.exists(_.find(_.isInstanceOf[ArrayJoin]).isDefined)
+    val pathNodes = initial.collect { case p if buildsPath(p) => p }
+    assert(pathNodes.nonEmpty, s"no canonical path in:\n$initial")
+    assert(pathNodes.forall(p => has(p) { case _: HashAggregateExec => }),
+      s"the canonical path is built below the series-meta dedup:\n$initial")
+    assert(dataScale.forall(e => !e.child.exists(buildsPath)),
+      s"the canonical path rides the data-scale exchange:\n$initial")
   }
 
   // the sf0.001 events hold ~one click per user every two days: a daily
@@ -387,7 +436,8 @@ class PlanSpec extends SparkSpec {
     // grid left-join introduces
     val grid = GridSpec(1704067200000L, 1704153600000L, 3600000L)
     val win = 8 * 3600000L
-    System.setProperty("graft.explodeMergeLimit", "0")
+    val saved = Rollup.ExplodeMergeLimit
+    Rollup.ExplodeMergeLimit = 0L
     try {
       val df = Rollup.rollupMulti(bucketedKeyed, bKeys, grid, win,
         Seq("first" -> Kernels.first, "last" -> Kernels.last))
@@ -398,7 +448,7 @@ class PlanSpec extends SparkSpec {
       assert(df.exceptAll(structForm).count() == 0 &&
         structForm.exceptAll(df).count() == 0,
         "dense-window first/last diverged from the struct form")
-    } finally System.clearProperty("graft.explodeMergeLimit")
+    } finally Rollup.ExplodeMergeLimit = saved
   }
 
   test("ts-range predicates push to the raw timestamp scan column (opt r14)") {
