@@ -524,46 +524,19 @@ object Engine {
     */
   private val instantAggFns = Eval.simpleGroupedAggNames
 
-  /** `agg(per-series instant frame) [by|without (ls)]` with Eval's
-    * aggregate semantics (aggr.go:96 removeGroupTags): NaN points are
-    * absent, group tags filter per the modifier, the metric name survives
-    * only through an explicit `by (__name__)`. Group key is the SORTED
-    * tag entry array (maps aren't groupable); series count rows in, group
-    * count rows out — no data-scale work.
+  /** `agg(per-series instant frame) [by|without (ls)]` through Eval's own
+    * grouped aggregate (Eval.groupedAgg): NaN points are absent, and the
+    * group is Eval.AggrGroup's. Series count rows in, group count rows
+    * out — no data-scale work.
     */
   private def aggregateInstant(
       per: DataFrame,
       agg: String,
       modifier: Option[graft.lang.AggrModifier]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.lang.{By, Without}
-    val byName = modifier match {
-      case Some(By(ls)) => ls.contains("__name__")
-      case _ => false
-    }
-    val gtags = modifier match {
-      case Some(By(ls)) => map_filter(col("tags"), (k, _) => k.isInCollection("" +: ls))
-      case Some(Without(ls)) => map_filter(col("tags"), (k, _) => !k.isInCollection(ls))
-      case None => map().cast("map<string,string>")
-    }
-    val nameKey = if (byName) coalesce(col("name"), lit("")) else lit("")
+    import org.apache.spark.sql.functions.{col, isnan}
     val aggExpr = Eval.simpleGroupedAgg(agg, col("value")).getOrElse(
       throw new IllegalStateException(s"not a simple grouped aggregate: $agg"))
-    // no coalesce around gtags: Eval's tagKey propagates a NULL tags map
-    // into a null group key and a null output map — the same entries key
-    // here does too, so null-tag series group and render identically on
-    // both paths
-    per.filter(!isnan(col("value")))
-      .withColumn("_gk", graft.core.SeriesId.entries(gtags))
-      .withColumn("_nk", nameKey)
-      .groupBy(col("_gk"), col("_nk"), col("t"))
-      .agg(aggExpr.as("value"))
-      .filter(col("value").isNotNull)
-      .select(
-        when(length(col("_nk")) > 0, col("_nk"))
-          .otherwise(lit(null).cast("string")).as("name"),
-        map_from_entries(col("_gk")).as("tags"),
-        col("t"), col("value"))
+    Eval.groupedAgg(per.filter(!isnan(col("value"))), Eval.AggrGroup(modifier), aggExpr)
   }
 
   /** `fe` = `fn(m[w])` evaluated at the instant `ts` over a `winMs` window */

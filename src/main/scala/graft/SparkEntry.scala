@@ -470,6 +470,60 @@ object SparkEntry {
   private def trOut(df: DataFrame): DataFrame =
     df.select(col("name"), col("t"), r6(col("value")).as("value")).orderBy("name", "t")
 
+  /** every series of a grid frame */
+  private val ALL = """{__name__=~".+"}"""
+
+  /** MetricsQL `q` through the engine over a rounded grid frame (name,
+    * [user_id], t, value), each row a sample at ts = t with tags
+    * {user_id} or {}. A lookback of one step makes a bare selector read
+    * exactly the point at t and fill no gap.
+    */
+  private def engOn(g: DataFrame, q: String, grid: GridSpec): DataFrame = {
+    val tags =
+      if (g.columns.contains("user_id")) map(lit("user_id"), col("user_id").cast("string"))
+      else map().cast("map<string,string>")
+    Engine.query(g.select(col("name"), tags.as("tags"), col("t").as("ts"), col("value")),
+      q, grid, grid.stepMs)
+  }
+
+  /** `q` over the hourly transform grid [[gHavg]] */
+  private def trEng(s: SparkSession, dir: String, q: String): DataFrame =
+    engOn(gHavg(s, dir), q, gridH)
+
+  /** `q` over the daily per-user aggregate grid [[gDavg]] */
+  private def agEng(s: SparkSession, dir: String, q: String): DataFrame =
+    engOn(gDavg(s, dir), q, gridD)
+
+  /** the hourly grid per name, absent points as NULL `v` (the dense
+    * value arrays the reference's running_/range_ transforms walk)
+    */
+  private val GHD =
+    s"$GH, names AS (SELECT DISTINCT name FROM gdf), " +
+      s"g AS (SELECT names.name, gs.t FROM names, (SELECT unnest(generate_series($START, $END, $H)) AS t) gs), " +
+      "d AS (SELECT g.name AS name, g.t AS t, gdf.value AS v FROM g LEFT JOIN gdf ON g.name = gdf.name AND g.t = gdf.t)"
+
+  /** `agg` over [[GHD]]'s samples so far, at every point from a series'
+    * first sample on
+    */
+  private def runningSql(agg: String): String =
+    s"$GHD, r AS (SELECT name, t, round(1e-9 + $agg OVER $WR, 6) AS value FROM d) " +
+      "SELECT name, t, value FROM r WHERE value IS NOT NULL ORDER BY name, t"
+
+  /** running_avg's recurrence r += (v − r)/(pos + 1), pos the grid
+    * position since the series' first sample: a gap carries r and still
+    * advances pos (transform.go:1210 runningAvg; exec_test.go
+    * running_avg(time() > 1200 < 1800) = n,n,1400,1500,1500,1500)
+    */
+  private def runningAvgSql: String =
+    GHD.replaceFirst("WITH ", "WITH RECURSIVE ") +
+      ", f AS (SELECT name, t, v, min(CASE WHEN v IS NOT NULL THEN t END) OVER (PARTITION BY name) AS t0 FROM d), " +
+      "p AS MATERIALIZED (SELECT name, t, v, row_number() OVER (PARTITION BY name ORDER BY t) - 1 AS pos " +
+      "FROM f WHERE t >= t0), " +
+      "r(name, pos, t, a) AS (SELECT name, pos, t, v FROM p WHERE pos = 0 UNION ALL " +
+      "SELECT p.name, p.pos, p.t, CASE WHEN p.v IS NULL THEN r.a ELSE r.a + (p.v - r.a) / (p.pos + 1) END " +
+      "FROM r JOIN p ON p.name = r.name AND p.pos = r.pos + 1) " +
+      "SELECT name, t, round(1e-9 + a, 4) AS value FROM r ORDER BY name, t"
+
   private val transformQueries: Seq[Q] = Seq(
     // pointwise math catalog (transform.go:25-130) in one projection
     Q("tr_math", (s, dir) =>
@@ -485,7 +539,7 @@ object SparkEntry {
         r6(exp(col("value") / 100)).as("exp_v"),
         signum(col("value") - 100).as("sgn_v"),
         round(col("value") + lit(1e-9), 0).as("round_v"),
-        r6(Transform.clamp(col("value"), 50, 150)).as("clamp_v"))
+        r6(least(greatest(col("value"), lit(50.0)), lit(150.0))).as("clamp_v"))
         .orderBy("name", "t"),
       Some(s"$GH SELECT name, t, round(1e-9 + abs(value - 100), 6) AS abs_v, ceil(value) AS ceil_v, " +
         "floor(value) AS floor_v, round(1e-9 + sqrt(value), 6) AS sqrt_v, round(1e-9 + ln(value), 6) AS ln_v, " +
@@ -511,17 +565,19 @@ object SparkEntry {
         "round(1e-9 + radians(value), 6) AS rad_v, " +
         "round(1e-9 + (exp(value / 500) - exp(-value / 500)) / 2, 6) AS sinh_v " +
         "FROM gdf ORDER BY name, t")),
-    Q("tr_datetime", (s, dir) =>
+    Q("tr_datetime", (s, dir) => {
+      val ts = timestamp_millis(col("t"))
       gHavg(s, dir).select(
         col("name"), col("t"),
-        Transform.dayOfMonth(col("t")).as("dom_v"),
-        Transform.dayOfWeek(col("t")).as("dow_v"),
-        Transform.dayOfYear(col("t")).as("doy_v"),
-        Transform.daysInMonth(col("t")).as("dim_v"),
-        Transform.hourOf(col("t")).as("hour_v"),
-        Transform.monthOf(col("t")).as("month_v"),
-        Transform.yearOf(col("t")).as("year_v"))
-        .orderBy("name", "t"),
+        dayofmonth(ts).cast("double").as("dom_v"),
+        (dayofweek(ts) - 1).cast("double").as("dow_v"), // 0 = Sunday, like the reference
+        dayofyear(ts).cast("double").as("doy_v"),
+        dayofmonth(last_day(ts)).cast("double").as("dim_v"),
+        hour(ts).cast("double").as("hour_v"),
+        month(ts).cast("double").as("month_v"),
+        year(ts).cast("double").as("year_v"))
+        .orderBy("name", "t")
+    },
       Some(s"$GH SELECT name, t, day(make_timestamp(t * 1000))::DOUBLE AS dom_v, " +
         "dayofweek(make_timestamp(t * 1000))::DOUBLE AS dow_v, " +
         "dayofyear(make_timestamp(t * 1000))::DOUBLE AS doy_v, " +
@@ -541,18 +597,21 @@ object SparkEntry {
     }, Some(s"$GH SELECT name, t, (floor(value)::BIGINT & 255)::DOUBLE AS and_v, " +
       "(floor(value)::BIGINT | 255)::DOUBLE AS or_v, " +
       "xor(floor(value)::BIGINT, 255)::DOUBLE AS xor_v FROM gdf ORDER BY name, t")),
-    Q("tr_running_sum", (s, dir) => trOut(Transform.runningSum(gHavg(s, dir), Seq("name"))),
-      Some(s"$GH SELECT name, t, round(1e-9 + sum(value) OVER $WR, 6) AS value FROM gdf ORDER BY name, t")),
+    // running_*: every grid point from a series' first sample on carries
+    // the aggregate of the samples so far, across gaps (transform.go:1325;
+    // exec_test.go running_sum(time()/1e3 > 1.2 < 1.8) = n,n,1.4,3,3,3)
+    Q("tr_running_sum", (s, dir) => trOut(trEng(s, dir, s"running_sum($ALL)")),
+      Some(runningSql("sum(v)"))),
     // running/derived averages round to 4: the 6th decimal can sit on a
     // half-ulp boundary that engine summation order flips
     Q("tr_running_avg", (s, dir) =>
-      Transform.runningAvg(gHavg(s, dir), Seq("name"))
+      trEng(s, dir, s"running_avg($ALL)")
         .select(col("name"), col("t"), r4(col("value")).as("value")).orderBy("name", "t"),
-      Some(s"$GH SELECT name, t, round(1e-9 + avg(value) OVER $WR, 4) AS value FROM gdf ORDER BY name, t")),
-    Q("tr_running_min", (s, dir) => trOut(Transform.runningMin(gHavg(s, dir), Seq("name"))),
-      Some(s"$GH SELECT name, t, round(1e-9 + min(value) OVER $WR, 6) AS value FROM gdf ORDER BY name, t")),
-    Q("tr_running_max", (s, dir) => trOut(Transform.runningMax(gHavg(s, dir), Seq("name"))),
-      Some(s"$GH SELECT name, t, round(1e-9 + max(value) OVER $WR, 6) AS value FROM gdf ORDER BY name, t")),
+      Some(runningAvgSql)),
+    Q("tr_running_min", (s, dir) => trOut(trEng(s, dir, s"running_min($ALL)")),
+      Some(runningSql("min(v)"))),
+    Q("tr_running_max", (s, dir) => trOut(trEng(s, dir, s"running_max($ALL)")),
+      Some(runningSql("max(v)"))),
     Q("tr_range_stats", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("name")
@@ -567,8 +626,6 @@ object SparkEntry {
       s"round(1e-9 + sum(value) OVER $WW, 6) AS range_sum, round(1e-9 + min(value) OVER $WW, 6) AS range_min, " +
       s"round(1e-9 + max(value) OVER $WW, 6) AS range_max FROM gdf ORDER BY name, t")),
     Q("tr_range_first_last", (s, dir) => {
-      val f = Transform.rangeFirst(gHavg(s, dir), Seq("name")).withColumnRenamed("value", "first_v")
-      // recompute last on the original grid: rangeFirst replaced `value`
       val g = gHavg(s, dir)
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("name").orderBy("t")
@@ -580,57 +637,63 @@ object SparkEntry {
         .orderBy("name", "t")
     }, Some(s"$GH SELECT name, t, round(1e-9 + first_value(value) OVER $WW, 6) AS first_v, " +
       s"round(1e-9 + last_value(value) OVER $WW, 6) AS last_v FROM gdf ORDER BY name, t")),
-    Q("tr_range_normalize", (s, dir) => trOut(Transform.rangeNormalize(gHavg(s, dir), Seq("name"))),
+    Q("tr_range_normalize", (s, dir) => trOut(trEng(s, dir, s"range_normalize($ALL)")),
       Some(s"$GH SELECT name, t, round(1e-9 + CASE WHEN max(value) OVER $WW > min(value) OVER $WW THEN " +
         s"(value - min(value) OVER $WW) / (max(value) OVER $WW - min(value) OVER $WW) END, 6) AS value " +
         "FROM gdf ORDER BY name, t")),
-    Q("tr_range_zscore", (s, dir) => trOut(Transform.rangeZscore(gHavg(s, dir), Seq("name"))),
+    Q("tr_range_zscore", (s, dir) => trOut(trEng(s, dir, s"range_zscore($ALL)")),
       Some(s"$GH SELECT name, t, round(1e-9 + CASE WHEN stddev_pop(value) OVER $WW > 0 THEN " +
         s"(value - avg(value) OVER $WW) / stddev_pop(value) OVER $WW END, 6) AS value " +
         "FROM gdf ORDER BY name, t")),
-    Q("tr_range_quantile", (s, dir) => trOut(Transform.rangeQuantile(gHavg(s, dir), Seq("name"), 0.75)),
-      Some(s"$GH SELECT name, t, round(1e-9 + quantile_cont(value, 0.75) OVER $WW, 6) AS value " +
-        "FROM gdf ORDER BY name, t")),
-    Q("tr_range_linreg", (s, dir) => trOut(Transform.rangeLinearRegression(gHavg(s, dir), Seq("name"))),
-      Some(s"$GH, gx AS (SELECT name, t, value, " +
-        "(t - min(t) OVER (PARTITION BY name)) / 1000.0 AS x FROM gdf) " +
-        "SELECT name, t, round(1e-9 + regr_intercept(value, x) OVER w + regr_slope(value, x) OVER w * x, 6) AS value " +
-        "FROM gx WINDOW w AS (PARTITION BY name ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) " +
-        "ORDER BY name, t")),
-    Q("tr_remove_resets", (s, dir) => trOut(Transform.removeResets(gHavg(s, dir), Seq("name"))),
+    // range_* whole-series statistics carry to EVERY grid point, gaps
+    // and leading points included (transform.go:1353 setLastValues;
+    // exec_test.go range_quantile(0.5, time() > 1200 < 2000) = 1600 ×6)
+    Q("tr_range_quantile", (s, dir) => trOut(trEng(s, dir, s"range_quantile(0.75, $ALL)")),
+      Some(s"$GHD SELECT name, t, round(1e-9 + quantile_cont(v, 0.75) OVER (PARTITION BY name), 6) AS value " +
+        "FROM d ORDER BY name, t")),
+    // the trend line over the samples, x centered on the first sample,
+    // evaluated at every grid point (Eval's range_linear_regression,
+    // transform.go:1530)
+    Q("tr_range_linreg", (s, dir) => trOut(trEng(s, dir, s"range_linear_regression($ALL)")),
+      Some(s"$GHD, gx AS (SELECT name, t, v, " +
+        "(t - min(CASE WHEN v IS NOT NULL THEN t END) OVER (PARTITION BY name)) / 1000.0 AS x FROM d) " +
+        "SELECT name, t, round(1e-9 + regr_intercept(v, x) OVER w + regr_slope(v, x) OVER w * x, 6) AS value " +
+        "FROM gx WINDOW w AS (PARTITION BY name) ORDER BY name, t")),
+    // a drop by less than 1/8 of the previous value is a partial reset
+    // that adds nothing (rollup.go:921 removeCounterResets; exec_test.go
+    // remove_resets(sum) = 1200,1440,1680,1680,1880,2080)
+    Q("tr_remove_resets", (s, dir) => trOut(trEng(s, dir, s"remove_resets($ALL)")),
       Some(s"$GH, d AS (SELECT name, t, value, lag(value) OVER (PARTITION BY name ORDER BY t) AS pv FROM gdf), " +
-        "c AS (SELECT name, t, CASE WHEN pv IS NULL THEN value WHEN value >= pv THEN value - pv ELSE value END AS dv FROM d) " +
+        "c AS (SELECT name, t, CASE WHEN pv IS NULL THEN value WHEN value >= pv THEN value - pv " +
+        "WHEN (pv - value) * 8 < pv THEN 0 ELSE value END AS dv FROM d) " +
         s"SELECT name, t, round(1e-9 + sum(dv) OVER $WR, 6) AS value FROM c ORDER BY name, t")),
-    Q("tr_keep_last_value", (s, dir) =>
-      Transform.keepLastValue(gHavg(s, dir), Seq("name"), gridH)
-        .select(col("name"), col("t"), r6(col("value")).as("value"))
-        .orderBy("name", "t"),
-      Some(s"$GH, names AS (SELECT DISTINCT name FROM gdf), " +
-        s"g AS (SELECT names.name, gs.t FROM names, (SELECT unnest(generate_series($START, $END, $H)) AS t) gs), " +
-        "d AS (SELECT g.name AS name, g.t AS t, gdf.value AS v FROM g LEFT JOIN gdf ON g.name = gdf.name AND g.t = gdf.t) " +
-        s"SELECT name, t, round(1e-9 + last_value(v IGNORE NULLS) OVER $WR, 6) AS value FROM d ORDER BY name, t")),
-    Q("tr_interpolate", (s, dir) =>
-      Transform.interpolate(gHavg(s, dir), Seq("name"), gridH)
-        .select(col("name"), col("t"), r6(col("value")).as("value"))
-        .orderBy("name", "t"),
-      Some(s"$GH, names AS (SELECT DISTINCT name FROM gdf), " +
-        s"g AS (SELECT names.name, gs.t FROM names, (SELECT unnest(generate_series($START, $END, $H)) AS t) gs), " +
-        "d AS (SELECT g.name AS name, g.t AS t, gdf.value AS v FROM g LEFT JOIN gdf ON g.name = gdf.name AND g.t = gdf.t), " +
+    // points before a series' first sample stay absent
+    // (exec_test.go keep_last_value() = 1000,1200,1200,1200,1800,2000)
+    Q("tr_keep_last_value", (s, dir) => trOut(trEng(s, dir, s"keep_last_value($ALL)")),
+      Some(s"$GHD, k AS (SELECT name, t, round(1e-9 + last_value(v IGNORE NULLS) OVER $WR, 6) AS value FROM d) " +
+        "SELECT name, t, value FROM k WHERE value IS NOT NULL ORDER BY name, t")),
+    // interior gaps only: points before the first and after the last
+    // sample stay absent (transform.go:1278; exec_test.go interpolate(tail)
+    // = 1000,1200,n,n,n,n and interpolate(head) = n,n,n,1600,1800,2000)
+    Q("tr_interpolate", (s, dir) => trOut(trEng(s, dir, s"interpolate($ALL)")),
+      Some(s"$GHD, " +
         "e AS (SELECT name, t, v, " +
         "last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER wb AS pt, " +
         "last_value(v IGNORE NULLS) OVER wb AS pvv, " +
         "first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER wf AS nt, " +
         "first_value(v IGNORE NULLS) OVER wf AS nv FROM d " +
         "WINDOW wb AS (PARTITION BY name ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), " +
-        "wf AS (PARTITION BY name ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) " +
-        "SELECT name, t, round(1e-9 + CASE WHEN v IS NOT NULL THEN v " +
-        "WHEN pvv IS NOT NULL AND nv IS NOT NULL THEN pvv + (nv - pvv) * (t - pt) / (nt - pt) " +
-        "WHEN pvv IS NOT NULL THEN pvv ELSE nv END, 6) AS value FROM e ORDER BY name, t")),
+        "wf AS (PARTITION BY name ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)), " +
+        "i AS (SELECT name, t, round(1e-9 + CASE WHEN v IS NOT NULL THEN v " +
+        "WHEN pvv IS NOT NULL AND nv IS NOT NULL THEN pvv + (nv - pvv) * (t - pt) / (nt - pt) END, 6) AS value " +
+        "FROM e) SELECT name, t, value FROM i WHERE value IS NOT NULL ORDER BY name, t")),
+    // a non-sorted input slices in series-key order, where user_id is a
+    // label STRING (Eval's limit_offset, transform.go:2292)
     Q("tr_limit_offset", (s, dir) =>
-      Transform.limitOffset(gDavg(s, dir), Seq("name", "user_id"), 3, 2)
-        .select(col("name"), col("user_id"), col("t"), col("value"))
+      agEng(s, dir, s"limit_offset(3, 2, $ALL)")
+        .select(col("name"), uid, col("t"), col("value"))
         .orderBy("name", "user_id", "t"),
-      Some(s"$GD, w AS (SELECT DISTINCT name, user_id FROM gdf ORDER BY name, user_id LIMIT 3 OFFSET 2) " +
+      Some(s"$GD, w AS (SELECT DISTINCT name, user_id FROM gdf ORDER BY name, user_id::VARCHAR LIMIT 3 OFFSET 2) " +
         "SELECT gdf.name AS name, gdf.user_id AS user_id, t, value FROM gdf " +
         "JOIN w USING (name, user_id) ORDER BY name, user_id, t")),
     // label ops on the schemaless tags map (§2.3 label family / §2.8 relabel)
@@ -645,29 +708,39 @@ object SparkEntry {
         .orderBy("name", "host")
     }, Some("SELECT DISTINCT event_type AS name, 'u' || user_id::VARCHAR AS host FROM events " +
       "ORDER BY name, host")),
-    Q("tr_range_mad", (s, dir) => trOut(Transform.rangeMad(gHavg(s, dir), Seq("name"))),
-      Some(s"$GH, m AS (SELECT name, t, value, quantile_cont(value, 0.5) OVER $WW AS med FROM gdf), " +
-        "d AS (SELECT name, t, abs(value - med) AS dev FROM m) " +
-        s"SELECT name, t, round(1e-9 + quantile_cont(dev, 0.5) OVER $WW, 6) AS value FROM d " +
+    // the MAD of the samples at every grid point (transform.go:1551;
+    // exec_test.go range_mad(time() > 1200 < 1800) = 100 ×6)
+    Q("tr_range_mad", (s, dir) => trOut(trEng(s, dir, s"range_mad($ALL)")),
+      Some(s"$GHD, m AS (SELECT name, t, v, quantile_cont(v, 0.5) OVER (PARTITION BY name) AS med FROM d), " +
+        "dd AS (SELECT name, t, abs(v - med) AS dev FROM m) " +
+        "SELECT name, t, round(1e-9 + quantile_cont(dev, 0.5) OVER (PARTITION BY name), 6) AS value FROM dd " +
         "ORDER BY name, t")),
-    Q("tr_trim_zscore", (s, dir) => trOut(Transform.rangeTrimZscore(gHavg(s, dir), Seq("name"), 1.5)),
+    Q("tr_trim_zscore", (s, dir) => trOut(trEng(s, dir, s"range_trim_zscore(1.5, $ALL)")),
       Some(s"$GH, z AS (SELECT name, t, value, CASE WHEN stddev_pop(value) OVER $WW > 0 THEN " +
         s"abs(value - avg(value) OVER $WW) / stddev_pop(value) OVER $WW ELSE 0 END AS zs FROM gdf) " +
         "SELECT name, t, round(1e-9 + value, 6) AS value FROM z WHERE zs <= 1.5 ORDER BY name, t")),
-    Q("tr_trim_outliers", (s, dir) => trOut(Transform.rangeTrimOutliers(gHavg(s, dir), Seq("name"), 2.0)),
+    Q("tr_trim_outliers", (s, dir) => trOut(trEng(s, dir, s"range_trim_outliers(2.0, $ALL)")),
       Some(s"$GH, m AS (SELECT name, t, value, abs(value - quantile_cont(value, 0.5) OVER $WW) AS dev FROM gdf), " +
         s"d AS (SELECT name, t, value, dev, quantile_cont(dev, 0.5) OVER $WW AS mad FROM m) " +
         "SELECT name, t, round(1e-9 + value, 6) AS value FROM d WHERE dev <= 2.0 * mad ORDER BY name, t")),
-    Q("tr_trim_spikes", (s, dir) => trOut(Transform.rangeTrimSpikes(gHavg(s, dir), Seq("name"), 0.1)),
-      Some(s"$GH, m AS (SELECT name, t, value, abs(value - quantile_cont(value, 0.5) OVER $WW) AS dev FROM gdf), " +
-        s"d AS (SELECT name, t, value, dev, quantile_cont(dev, 0.9) OVER $WW AS cut FROM m) " +
-        "SELECT name, t, round(1e-9 + value, 6) AS value FROM d WHERE dev <= cut ORDER BY name, t")),
-    Q("tr_timezone_offset", (s, dir) =>
-      gHavg(s, dir).select(
-        col("name"), col("t"),
-        Transform.timezoneOffset(col("t"), "Europe/Berlin").as("berlin"),
-        Transform.timezoneOffset(col("t"), "America/New_York").as("ny"))
-        .orderBy("name", "t"),
+    // phi/2 of the samples trimmed off EACH tail of the value range
+    // (transform.go:1482; exec_test.go range_trim_spikes(0.2, time()) =
+    // n,1200,1400,1600,1800,n)
+    Q("tr_trim_spikes", (s, dir) => trOut(trEng(s, dir, s"range_trim_spikes(0.1, $ALL)")),
+      Some(s"$GH, q AS (SELECT name, t, value, quantile_cont(value, 0.05) OVER $WW AS lo, " +
+        s"quantile_cont(value, 0.95) OVER $WW AS hi FROM gdf) " +
+        "SELECT name, t, round(1e-9 + value, 6) AS value FROM q WHERE value >= lo AND value <= hi " +
+        "ORDER BY name, t")),
+    Q("tr_timezone_offset", (s, dir) => {
+      val g = gHavg(s, dir)
+      def offset(tz: String, as: String): DataFrame =
+        engOn(g, s"""timezone_offset("$tz")""", gridH).select(col("t"), col("value").as(as))
+      g.select(col("name"), col("t"))
+        .join(offset("Europe/Berlin", "berlin"), "t")
+        .join(offset("America/New_York", "ny"), "t")
+        .select(col("name"), col("t"), col("berlin"), col("ny"))
+        .orderBy("name", "t")
+    },
       Some(s"$GH SELECT name, t, " +
         "epoch(make_timestamp(t*1000)::TIMESTAMP) - epoch(timezone('Europe/Berlin', make_timestamp(t*1000))) AS berlin, " +
         "epoch(make_timestamp(t*1000)::TIMESTAMP) - epoch(timezone('America/New_York', make_timestamp(t*1000))) AS ny " +
@@ -699,55 +772,59 @@ object SparkEntry {
         "count(DISTINCT value)::DOUBLE AS distinct_v, round(1e-9 + quantile_cont(value, 0.5), 6) AS median_v, " +
         "round(1e-9 + quantile_cont(value, 0.9), 6) AS q90_v FROM gdf GROUP BY name, t ORDER BY name, t")),
     Q("ag_mode", (s, dir) =>
-      Aggr.modeA(gDavg(s, dir).drop("user_id"), Seq("name")).orderBy("name", "t"),
+      agEng(s, dir, s"mode($ALL) by (__name__)")
+        .select(col("name"), col("t"), col("value")).orderBy("name", "t"),
       Some(s"$GD, c AS (SELECT name, t, value, count(*) AS cnt FROM gdf GROUP BY name, t, value) " +
         "SELECT name, t, value FROM c " +
         "QUALIFY row_number() OVER (PARTITION BY name, t ORDER BY cnt DESC, value ASC) = 1 " +
         "ORDER BY name, t")),
     Q("ag_count_values", (s, dir) =>
-      Aggr.countValues(gDavg(s, dir).drop("user_id"), Seq("name"))
-        .select(col("name"), col("t"), col("value_label"), col("value"))
+      agEng(s, dir, s"""count_values("value_label", $ALL) by (__name__)""")
+        .select(col("name"), col("t"),
+          col("tags").getItem("value_label").cast("double").as("value_label"), col("value"))
         .orderBy("name", "t", "value_label"),
       Some(s"$GD SELECT name, t, value AS value_label, count(*)::DOUBLE AS value FROM gdf " +
         "GROUP BY name, t, value_label ORDER BY name, t, value_label")),
     Q("ag_share", (s, dir) =>
-      Aggr.share(gDavg(s, dir), Seq("name", "user_id"), Seq("name"))
-        .select(col("name"), col("user_id"), col("t"), r6(col("value")).as("value"))
+      agEng(s, dir, s"share($ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), r6(col("value")).as("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD SELECT name, user_id, t, round(1e-9 + value / sum(value) OVER (PARTITION BY name, t), 6) AS value " +
         "FROM gdf ORDER BY name, user_id, t")),
     Q("ag_zscore", (s, dir) =>
-      Aggr.zscoreA(gDavg(s, dir), Seq("name"))
-        .select(col("name"), col("user_id"), col("t"), r6(col("value")).as("value"))
+      agEng(s, dir, s"zscore($ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), r6(col("value")).as("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD SELECT name, user_id, t, round(1e-9 + CASE WHEN stddev_pop(value) OVER w > 0 THEN " +
         "(value - avg(value) OVER w) / stddev_pop(value) OVER w END, 6) AS value FROM gdf " +
         "WINDOW w AS (PARTITION BY name, t) ORDER BY name, user_id, t")),
+    // rank ties break on the series key, where user_id is a label STRING
+    // (the eval_topk rule)
     Q("ag_topk", (s, dir) =>
-      Aggr.topk(gDavg(s, dir), Seq("user_id"), Seq("name"), 3)
-        .select(col("name"), col("user_id"), col("t"), col("value"))
+      agEng(s, dir, s"topk(3, $ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), col("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD SELECT name, user_id, t, value FROM gdf " +
-        "QUALIFY row_number() OVER (PARTITION BY name, t ORDER BY value DESC, user_id ASC) <= 3 " +
+        "QUALIFY row_number() OVER (PARTITION BY name, t ORDER BY value DESC, user_id::VARCHAR ASC) <= 3 " +
         "ORDER BY name, user_id, t")),
     Q("ag_bottomk", (s, dir) =>
-      Aggr.bottomk(gDavg(s, dir), Seq("user_id"), Seq("name"), 3)
-        .select(col("name"), col("user_id"), col("t"), col("value"))
+      agEng(s, dir, s"bottomk(3, $ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), col("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD SELECT name, user_id, t, value FROM gdf " +
-        "QUALIFY row_number() OVER (PARTITION BY name, t ORDER BY value ASC, user_id ASC) <= 3 " +
+        "QUALIFY row_number() OVER (PARTITION BY name, t ORDER BY value ASC, user_id::VARCHAR ASC) <= 3 " +
         "ORDER BY name, user_id, t")),
     Q("ag_topk_avg", (s, dir) =>
-      Aggr.topkStat(gDavg(s, dir), Seq("name", "user_id"), Seq("name"), 3, avg(col("value")))
-        .select(col("name"), col("user_id"), col("t"), col("value"))
+      agEng(s, dir, s"topk_avg(3, $ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), col("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD, w AS (SELECT name, user_id FROM (SELECT name, user_id, avg(value) AS s FROM gdf GROUP BY name, user_id) " +
         "QUALIFY row_number() OVER (PARTITION BY name ORDER BY s DESC, name ASC, user_id ASC) <= 3) " +
         "SELECT gdf.name AS name, gdf.user_id AS user_id, t, value FROM gdf JOIN w USING (name, user_id) " +
         "ORDER BY name, user_id, t")),
     Q("ag_outliers_iqr", (s, dir) =>
-      Aggr.outliersIqr(gDavg(s, dir), Seq("name", "user_id"), Seq("name"))
-        .select(col("name"), col("user_id"), col("t"), col("value"))
+      agEng(s, dir, s"outliers_iqr($ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), col("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD, st AS (SELECT name, user_id, quantile_cont(value, 0.5) AS med FROM gdf GROUP BY name, user_id), " +
         "f AS (SELECT name, quantile_cont(med, 0.25) AS q25, quantile_cont(med, 0.75) AS q75 FROM st GROUP BY name), " +
@@ -756,8 +833,8 @@ object SparkEntry {
         "SELECT gdf.name AS name, gdf.user_id AS user_id, t, value FROM gdf " +
         "JOIN o ON gdf.name = o.name AND gdf.user_id = o.user_id ORDER BY name, user_id, t")),
     Q("ag_histogram", (s, dir) =>
-      Aggr.histogram(gDavg(s, dir), Seq("name"))
-        .select(col("name"), col("t"), col("le"), col("value"))
+      agEng(s, dir, s"histogram($ALL) by (__name__)")
+        .select(col("name"), col("t"), col("tags").getItem("le").as("le"), col("value"))
         .orderBy(col("name"), col("t"), HistogramQ.parseBound(col("le"))),
       Some(s"$GD, $LUT, $LUTX, ${hCorr("gdf", "name, t", "value")}, " +
         "kd AS (SELECT name, k, lag(k) OVER (PARTITION BY name ORDER BY k) AS pk " +
@@ -781,7 +858,8 @@ object SparkEntry {
     // group, each carried COMPLETE (row count + value sum untouched).
     Q("ag_limitk", (s, dir) => {
       val in = gDavg(s, dir)
-      val out = Aggr.limitk(in, Seq("name", "user_id"), Seq("name"), 5)
+      val out = engOn(in, s"limitk(5, $ALL) by (__name__)", gridD)
+        .select(col("name"), uid, col("t"), col("value"))
       val inS = in.groupBy("name", "user_id")
         .agg(count(lit(1)).as("n_in"), sum("value").as("s_in"))
       val outS = out.groupBy("name", "user_id")
@@ -801,7 +879,7 @@ object SparkEntry {
     }, Some(s"$GD SELECT name, least(5, count(DISTINCT user_id)) AS n_series, " +
       "1::BIGINT AS series_complete FROM gdf GROUP BY name ORDER BY name")),
     Q("ag_mad", (s, dir) =>
-      Aggr.madA(gDavg(s, dir).drop("user_id"), Seq("name"))
+      agEng(s, dir, s"mad($ALL) by (__name__)")
         .select(col("name"), col("t"), r6(col("value")).as("value"))
         .orderBy("name", "t"),
       Some(s"$GD, m AS (SELECT name, t, abs(value - quantile_cont(value, 0.5) OVER " +
@@ -809,8 +887,8 @@ object SparkEntry {
         "SELECT name, t, round(1e-9 + quantile_cont(dev, 0.5), 6) AS value FROM m " +
         "GROUP BY name, t ORDER BY name, t")),
     Q("ag_outliers_mad", (s, dir) =>
-      Aggr.outliersMad(gDavg(s, dir), Seq("name", "user_id"), Seq("name"), 1.0)
-        .select(col("name"), col("user_id"), col("t"), col("value"))
+      agEng(s, dir, s"outliers_mad(1.0, $ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), col("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD, st AS (SELECT name, user_id, quantile_cont(value, 0.5) AS med FROM gdf GROUP BY name, user_id), " +
         "g AS (SELECT name, quantile_cont(med, 0.5) AS gmed FROM st GROUP BY name), " +
@@ -820,8 +898,8 @@ object SparkEntry {
         "SELECT gdf.name AS name, gdf.user_id AS user_id, t, value FROM gdf " +
         "JOIN o ON gdf.name = o.name AND gdf.user_id = o.user_id ORDER BY name, user_id, t")),
     Q("ag_outliersk", (s, dir) =>
-      Aggr.outliersk(gDavg(s, dir), Seq("name", "user_id"), Seq("name"), 2)
-        .select(col("name"), col("user_id"), col("t"), col("value"))
+      agEng(s, dir, s"outliersk(2, $ALL) by (__name__)")
+        .select(col("name"), uid, col("t"), col("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"$GD, gm AS (SELECT name, t, quantile_cont(value, 0.5) AS gmed FROM gdf GROUP BY name, t), " +
         "dv AS (SELECT gdf.name, gdf.user_id, max(abs(value - gmed)) AS dev FROM gdf " +
@@ -836,12 +914,12 @@ object SparkEntry {
       Some(s"$GD SELECT name, t, first(value ORDER BY user_id) AS value FROM gdf " +
         "GROUP BY name, t ORDER BY name, t")),
     Q("ag_group", (s, dir) =>
-      Aggr.groupA(gDavg(s, dir).drop("user_id"), Seq("name"))
+      agEng(s, dir, s"group($ALL) by (__name__)")
         .select(col("name"), col("t"), col("value")).orderBy("name", "t"),
       Some(s"$GD SELECT DISTINCT name, t, 1.0 AS value FROM gdf ORDER BY name, t")),
     Q("ag_quantiles", (s, dir) =>
-      Aggr.quantilesA(gDavg(s, dir).drop("user_id"), Seq("name"), Seq(0.25, 0.9))
-        .select(col("name"), col("t"), col("phi"), r6(col("value")).as("value"))
+      agEng(s, dir, s"""quantiles("phi", 0.25, 0.9, $ALL) by (__name__)""")
+        .select(col("name"), col("t"), col("tags").getItem("phi").as("phi"), r6(col("value")).as("value"))
         .orderBy("name", "t", "phi"),
       Some(s"$GD, w AS (SELECT name, t, quantile_cont(value, 0.25) AS q25, " +
         "quantile_cont(value, 0.9) AS q9 FROM gdf GROUP BY name, t) " +
@@ -852,11 +930,21 @@ object SparkEntry {
   // =====================================================================
   // §2.5 binary operators — vector matching between purchase and click
   // =====================================================================
-  /** hourly rounded grids for two selectors, matched on t */
+  /** hourly rounded grid for one selector */
   private def selH(s: SparkSession, dir: String, nm: String): DataFrame =
     gHavg(s, dir).filter(col("name") === nm).drop("name")
-  private def selD(s: SparkSession, dir: String, nm: String): DataFrame =
-    gDavg(s, dir).filter(col("name") === nm).drop("name")
+
+  /** `purchase <op> click` per column over the hourly grid, joined on t */
+  private def binCols(s: SparkSession, dir: String, ops: (String, String)*)(
+      out: Column => Column): DataFrame = {
+    val g = gHavg(s, dir)
+    ops.map { case (as, q) => engOn(g, q, gridH).select(col("t"), out(col("value")).as(as)) }
+      .reduce(_.join(_, "t"))
+  }
+
+  /** `q` over the daily per-user grid → (user_id, t, value) */
+  private def binD(s: SparkSession, dir: String, q: String): DataFrame =
+    agEng(s, dir, q).select(uid, col("t"), col("value"))
 
   private val AB =
     s"$GH, a AS (SELECT t, value AS lv FROM gdf WHERE name = 'purchase'), " +
@@ -866,79 +954,72 @@ object SparkEntry {
       "bb AS (SELECT user_id, t, value AS rv FROM gdf WHERE name = 'click')"
 
   private val binopQueries: Seq[Q] = Seq(
-    Q("bi_arith", (s, dir) => {
-      val m = BinOp.matched(selH(s, dir, "purchase"), selH(s, dir, "click"), Seq.empty)
-      m.select(
-        col("t"),
-        r4(col("lv") + col("rv")).as("add_v"),
-        r4(col("lv") - col("rv")).as("sub_v"),
-        r4(col("lv") * col("rv")).as("mul_v"),
-        r4(col("lv") / col("rv")).as("div_v"),
-        r4(col("lv") % col("rv")).as("mod_v"),
-        r4(pow(col("lv") / 100, col("rv") / 100)).as("pow_v"),
-        r4(atan2(col("lv"), col("rv"))).as("atan2_v"))
-        .orderBy("t")
-    }, Some(s"$AB SELECT t, round(1e-9 + lv + rv, 4) AS add_v, round(1e-9 + lv - rv, 4) AS sub_v, " +
+    Q("bi_arith", (s, dir) =>
+      binCols(s, dir,
+        "add_v" -> "purchase + click",
+        "sub_v" -> "purchase - click",
+        "mul_v" -> "purchase * click",
+        "div_v" -> "purchase / click",
+        "mod_v" -> "purchase % click",
+        "pow_v" -> "(purchase / 100) ^ (click / 100)",
+        "atan2_v" -> "purchase atan2 click")(r4).orderBy("t"),
+      Some(s"$AB SELECT t, round(1e-9 + lv + rv, 4) AS add_v, round(1e-9 + lv - rv, 4) AS sub_v, " +
       "round(1e-9 + lv * rv, 4) AS mul_v, round(1e-9 + lv / rv, 4) AS div_v, round(1e-9 + fmod(lv, rv), 4) AS mod_v, " +
       "round(1e-9 + pow(lv / 100, rv / 100), 4) AS pow_v, round(1e-9 + atan2(lv, rv), 4) AS atan2_v " +
       "FROM a JOIN bb USING (t) ORDER BY t")),
     Q("bi_cmp_filter", (s, dir) =>
-      BinOp.cmpFilter(selH(s, dir, "purchase"), selH(s, dir, "click"), Seq.empty, _ > _)
-        .select(col("t"), col("value")).orderBy("t"),
+      trEng(s, dir, "purchase > click").select(col("t"), col("value")).orderBy("t"),
       Some(s"$AB SELECT t, lv AS value FROM a JOIN bb USING (t) WHERE lv > rv ORDER BY t")),
-    Q("bi_cmp_bool", (s, dir) => {
-      val m = BinOp.matched(selH(s, dir, "purchase"), selH(s, dir, "click"), Seq.empty)
-      m.select(
-        col("t"),
-        (col("lv") === col("rv")).cast("double").as("eq_v"),
-        (col("lv") =!= col("rv")).cast("double").as("ne_v"),
-        (col("lv") > col("rv")).cast("double").as("gt_v"),
-        (col("lv") < col("rv")).cast("double").as("lt_v"),
-        (col("lv") >= col("rv")).cast("double").as("ge_v"),
-        (col("lv") <= col("rv")).cast("double").as("le_v"))
-        .orderBy("t")
-    }, Some(s"$AB SELECT t, (lv = rv)::INT::DOUBLE AS eq_v, (lv != rv)::INT::DOUBLE AS ne_v, " +
+    Q("bi_cmp_bool", (s, dir) =>
+      binCols(s, dir,
+        "eq_v" -> "purchase == bool click",
+        "ne_v" -> "purchase != bool click",
+        "gt_v" -> "purchase > bool click",
+        "lt_v" -> "purchase < bool click",
+        "ge_v" -> "purchase >= bool click",
+        "le_v" -> "purchase <= bool click")(identity).orderBy("t"),
+      Some(s"$AB SELECT t, (lv = rv)::INT::DOUBLE AS eq_v, (lv != rv)::INT::DOUBLE AS ne_v, " +
       "(lv > rv)::INT::DOUBLE AS gt_v, (lv < rv)::INT::DOUBLE AS lt_v, " +
       "(lv >= rv)::INT::DOUBLE AS ge_v, (lv <= rv)::INT::DOUBLE AS le_v " +
       "FROM a JOIN bb USING (t) ORDER BY t")),
     Q("bi_and", (s, dir) =>
-      BinOp.and(selD(s, dir, "purchase"), selD(s, dir, "click"), Seq("user_id"))
-        .select(col("user_id"), col("t"), col("value")).orderBy("user_id", "t"),
+      binD(s, dir, "purchase and on(user_id) click").orderBy("user_id", "t"),
       Some(s"$ABD SELECT user_id, t, lv AS value FROM a " +
         "WHERE EXISTS (SELECT 1 FROM bb WHERE bb.user_id = a.user_id AND bb.t = a.t) " +
         "ORDER BY user_id, t")),
     Q("bi_unless", (s, dir) =>
-      BinOp.unless(selD(s, dir, "purchase"), selD(s, dir, "click"), Seq("user_id"))
-        .select(col("user_id"), col("t"), col("value")).orderBy("user_id", "t"),
+      binD(s, dir, "purchase unless on(user_id) click").orderBy("user_id", "t"),
       Some(s"$ABD SELECT user_id, t, lv AS value FROM a " +
         "WHERE NOT EXISTS (SELECT 1 FROM bb WHERE bb.user_id = a.user_id AND bb.t = a.t) " +
         "ORDER BY user_id, t")),
     Q("bi_or", (s, dir) =>
-      BinOp.or(selD(s, dir, "purchase"), selD(s, dir, "click"), Seq("user_id"))
-        .select(col("user_id"), col("t"), col("value")).orderBy("user_id", "t"),
+      binD(s, dir, "purchase or on(user_id) click").orderBy("user_id", "t"),
       Some(s"$ABD SELECT user_id, t, lv AS value FROM a " +
         "UNION ALL SELECT user_id, t, rv AS value FROM bb " +
         "WHERE NOT EXISTS (SELECT 1 FROM a WHERE a.user_id = bb.user_id AND a.t = bb.t) " +
         "ORDER BY user_id, t")),
     Q("bi_default", (s, dir) =>
-      BinOp.default(selD(s, dir, "purchase"), selD(s, dir, "click"), Seq("user_id"))
-        .select(col("user_id"), col("t"), col("value")).orderBy("user_id", "t"),
+      binD(s, dir, "purchase default on(user_id) click").orderBy("user_id", "t"),
       Some(s"$ABD SELECT coalesce(a.user_id, bb.user_id) AS user_id, coalesce(a.t, bb.t) AS t, " +
         "coalesce(lv, rv) AS value FROM a FULL OUTER JOIN bb ON a.user_id = bb.user_id AND a.t = bb.t " +
         "ORDER BY user_id, t")),
+    // the per-point total rides the samples as its own rounded series
     Q("bi_group_left", (s, dir) => {
-      val perUser = selD(s, dir, "purchase")
-      val totals = gDavg(s, dir).filter(col("name") === "purchase")
-        .groupBy("t").agg(r6(sum("value")).as("value"))
-      BinOp.groupLeft(perUser, totals, Seq.empty, Seq.empty, (l, r) => r6(l / r))
-        .select(col("user_id"), col("t"), col("value")).orderBy("user_id", "t")
+      val perUser = gDavg(s, dir).filter(col("name") === "purchase")
+      val totals = perUser.groupBy("t").agg(r6(sum("value")).as("value"))
+        .select(lit("purchase_total").as("name"), col("t"), col("value"))
+      val samples = perUser.select(col("name"),
+          map(lit("user_id"), col("user_id").cast("string")).as("tags"), col("t").as("ts"), col("value"))
+        .unionByName(totals.select(col("name"), map().cast("map<string,string>").as("tags"),
+          col("t").as("ts"), col("value")))
+      Engine.query(samples, "purchase / on() group_left purchase_total", gridD, gridD.stepMs)
+        .select(uid, col("t"), r6(col("value")).as("value")).orderBy("user_id", "t")
     }, Some(s"$GD, a AS (SELECT user_id, t, value AS lv FROM gdf WHERE name = 'purchase'), " +
       "tot AS (SELECT t, round(1e-9 + sum(value), 6) AS rv FROM gdf WHERE name = 'purchase' GROUP BY t) " +
       "SELECT user_id, t, round(1e-9 + lv / rv, 6) AS value FROM a JOIN tot USING (t) ORDER BY user_id, t")),
     Q("bi_fill", (s, dir) =>
-      BinOp.withFill(selD(s, dir, "purchase"), selD(s, dir, "click"), Seq("user_id"),
-        Some(0.0), Some(0.0), (l, r) => r6(l + r))
-        .select(col("user_id"), col("t"), col("value")).orderBy("user_id", "t"),
+      binD(s, dir, "purchase + on(user_id) fill(0) click")
+        .select(col("user_id"), col("t"), r6(col("value")).as("value")).orderBy("user_id", "t"),
       Some(s"$ABD SELECT coalesce(a.user_id, bb.user_id) AS user_id, coalesce(a.t, bb.t) AS t, " +
         "round(1e-9 + coalesce(lv, 0) + coalesce(rv, 0), 6) AS value FROM a FULL OUTER JOIN bb " +
         "ON a.user_id = bb.user_id AND a.t = bb.t ORDER BY user_id, t")),
@@ -3454,12 +3535,15 @@ object SparkEntry {
 
   /** Flagship: sum(rate(events[1d])) by (name) on the hourly grid —
     * the M1 end-to-end slice from SURVEY §7.2: per-(name,user) counter
-    * rate over a sliding 1-day lookback, summed across users per name.
+    * rate over a sliding 1-day lookback, summed across users per name,
+    * as MetricsQL through the engine.
     */
   def entry(spark: SparkSession): DataFrame = {
     val samples = Samples.eventsFlat(spark, "/root/testdata/sf0.001")
-    val rated = Rollup.rollup(samples, Seq("name", "user_id"), gridH, D, Kernels.rate(D))
-    Aggr.sumA(rated, Seq("name"))
+    Engine.query(
+      samples.select(col("name"), map(lit("user_id"), col("user_id").cast("string")).as("tags"),
+        col("ts"), col("value")),
+      s"sum(rate($ALL[1d])) by (__name__)", gridH)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -419,63 +419,69 @@ final class HttpApi(
   // rewritten whole on every mutation (deletes are rare and the file is
   // tombstone-scale; append is not portable across FileSystems).
 
-  private def deletesFile: Option[org.apache.hadoop.fs.Path] =
-    spillDir.map(d => new org.apache.hadoop.fs.Path(d, "_deletes/deletes.tsv"))
+  /** A small metadata file of lines, rewritten whole on every change
+    * (append is not portable across FileSystems) with a crash-safe swap:
+    * the complete new state goes to `<file>.tmp`, the primary is deleted,
+    * the tmp file renamed in. A crash between the delete and the rename is
+    * recoverable, because [[read]] restores the tmp file when the primary
+    * is missing. (A rename-with-overwrite would close the window, but
+    * FileSystem.rename won't clobber and FileContext isn't available on
+    * every store.) Writes are serialized per file: two writers rewriting
+    * the SAME tmp file can interleave their delete+rename pairs so that
+    * the final rename fails and NO file survives.
+    */
+  private final class DurableLines(file: org.apache.hadoop.fs.Path) {
+    private val tmp = new org.apache.hadoop.fs.Path(file.getParent, file.getName + ".tmp")
+    private val writeLock = new Object
+    private def fs = file.getFileSystem(spark.sessionState.newHadoopConf())
+
+    /** replace the file with `lines`, evaluated under the write lock so
+      * the last writer persists the newest state
+      */
+    def write(lines: => Seq[String]): Unit = writeLock.synchronized {
+      val out = fs.create(tmp, true)
+      try out.write(lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      fs.delete(file, false)
+      fs.rename(tmp, file)
+      ()
+    }
+
+    /** the file's lines, None when there is no file */
+    def read(): Option[List[String]] = {
+      if (!fs.exists(file) && fs.exists(tmp)) fs.rename(tmp, file)
+      if (!fs.exists(file)) None
+      else {
+        val in = fs.open(file)
+        try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
+        finally in.close()
+      }
+    }
+  }
+
+  private lazy val deletesFile: Option[DurableLines] =
+    spillDir.map(d => new DurableLines(new org.apache.hadoop.fs.Path(d, "_deletes/deletes.tsv")))
 
   private def b64(s: String): String =
     java.util.Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
   private def unb64(s: String): String =
     new String(java.util.Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
 
-  // serializes persistDeletes: two concurrent delete requests rewriting
-  // the SAME tmp file can interleave their delete+rename pairs so the
-  // final rename fails and NO deletes file survives — a restart would
-  // then resurrect rows acked as deleted
-  private val deletesWriteLock = new Object
+  private def persistDeletes(): Unit = deletesFile.foreach(_.write {
+    val sels = deletedSelectors.synchronized(deletedSelectors.toList)
+    val paths = deletedPredicates.synchronized(deletedGraphitePaths.toList)
+    sels.map(s => s"S\t${b64(s)}") ++ paths.map(p => s"G\t${b64(p)}")
+  })
 
-  private def persistDeletes(): Unit = deletesFile.foreach { f =>
-    deletesWriteLock.synchronized {
-      val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
-      val sels = deletedSelectors.synchronized(deletedSelectors.toList)
-      val paths = deletedPredicates.synchronized(deletedGraphitePaths.toList)
-      val tmp = new org.apache.hadoop.fs.Path(f.getParent, "deletes.tsv.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((sels.map(s => s"S\t${b64(s)}") ++ paths.map(p => s"G\t${b64(p)}"))
-        .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      // crash-safe swap: the tmp file holds the FULL tombstone state, so
-      // a crash between the delete and the rename is recoverable — load
-      // falls back to the tmp file when the primary is missing. (A
-      // rename-with-overwrite would close the window entirely, but
-      // FileSystem.rename won't clobber and FileContext isn't available
-      // on every store; the tmp fallback covers the same crash.)
-      fs.delete(f, false)
-      fs.rename(tmp, f)
-      ()
-    }
-  }
-
-  private def loadDeletes(): Unit = deletesFile.foreach { f0 =>
-    val fs = f0.getFileSystem(spark.sessionState.newHadoopConf())
-    // recover from a crash mid-swap in persistDeletes: the primary was
-    // deleted but the (complete) tmp never renamed in
-    val tmp = new org.apache.hadoop.fs.Path(f0.getParent, "deletes.tsv.tmp")
-    if (!fs.exists(f0) && fs.exists(tmp)) { fs.rename(tmp, f0); () }
-    val f = f0
-    if (fs.exists(f)) {
-      val in = fs.open(f)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.foreach {
-        _.split('\t') match {
-          case Array("S", v) => deletedSelectors += unb64(v)
-          case Array("G", v) =>
-            val p = unb64(v)
-            deletedGraphitePaths += p
-            deletedPredicates += graphiteDeletePredicate(p)
-          case _ => ()
-        }
+  private def loadDeletes(): Unit = deletesFile.flatMap(_.read()).foreach {
+    _.foreach {
+      _.split('\t') match {
+        case Array("S", v) => deletedSelectors += unb64(v)
+        case Array("G", v) =>
+          val p = unb64(v)
+          deletedGraphitePaths += p
+          deletedPredicates += graphiteDeletePredicate(p)
+        case _ => ()
       }
     }
   }
@@ -1085,40 +1091,19 @@ final class HttpApi(
     ()
   }
 
-  private def sideTriplesFile: Option[org.apache.hadoop.fs.Path] =
-    spillDir.map(d => new org.apache.hadoop.fs.Path(d, "_tagnames/names.tsv"))
-
-  private val sideTriplesWriteLock = new Object
-
-  /** rewrite-whole + tmp-fallback persistence, same crash contract as the
-    * delete tombstones (the set is metadata-scale; append isn't portable)
+  /** same crash contract as the delete tombstones (the set is
+    * metadata-scale)
     */
-  private def persistSideTriples(): Unit = sideTriplesFile.foreach { f =>
-    sideTriplesWriteLock.synchronized {
-      val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
-      val snapshot = sideTriples.synchronized(sideTriples.toList)
-      val tmp = new org.apache.hadoop.fs.Path(f.getParent, "names.tsv.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(snapshot
-        .map { case (d, k, v, n) => s"$d\t${b64(k)}\t${b64(v)}\t${b64(n)}" }
-        .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(f, false)
-      fs.rename(tmp, f)
-      ()
-    }
-  }
+  private lazy val sideTriplesFile: Option[DurableLines] =
+    spillDir.map(d => new DurableLines(new org.apache.hadoop.fs.Path(d, "_tagnames/names.tsv")))
 
-  private def loadSideTriples(): Unit = spillDir.foreach { _ =>
-    sideTriplesFile.foreach { f0 =>
-      val fs = f0.getFileSystem(spark.sessionState.newHadoopConf())
-      val tmp = new org.apache.hadoop.fs.Path(f0.getParent, "names.tsv.tmp")
-      if (!fs.exists(f0) && fs.exists(tmp)) { fs.rename(tmp, f0); () }
-      if (fs.exists(f0)) {
-        val in = fs.open(f0)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
+  private def persistSideTriples(): Unit = sideTriplesFile.foreach(_.write(
+    sideTriples.synchronized(sideTriples.toList)
+      .map { case (d, k, v, n) => s"$d\t${b64(k)}\t${b64(v)}\t${b64(n)}" }))
+
+  private def loadSideTriples(): Unit = sideTriplesFile.foreach { f =>
+    f.read() match {
+      case Some(lines) =>
         sideTriples.synchronized {
           lines.foreach(_.split('\t') match {
             case Array(d, k, v, n) =>
@@ -1128,7 +1113,7 @@ final class HttpApi(
           pruneSideTriples()
           if (lines.nonEmpty) sideVersion += 1
         }
-      } else if (spilled.nonEmpty && (tagIndex.nonEmpty || tagIndexPath.nonEmpty)) {
+      case None if spilled.nonEmpty && (tagIndex.nonEmpty || tagIndexPath.nonEmpty) =>
         // a pre-existing spill store with no triples file (first start
         // after an upgrade): rebuild the side set from the store — the
         // distinct triples are metadata-scale, paid once at startup
@@ -1144,7 +1129,7 @@ final class HttpApi(
           }
         }
         persistSideTriples()
-      }
+      case None => ()
     }
   }
 

@@ -138,6 +138,59 @@ object Eval {
     "sum", "min", "max", "avg", "count", "stddev", "stdvar", "sum2",
     "geomean", "median")
 
+  /** An aggregate's output group (aggr.go:96 removeGroupTags): the tags
+    * its by/without modifier keeps, plus the metric name only through an
+    * explicit `by (__name__)` (MetricGroup is reset otherwise). [[keyed]]
+    * adds the key columns `_tk` (sorted tag entries) and, when the name
+    * takes part, `_nk`; every aggregate partitions on [[cols]], so no
+    * branch can mix series its by-list separates.
+    */
+  private[graft] final case class AggrGroup(modifier: Option[AggrModifier]) {
+    val byName: Boolean = modifier match {
+      case Some(By(ls)) => ls.contains("__name__")
+      case _ => false
+    }
+    private val groupTags: Column = modifier match {
+      case Some(By(ls)) => map_filter(col("tags"), (k, _) => k.isInCollection("" +: ls))
+      case Some(Without(ls)) => map_filter(col("tags"), (k, _) => !k.isInCollection(ls))
+      case None => map().cast("map<string,string>")
+    }
+    val cols: Seq[String] = if (byName) Seq("_tk", "_nk") else Seq("_tk")
+    def keyCols: Seq[Column] = cols.map(col)
+
+    def keyed(df: DataFrame): DataFrame = {
+      val k = df.withColumn("_tk", SeriesId.entries(groupTags))
+      if (byName) k.withColumn("_nk", coalesce(col("name"), lit(""))) else k
+    }
+
+    /** the group's output name and tags, rebuilt from the key columns */
+    def name: Column =
+      if (byName) when(length(col("_nk")) > 0, col("_nk")).otherwise(lit(null).cast(StringType))
+      else lit(null).cast(StringType)
+    def tags: Column = map_from_entries(col("_tk"))
+
+    /** the group with `label` taken out of it: the by-list loses it, the
+      * without-list gains it (count_values' dst label)
+      */
+    def dropping(label: String): AggrGroup = AggrGroup(modifier.map {
+      case By(ls) => By(ls.filterNot(_ == label))
+      case Without(ls) => Without(label +: ls)
+    })
+  }
+
+  /** `aggExpr` per (group, t) over non-NaN points: the grouped family of
+    * the full evaluator and the O7 aggregated instant path
+    * (Engine.aggregateInstant) — one plan, so the two cannot drift. No
+    * coalesce around the tags: a NULL tags map makes a null group key and
+    * a null output map on both paths alike.
+    */
+  private[graft] def groupedAgg(df: DataFrame, group: AggrGroup, aggExpr: Column): DataFrame =
+    group.keyed(df)
+      .groupBy(group.keyCols :+ col("t"): _*)
+      .agg(aggExpr.as("value"))
+      .filter(col("value").isNotNull)
+      .select(group.name.as("name"), group.tags.as("tags"), col("t"), col("value"))
+
   /** Candidate-name predicate over ALL of a selector's OR groups: a row
     * matching ANY group carries one of the union of per-group candidate
     * sets, so the union is pushable as one `name IN (...)`. Per group, a
@@ -1286,40 +1339,14 @@ object Eval {
 
     private def evalAggr(a: AggrFuncExpr): Value = {
       val df = aggrSeriesInput(a)
-      // group tags per by/without (aggr.go:96 removeGroupTags); the metric
-      // name participates only via an explicit `by (__name__)` (MetricGroup
-      // reset otherwise)
-      val byName = a.modifier match {
-        case Some(By(ls)) => ls.contains("__name__")
-        case _ => false
-      }
-      val gtags: Column = a.modifier match {
-        case Some(By(ls)) =>
-          map_filter(col("tags"), (k, _) => k.isInCollection("" +: ls))
-        case Some(Without(ls)) =>
-          map_filter(col("tags"), (k, _) => !k.isInCollection(ls))
-        case None => map().cast("map<string,string>")
-      }
-      val nameKey: Column =
-        if (byName) coalesce(col("name"), lit("")) else lit("")
-
-      def grouped(aggExpr: Column): Value = {
-        val g = df.withColumn("_tk", SeriesId.entries(gtags))
-          .withColumn("_nk", nameKey)
-          .groupBy(col("_tk"), col("_nk"), col("t"))
-          .agg(aggExpr.as("value"))
-          .filter(col("value").isNotNull)
-        Series(g.select(
-          when(length(col("_nk")) > 0, col("_nk")).otherwise(lit(null).cast(StringType)).as("name"),
-          map_from_entries(col("_tk")).as("tags"), col("t"), col("value")))
-      }
+      val group = AggrGroup(a.modifier)
+      def grouped(aggExpr: Column): Value = Series(groupedAgg(df, group, aggExpr))
 
       // per-series rank ops keep input series unchanged (aggr.go:646)
       def ranked(k: Int, ord: Column): Value = {
-        val withKeys = df
-          .withColumn("_tk", SeriesId.entries(gtags))
+        val withKeys = group.keyed(df)
           .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
-        val w = Window.partitionBy(col("_tk"), col("t")).orderBy(ord, col("_sk").asc)
+        val w = Window.partitionBy(group.keyCols :+ col("t"): _*).orderBy(ord, col("_sk").asc)
         Series(withKeys
           .withColumn("_rn", row_number().over(w))
           .filter(col("_rn") <= k)
@@ -1329,7 +1356,7 @@ object Eval {
       val v = col("value")
       val result = Eval.simpleGroupedAgg(a.name, v) match {
         case Some(aggExpr) => grouped(aggExpr)
-        case None => evalAggrCore(a, gtags, grouped, ranked, v)
+        case None => evalAggrCore(a, group, grouped, ranked, v)
       }
       // `limit N` modifier: at most N aggregation GROUPS survive, in input
       // series order (aggr.go:121 aggrPrepareSeries skips series whose
@@ -1339,23 +1366,13 @@ object Eval {
       if (a.limit <= 0) result
       else result match {
         case Series(out) =>
-          val groupKeyOf: Column => Column = tags => SeriesId.entries(map_filter(tags,
-            (k, _) => a.modifier match {
-              case Some(By(ls)) => k.isInCollection("" +: ls)
-              case Some(Without(ls)) => !k.isInCollection(ls)
-              case None => lit(false)
-            }))
-          val firstGroups = df
+          val firstGroups = group.keyed(df)
             .withColumn("_oid", monotonically_increasing_id())
-            .withColumn("_gk", struct(nameKey, groupKeyOf(col("tags"))))
-            .groupBy("_gk").agg(min(col("_oid")).as("_oid"))
+            .groupBy(group.keyCols: _*).agg(min(col("_oid")).as("_oid"))
             .orderBy(col("_oid")).limit(a.limit)
-            .select("_gk")
-          Series(out
-            .withColumn("_gk", struct(
-              if (byName) coalesce(col("name"), lit("")) else lit(""),
-              groupKeyOf(col("tags"))))
-            .join(broadcast(firstGroups), Seq("_gk"), "left_semi")
+            .select(group.keyCols: _*)
+          Series(group.keyed(out)
+            .join(broadcast(firstGroups), group.cols, "left_semi")
             .select(col("name"), col("tags"), col("t"), col("value")))
         case other => other
       }
@@ -1363,7 +1380,7 @@ object Eval {
 
     private def evalAggrCore(
         a: AggrFuncExpr,
-        gtags: Column,
+        group: AggrGroup,
         grouped: Column => Value,
         ranked: (Int, Column) => Value,
         v: Column): Value = {
@@ -1371,6 +1388,11 @@ object Eval {
       // sum2/geomean/median) dispatches through Eval.simpleGroupedAgg in
       // evalAggr, shared with the O7 aggregated instant path
       def df: DataFrame = aggrSeriesInput(a)
+      val gk = group.keyCols
+      def perPoint = Window.partitionBy(gk :+ col("t"): _*)
+      // the input with its group key and its series order key
+      def withKeys: DataFrame = group.keyed(df)
+        .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
       a.name match {
         case "distinct" => grouped(size(collect_set(v)).cast(DoubleType))
         case "quantile" =>
@@ -1385,65 +1407,53 @@ object Eval {
         case "any" =>
           // one series per group, kept with its ORIGINAL labels
           // (aggr.go aggrFuncAny returns tss[:1] unreduced)
-          val withKeys = df
-            .withColumn("_tk", SeriesId.entries(gtags))
-            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
-          val pick = withKeys.select(col("_tk"), col("_sk")).distinct()
-            .groupBy(col("_tk")).agg(min(col("_sk")).as("_sk"))
-          Series(withKeys.join(broadcast(pick), Seq("_tk", "_sk"), "left_semi")
+          val keyed = withKeys
+          val pick = keyed.select(gk :+ col("_sk"): _*).distinct()
+            .groupBy(gk: _*).agg(min(col("_sk")).as("_sk"))
+          Series(keyed.join(broadcast(pick), group.cols :+ "_sk", "left_semi")
             .select(col("name"), col("tags"), col("t"), col("value")))
         case "mode" =>
           // smallest most-frequent value (aggr.go:446)
-          val counts = df.withColumn("_tk", SeriesId.entries(gtags))
-            .groupBy(col("_tk"), col("t"), v).agg(count(lit(1)).as("_c"))
-          val w = Window.partitionBy(col("_tk"), col("t"))
-            .orderBy(col("_c").desc, v.asc)
-          Series(counts.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-            .select(lit(null).cast(StringType).as("name"),
-              map_from_entries(col("_tk")).as("tags"), col("t"), col("value")))
+          val counts = group.keyed(df)
+            .groupBy(gk :+ col("t") :+ v: _*).agg(count(lit(1)).as("_c"))
+          Series(counts
+            .withColumn("_rn", row_number().over(perPoint.orderBy(col("_c").desc, v.asc)))
+            .filter(col("_rn") === 1)
+            .select(group.name.as("name"), group.tags.as("tags"), col("t"), col("value")))
         case "count_values" =>
           // count_values("label", q) by/without (aggr.go:566): the dst
           // label leaves the by-list / joins the without-list (Prometheus
           // rule), NaN points count nothing, and the label value renders
           // via Go strconv 'f' formatting (no exponent, shortest digits)
           val label = strArg(a.args.head)
-          val gtags2: Column = a.modifier match {
-            case Some(By(ls)) =>
-              map_filter(col("tags"), (k, _) => k.isInCollection("" +: ls.filterNot(_ == label)))
-            case Some(Without(ls)) =>
-              map_filter(col("tags"), (k, _) => !k.isInCollection(label +: ls))
-            case None => map().cast("map<string,string>")
-          }
-          val g = df.filter(!isnan(v)).withColumn("_tk", SeriesId.entries(gtags2))
-            .groupBy(col("_tk"), col("t"), v.as("_val"))
+          val g2 = group.dropping(label)
+          val g = g2.keyed(df.filter(!isnan(v)))
+            .groupBy(g2.keyCols :+ col("t") :+ v.as("_val"): _*)
             .agg(count(lit(1)).cast(DoubleType).as("value"))
           Series(g.select(
-            lit(null).cast(StringType).as("name"),
-            map_concat(map_from_entries(col("_tk")),
-              map(lit(label), goFmtUdf(col("_val")))).as("tags"),
+            g2.name.as("name"),
+            map_concat(g2.tags, map(lit(label), goFmtUdf(col("_val")))).as("tags"),
             col("t"), col("value")))
         case "share" =>
           // negative points take no share and contribute nothing to the
           // denominator (aggr.go aggrFuncShare skips v < 0)
-          val w = Window.partitionBy(SeriesId.entries(gtags), col("t"))
           val nonNeg = when(v >= 0, v)
-          Series(df
-            .withColumn("value", nonNeg / sum(nonNeg).over(w))
-            .filter(col("value").isNotNull))
+          Series(group.keyed(df)
+            .withColumn("value", nonNeg / sum(nonNeg).over(perPoint))
+            .filter(col("value").isNotNull)
+            .select(col("name"), col("tags"), col("t"), col("value")))
         case "zscore" =>
-          val w = Window.partitionBy(SeriesId.entries(gtags), col("t"))
-          val sd = stddev_pop(v).over(w)
-          Series(df.withColumn("value",
-            when(sd > 0, (v - avg(v).over(w)) / sd)).filter(col("value").isNotNull))
+          val sd = stddev_pop(v).over(perPoint)
+          Series(group.keyed(df).withColumn("value",
+            when(sd > 0, (v - avg(v).over(perPoint)) / sd)).filter(col("value").isNotNull)
+            .select(col("name"), col("tags"), col("t"), col("value")))
         case "topk" => ranked(scalarArg(a.args.head).toInt, v.desc)
         case "bottomk" => ranked(scalarArg(a.args.head).toInt, v.asc)
         case "limitk" =>
           val k = scalarArg(a.args.head).toInt
           if (k <= 0) return Series(df.filter(lit(false))) // limitk(-1) → empty
-          val withKeys = df
-            .withColumn("_tk", SeriesId.entries(gtags))
-            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
-          val keys0 = withKeys.select(col("_tk"), col("_sk")).distinct()
+          val keyed = withKeys
+          val keys0 = keyed.select(gk :+ col("_sk"): _*).distinct()
           // no by/without → ONE global group: distributed sort+limit
           // instead of a rank window over a constant partition key (which
           // funnels every distinct series through one task)
@@ -1452,91 +1462,85 @@ object Eval {
               keys0.orderBy(xxhash64(col("_sk")), col("_sk")).limit(k).select(col("_sk"))
             else keys0
               .withColumn("_rn", row_number().over(
-                Window.partitionBy(col("_tk")).orderBy(xxhash64(col("_sk")), col("_sk"))))
+                Window.partitionBy(gk: _*).orderBy(xxhash64(col("_sk")), col("_sk"))))
               .filter(col("_rn") <= k).select(col("_sk"))
-          Series(withKeys.join(broadcast(winners), Seq("_sk"), "left_semi")
+          Series(keyed.join(broadcast(winners), Seq("_sk"), "left_semi")
             .select(col("name"), col("tags"), col("t"), col("value")))
         case "mad" =>
           // cross-series MAD per point (aggr.go:942)
-          val w = Window.partitionBy(SeriesId.entries(gtags), col("t"))
-          val med = percentile(v, lit(0.5)).over(w)
-          val g = df.withColumn("_dev", abs(v - med))
-            .withColumn("_tk", SeriesId.entries(gtags))
-            .groupBy(col("_tk"), col("t"))
+          val med = percentile(v, lit(0.5)).over(perPoint)
+          val g = group.keyed(df).withColumn("_dev", abs(v - med))
+            .groupBy(gk :+ col("t"): _*)
             .agg(percentile(col("_dev"), lit(0.5)).as("value"))
-          Series(g.select(lit(null).cast(StringType).as("name"),
-            map_from_entries(col("_tk")).as("tags"), col("t"), col("value")))
+          Series(g.select(group.name.as("name"), group.tags.as("tags"), col("t"), col("value")))
         case "quantiles" =>
           // quantiles("label", phi…, q) — one series per phi (aggr.go:1162)
           val label = strArg(a.args.head)
           val phis = a.args.drop(1).dropRight(1).map(scalarArg)
           val aggs = phis.zipWithIndex.map { case (p, i) => percentile(v, lit(p)).as(s"_q$i") }
           val stackArgs = phis.zipWithIndex.map { case (p, i) => s"'$p', _q$i" }.mkString(", ")
-          val g = df.withColumn("_tk", SeriesId.entries(gtags))
-            .groupBy(col("_tk"), col("t"))
+          val g = group.keyed(df)
+            .groupBy(gk :+ col("t"): _*)
             .agg(aggs.head, aggs.tail: _*)
-            .select(col("_tk"), col("t"),
-              expr(s"stack(${phis.size}, $stackArgs) as (_phi, value)"))
-          Series(g.select(lit(null).cast(StringType).as("name"),
-            map_concat(map_from_entries(col("_tk")), map(lit(label), col("_phi"))).as("tags"),
+            .select(gk :+ col("t") :+
+              expr(s"stack(${phis.size}, $stackArgs) as (_phi, value)"): _*)
+          Series(g.select(group.name.as("name"),
+            map_concat(group.tags, map(lit(label), col("_phi"))).as("tags"),
             col("t"), col("value")))
         case "histogram" =>
           // cross-series vmrange histogram per point, returned as
           // cumulative le buckets (aggr.go:256 aggrFuncHistogram ends in
           // vmrangeBucketsToLE; bounds are the %.3e decimal strings)
           import graft.operators.HistogramQ
-          val g = df.withColumn("_tk", SeriesId.entries(gtags))
+          val g = group.keyed(df)
             .filter(!isnan(v) && v > 0.0)
             .withColumn("_hk", HistogramQ.bucketIdxClamped(v))
-            .groupBy(col("_tk"), col("t"), col("_hk"))
+            .groupBy(gk :+ col("t") :+ col("_hk"): _*)
             .agg(count(lit(1)).cast(DoubleType).as("value"))
             .withColumn("vmrange", HistogramQ.vmrangeOfIdx(col("_hk")))
             .drop("_hk")
-          val le = HistogramQ.vmrangeToLE(g, Seq("_tk"))
-          Series(le.select(lit(null).cast(StringType).as("name"),
-            map_concat(map_from_entries(col("_tk")),
-              map(lit("le"), col("le"))).as("tags"),
+          val le = HistogramQ.vmrangeToLE(g, group.cols)
+          Series(le.select(group.name.as("name"),
+            map_concat(group.tags, map(lit("le"), col("le"))).as("tags"),
             col("t"), col("value")))
         case "outliers_iqr" | "outliers_mad" | "outliersk" =>
           // whole-series outlier filters (aggr.go:952,1004,1040)
-          val withKeys = df
-            .withColumn("_tk", SeriesId.entries(gtags))
-            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
-          val stats = withKeys.groupBy(col("_tk"), col("_sk"))
+          val keyed = withKeys
+          val stats = keyed.groupBy(gk :+ col("_sk"): _*)
             .agg(percentile(v, lit(0.5)).as("_med"))
           val winners: DataFrame = a.name match {
             case "outliers_iqr" =>
-              val fences = stats.groupBy(col("_tk")).agg(
+              val fences = stats.groupBy(gk: _*).agg(
                 percentile(col("_med"), lit(0.25)).as("_q25"),
                 percentile(col("_med"), lit(0.75)).as("_q75"))
-              stats.join(broadcast(fences), Seq("_tk"))
+              stats.join(broadcast(fences), group.cols)
                 .filter(col("_med") < col("_q25") - (col("_q75") - col("_q25")) * 1.5 ||
                   col("_med") > col("_q75") + (col("_q75") - col("_q25")) * 1.5)
                 .select(col("_sk"))
             case "outliers_mad" =>
               val tol = scalarArg(a.args.head)
-              val gmed = stats.groupBy(col("_tk"))
+              val gmed = stats.groupBy(gk: _*)
                 .agg(percentile(col("_med"), lit(0.5)).as("_gmed"))
-              val dev = stats.join(broadcast(gmed), Seq("_tk"))
+              val dev = stats.join(broadcast(gmed), group.cols)
                 .withColumn("_dev", abs(col("_med") - col("_gmed")))
-              val mad = dev.groupBy(col("_tk"))
+              val mad = dev.groupBy(gk: _*)
                 .agg(percentile(col("_dev"), lit(0.5)).as("_mad"))
-              dev.join(broadcast(mad), Seq("_tk"))
+              dev.join(broadcast(mad), group.cols)
                 .filter(col("_dev") > lit(tol) * col("_mad"))
                 .select(col("_sk"))
             case _ => // outliersk: top-k series by max |v − per-point group median|
               val k = scalarArg(a.args.head).toInt
-              val gmed = withKeys.groupBy(col("_tk"), col("t"))
+              val gmed = keyed.groupBy(gk :+ col("t"): _*)
                 .agg(percentile(v, lit(0.5)).as("_gmed"))
-              withKeys.join(gmed, Seq("_tk", "t"))
-                .groupBy(col("_tk"), col("_sk"))
+              keyed.join(gmed, group.cols :+ "t")
+                .groupBy(gk :+ col("_sk"): _*)
                 .agg(max(abs(v - col("_gmed"))).as("_dev"))
                 .withColumn("_rn", row_number().over(
-                  Window.partitionBy(col("_tk")).orderBy(col("_dev").desc, col("_sk").asc)))
+                  Window.partitionBy(gk: _*).orderBy(col("_dev").desc, col("_sk").asc)))
                 .filter(col("_rn") <= k)
                 .select(col("_sk"))
           }
-          Series(withKeys.join(broadcast(winners), Seq("_sk"), "left_semi")
+          Series(keyed.join(broadcast(winners), Seq("_sk"), "left_semi")
             .select(col("name"), col("tags"), col("t"), col("value")))
         case n if n.startsWith("topk_") || n.startsWith("bottomk_") =>
           // whole-series top/bottom-k by a series statistic (aggr.go:677
@@ -1554,16 +1558,14 @@ object Eval {
             case other => throw new IllegalArgumentException(s"unknown stat '$other'")
           }
           val desc = n.startsWith("topk_")
-          val withKeys = df
-            .withColumn("_tk", SeriesId.entries(gtags))
-            .withColumn("_sk", SeriesId.orderKey(col("name"), col("tags")))
-          val ranked0 = withKeys.groupBy(col("_tk"), col("_sk")).agg(stat.as("_s"))
+          val keyed = withKeys
+          val ranked0 = keyed.groupBy(gk :+ col("_sk"): _*).agg(stat.as("_s"))
             .withColumn("_rn", row_number().over(
-              Window.partitionBy(col("_tk"))
+              Window.partitionBy(gk: _*)
                 .orderBy(if (desc) col("_s").desc_nulls_last else col("_s").asc_nulls_last,
                   col("_sk").asc)))
             .filter(col("_rn") <= k).select(col("_sk"))
-          val kept = withKeys.join(broadcast(ranked0), Seq("_sk"), "left_semi")
+          val kept = keyed.join(broadcast(ranked0), Seq("_sk"), "left_semi")
             .select(col("name"), col("tags"), col("t"), col("value"))
           a.args.lastOption.collect { case StringExpr(spec) => spec } match {
             case None => Series(kept)
@@ -1571,13 +1573,13 @@ object Eval {
               val eq = spec.indexOf('=')
               val (tagN, tagV) =
                 if (eq < 0) (spec, spec) else (spec.take(eq), spec.drop(eq + 1))
-              val rem = withKeys.join(broadcast(ranked0), Seq("_sk"), "left_anti")
-                .groupBy(col("_tk"), col("t"))
+              val rem = keyed.join(broadcast(ranked0), Seq("_sk"), "left_anti")
+                .groupBy(gk :+ col("t"): _*)
                 .agg(sum(vOk).as("value"))
                 .filter(col("value").isNotNull)
-                .select(lit(null).cast(StringType).as("name"),
+                .select(group.name.as("name"),
                   map_concat(
-                    map_filter(map_from_entries(col("_tk")), (key, _) => key =!= tagN),
+                    map_filter(group.tags, (key, _) => key =!= tagN),
                     map(lit(tagN), lit(tagV))).as("tags"),
                   col("t"), col("value"))
               Series(kept.unionByName(rem))
@@ -2214,6 +2216,7 @@ object Eval {
         // aggregation but every grid point from the first sample onward
         // (running_*) or the WHOLE grid (range_*, via setLastValues)
         // carries the result. Densify, aggregate over non-NaN, emit dense.
+        // All of them keep the metric name (transformKeepsName).
         case "running_sum" | "running_min" | "running_max" =>
           val (kdf, keys) = seriesKeyed(f.args.head)
           val d = denseGrid(kdf, keys)
@@ -2225,9 +2228,9 @@ object Eval {
             case "running_min" => min(vOk).over(w)
             case _ => max(vOk).over(w)
           }
-          Series(d
+          Series(keepName(d
             .withColumn("value", coalesce(agg, lit(Double.NaN)))
-            .select(lit(null).cast(StringType).as("name"), col("tags"), col("t"), col("value")))
+            .select(col("name"), col("tags"), col("t"), col("value"))))
         case "running_avg" =>
           // NOT a plain running mean: the reference's divisor is the dense
           // position, so interior NaN gaps dilute later averages
@@ -2235,13 +2238,13 @@ object Eval {
           val (kdf, keys) = seriesKeyed(f.args.head)
           val d = denseGrid(kdf, keys)
           val seq = d.groupBy(keys.map(col): _*)
-            .agg(first("tags").as("tags"),
+            .agg(first("name").as("name"), first("tags").as("tags"),
               sort_array(collect_list(struct(col("t"), col("value").as("v")))).as("_pts"))
-          Series(seq
+          Series(keepName(seq
             .withColumn("_run", explode(runningAvgUdf(col("_pts.v"))))
-            .select(lit(null).cast(StringType).as("name"), col("tags"),
+            .select(col("name"), col("tags"),
               element_at(col("_pts.t"), col("_run._1") + 1).as("t"),
-              col("_run._2").as("value")))
+              col("_run._2").as("value"))))
         case "range_avg" =>
           // setLastValues over the positional running average: EVERY grid
           // point (leading gaps included) gets the final recurrence value
@@ -2251,9 +2254,8 @@ object Eval {
           val fin = d.groupBy(keys.map(col): _*)
             .agg(sort_array(collect_list(struct(col("t"), col("value").as("v")))).as("_pts"))
             .select((keys.map(col) :+ runningAvgFinalUdf(col("_pts.v")).as("_fin")): _*)
-          Series(d.join(fin, keys)
-            .select(lit(null).cast(StringType).as("name"), col("tags"),
-              col("t"), col("_fin").as("value")))
+          Series(keepName(d.join(fin, keys)
+            .select(col("name"), col("tags"), col("t"), col("_fin").as("value"))))
         case "range_sum" | "range_min" | "range_max" |
             "range_median" | "range_stddev" | "range_stdvar" | "range_first" |
             "range_last" | "range_quantile" =>
@@ -2277,9 +2279,9 @@ object Eval {
               max(when(!isnan(col("value")), struct(col("t"), col("value").as("v")))).over(w)
                 .getField("v")
           }
-          Series(d
+          Series(keepName(d
             .withColumn("value", coalesce(agg, lit(Double.NaN)))
-            .select(lit(null).cast(StringType).as("name"), col("tags"), col("t"), col("value")))
+            .select(col("name"), col("tags"), col("t"), col("value"))))
         case "range_linear_regression" =>
           // per-series trend line over non-NaN samples, EVALUATED AT EVERY
           // grid point (transform.go:1530 + setLastValues-like dense
@@ -2292,12 +2294,12 @@ object Eval {
           val withX = d
             .withColumn("_x", (col("t") - t0).cast(DoubleType) / 1000.0)
             .withColumn("_xv", when(!isnan(col("value")), col("_x")))
-          Series(withX
+          Series(keepName(withX
             .withColumn("value", coalesce(
               regr_intercept(vOk, col("_xv")).over(w) +
                 regr_slope(vOk, col("_xv")).over(w) * col("_x"),
               lit(Double.NaN)))
-            .select(lit(null).cast(StringType).as("name"), col("tags"), col("t"), col("value")))
+            .select(col("name"), col("tags"), col("t"), col("value"))))
         case "range_normalize" =>
           // multi-arg: each arg's series normalized independently
           // (transform.go:1364); output stays at the input's points
@@ -2838,7 +2840,9 @@ object Eval {
             lit(null).cast(StringType).as("name"),
             map().cast("map<string,string>").as("tags"),
             col("t"),
-            graft.operators.Transform.timezoneOffset(col("t"), tz).as("value")))
+            // UTC offset in seconds of the zone at each grid timestamp
+            ((unix_millis(to_utc_timestamp(timestamp_millis(col("t")), tz)) - col("t")) / -1000L)
+              .cast(DoubleType).as("value")))
         case "range_mad" =>
           // whole-range MAD over non-NaN samples, emitted at every grid
           // point (transform.go:1551)
@@ -2848,11 +2852,11 @@ object Eval {
           val w = Window.partitionBy(keys.map(col): _*)
           val med = percentile(vOk, lit(0.5)).over(w)
           val withDev = d.withColumn("_dev", abs(vOk - med))
-          Series(withDev
+          Series(keepName(withDev
             .withColumn("value", coalesce(
               percentile(col("_dev"), lit(0.5)).over(Window.partitionBy(keys.map(col): _*)),
               lit(Double.NaN)))
-            .select(lit(null).cast(StringType).as("name"), col("tags"), col("t"), col("value")))
+            .select(col("name"), col("tags"), col("t"), col("value"))))
         case "range_trim_zscore" =>
           val z = scalarArg(f.args.head)
           val q = series(f.args(1))

@@ -346,16 +346,29 @@ class HttpApiSpec extends SparkSpec {
       api.awaitSpillIdle()
       assert(post(port, "/api/v1/admin/tsdb/delete_series?match[]=cm", "") == 204)
     } finally api.stop()
-    // simulate the persistDeletes crash window: the primary was deleted,
-    // the complete tmp never renamed in
-    val del = java.nio.file.Paths.get(dir, "_deletes", "deletes.tsv")
-    val tmp = java.nio.file.Paths.get(dir, "_deletes", "deletes.tsv.tmp")
-    java.nio.file.Files.move(del, tmp)
+    // simulate the crash window of both durable files (the delete
+    // tombstones and the tag-index side triples): the primary was
+    // deleted, the complete tmp never renamed in
+    val files = Seq(("_deletes", "deletes.tsv"), ("_tagnames", "names.tsv")).map {
+      case (d, f) =>
+        val primary = java.nio.file.Paths.get(dir, d, f)
+        val tmp = java.nio.file.Paths.get(dir, d, f + ".tmp")
+        val content = new String(java.nio.file.Files.readAllBytes(primary), "UTF-8")
+        java.nio.file.Files.move(primary, tmp)
+        (primary, tmp, content)
+    }
+    // no tag index: the side set cannot be rebuilt from the store, only
+    // restored from its tmp file
     val api2 = new HttpApi(spark, spillDir = Some(dir))
     val port2 = api2.start()
     try {
       val r = get(port2, "/api/v1/series?start=0&end=1000")
       assert(!r.contains("\"cm\"") && r.contains("\"cn\""), r)
+      files.foreach { case (primary, tmp, content) =>
+        assert(!java.nio.file.Files.exists(tmp), tmp)
+        assert(new String(java.nio.file.Files.readAllBytes(primary), "UTF-8") == content, primary)
+      }
+      assert(files(1)._3.linesIterator.size == 2, files(1)._3) // cm and cn: job=x
     } finally api2.stop()
   }
 

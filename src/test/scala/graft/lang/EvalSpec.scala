@@ -217,12 +217,45 @@ class EvalSpec extends SparkSpec {
   }
 
   test("running / range transforms") {
-    // running_*/range_* reset the metric group unconditionally
-    // (transform.go:1325 newTransformFuncRunning / :1353 range)
+    // avg_over_time keeps the name, and so do running_/range_
     val r = run("running_sum(avg_over_time(m[1m]))")
-    assert(r(("|a", 3 * M)) == 6.0)
+    assert(r(("m|a", 3 * M)) == 6.0)
     val rng = run("range_max(avg_over_time(m[1m]))")
-    assert(rng(("|a", M)) == 10.0)
+    assert(rng(("m|a", M)) == 10.0)
+    // transformKeepsName (transform.go:141-170) governs the dense
+    // running_/range_ branches like every other transform
+    for (f <- Seq("running_sum", "running_min", "running_max", "running_avg", "range_avg",
+        "range_sum", "range_max", "range_median", "range_first", "range_last",
+        "range_linear_regression", "range_mad", "range_normalize", "range_zscore")) {
+      assert(run(s"$f(m)").keySet.map(_._1) == Set("m|a", "m|b"), f)
+    }
+    assert(run("range_quantile(0.5, m)").keySet.map(_._1) == Set("m|a", "m|b"))
+    assert(run("running_sum(m)")(("m|a", 3 * M)) == 6.0)
+    // a name-dropping transform still drops it
+    assert(run("abs(m)").keySet.map(_._1) == Set("|a", "|b"))
+  }
+
+  test("by (__name__) separates metrics in every aggregate family") {
+    val all = """{__name__=~"m|n"}"""
+    val t3 = 3 * M // m|a = 3, m|b = 30, n|a = 100
+    // rank: one top series per metric, not one overall
+    val top = run(s"topk(1, $all) by (__name__)")
+    assert(top.keySet.filter(_._2 == t3).map(_._1) == Set("m|b", "n|a"))
+    val bottom = run(s"bottomk(1, $all) by (__name__)")
+    assert(bottom.keySet.filter(_._2 == t3).map(_._1) == Set("m|a", "n|a"))
+    // per-point shares and z-scores over the metric's own series
+    val share = run(s"share($all) by (__name__)")
+    assert(share(("m|a", t3)) == 3.0 / 33.0 && share(("n|a", t3)) == 1.0)
+    val z = run(s"zscore($all) by (__name__)")
+    assert(math.abs(z(("m|a", t3)) + 1.0) < 1e-12)
+    assert(!z.contains(("n|a", t3))) // one n series: no spread
+    // the reducing families emit one series per metric, named after it
+    for (q <- Seq(s"mode($all)", s"""count_values("v", $all)""", s"mad($all)",
+        s"""quantiles("q", 0.5, $all)""", s"histogram($all)", s"limitk(1, $all)",
+        s"any($all)", s"group($all)", s"topk_max(1, $all)", s"outliersk(1, $all)")) {
+      val names = run(s"$q by (__name__)").keySet.filter(_._2 == t3).map(_._1.takeWhile(_ != '|'))
+      assert(names == Set("m", "n"), q)
+    }
   }
 
   test("keep_last_value / interpolate fill grid gaps") {

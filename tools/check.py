@@ -2,7 +2,10 @@
 """Local approximation of the driver's correctness gate:
 run Verify's parquet dumps against the DuckDB oracle SQL and diff.
 
-Usage: python3 tools/check.py [sfdir] [outdir] [only_query_prefix]
+Usage: python3 tools/check.py [sfdir] [outdir] [only_query_prefixes]
+
+only_query_prefixes is a comma list (e.g. `ag_,tr_,bi_`), like Verify's
+SPARK_GRAFT_ONLY.
 """
 import duckdb, json, sys, glob, os
 import pandas as pd
@@ -26,14 +29,14 @@ def canon(df):
 def main():
     sfdir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
     outdir = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_out'
-    only = sys.argv[3] if len(sys.argv) > 3 else ''
+    only = [p for p in (sys.argv[3] if len(sys.argv) > 3 else '').split(',') if p]
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f'{outdir}/oracle_sql.json'))
     n_ok = n_bad = 0
     for name in sorted(oracle):
-        if only and not name.startswith(only):
+        if only and not name.startswith(tuple(only)):
             continue
         sql = oracle[name]
         try:
