@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{GridSpec, Samples}
+import graft.core.{GridSpec, Samples, SeriesId}
 import graft.operators._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -90,15 +90,30 @@ object SparkEntry {
     s"lutx(i, d) AS (VALUES $rows)"
   }
 
+  /** Bucket index of metrics.Histogram's lower bucket `0...1.000e-09`:
+    * values ≤ 1e-9, a 0 included, count there (Histogram.Update skips
+    * only NaN and negatives). One below the first log bucket (1e-9 =
+    * 10^(-162/18)), so it is adjacent to it, and it never gets a boundary
+    * zero-bucket: its start 0 equals vmrangeBucketsToLE's initial
+    * previous end (transform.go:502).
+    */
+  private val LOWER = -163
+
+  /** the boundary zero-bucket rule of the le conversion over `kd(k, pk)`:
+    * a bucket whose start is not the previous bucket's end
+    */
+  private val GAP = s"(pk IS NULL OR pk != k - 1) AND k != $LOWER"
+
   /** ceil−1 corrected log-bucket histogram CTEs: from `$src` (exposing
     * `$cols` and value column `$v`), emits `h($cols, k, c)` with k pinned
-    * by lutx range comparison. `filter` is an optional " WHERE ..." on
-    * the source.
+    * by lutx range comparison, or [[LOWER]] for v ≤ 1e-9.
     */
-  private def hCorr(src: String, cols: String, v: String, filter: String = ""): String =
-    s"h0 AS (SELECT $cols, $v AS _v, ceil(log10($v) * 18)::BIGINT - 1 AS _g FROM $src$filter), " +
-      s"hcx AS (SELECT $cols, CASE WHEN _v <= lg.d THEN _g - 1 WHEN _v > lh.d THEN _g + 1 ELSE _g END AS k " +
-      "FROM h0 JOIN lutx lg ON lg.i = h0._g JOIN lutx lh ON lh.i = h0._g + 1), " +
+  private def hCorr(src: String, cols: String, v: String): String =
+    s"h0 AS (SELECT $cols, $v AS _v, CASE WHEN $v > 1e-9 THEN ceil(log10($v) * 18)::BIGINT - 1 END AS _g " +
+      s"FROM $src), " +
+      s"hcx AS (SELECT $cols, CASE WHEN _g IS NULL THEN $LOWER WHEN _v <= lg.d THEN _g - 1 " +
+      "WHEN _v > lh.d THEN _g + 1 ELSE _g END AS k " +
+      "FROM h0 LEFT JOIN lutx lg ON lg.i = h0._g LEFT JOIN lutx lh ON lh.i = h0._g + 1), " +
       s"h AS (SELECT $cols, k, count(*)::DOUBLE AS c FROM hcx GROUP BY $cols, k)"
 
   /** bucketed events CTE: hourly (BH) / daily (BD) tumbling buckets */
@@ -112,6 +127,13 @@ object SparkEntry {
   private def sqlH(agg: String): String =
     s"WITH b AS ($BH) SELECT name, t, round(1e-9 + $agg, 6) AS value FROM b " +
       "GROUP BY name, t ORDER BY name, t"
+
+  /** geomean with Go's math.Log: a 0 makes it exp(−Inf) = 0
+    * (rollup.go:1707 rollupGeomean, aggr.go aggrFuncGeomean); the events
+    * hold no negative value
+    */
+  private val GEOMEAN =
+    "CASE WHEN min(value) = 0 THEN 0 ELSE exp(avg(ln(CASE WHEN value > 0 THEN value END))) END"
 
   private def sqlD(agg: String): String =
     s"WITH b AS ($BD) SELECT name, user_id, t, round(1e-9 + $agg, 6) AS value FROM b " +
@@ -136,7 +158,7 @@ object SparkEntry {
     Q("ro_stdvar", roH(Kernels.stdvar), Some(sqlH("var_pop(value)"))),
     Q("ro_median", roH(Kernels.median), Some(sqlH("quantile_cont(value, 0.5)"))),
     Q("ro_quantile_p90", roH(Kernels.quantile(0.9)), Some(sqlH("quantile_cont(value, 0.9)"))),
-    Q("ro_geomean", roH(Kernels.geomean), Some(sqlH("exp(avg(ln(value)))"))),
+    Q("ro_geomean", roH(Kernels.geomean), Some(sqlH(GEOMEAN))),
     Q("ro_distinct", roH(Kernels.distinct), Some(sqlH("count(DISTINCT value)::DOUBLE"))),
     Q("ro_range", roH(Kernels.range), Some(sqlH("max(value) - min(value)"))),
     Q("ro_first", roH(Kernels.first), Some(sqlH("first(value ORDER BY tms, value)"))),
@@ -345,13 +367,10 @@ object SparkEntry {
       Rollup.histogramOverTime(ev(s, dir), Seq("name"), gridH, H)
         .select(col("name"), col("t"), col("vmrange"), col("value"))
         .orderBy("name", "t", "vmrange"),
-      Some(s"WITH b AS ($BH), $LUT, $LUTX, ${hCorr("b", "name, t", "value", " WHERE value > 0")} " +
-        "SELECT name, t, l0.b || '...' || l1.b AS vmrange, " +
+      Some(s"WITH b AS ($BH), $LUT, $LUTX, ${hCorr("b", "name, t", "value")} " +
+        s"SELECT name, t, CASE WHEN h.k = $LOWER THEN '0' ELSE l0.b END || '...' || l1.b AS vmrange, " +
         "c AS value FROM h JOIN lut l0 ON l0.i = h.k JOIN lut l1 ON l1.i = h.k + 1 ORDER BY name, t, vmrange")),
-    Q("ro_present_over_time", (s, dir) =>
-      Rollup.presentOverTime(ev(s, dir), Seq("name"), gridH, H)
-        .select(col("name"), col("t"), col("value"))
-        .orderBy("name", "t"),
+    Q("ro_present_over_time", roH(Kernels.present),
       Some(s"WITH b AS ($BH) SELECT DISTINCT name, t, 1.0 AS value FROM b ORDER BY name, t")),
     Q("ro_absent_over_time", (s, dir) =>
       Rollup.absentOverTime(
@@ -362,7 +381,7 @@ object SparkEntry {
         "WHERE NOT EXISTS (SELECT 1 FROM events e WHERE e.event_type = 'error' AND e.user_id = 3 " +
         s"AND epoch_ms(e.ts::TIMESTAMP) > g.t - $H AND epoch_ms(e.ts::TIMESTAMP) <= g.t) ORDER BY t")),
     Q("ro_default_rollup", (s, dir) =>
-      Rollup.defaultRollup(ev(s, dir), Seq("name", "user_id"), gridH, 2 * H)
+      Rollup.rollup(ev(s, dir), Seq("name", "user_id"), gridH, 2 * H, Kernels.last)
         .select(col("name"), col("user_id"), col("t"), r6(col("value")).as("value"))
         .orderBy("name", "user_id", "t"),
       Some(s"WITH g AS (SELECT unnest(generate_series($START, $END, $H)) AS t), " +
@@ -473,22 +492,53 @@ object SparkEntry {
   /** every series of a grid frame */
   private val ALL = """{__name__=~".+"}"""
 
-  /** MetricsQL `q` through the engine over a rounded grid frame (name,
-    * [user_id], t, value), each row a sample at ts = t with tags
-    * {user_id} or {}. A lookback of one step makes a bare selector read
-    * exactly the point at t and fill no gap.
+  /** MetricsQL `q` through the engine over a rounded grid frame (name, t,
+    * value and label columns), each row a sample at ts = t tagged with its
+    * label columns ({user_id}, {metric} or {}). A lookback of one step
+    * makes a bare selector read exactly the point at t and fill no gap.
     */
   private def engOn(g: DataFrame, q: String, grid: GridSpec): DataFrame = {
+    val labels = g.columns.filterNot(Set("name", "t", "value"))
     val tags =
-      if (g.columns.contains("user_id")) map(lit("user_id"), col("user_id").cast("string"))
-      else map().cast("map<string,string>")
+      if (labels.isEmpty) map().cast("map<string,string>")
+      else map(labels.toSeq.flatMap(l => Seq(lit(l), col(l).cast("string"))): _*)
     Engine.query(g.select(col("name"), tags.as("tags"), col("t").as("ts"), col("value")),
       q, grid, grid.stepMs)
   }
 
+  /** one output column per (alias, query, rounding), joined on (name, t) */
+  private def engCols(g: DataFrame, grid: GridSpec, name: Column,
+      cols: Seq[(String, String, Column => Column)]): DataFrame =
+    cols.map { case (as, q, out) =>
+      engOn(g, q, grid).select(name.as("name"), col("t"), out(col("value")).as(as))
+    }.reduce(_.join(_, Seq("name", "t")))
+
+  /** [[engCols]] over [[gHavg]]: the `metric` label carries each series'
+    * name through the functions that drop it (transform.go:141-170)
+    */
+  private def trCols(s: SparkSession, dir: String,
+      cols: (String, String, Column => Column)*): DataFrame =
+    engCols(gHavg(s, dir).withColumn("metric", col("name")), gridH,
+      col("tags").getItem("metric"), cols).orderBy("name", "t")
+
+  /** [[engCols]] over [[gDavg]], for aggregates `by (__name__)` */
+  private def agCols(s: SparkSession, dir: String,
+      cols: (String, String, Column => Column)*): DataFrame =
+    engCols(gDavg(s, dir), gridD, col("name"), cols).orderBy("name", "t")
+
+  /** the same rounding for every column */
+  private def rounded(out: Column => Column, cols: (String, String)*): Seq[(String, String, Column => Column)] =
+    cols.map { case (as, q) => (as, q, out) }
+
+  private val asIs: Column => Column = c => c
+
   /** `q` over the hourly transform grid [[gHavg]] */
   private def trEng(s: SparkSession, dir: String, q: String): DataFrame =
     engOn(gHavg(s, dir), q, gridH)
+
+  /** `q` over the raw samples on the daily grid, a day's lookback each */
+  private def labelsOf(s: SparkSession, dir: String, q: String): DataFrame =
+    Engine.query(Samples.fromEvents(s, dir), q, gridD, D)
 
   /** `q` over the daily per-user aggregate grid [[gDavg]] */
   private def agEng(s: SparkSession, dir: String, q: String): DataFrame =
@@ -514,70 +564,59 @@ object SparkEntry {
     * advances pos (transform.go:1210 runningAvg; exec_test.go
     * running_avg(time() > 1200 < 1800) = n,n,1400,1500,1500,1500)
     */
-  private def runningAvgSql: String =
+  private def runningAvgCtes: String =
     GHD.replaceFirst("WITH ", "WITH RECURSIVE ") +
       ", f AS (SELECT name, t, v, min(CASE WHEN v IS NOT NULL THEN t END) OVER (PARTITION BY name) AS t0 FROM d), " +
       "p AS MATERIALIZED (SELECT name, t, v, row_number() OVER (PARTITION BY name ORDER BY t) - 1 AS pos " +
       "FROM f WHERE t >= t0), " +
       "r(name, pos, t, a) AS (SELECT name, pos, t, v FROM p WHERE pos = 0 UNION ALL " +
       "SELECT p.name, p.pos, p.t, CASE WHEN p.v IS NULL THEN r.a ELSE r.a + (p.v - r.a) / (p.pos + 1) END " +
-      "FROM r JOIN p ON p.name = r.name AND p.pos = r.pos + 1) " +
-      "SELECT name, t, round(1e-9 + a, 4) AS value FROM r ORDER BY name, t"
+      "FROM r JOIN p ON p.name = r.name AND p.pos = r.pos + 1)"
 
   private val transformQueries: Seq[Q] = Seq(
-    // pointwise math catalog (transform.go:25-130) in one projection
+    // pointwise math catalog (transform.go:25-130); sgn reads floor(v)
+    // so that its input holds zeros
     Q("tr_math", (s, dir) =>
-      gHavg(s, dir).select(
-        col("name"), col("t"),
-        r6(abs(col("value") - 100)).as("abs_v"),
-        ceil(col("value")).cast("double").as("ceil_v"),
-        floor(col("value")).cast("double").as("floor_v"),
-        r6(sqrt(col("value"))).as("sqrt_v"),
-        r6(log(col("value"))).as("ln_v"),
-        r6(log2(col("value"))).as("log2_v"),
-        r6(log10(col("value"))).as("log10_v"),
-        r6(exp(col("value") / 100)).as("exp_v"),
-        signum(col("value") - 100).as("sgn_v"),
-        round(col("value") + lit(1e-9), 0).as("round_v"),
-        r6(least(greatest(col("value"), lit(50.0)), lit(150.0))).as("clamp_v"))
-        .orderBy("name", "t"),
+      trCols(s, dir,
+        ("abs_v", s"abs($ALL - 100)", r6),
+        ("ceil_v", s"ceil($ALL)", asIs),
+        ("floor_v", s"floor($ALL)", asIs),
+        ("sqrt_v", s"sqrt($ALL)", r6),
+        ("ln_v", s"ln($ALL)", r6),
+        ("log2_v", s"log2($ALL)", r6),
+        ("log10_v", s"log10($ALL)", r6),
+        ("exp_v", s"exp($ALL / 100)", r6),
+        ("sgn_v", s"sgn(floor($ALL) - 100)", asIs),
+        ("round_v", s"round($ALL)", asIs),
+        ("clamp_v", s"clamp($ALL, 50, 150)", r6)),
       Some(s"$GH SELECT name, t, round(1e-9 + abs(value - 100), 6) AS abs_v, ceil(value) AS ceil_v, " +
         "floor(value) AS floor_v, round(1e-9 + sqrt(value), 6) AS sqrt_v, round(1e-9 + ln(value), 6) AS ln_v, " +
         "round(1e-9 + log2(value), 6) AS log2_v, round(1e-9 + log10(value), 6) AS log10_v, " +
-        "round(1e-9 + exp(value / 100), 6) AS exp_v, sign(value - 100)::DOUBLE AS sgn_v, " +
+        "round(1e-9 + exp(value / 100), 6) AS exp_v, sign(floor(value) - 100)::DOUBLE AS sgn_v, " +
         "round(1e-9 + value, 0) AS round_v, round(1e-9 + least(greatest(value, 50), 150), 6) AS clamp_v " +
         "FROM gdf ORDER BY name, t")),
     Q("tr_trig", (s, dir) =>
-      gHavg(s, dir).select(
-        col("name"), col("t"),
-        r6(sin(col("value"))).as("sin_v"),
-        r6(cos(col("value"))).as("cos_v"),
-        r6(atan(col("value"))).as("atan_v"),
-        r6(asin(col("value") % 1.0)).as("asin_v"),
-        r6(acos(col("value") % 1.0)).as("acos_v"),
-        r6(degrees(col("value"))).as("deg_v"),
-        r6(radians(col("value"))).as("rad_v"),
-        r6((exp(col("value") / 500) - exp(-col("value") / 500)) / 2).as("sinh_v"))
-        .orderBy("name", "t"),
+      trCols(s, dir, rounded(r6,
+        "sin_v" -> s"sin($ALL)",
+        "cos_v" -> s"cos($ALL)",
+        "atan_v" -> s"atan($ALL)",
+        "asin_v" -> s"asin($ALL % 1)",
+        "acos_v" -> s"acos($ALL % 1)",
+        "deg_v" -> s"deg($ALL)",
+        "rad_v" -> s"rad($ALL)",
+        "sinh_v" -> s"sinh($ALL / 500)"): _*),
       Some(s"$GH SELECT name, t, round(1e-9 + sin(value), 6) AS sin_v, round(1e-9 + cos(value), 6) AS cos_v, " +
         "round(1e-9 + atan(value), 6) AS atan_v, round(1e-9 + asin(value % 1.0), 6) AS asin_v, " +
         "round(1e-9 + acos(value % 1.0), 6) AS acos_v, round(1e-9 + degrees(value), 6) AS deg_v, " +
         "round(1e-9 + radians(value), 6) AS rad_v, " +
         "round(1e-9 + (exp(value / 500) - exp(-value / 500)) / 2, 6) AS sinh_v " +
         "FROM gdf ORDER BY name, t")),
-    Q("tr_datetime", (s, dir) => {
-      val ts = timestamp_millis(col("t"))
-      gHavg(s, dir).select(
-        col("name"), col("t"),
-        dayofmonth(ts).cast("double").as("dom_v"),
-        (dayofweek(ts) - 1).cast("double").as("dow_v"), // 0 = Sunday, like the reference
-        dayofyear(ts).cast("double").as("doy_v"),
-        dayofmonth(last_day(ts)).cast("double").as("dim_v"),
-        hour(ts).cast("double").as("hour_v"),
-        month(ts).cast("double").as("month_v"),
-        year(ts).cast("double").as("year_v"))
-        .orderBy("name", "t")
-    },
+    // the calendar of each sample's timestamp, 0 = Sunday for day_of_week
+    Q("tr_datetime", (s, dir) =>
+      trCols(s, dir, Seq("dom_v" -> "day_of_month", "dow_v" -> "day_of_week",
+        "doy_v" -> "day_of_year", "dim_v" -> "days_in_month", "hour_v" -> "hour",
+        "month_v" -> "month", "year_v" -> "year")
+        .map { case (as, fn) => (as, s"$fn(timestamp($ALL))", asIs) }: _*),
       Some(s"$GH SELECT name, t, day(make_timestamp(t * 1000))::DOUBLE AS dom_v, " +
         "dayofweek(make_timestamp(t * 1000))::DOUBLE AS dow_v, " +
         "dayofyear(make_timestamp(t * 1000))::DOUBLE AS doy_v, " +
@@ -586,17 +625,14 @@ object SparkEntry {
         "month(make_timestamp(t * 1000))::DOUBLE AS month_v, " +
         "year(make_timestamp(t * 1000))::DOUBLE AS year_v " +
         "FROM gdf ORDER BY name, t")),
-    Q("tr_bitmap", (s, dir) => {
-      val iv = floor(col("value")).cast("long")
-      gHavg(s, dir).select(
-        col("name"), col("t"),
-        iv.bitwiseAND(lit(255L)).cast("double").as("and_v"),
-        iv.bitwiseOR(lit(255L)).cast("double").as("or_v"),
-        iv.bitwiseXOR(lit(255L)).cast("double").as("xor_v"))
-        .orderBy("name", "t")
-    }, Some(s"$GH SELECT name, t, (floor(value)::BIGINT & 255)::DOUBLE AS and_v, " +
-      "(floor(value)::BIGINT | 255)::DOUBLE AS or_v, " +
-      "xor(floor(value)::BIGINT, 255)::DOUBLE AS xor_v FROM gdf ORDER BY name, t")),
+    Q("tr_bitmap", (s, dir) =>
+      trCols(s, dir, rounded(asIs,
+        "and_v" -> s"bitmap_and($ALL, 255)",
+        "or_v" -> s"bitmap_or($ALL, 255)",
+        "xor_v" -> s"bitmap_xor($ALL, 255)"): _*),
+      Some(s"$GH SELECT name, t, (floor(value)::BIGINT & 255)::DOUBLE AS and_v, " +
+        "(floor(value)::BIGINT | 255)::DOUBLE AS or_v, " +
+        "xor(floor(value)::BIGINT, 255)::DOUBLE AS xor_v FROM gdf ORDER BY name, t")),
     // running_*: every grid point from a series' first sample on carries
     // the aggregate of the samples so far, across gaps (transform.go:1325;
     // exec_test.go running_sum(time()/1e3 > 1.2 < 1.8) = n,n,1.4,3,3,3)
@@ -607,36 +643,31 @@ object SparkEntry {
     Q("tr_running_avg", (s, dir) =>
       trEng(s, dir, s"running_avg($ALL)")
         .select(col("name"), col("t"), r4(col("value")).as("value")).orderBy("name", "t"),
-      Some(runningAvgSql)),
+      Some(s"$runningAvgCtes SELECT name, t, round(1e-9 + a, 4) AS value FROM r ORDER BY name, t")),
     Q("tr_running_min", (s, dir) => trOut(trEng(s, dir, s"running_min($ALL)")),
       Some(runningSql("min(v)"))),
     Q("tr_running_max", (s, dir) => trOut(trEng(s, dir, s"running_max($ALL)")),
       Some(runningSql("max(v)"))),
-    Q("tr_range_stats", (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("name")
-      gHavg(s, dir).select(
-        col("name"), col("t"),
-        r6(avg("value").over(w)).as("range_avg"),
-        r6(sum("value").over(w)).as("range_sum"),
-        r6(min("value").over(w)).as("range_min"),
-        r6(max("value").over(w)).as("range_max"))
-        .orderBy("name", "t")
-    }, Some(s"$GH SELECT name, t, round(1e-9 + avg(value) OVER $WW, 6) AS range_avg, " +
-      s"round(1e-9 + sum(value) OVER $WW, 6) AS range_sum, round(1e-9 + min(value) OVER $WW, 6) AS range_min, " +
-      s"round(1e-9 + max(value) OVER $WW, 6) AS range_max FROM gdf ORDER BY name, t")),
-    Q("tr_range_first_last", (s, dir) => {
-      val g = gHavg(s, dir)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("name").orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      g.select(
-        col("name"), col("t"),
-        r6(first("value").over(w)).as("first_v"),
-        r6(last("value").over(w)).as("last_v"))
-        .orderBy("name", "t")
-    }, Some(s"$GH SELECT name, t, round(1e-9 + first_value(value) OVER $WW, 6) AS first_v, " +
-      s"round(1e-9 + last_value(value) OVER $WW, 6) AS last_v FROM gdf ORDER BY name, t")),
+    // range_*: the whole-series statistic at every grid point
+    // (transform.go:1353 setLastValues); range_avg is the last value of
+    // running_avg's positional recurrence (transform.go:1352)
+    Q("tr_range_stats", (s, dir) =>
+      trCols(s, dir, rounded(r6,
+        "range_avg" -> s"range_avg($ALL)",
+        "range_sum" -> s"range_sum($ALL)",
+        "range_min" -> s"range_min($ALL)",
+        "range_max" -> s"range_max($ALL)"): _*),
+      Some(s"$runningAvgCtes, ra AS (SELECT name, arg_max(a, pos) AS a FROM r GROUP BY name) " +
+        "SELECT d.name AS name, t, round(1e-9 + ra.a, 6) AS range_avg, " +
+        "round(1e-9 + sum(v) OVER w, 6) AS range_sum, round(1e-9 + min(v) OVER w, 6) AS range_min, " +
+        "round(1e-9 + max(v) OVER w, 6) AS range_max FROM d JOIN ra ON d.name = ra.name " +
+        "WINDOW w AS (PARTITION BY d.name) ORDER BY name, t")),
+    Q("tr_range_first_last", (s, dir) =>
+      trCols(s, dir, rounded(r6,
+        "first_v" -> s"range_first($ALL)",
+        "last_v" -> s"range_last($ALL)"): _*),
+      Some(s"$GHD SELECT name, t, round(1e-9 + first_value(v IGNORE NULLS) OVER $WW, 6) AS first_v, " +
+        s"round(1e-9 + last_value(v IGNORE NULLS) OVER $WW, 6) AS last_v FROM d ORDER BY name, t")),
     Q("tr_range_normalize", (s, dir) => trOut(trEng(s, dir, s"range_normalize($ALL)")),
       Some(s"$GH SELECT name, t, round(1e-9 + CASE WHEN max(value) OVER $WW > min(value) OVER $WW THEN " +
         s"(value - min(value) OVER $WW) / (max(value) OVER $WW - min(value) OVER $WW) END, 6) AS value " +
@@ -696,18 +727,22 @@ object SparkEntry {
       Some(s"$GD, w AS (SELECT DISTINCT name, user_id FROM gdf ORDER BY name, user_id::VARCHAR LIMIT 3 OFFSET 2) " +
         "SELECT gdf.name AS name, gdf.user_id AS user_id, t, value FROM gdf " +
         "JOIN w USING (name, user_id) ORDER BY name, user_id, t")),
-    // label ops on the schemaless tags map (§2.3 label family / §2.8 relabel)
+    // label functions over the raw samples (§2.3 label family); the daily
+    // grid with a one-day lookback reads every event
     Q("tr_series_key", (s, dir) => {
-      val tagged = Labels.labelSet(Samples.fromEvents(s, dir), "env" -> "prod")
-      tagged.select(Samples.seriesKey(col("name"), col("tags")).as("sk")).distinct().orderBy("sk")
+      val kv = transform(SeriesId.entries(col("tags")),
+        e => concat(e.getField("key"), lit("="), e.getField("value")))
+      labelsOf(s, dir, s"""label_set($ALL, "env", "prod")""")
+        .select(concat(col("name"), lit("{"), array_join(kv, ","), lit("}")).as("sk"))
+        .distinct().orderBy("sk")
     }, Some("SELECT DISTINCT event_type || '{env=prod,user_id=' || user_id::VARCHAR || '}' AS sk " +
       "FROM events ORDER BY sk")),
-    Q("tr_label_replace", (s, dir) => {
-      val relabeled = Labels.labelReplace(Samples.fromEvents(s, dir), "host", "u$1", "user_id", "(.*)")
-      relabeled.select(col("name"), col("tags").getItem("host").as("host")).distinct()
-        .orderBy("name", "host")
-    }, Some("SELECT DISTINCT event_type AS name, 'u' || user_id::VARCHAR AS host FROM events " +
-      "ORDER BY name, host")),
+    Q("tr_label_replace", (s, dir) =>
+      labelsOf(s, dir, s"""label_replace($ALL, "host", "u$$1", "user_id", "(.*)")""")
+        .select(col("name"), col("tags").getItem("host").as("host")).distinct()
+        .orderBy("name", "host"),
+      Some("SELECT DISTINCT event_type AS name, 'u' || user_id::VARCHAR AS host FROM events " +
+        "ORDER BY name, host")),
     // the MAD of the samples at every grid point (transform.go:1551;
     // exec_test.go range_mad(time() > 1200 < 1800) = 100 ×6)
     Q("tr_range_mad", (s, dir) => trOut(trEng(s, dir, s"range_mad($ALL)")),
@@ -750,25 +785,26 @@ object SparkEntry {
   // §2.4 aggregate functions — across series (users) per grid point
   // =====================================================================
   private val aggrQueries: Seq[Q] = Seq(
-    Q("ag_basic", (s, dir) =>
-      gDavg(s, dir).groupBy("name", "t").agg(
-        r4(sum("value")).as("sum_v"),
-        r6(min("value")).as("min_v"),
-        r6(max("value")).as("max_v"),
-        r4(avg("value")).as("avg_v"),
-        count("value").cast("double").as("count_v"),
-        r4(stddev_pop(col("value"))).as("stddev_v"),
-        r4(var_pop(col("value"))).as("stdvar_v"),
-        r4(sum(col("value") * col("value"))).as("sum2_v"),
-        r4(exp(avg(log(col("value"))))).as("geomean_v"),
-        size(collect_set(col("value"))).cast("double").as("distinct_v"),
-        r6(percentile(col("value"), lit(0.5))).as("median_v"),
-        r6(percentile(col("value"), lit(0.9))).as("q90_v"))
-        .orderBy("name", "t"),
+    Q("ag_basic", (s, dir) => {
+      def by(fn: String): String = s"$fn($ALL) by (__name__)"
+      agCols(s, dir,
+        ("sum_v", by("sum"), r4),
+        ("min_v", by("min"), r6),
+        ("max_v", by("max"), r6),
+        ("avg_v", by("avg"), r4),
+        ("count_v", by("count"), asIs),
+        ("stddev_v", by("stddev"), r4),
+        ("stdvar_v", by("stdvar"), r4),
+        ("sum2_v", by("sum2"), r4),
+        ("geomean_v", by("geomean"), r4),
+        ("distinct_v", by("distinct"), asIs),
+        ("median_v", by("median"), r6),
+        ("q90_v", s"quantile(0.9, $ALL) by (__name__)", r6))
+    },
       Some(s"$GD SELECT name, t, round(1e-9 + sum(value), 4) AS sum_v, round(1e-9 + min(value), 6) AS min_v, " +
         "round(1e-9 + max(value), 6) AS max_v, round(1e-9 + avg(value), 4) AS avg_v, count(value)::DOUBLE AS count_v, " +
         "round(1e-9 + stddev_pop(value), 4) AS stddev_v, round(1e-9 + var_pop(value), 4) AS stdvar_v, " +
-        "round(1e-9 + sum(value*value), 4) AS sum2_v, round(1e-9 + exp(avg(ln(value))), 4) AS geomean_v, " +
+        s"round(1e-9 + sum(value*value), 4) AS sum2_v, round(1e-9 + $GEOMEAN, 4) AS geomean_v, " +
         "count(DISTINCT value)::DOUBLE AS distinct_v, round(1e-9 + quantile_cont(value, 0.5), 6) AS median_v, " +
         "round(1e-9 + quantile_cont(value, 0.9), 6) AS q90_v FROM gdf GROUP BY name, t ORDER BY name, t")),
     Q("ag_mode", (s, dir) =>
@@ -841,7 +877,7 @@ object SparkEntry {
         "FROM (SELECT DISTINCT name, k FROM h)), " +
         "r AS (SELECT name, k, 2 * k + 1 AS ord, l1.b AS le, TRUE AS isreal FROM kd JOIN lut l1 ON l1.i = kd.k + 1 " +
         "UNION ALL SELECT name, k, 2 * k, l0.b, FALSE " +
-        "FROM kd JOIN lut l0 ON l0.i = kd.k WHERE pk IS NULL OR pk != k - 1 " +
+        s"FROM kd JOIN lut l0 ON l0.i = kd.k WHERE $GAP " +
         "UNION ALL SELECT DISTINCT name, NULL, 2000000000, '+Inf', FALSE FROM kd), " +
         "gt AS (SELECT DISTINCT name, t FROM h) " +
         "SELECT gt.name AS name, gt.t AS t, r.le AS le, " +
@@ -908,11 +944,14 @@ object SparkEntry {
         "QUALIFY row_number() OVER (PARTITION BY name ORDER BY dev DESC, name ASC, user_id ASC) <= 2) " +
         "SELECT gdf.name AS name, gdf.user_id AS user_id, t, value FROM gdf " +
         "JOIN w USING (name, user_id) ORDER BY name, user_id, t")),
+    // one whole series per group, the first in series-key order, where
+    // user_id is a label STRING (aggr.go aggrFuncAny keeps tss[:1])
     Q("ag_any", (s, dir) =>
-      gDavg(s, dir).groupBy("name", "t").agg(min_by(col("value"), col("user_id")).as("value"))
+      agEng(s, dir, s"any($ALL) by (__name__)")
         .select(col("name"), col("t"), col("value")).orderBy("name", "t"),
-      Some(s"$GD SELECT name, t, first(value ORDER BY user_id) AS value FROM gdf " +
-        "GROUP BY name, t ORDER BY name, t")),
+      Some(s"$GD, w AS (SELECT name, min(user_id::VARCHAR) AS u FROM gdf GROUP BY name) " +
+        "SELECT gdf.name AS name, t, value FROM gdf JOIN w ON gdf.name = w.name AND gdf.user_id::VARCHAR = w.u " +
+        "ORDER BY name, t")),
     Q("ag_group", (s, dir) =>
       agEng(s, dir, s"group($ALL) by (__name__)")
         .select(col("name"), col("t"), col("value")).orderBy("name", "t"),
@@ -930,10 +969,6 @@ object SparkEntry {
   // =====================================================================
   // §2.5 binary operators — vector matching between purchase and click
   // =====================================================================
-  /** hourly rounded grid for one selector */
-  private def selH(s: SparkSession, dir: String, nm: String): DataFrame =
-    gHavg(s, dir).filter(col("name") === nm).drop("name")
-
   /** `purchase <op> click` per column over the hourly grid, joined on t */
   private def binCols(s: SparkSession, dir: String, ops: (String, String)*)(
       out: Column => Column): DataFrame = {
@@ -1023,9 +1058,10 @@ object SparkEntry {
       Some(s"$ABD SELECT coalesce(a.user_id, bb.user_id) AS user_id, coalesce(a.t, bb.t) AS t, " +
         "round(1e-9 + coalesce(lv, 0) + coalesce(rv, 0), 6) AS value FROM a FULL OUTER JOIN bb " +
         "ON a.user_id = bb.user_id AND a.t = bb.t ORDER BY user_id, t")),
+    // `==` against a union list keeps the points equal to one of its
+    // elements (binary_op.go:58-113)
     Q("bi_in", (s, dir) =>
-      selH(s, dir, "purchase")
-        .filter((floor(col("value")).cast("long") % 10).isin(1L, 2L, 3L))
+      trEng(s, dir, "purchase and (floor(purchase) % 10 == (1, 2, 3))")
         .select(col("t"), col("value")).orderBy("t"),
       Some(s"$GH SELECT t, value FROM gdf WHERE name = 'purchase' " +
         "AND (floor(value)::BIGINT % 10) IN (1, 2, 3) ORDER BY t")))
@@ -1056,7 +1092,7 @@ object SparkEntry {
       "r AS (SELECT name, k, 2 * k + 1 AS ord, " +
       "CAST(l1.b AS DOUBLE) AS le, TRUE AS isreal FROM kd JOIN lut l1 ON l1.i = kd.k + 1 " +
       "UNION ALL SELECT name, k, 2 * k, CAST(l0.b AS DOUBLE), FALSE " +
-      "FROM kd JOIN lut l0 ON l0.i = kd.k WHERE pk IS NULL OR pk != k - 1 " +
+      s"FROM kd JOIN lut l0 ON l0.i = kd.k WHERE $GAP " +
       "UNION ALL SELECT DISTINCT name, NULL, 2000000000, 'infinity'::DOUBLE, FALSE FROM kd), " +
       "gt AS (SELECT DISTINCT name, t FROM h), " +
       "cb AS (SELECT gt.name AS name, gt.t AS t, r.ord AS ord, r.le AS le, " +
@@ -1082,7 +1118,7 @@ object SparkEntry {
       s"${hCorr("a", "t", "v")}, " +
       "kd AS (SELECT k, lag(k) OVER (ORDER BY k) AS pk FROM (SELECT DISTINCT k FROM h)), " +
       "r AS (SELECT k, 2 * k + 1 AS ord, CAST(l1.b AS DOUBLE) AS le, TRUE AS isreal FROM kd JOIN lut l1 ON l1.i = kd.k + 1 " +
-      "UNION ALL SELECT k, 2 * k, CAST(l0.b AS DOUBLE), FALSE FROM kd JOIN lut l0 ON l0.i = kd.k WHERE pk IS NULL OR pk != k - 1 " +
+      s"UNION ALL SELECT k, 2 * k, CAST(l0.b AS DOUBLE), FALSE FROM kd JOIN lut l0 ON l0.i = kd.k WHERE $GAP " +
       "UNION ALL SELECT NULL, 2000000000, 'infinity'::DOUBLE, FALSE FROM (SELECT DISTINCT 1 FROM kd)), " +
       "gt AS (SELECT DISTINCT t FROM h), " +
       "cb AS (SELECT gt.t AS t, r.ord AS ord, r.le AS le, " +

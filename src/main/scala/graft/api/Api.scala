@@ -115,37 +115,15 @@ object Api {
       GridSpec(atMs, atMs, stepMs), lookbackMs, cacheTag = cacheTag,
       tagIndex = tagIndex)
 
-  /** bare-selector row predicate over (name, tags) — public so the HTTP
-    * facade's delete-series tombstones can exclude matching rows with
-    * the exact same anchored-filter semantics the read paths use
+  /** bare-selector row predicate over (name, tags): the evaluator's
+    * selector predicate (`Eval.filterPredicate`, `__graphite__` globs
+    * included), for the filters that take a selector string — match[],
+    * export, federate, delete tombstones, stream aggregation, dedup and
+    * retention
     */
   def selectorPredicate(selector: String): Column =
     Parser.parse(selector) match {
-      case m: MetricExpr =>
-        // reuse the evaluator's anchored-filter semantics via Eval's path:
-        // a bare selector filter is (name/tags) predicates only
-        def one(f: graft.lang.LabelFilter): Column = {
-          val target =
-            if (f.label == "__name__") coalesce(col("name"), lit(""))
-            else coalesce(col("tags").getItem(f.label), lit(""))
-          val pos =
-            if (f.isRegexp) target.rlike("^(?:" + f.value + ")$")
-            else if (f.label == "__name__" && !f.isNegative && f.value.nonEmpty)
-              // pushable bare-attribute equality — same rule as
-              // Eval.filterPredicate (r11). The isNotNull conjunct makes
-              // the predicate FALSE (not SQL NULL) on null-name rows:
-              // this Column is consumed NEGATED by the delete-tombstone
-              // filter (`!selectorPredicate`), where a bare `name = v`
-              // yields NULL for null names and the negation silently
-              // drops the row. IsNotNull and EqualTo are both pushable,
-              // so the name-sorted scan pruning is preserved.
-              col("name").isNotNull && col("name") === f.value
-            else target === f.value
-          if (f.isNegative) !pos else pos
-        }
-        m.filterss
-          .map(_.map(one).reduceOption(_ && _).getOrElse(lit(true)))
-          .reduceOption(_ || _).getOrElse(lit(true))
+      case m: MetricExpr => Eval.filterPredicate(m.filterss)
       case other => throw new IllegalArgumentException(s"not a selector: $other")
     }
 

@@ -62,19 +62,4 @@ object Samples {
     if (isLongNanos) expr(s"$name div 1000000L")
     else (unix_micros(col(name).cast(TimestampType)) / lit(1000L)).cast(LongType)
   }
-
-  /** Canonical series key: name{k1=v1,k2=v2,…} with keys sorted —
-    * lib/storage/metric_name.go:137 (tags sorted for canonical identity).
-    * Gives a groupable/sortable single column for schemaless label sets.
-    */
-  def seriesKey(name: Column, tags: Column): Column =
-    concat(
-      name,
-      lit("{"),
-      array_join(
-        transform(
-          array_sort(map_entries(tags)),
-          e => concat(e.getField("key"), lit("="), e.getField("value"))),
-        ","),
-      lit("}"))
 }

@@ -114,6 +114,72 @@ object Eval {
   /** anchored regex, like the reference (lib/storage/tag_filters.go:160) */
   private def anchored(re: String): String = "^(?:" + re + ")$"
 
+  /** graphite glob → regex: `*` = any chars within a dot-group,
+    * `{a,b}` = alternation (exec.go:23-26 __graphite__ selection).
+    */
+  private def graphiteToRegex(glob: String): String = {
+    val sb = new StringBuilder
+    var inBrace = false
+    glob.foreach {
+      case '*' => sb.append("[^.]*")
+      case '.' => sb.append("\\.")
+      case '{' => inBrace = true; sb.append("(?:")
+      case ',' if inBrace => sb.append("|")
+      case '}' if inBrace => inBrace = false; sb.append(")")
+      case c if "\\^$()+?[]|".contains(c) => sb.append("\\").append(c)
+      case c => sb.append(c)
+    }
+    sb.toString
+  }
+
+  /** label-filter predicate over (name, tags) — absent tag matches as ""
+    * like the reference (empty label == missing label). The one selector
+    * predicate: the read paths and every bare-selector filter outside the
+    * evaluator (`Api.selectorPredicate`) use it.
+    */
+  private[graft] def filterPredicate(fss: Seq[Seq[LabelFilter]]): Column = {
+    def one(f: LabelFilter): Column = {
+      val target =
+        if (f.label == "__name__" || f.label == "__graphite__")
+          coalesce(col("name"), lit(""))
+        else coalesce(col("tags").getItem(f.label), lit(""))
+      val pos =
+        if (f.label == "__graphite__") {
+          // a glob with a literal prefix additionally pushes a name
+          // RANGE (pure conjunct — the anchored regex implies it), so
+          // the name-sorted layout prunes row groups the rlike alone
+          // never could. Equivalence holds under negation too: a null
+          // name makes both forms false (not NULL), and the coalesced
+          // "" can't match a regex with a non-empty literal prefix.
+          val rl = target.rlike(anchored(graphiteToRegex(f.value)))
+          graft.core.SampleStore.namePrefixBounds(
+            graft.core.SampleStore.globLiteralPrefix(f.value)) match {
+            case Some(b) => b && rl
+            case None => rl
+          }
+        }
+        else if (f.isRegexp) target.rlike(anchored(f.value))
+        else if (f.label == "__name__" && !f.isNegative && f.value.nonEmpty)
+          // PUSHABLE form: for a POSITIVE non-empty literal,
+          // `isnotnull(name) AND name = v` ≡ `coalesce(name,'') = v`
+          // under three-valued logic EVEN WHEN NEGATED (the conjunction
+          // is false — not SQL NULL — for null names, so `!pos` keeps
+          // null-name rows exactly like the coalesce form; a bare
+          // `name = v` alone would yield NULL there and a negating
+          // filter would drop the row). IsNotNull and EqualTo both
+          // reach the parquet scan — the predicates the name-sorted
+          // bucketed layout prunes row groups/pages with (r11; coalesce
+          // around the column disqualifies pushdown entirely). Negative
+          // and empty-value matchers keep the coalesce: they must KEEP
+          // null-name rows.
+          col("name").isNotNull && col("name") === f.value
+        else target === f.value
+      if (f.isNegative) !pos else pos
+    }
+    fss.map(_.map(one).reduceOption(_ && _).getOrElse(lit(true)))
+      .reduceOption(_ || _).getOrElse(lit(true))
+  }
+
   /** The SIMPLE grouped aggregations (one aggregation expression over the
     * group, no extra args, no rank/window semantics) — the single source
     * for BOTH the full evaluator (evalAggrCore's `grouped` family) and
@@ -129,7 +195,7 @@ object Eval {
     case "stddev" => Some(stddev_pop(v))
     case "stdvar" => Some(var_pop(v))
     case "sum2" => Some(sum(v * v))
-    case "geomean" => Some(exp(avg(log(v))))
+    case "geomean" => Some(exp(avg(Kernels.goLog(v))))
     case "median" => Some(percentile(v, lit(0.5)))
     case _ => None
   }
@@ -834,70 +900,6 @@ object Eval {
     // selectors
     // ------------------------------------------------------------------
 
-    /** graphite glob → regex: `*` = any chars within a dot-group,
-      * `{a,b}` = alternation (exec.go:23-26 __graphite__ selection).
-      */
-    private def graphiteToRegex(glob: String): String = {
-      val sb = new StringBuilder
-      var inBrace = false
-      glob.foreach {
-        case '*' => sb.append("[^.]*")
-        case '.' => sb.append("\\.")
-        case '{' => inBrace = true; sb.append("(?:")
-        case ',' if inBrace => sb.append("|")
-        case '}' if inBrace => inBrace = false; sb.append(")")
-        case c if "\\^$()+?[]|".contains(c) => sb.append("\\").append(c)
-        case c => sb.append(c)
-      }
-      sb.toString
-    }
-
-    /** label-filter predicate over (name, tags) — absent tag matches as ""
-      * like the reference (empty label == missing label).
-      */
-    private def filterPredicate(fss: Seq[Seq[LabelFilter]]): Column = {
-      def one(f: LabelFilter): Column = {
-        val target =
-          if (f.label == "__name__" || f.label == "__graphite__")
-            coalesce(col("name"), lit(""))
-          else coalesce(col("tags").getItem(f.label), lit(""))
-        val pos =
-          if (f.label == "__graphite__") {
-            // a glob with a literal prefix additionally pushes a name
-            // RANGE (pure conjunct — the anchored regex implies it), so
-            // the name-sorted layout prunes row groups the rlike alone
-            // never could. Equivalence holds under negation too: a null
-            // name makes both forms false (not NULL), and the coalesced
-            // "" can't match a regex with a non-empty literal prefix.
-            val rl = target.rlike(anchored(graphiteToRegex(f.value)))
-            graft.core.SampleStore.namePrefixBounds(
-              graft.core.SampleStore.globLiteralPrefix(f.value)) match {
-              case Some(b) => b && rl
-              case None => rl
-            }
-          }
-          else if (f.isRegexp) target.rlike(anchored(f.value))
-          else if (f.label == "__name__" && !f.isNegative && f.value.nonEmpty)
-            // PUSHABLE form: for a POSITIVE non-empty literal,
-            // `isnotnull(name) AND name = v` ≡ `coalesce(name,'') = v`
-            // under three-valued logic EVEN WHEN NEGATED (the conjunction
-            // is false — not SQL NULL — for null names, so `!pos` keeps
-            // null-name rows exactly like the coalesce form; a bare
-            // `name = v` alone would yield NULL there and a negating
-            // filter would drop the row). IsNotNull and EqualTo both
-            // reach the parquet scan — the predicates the name-sorted
-            // bucketed layout prunes row groups/pages with (r11; coalesce
-            // around the column disqualifies pushdown entirely). Negative
-            // and empty-value matchers keep the coalesce: they must KEEP
-            // null-name rows.
-            col("name").isNotNull && col("name") === f.value
-          else target === f.value
-        if (f.isNegative) !pos else pos
-      }
-      fss.map(_.map(one).reduceOption(_ && _).getOrElse(lit(true)))
-        .reduceOption(_ || _).getOrElse(lit(true))
-    }
-
     /** Selector fetch with optional tag-index name pruning: a NAMELESS
       * tag-equality lookup (`{pod="..."}`) over a name-sorted store pays
       * a full scan — nothing to prune on. With cfg.tagIndex configured,
@@ -1492,8 +1494,10 @@ object Eval {
           // cumulative le buckets (aggr.go:256 aggrFuncHistogram ends in
           // vmrangeBucketsToLE; bounds are the %.3e decimal strings)
           import graft.operators.HistogramQ
+          // metrics.Histogram.Update skips NaN and negatives; a 0 lands
+          // in the lower bucket 0...1.000e-09
           val g = group.keyed(df)
-            .filter(!isnan(v) && v > 0.0)
+            .filter(!isnan(v) && v >= 0.0)
             .withColumn("_hk", HistogramQ.bucketIdxClamped(v))
             .groupBy(gk :+ col("t") :+ col("_hk"): _*)
             .agg(count(lit(1)).cast(DoubleType).as("value"))
@@ -2543,7 +2547,9 @@ object Eval {
           val key = strArg(f.args(1))
           val mapping = f.args.drop(2).map(strArg).grouped(2)
             .collect { case Seq(a, b) => a -> b }.toMap
-          Series(graft.operators.Labels.labelMap(df, key, mapping))
+          val m = map(mapping.toSeq.flatMap(kv => Seq(lit(kv._1), lit(kv._2))): _*)
+          Series(df.withColumn("tags", transform_values(col("tags"), (k, v) =>
+            when(k === key, coalesce(element_at(m, v), v)).otherwise(v))))
         case "sort" | "sort_desc" =>
           // ordering of the final series set (exec.go:104-130): impose a
           // deterministic row order; series-level sort key = avg value

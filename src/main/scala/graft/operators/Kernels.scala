@@ -161,8 +161,15 @@ object Kernels {
   val stdvar: Kernel = Algebraic(var_pop(v)) // rollup.go:1803
   val median: Kernel = Algebraic(percentile(v, lit(0.5))) // rollup.go:1450
   def quantile(phi: Double): Kernel = Algebraic(percentile(v, lit(phi))) // :1450
-  val geomean: Kernel = Algebraic(exp(avg_(log(v))), // rollup.go:1707
-    Some(TwoLevel(Seq(("sl", sum_(log(v)), sum_), ("c", count_(v).cast(D), sum_)),
+  /** Go's `math.Log`: −Inf at 0 and NaN below it, where Spark's `log`
+    * returns NULL and an aggregate would skip the point. A geomean over a
+    * window holding a 0 is then exp(−Inf) = 0, as in the reference.
+    */
+  private[graft] def goLog(c: Column): Column =
+    when(c > 0, log(c)).when(c === 0, lit(Double.NegativeInfinity)).otherwise(lit(Double.NaN))
+
+  val geomean: Kernel = Algebraic(exp(avg_(goLog(v))), // rollup.go:1707
+    Some(TwoLevel(Seq(("sl", sum_(goLog(v)), sum_), ("c", count_(v).cast(D), sum_)),
       m => exp(m("sl") / m("c")))))
   val distinct: Kernel = Algebraic(size(collect_set(v)).cast(D), // :2403
     Some(TwoLevel(Seq(("vs", collect_set(v), (c: Column) => flatten(collect_list(c)))),

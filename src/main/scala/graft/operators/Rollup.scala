@@ -789,26 +789,22 @@ object Rollup {
     * lib/histogram/histogram.go: 18 log10 sub-buckets per decade, bounds
     * rendered %.3e). Emits vmrange STRING ranges like the reference; apply
     * HistogramQ.vmrangeToLE (= prometheus_buckets) to get `le` buckets.
+    * metrics.Histogram.Update skips only NaN and negative values, so a 0
+    * counts in the lower bucket 0...1.000e-09.
     */
   def histogramOverTime(samples: DataFrame, keys: Seq[String], grid: GridSpec, windowMs: Long): DataFrame =
     Grid.bucketize(samples, grid, windowMs)
-      .filter(!isnan(col("value")) && col("value") > 0.0)
+      .filter(!isnan(col("value")) && col("value") >= 0.0)
       .withColumn("_k", HistogramQ.bucketIdxClamped(col("value")))
       .groupBy((keys.map(col) :+ col("t") :+ col("_k")): _*)
       .agg(count(lit(1)).cast(DoubleType).as("value"))
       .withColumn("vmrange", HistogramQ.vmrangeOfIdx(col("_k")))
       .drop("_k")
 
-  /** present_over_time / absent_over_time — presence tests per grid point
-    * (rollup.go:1755,1762; absent series synthesis eval.go:1017-1031).
-    * `absent` emits 1.0 exactly at grid points where NO series matched:
+  /** absent_over_time — emits 1.0 exactly at grid points where NO series
+    * matched (rollup.go:1755; absent series synthesis eval.go:1017-1031):
     * dense grid anti-joined against observed buckets.
     */
-  def presentOverTime(samples: DataFrame, keys: Seq[String], grid: GridSpec, windowMs: Long): DataFrame =
-    Grid.bucketize(samples, grid, windowMs)
-      .groupBy((keys.map(col) :+ col("t")): _*)
-      .agg(lit(1.0).as("value"))
-
   def absentOverTime(samples: DataFrame, grid: GridSpec, windowMs: Long): DataFrame = {
     // NaN samples are absent (absent_over_time(nan[w:s]) == 1)
     val present = Grid.bucketize(samples.filter(!isnan(col("value"))), grid, windowMs)
@@ -817,12 +813,4 @@ object Rollup {
       .join(present, Seq("t"), "left_anti")
       .withColumn("value", lit(1.0))
   }
-
-  /** default_rollup — what a bare series selector means: the last sample
-    * value at-or-before each grid point, looking back at most
-    * `stalenessMs` (rollup.go:38 default_rollup + the 5-minute silence
-    * interval eval.go:1919-1925).
-    */
-  def defaultRollup(samples: DataFrame, keys: Seq[String], grid: GridSpec, stalenessMs: Long): DataFrame =
-    rollup(samples, keys, grid, stalenessMs, Kernels.last)
 }

@@ -81,19 +81,14 @@ object Relabel extends Serializable {
 
   /** `if` series-selector match over a label map: OR across selectors, AND
     * across one selector's filters (lib/promrelabel/if_expression.go; the
-    * selector grammar is the MetricsQL one, so reuse the parser).
+    * selector grammar is the MetricsQL one, so reuse the parser and
+    * `LabelFilter.matches`).
     */
   private[sources] def selectorMatches(selector: String, m: Map[String, String]): Boolean = {
     import graft.lang.{MetricExpr, Parser}
     Parser.parse(selector) match {
       case me: MetricExpr =>
-        me.filterss.exists(_.forall { f =>
-          val v = m.getOrElse(f.label, "")
-          val hit =
-            if (f.isRegexp) Pattern.compile(anchored(f.value)).matcher(v).matches()
-            else v == f.value
-          hit != f.isNegative
-        })
+        me.filterss.exists(_.forall(f => f.matches(m.getOrElse(f.label, ""))))
       case other =>
         throw new IllegalArgumentException(s"'if' must be a series selector, got $other")
     }

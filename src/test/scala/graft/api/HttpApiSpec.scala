@@ -858,6 +858,23 @@ class HttpApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("match[] filters with the evaluator's selector predicate: a __graphite__ glob") {
+    val api = new HttpApi(spark)
+    val port = api.start()
+    try {
+      assert(post(port, "/api/v1/import",
+        Seq("foo.a.req" -> 1, "foo.b.req" -> 2, "foo.b.err" -> 3, "bar.a.req" -> 4).map {
+          case (n, v) => s"""{"metric":{"__name__":"$n"},"values":[$v],"timestamps":[60000]}"""
+        }.mkString("\n")) == 204)
+      val sel = java.net.URLEncoder.encode("""{__graphite__="foo.*.req"}""", "UTF-8")
+      def names(body: String): Set[String] =
+        "\"__name__\":\"([^\"]+)\"".r.findAllMatchIn(body).map(_.group(1)).toSet
+      val queried = names(get(port, s"/api/v1/query?query=$sel&time=60"))
+      assert(queried == Set("foo.a.req", "foo.b.req"))
+      assert(names(get(port, s"/api/v1/series?match[]=$sel&start=0&end=1000")) == queried)
+    } finally api.stop()
+  }
+
   test("query tracing (trace=1) and the stats block") {
     val api = new HttpApi(spark)
     val port = api.start()

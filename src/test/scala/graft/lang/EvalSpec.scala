@@ -326,6 +326,54 @@ class EvalSpec extends SparkSpec {
     assert(math.abs(r(5 * M) - expected) < 1e-9)
   }
 
+  /** z{inst=a} = 4 at every minute but a 0 at 3.5m, z{inst=b} = 1 */
+  private lazy val zeros: DataFrame = {
+    val s = spark
+    import s.implicits._
+    (1 to 10).flatMap { i =>
+      val ts = i * M - 30000
+      Seq(("z", Map("inst" -> "a"), ts, if (i == 4) 0.0 else 4.0),
+        ("z", Map("inst" -> "b"), ts, 1.0))
+    }.toDF("name", "tags", "ts", "value")
+  }
+
+  private def byLabel(q: String, label: String): Map[(String, Long), Double] =
+    Engine.query(zeros, q, grid)
+      .select(coalesce(col("tags").getItem(label), lit("")), col("t"), col("value"))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  test("geomean across series is 0 when a series is 0") {
+    // Go's math.Log(0) is -Inf (aggr.go aggrFuncGeomean); Spark's log is
+    // NULL there, and the aggregate skipped the point
+    val g = byLabel("geomean(z)", "inst")
+    assert(g(("", 4 * M)) == 0.0) // 0 and 1
+    assert(math.abs(g(("", 3 * M)) - 2.0) < 1e-12) // 4 and 1
+  }
+
+  test("geomean_over_time is 0 over a window holding a 0, on both rollup plans") {
+    // rollup.go:1707 rollupGeomean; a 2-step window takes the one-level
+    // plan, an 8-step window the two-level one (sum of logs / count)
+    for (w <- Seq("2m", "8m")) {
+      val g = byLabel(s"geomean_over_time(z[$w])", "inst")
+      assert(g(("a", 5 * M)) == 0.0, w) // the window holds the 0 at 3.5m
+      assert(math.abs(g(("a", 3 * M)) - 4.0) < 1e-12, w)
+      assert(math.abs(g(("b", 10 * M)) - 1.0) < 1e-12, w)
+    }
+  }
+
+  test("histogram and histogram_over_time count a 0 in the lower bucket") {
+    // metrics.Histogram.Update skips only NaN and negatives; values up to
+    // 1e-9 count in 0...1.000e-09 (aggr.go histogram, rollup.go
+    // rollupHistogram)
+    val h = byLabel("histogram(z)", "le")
+    assert(h(("1.000e-09", 4 * M)) == 1.0) // the 0
+    assert(h(("+Inf", 4 * M)) == 2.0)
+    assert(h(("1.000e-09", 3 * M)) == 0.0)
+    val r = byLabel("""histogram_over_time(z{inst="a"}[2m])""", "vmrange")
+    assert(r(("0...1.000e-09", 5 * M)) == 1.0)
+    assert(!r.contains(("0...1.000e-09", 3 * M)))
+  }
+
   test("drop_common_labels removes only all-series-identical labels") {
     val df = Engine.query(samples,
       """drop_common_labels(label_set(avg_over_time(m[1m]), "env", "prod"))""", grid)
